@@ -17,37 +17,9 @@ object Verify {
       else SparkEntry.queries.view.filterKeys(only).toMap
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // Per-query wall seconds (stderr + timings.json): the correctness run
-    // executes each query exactly once, so it survives conditions that
-    // kill the 2-pass bench — these timings are the judge's fallback
-    // evidence when BENCH_r{N} fails (round-7 VERDICT item 6).
-    var timings = Vector.empty[(String, Double)]
-    // Rewritten after EVERY query (not once at the end): these timings
-    // exist precisely to survive the conditions that kill a run — a hang
-    // or SIGKILL mid-loop must leave the queries measured so far.
-    def writeTimings(): Unit =
-      Files.writeString(Paths.get(s"$outDir/timings.json"),
-        timings.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}"))
-    selected.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        val sec = (System.nanoTime() - t0) / 1e9
-        timings :+= (name -> sec)
-        System.err.println(f"[verify] $name $sec%.3f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Same hygiene as Bench: dedup/index queries persist intermediates;
-      // without this the full-surface sweep accumulates dead cache entries.
-      spark.catalog.clearCache()
-      writeTimings()
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in a query's SQL or an error message would otherwise
+    // make the whole file unparseable.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -57,6 +29,44 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // Per-query wall seconds (stderr + timings.json): the correctness run
+    // executes each query exactly once, so it survives conditions that
+    // kill the 2-pass bench — these timings are the judge's fallback
+    // evidence when BENCH_r{N} fails (round-7 VERDICT item 6).
+    var timings = Vector.empty[(String, Double)]
+    // Failing queries: name -> error class and message. A failure is
+    // recorded, never only printed; the exit code stays 0 either way.
+    var failures = Vector.empty[(String, Throwable)]
+    // Rewritten after EVERY query (not once at the end): these files
+    // exist precisely to survive the conditions that kill a run — a hang
+    // or SIGKILL mid-loop must leave the queries measured so far.
+    def writeResults(): Unit = {
+      Files.writeString(Paths.get(s"$outDir/timings.json"),
+        timings.map { case (k, v) => "\"" + k + "\":" + v }
+          .mkString("{", ",", "}"))
+      Files.writeString(Paths.get(s"$outDir/failures.json"),
+        failures.map { case (k, e) =>
+          s"${q(k)}: {\"error\": ${q(e.getClass.getName)}, " +
+            s"\"message\": ${q(String.valueOf(e.getMessage))}}"
+        }.mkString("{", ",", "}"))
+    }
+    selected.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        val sec = (System.nanoTime() - t0) / 1e9
+        timings :+= (name -> sec)
+        System.err.println(f"[verify] $name $sec%.3f s")
+      } catch { case e: Throwable =>
+        failures :+= (name -> e)
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // Same hygiene as Bench: dedup/index queries persist intermediates;
+      // without this the full-surface sweep accumulates dead cache entries.
+      spark.catalog.clearCache()
+      writeResults()
+    }
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

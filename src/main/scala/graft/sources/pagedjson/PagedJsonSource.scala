@@ -1,6 +1,8 @@
 package graft.sources.pagedjson
 
+import java.io.BufferedReader
 import java.net.{HttpURLConnection, URI, URLEncoder}
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
@@ -53,35 +55,76 @@ class PagedJsonSource extends TableProvider {
     new PagedJsonTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
+/** One offset window: `rows` rows starting at `cursor`, the window's
+  * first row in the endpoint's own addressing (file: the byte offset of
+  * its first line; HTTP: its `$offset`). */
+case class Page(cursor: Long, rows: Int)
+
 /** Where pages come from. Implementations are small serializable
   * descriptors (a path / a URL) opened per use, so an [[InputPartition]]
   * can carry one to any executor. */
 sealed trait PageEndpoint extends Serializable {
-  /** Row universe for offset-window planning. File: raw line count
-    * (filters run inside the reader, post-window). HTTP: the count the
-    * SERVER reports for the filtered result set — offsets index
-    * filtered rows when `$where` is in play. */
-  def totalRows(filters: Array[Filter]): Long
-  /** One `$offset/$limit` page, materialized (bounded by pageSize). */
-  def fetchPage(startRow: Long, endRow: Long, filters: Array[Filter]): Seq[JsonNode]
+  /** The offset windows of `pageSize` rows (the last one shorter) that
+    * cover the first `maxRows` rows of the row universe. File: raw lines,
+    * blank ones included (filters run inside the reader, post-window).
+    * HTTP: the count the SERVER reports for the filtered result set —
+    * offsets index filtered rows when `$where` is in play. */
+  def pages(pageSize: Int, maxRows: Long, filters: Array[Filter]): Seq[Page]
+  /** One planned page, materialized (bounded by pageSize). */
+  def fetchPage(page: Page, filters: Array[Filter]): Seq[JsonNode]
   /** First `n` records, for schema inference. */
   def samplePage(n: Int): Seq[JsonNode]
   def describe: String
 }
 
 /** Local JSONL stand-in: one JSON object per line; an offset window is a
-  * line-number window. */
+  * line-number window. Planning reads the file once, recording the byte
+  * offset where each page's first line starts, so each reader seeks
+  * straight to its page: a full scan reads every line twice (plan +
+  * read), not O(pages²) lines from re-reading the file from line 0. */
 case class FilePageEndpoint(path: String) extends PageEndpoint {
-  override def totalRows(filters: Array[Filter]): Long = {
-    val it = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-    try it.count() finally it.close()
+  override def pages(pageSize: Int, maxRows: Long, filters: Array[Filter]): Seq[Page] = {
+    // Lines end where BufferedReader.readLine ends them: at \n, \r or
+    // \r\n. In UTF-8 those bytes never occur inside a multi-byte
+    // character, so the split can run on raw bytes.
+    val starts = Array.newBuilder[Long]
+    var rows = 0L
+    var lineStart = true // the next byte begins a line
+    var prevCR = false
+    var base = 0L
+    val buf = new Array[Byte](1 << 16)
+    val in = Files.newInputStream(Paths.get(path))
+    try {
+      var n = in.read(buf)
+      while (n > 0 && !(lineStart && rows == maxRows)) {
+        var i = 0
+        while (i < n && !(lineStart && rows == maxRows)) {
+          val b = buf(i)
+          if (!(prevCR && b == '\n')) { // the \n of a \r\n ends no extra line
+            if (lineStart) {
+              if (rows % pageSize == 0) starts += base + i
+              rows += 1
+            }
+            lineStart = b == '\n' || b == '\r'
+          }
+          prevCR = b == '\r'
+          i += 1
+        }
+        base += n
+        n = in.read(buf)
+      }
+    } finally in.close()
+    starts.result().toSeq.zipWithIndex.map { case (cursor, p) =>
+      Page(cursor, math.min(pageSize.toLong, rows - p.toLong * pageSize).toInt)
+    }
   }
-  override def fetchPage(
-      startRow: Long, endRow: Long, filters: Array[Filter]): Seq[JsonNode] = {
-    val stream = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-    try stream.skip(startRow).limit(endRow - startRow).iterator().asScala
+  override def fetchPage(page: Page, filters: Array[Filter]): Seq[JsonNode] = {
+    val channel = FileChannel.open(Paths.get(path)).position(page.cursor)
+    val reader = new BufferedReader(
+      Channels.newReader(channel, StandardCharsets.UTF_8.newDecoder(), -1))
+    try Iterator.continually(reader.readLine()).take(page.rows).takeWhile(_ != null)
       .filter(_.nonEmpty).map(PagedJsonSource.mapper.readTree).toVector
-    finally stream.close()
+    finally reader.close()
   }
   override def samplePage(n: Int): Seq[JsonNode] = {
     val stream = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
@@ -156,7 +199,7 @@ case class HttpPageEndpoint(
     throw new IllegalStateException("unreachable")
   }
 
-  override def totalRows(filters: Array[Filter]): Long = {
+  private def totalRows(filters: Array[Filter]): Long = {
     val params = Seq("$select" -> "count(*)") ++ whereClause(filters).map("$where" -> _)
     val node = get(params)
     // [{"count": "N"}] — lenient on the alias: first field of first row.
@@ -167,11 +210,16 @@ case class HttpPageEndpoint(
       .getOrElse(sys.error(s"fieldless count(*) response from $url"))
   }
 
-  override def fetchPage(
-      startRow: Long, endRow: Long, filters: Array[Filter]): Seq[JsonNode] = {
+  override def pages(pageSize: Int, maxRows: Long, filters: Array[Filter]): Seq[Page] = {
+    val rows = math.min(totalRows(filters), maxRows)
+    (0L until rows by pageSize.toLong).map(start =>
+      Page(start, math.min(pageSize.toLong, rows - start).toInt))
+  }
+
+  override def fetchPage(page: Page, filters: Array[Filter]): Seq[JsonNode] = {
     val params = Seq(
-      "$limit" -> (endRow - startRow).toString,
-      "$offset" -> startRow.toString) ++ whereClause(filters).map("$where" -> _)
+      "$limit" -> page.rows.toString,
+      "$offset" -> page.cursor.toString) ++ whereClause(filters).map("$where" -> _)
     get(params).elements().asScala.toVector
   }
 
@@ -263,25 +311,18 @@ class PagedJsonScan(
     s"PagedJsonScan(${endpoint.describe}, pageSize=$pageSize, limit=$limit, " +
       s"pushedFilters=${filters.mkString("[", ",", "]")})"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val totalRows = endpoint.totalRows(filters)
-    // Limit pushdown: a LIMIT smaller than the dataset plans only the
-    // pages that can contribute (QuickFetch's single bounded page).
-    val effective = limit.map(l => math.min(l.toLong, totalRows)).getOrElse(totalRows)
-    val nPages = ((effective + pageSize - 1) / pageSize).toInt
-    (0 until nPages).map { p =>
-      val start = p.toLong * pageSize
-      val end = math.min(start + pageSize, effective)
-      PageInputPartition(endpoint, start, end): InputPartition
-    }.toArray
-  }
+  // Limit pushdown: a LIMIT smaller than the dataset plans only the
+  // pages that can contribute (QuickFetch's single bounded page).
+  override def planInputPartitions(): Array[InputPartition] =
+    endpoint.pages(pageSize, limit.fold(Long.MaxValue)(_.toLong), filters)
+      .map(PageInputPartition(endpoint, _): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedJsonReaderFactory(schema, filters)
 }
 
 /** One `$offset/$limit` window against an endpoint. */
-case class PageInputPartition(endpoint: PageEndpoint, startRow: Long, endRow: Long)
+case class PageInputPartition(endpoint: PageEndpoint, page: Page)
     extends InputPartition
 
 class PagedJsonReaderFactory(schema: StructType, filters: Array[Filter])
@@ -297,8 +338,7 @@ class PagedJsonReader(
     extends PartitionReader[InternalRow] {
 
   // One page, materialized on the executor (bounded by pageSize rows).
-  private val records = p.endpoint
-    .fetchPage(p.startRow, p.endRow, filters).iterator
+  private val records = p.endpoint.fetchPage(p.page, filters).iterator
   private val eq: Seq[(Int, String)] = filters.collect {
     case EqualTo(att, v: String) => schema.fieldIndex(att) -> v
   }.toSeq

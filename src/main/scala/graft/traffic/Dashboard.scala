@@ -1,13 +1,20 @@
 package graft.traffic
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The dashboard's six figure queries (`Dash.update_graphs`,
-  * `Dash.py:148-252`; SURVEY.md §3.2) bundled over one snapshot frame —
-  * each consumer re-runs these per UI tick against the immutable
-  * published snapshot ([[graft.streaming.SnapshotRefresh.SnapshotStore]]),
-  * which removes the reference's reader/writer race by construction.
+import graft.operators.Similarity
+
+/** The dashboard's six figures (`Dash.update_graphs`, `Dash.py:148-252`;
+  * SURVEY.md §3.2) over one snapshot frame. Like `update_graphs`, which
+  * returns all six figures from one fetched snapshot, one tick is ONE
+  * eager pass: [[figures]] runs the figure queries concurrently and
+  * returns their result tables already collected. Every consumer reads
+  * the immutable published snapshot
+  * ([[graft.streaming.SnapshotRefresh.SnapshotStore]]), which removes the
+  * reference's reader/writer race by construction.
   *
   * Expects the dashboard-variant normalized frame
   * ([[Dashboard.prepare]]): long table + `datetime` + WGS84 lat/lon.
@@ -26,12 +33,30 @@ object Dashboard {
     snapshot.select(col("street")).where(col("street").isNotNull)
       .distinct().orderBy(asc("street"))
 
-  /** All six figures, keyed as in the reference's callback. */
-  def figures(snapshot: DataFrame, selectedStreet: String): Seq[(String, DataFrame)] = Seq(
-    "street_time_series" -> TrafficAnalytics.streetTimeSeries(snapshot, selectedStreet),
-    "top_streets" -> TrafficAnalytics.topStreets(snapshot),
-    "latest_day_hourly" -> TrafficAnalytics.latestDayHourly(snapshot),
-    "borough_pie" -> TrafficAnalytics.boroughTraffic(snapshot),
-    "borough_bar" -> TrafficAnalytics.boroughTraffic(snapshot),
-    "map_points" -> TrafficAnalytics.mapPoints(snapshot))
+  /** All six figures, keyed as in the reference's callback. The five
+    * distinct figure queries run concurrently (the pie and the bar chart
+    * share one borough table), so one tick pays the Spark job floor once
+    * rather than once per figure. Each table comes back as a local
+    * DataFrame over its collected rows: a caller's `collect()` runs no
+    * job. The first failing query's error fails the call. */
+  def figures(snapshot: DataFrame, selectedStreet: String): Seq[(String, DataFrame)] = {
+    val queries = Seq(
+      TrafficAnalytics.streetTimeSeries(snapshot, selectedStreet),
+      TrafficAnalytics.topStreets(snapshot),
+      TrafficAnalytics.latestDayHourly(snapshot),
+      TrafficAnalytics.boroughTraffic(snapshot),
+      TrafficAnalytics.mapPoints(snapshot))
+    val tables = new Array[DataFrame](queries.size)
+    Similarity.inParallel(queries.zipWithIndex.map { case (q, i) =>
+      () => tables(i) = q.sparkSession.createDataFrame(q.collect().toSeq.asJava, q.schema)
+    }: _*)
+    val Array(series, top, latest, boroughs, points) = tables
+    Seq(
+      "street_time_series" -> series,
+      "top_streets" -> top,
+      "latest_day_hourly" -> latest,
+      "borough_pie" -> boroughs,
+      "borough_bar" -> boroughs,
+      "map_points" -> points)
+  }
 }

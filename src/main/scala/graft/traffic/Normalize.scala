@@ -1,5 +1,7 @@
 package graft.traffic
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,7 +21,13 @@ import graft.functions.GeoFunctions
   * Semantic traps pinned by NormalizeSpec (SURVEY.md §7.4):
   * `weekday` (Monday=0, NOT `dayofweek`), ISO `weekofyear`, try_cast
   * null-on-junk = pandas to_numeric(coerce), half-open volume bins,
-  * category codes assigned by sorted distinct value with null → −1.
+  * category codes assigned by sorted distinct value with null → −1,
+  * out-of-range date/time fields → null (try_cast's null-on-junk rule).
+  *
+  * Each step adds or replaces its columns in one `withColumns` (an
+  * insertion-ordered map keeps the column order of the equivalent
+  * `withColumn` chain), so the analyzer runs once per step rather than
+  * once per column — the dashboard re-plans this chain on every tick.
   */
 object Normalize {
 
@@ -48,29 +56,39 @@ object Normalize {
     * `to_numeric(errors='coerce')` ≈ try_cast; "12.5" coerces via double
     * to keep pandas parity — to_numeric accepts decimals). */
   def coerceNumerics(df: DataFrame): DataFrame =
-    NumericCols.filter(df.columns.contains).foldLeft(df) { (d, c) =>
-      d.withColumn(c, col(c).cast(StringType).try_cast("double").try_cast("long"))
-    }
+    df.withColumns(ListMap.from(NumericCols.filter(df.columns.contains).map { c =>
+      c -> col(c).cast(StringType).try_cast("double").try_cast("long")
+    }))
 
-  /** F47-F52: date, day_of_week (Monday=0), is_weekend, ISO week, month. */
-  def deriveDateFeatures(df: DataFrame): DataFrame =
-    df.withColumn("date", make_date(col("year"), col("month"), col("day")))
-      .withColumn("day_of_week", weekday(col("date")))
-      .withColumn("is_weekend", when(weekday(col("date")) >= 5, 1).otherwise(0))
-      .withColumn("week_of_year", weekofyear(col("date")))
-      .withColumn("month", month(col("date")))
+  /** F47-F52: date, day_of_week (Monday=0), is_weekend, ISO week, month.
+    * An impossible date (month 13, February 30) → null `date`, and null
+    * features derived from it, instead of failing the whole query under
+    * ANSI `make_date`. */
+  def deriveDateFeatures(df: DataFrame): DataFrame = {
+    val date = try_make_timestamp_ntz(
+      col("year"), col("month"), col("day"), lit(0), lit(0), lit(0)).cast(DateType)
+    df.withColumns(ListMap(
+      "date" -> date,
+      "day_of_week" -> weekday(date),
+      "is_weekend" -> when(weekday(date) >= 5, 1).otherwise(0),
+      "week_of_year" -> weekofyear(date),
+      "month" -> month(date)))
+  }
 
-  /** F48: event timestamp from y/m/d/h (dashboard variant, `Dash.py:59-60`). */
+  /** F48: event timestamp from y/m/d/h (dashboard variant, `Dash.py:59-60`).
+    * An out-of-range field (hour 1000) → null `datetime`, which the
+    * time-keyed figures drop like any null key. */
   def deriveTimestamp(df: DataFrame): DataFrame =
-    df.withColumn("datetime", make_timestamp(
+    df.withColumn("datetime", try_make_timestamp(
       col("year"), col("month"), col("day"), col("hour"), lit(0), lit(0)))
 
   /** F60/F61 + B15: extract x/y from the WKT geometry then drop it. */
   def deriveCoords(df: DataFrame): DataFrame =
     if (!df.columns.contains("geometry")) df
     else df
-      .withColumn("x_coord", GeoFunctions.wktPointX(col("geometry")))
-      .withColumn("y_coord", GeoFunctions.wktPointY(col("geometry")))
+      .withColumns(ListMap(
+        "x_coord" -> GeoFunctions.wktPointX(col("geometry")),
+        "y_coord" -> GeoFunctions.wktPointY(col("geometry"))))
       .drop("geometry")
 
   /** F62: WGS84 lat/lon from the state-plane coords (dashboard variant —
@@ -78,8 +96,9 @@ object Normalize {
     * first snapshot, a bug we deliberately do not reproduce;
     * SURVEY.md §7.4.7a). */
   def deriveLatLon(df: DataFrame): DataFrame =
-    df.withColumn("longitude", GeoFunctions.lonFromStatePlane(col("x_coord"), col("y_coord")))
-      .withColumn("latitude", GeoFunctions.latFromStatePlane(col("x_coord"), col("y_coord")))
+    df.withColumns(ListMap(
+      "longitude" -> GeoFunctions.lonFromStatePlane(col("x_coord"), col("y_coord")),
+      "latitude" -> GeoFunctions.latFromStatePlane(col("x_coord"), col("y_coord"))))
 
   /** F54: pandas `cat.codes` — integer codes assigned by sorted distinct
     * value, null → −1. Distributed: dense_rank over the (tiny) distinct

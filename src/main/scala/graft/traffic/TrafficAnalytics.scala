@@ -1,6 +1,7 @@
 package graft.traffic
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.traffic.Normalize.{directionLabel, volumeBin}
@@ -14,7 +15,8 @@ import graft.traffic.Normalize.{directionLabel, volumeBin}
   *
   * All are hash group-bys over low-cardinality keys → partial+final
   * HashAggregate, TakeOrderedAndProject for top-k; nothing here shuffles
-  * more than |distinct keys| rows.
+  * more than |distinct keys| rows. Full (non-top-k) outputs are ordered
+  * in ONE task (`ordered`), not by a global sort.
   */
 object TrafficAnalytics {
 
@@ -28,6 +30,17 @@ object TrafficAnalytics {
     * returns NULL — coalesce for parity (SURVEY.md §7.4.3). */
   private def sum0(c: String): Column = coalesce(sum(c), lit(0L))
 
+  /** Total order for an output bounded by a small key domain (hours,
+    * dates, boroughs, directions, one street's timestamps): its size
+    * does not grow with the input, so one task sorts it all. A global
+    * `orderBy` would plan a range exchange under AQE instead — a
+    * bound-sampling job, a shuffle and a result job — which for these
+    * outputs costs more than the sort itself. The task also merges the
+    * partial aggregates, at most (map tasks × keys) rows (SCALE.md
+    * §Aggregations). */
+  private def ordered(df: DataFrame, by: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(by: _*)
+
   /** D26/E44 — "busiest streets": top-k by total volume (tie-break on
     * street for determinism; pandas keeps insertion order). */
   def busiestStreets(df: DataFrame, k: Int = 10): DataFrame =
@@ -38,9 +51,8 @@ object TrafficAnalytics {
 
   /** D27 — traffic volume over time (time-series by date). */
   def trafficByDate(df: DataFrame): DataFrame =
-    byKey(df, col("date")).groupBy(col("date"))
-      .agg(sum0("volume").as("total_volume"))
-      .orderBy(asc("date"))
+    ordered(byKey(df, col("date")).groupBy(col("date"))
+      .agg(sum0("volume").as("total_volume")), asc("date"))
 
   /** E44 — busiest dates: top-k days by volume. */
   def busiestDates(df: DataFrame, k: Int = 10): DataFrame =
@@ -51,25 +63,22 @@ object TrafficAnalytics {
 
   /** D28 — peak hours: volume by hour-of-day. */
   def peakHours(df: DataFrame): DataFrame =
-    byKey(df, col("hour")).groupBy(col("hour"))
-      .agg(sum0("volume").as("total_volume"))
-      .orderBy(desc("total_volume"), asc("hour"))
+    ordered(byKey(df, col("hour")).groupBy(col("hour"))
+      .agg(sum0("volume").as("total_volume")), desc("total_volume"), asc("hour"))
 
   /** F53/D25 — directional traffic: code → compass label then group-sum
     * (unmapped codes → null group, as pandas map). */
   def directionalTraffic(df: DataFrame): DataFrame = {
     val labeled = df.withColumn("direction_label", directionLabel(col("direction_code")))
-    byKey(labeled, col("direction_label"))
+    ordered(byKey(labeled, col("direction_label"))
       .groupBy(col("direction_label"))
-      .agg(sum0("volume").as("total_volume"))
-      .orderBy(asc("direction_label"))
+      .agg(sum0("volume").as("total_volume")), asc("direction_label"))
   }
 
   /** D24 — borough totals. */
   def boroughTraffic(df: DataFrame): DataFrame =
-    byKey(df, col("borough")).groupBy(col("borough"))
-      .agg(sum0("volume").as("total_volume"))
-      .orderBy(desc("total_volume"), asc("borough"))
+    ordered(byKey(df, col("borough")).groupBy(col("borough"))
+      .agg(sum0("volume").as("total_volume")), desc("total_volume"), asc("borough"))
 
   /** D37 — pairwise Pearson correlation matrix over numeric columns:
     * all n² pairs in ONE aggregate pass (n is small — this is a single
@@ -89,24 +98,30 @@ object TrafficAnalytics {
 
   /** C19 — per-street time series (dashboard line chart). */
   def streetTimeSeries(df: DataFrame, street: String): DataFrame =
-    df.filter(col("street") === lit(street))
+    ordered(byKey(df.filter(col("street") === lit(street)), col("datetime"))
       .groupBy(col("datetime"))
-      .agg(sum0("volume").as("volume"))
-      .orderBy(asc("datetime"))
+      .agg(sum0("volume").as("volume")), asc("datetime"))
 
   /** D29/E45 — top-5 streets (dashboard bar chart). */
   def topStreets(df: DataFrame, k: Int = 5): DataFrame =
     busiestStreets(df, k)
 
-  /** C20/D30 — hourly volumes on the latest day in the data: scalar
-    * max-date subquery (1-row broadcast), then group by hour. */
+  /** C20/D30 — hourly volumes on the latest day in the data. One
+    * aggregation by (day, hour), then the latest day's rows picked in
+    * the single ordering task: its input is bounded by days × 24. A
+    * max-date subquery would be a stage and a broadcast that the main
+    * scan waits for — the longest job chain of a dashboard tick. A null
+    * `datetime` never equals the max day, so null keys drop as in
+    * [[byKey]]. */
   def latestDayHourly(df: DataFrame): DataFrame = {
-    val maxDay = df.agg(max(to_date(col("datetime"))).as("max_day"))
-    df.crossJoin(broadcast(maxDay))
-      .filter(to_date(col("datetime")) === col("max_day"))
-      .groupBy(hour(col("datetime")).as("hour"))
+    val byDayHour = df
+      .groupBy(to_date(col("datetime")).as("day"), hour(col("datetime")).as("hour"))
       .agg(sum0("volume").as("volume"))
-      .orderBy(asc("hour"))
+    // Unpartitioned window over one partition: no exchange.
+    val latest = byDayHour.coalesce(1)
+      .withColumn("max_day", max(col("day")).over(Window.partitionBy()))
+      .where(col("day") === col("max_day"))
+    ordered(latest.select(col("hour"), col("volume")), asc("hour"))
   }
 
   /** Map projection (bounded: the only full-row projection, capped). */

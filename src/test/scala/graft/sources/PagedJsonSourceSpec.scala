@@ -68,6 +68,42 @@ class PagedJsonSourceSpec extends SparkSpec {
     assert(scan.contains("limit=None"), s"plan: $scan")
   }
 
+  test("multi-page file scan: each page read from its own offset, rows unchanged") {
+    // Mixed \n, \r\n and \r line ends, blank lines, multi-byte UTF-8 and
+    // no trailing newline, over 7-line pages: a page read from a wrong
+    // byte offset, or a line split differently from readLine's, shows as
+    // a missing, duplicated or garbled row.
+    val p = Files.createTempFile("pagedjson-multi", ".jsonl")
+    p.toFile.deleteOnExit()
+    val ends = Seq("\n", "\r\n", "\r")
+    val text = (0 until 100).map { i =>
+      val line = if (i % 11 == 5) "" else s"""{"requestid": "$i", "street": "Cañón €$i"}"""
+      line + (if (i == 99) "" else ends(i % 3))
+    }.mkString
+    Files.write(p, text.getBytes(StandardCharsets.UTF_8))
+    // The row universe is readLine's lines, blank ones included; where a
+    // blank line's \n follows a \r, the two are one \r\n line end.
+    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).toArray.toSeq.map(_.toString)
+    assert(lines.length == 97)
+    def ids(ls: Seq[String]): Seq[String] =
+      ls.filter(_.nonEmpty).map(l => l.split('"')(3))
+    val scan = spark.read.format("paged-json").option("path", p.toString)
+      .option("pageSize", 7).load()
+    assert(scan.rdd.getNumPartitions == 14) // ceil(97 / 7)
+    val rows = scan.collect()
+    assert(rows.map(_.getAs[String]("requestid")).toSeq == ids(lines))
+    assert(rows.forall(r => r.getAs[String]("street") == s"Cañón €${r.getAs[String]("requestid")}"))
+    // Limit pushdown windows raw lines, blanks included: LIMIT 20 reads
+    // lines 0-19, which hold 18 records.
+    val limited = scan.limit(20)
+    assert(limited.queryExecution.executedPlan.collectLeaves().mkString.contains("limit=Some(20)"))
+    assert(limited.collect().map(_.getString(0)).toSeq == ids(lines.take(20)))
+    // Equality filter pushdown still runs inside every page's reader.
+    val one = scan.filter(col("requestid") === "94")
+    assert(one.queryExecution.executedPlan.collectLeaves().mkString.contains("EqualTo(requestid,94)"))
+    assert(one.collect().map(_.getString(0)).toSeq == Seq("94"))
+  }
+
   test("explicit columns option overrides inference; missing keys -> null") {
     val df = spark.read.format("paged-json")
       .option("path", dataPath).option("pageSize", 500)

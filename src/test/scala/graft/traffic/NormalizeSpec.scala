@@ -51,6 +51,18 @@ class NormalizeSpec extends SparkSpec {
     assert(r.getAs[Int]("week_of_year") == 53)
   }
 
+  test("out-of-range month and hour -> null date/datetime, not a failed query") {
+    val got = Normalize.deriveTimestamp(Normalize(TrafficFixture.outOfRange(spark)))
+      .select("request_id", "hour", "date", "month", "day_of_week", "datetime")
+      .collect().map(r => r.getString(0) -> r).toMap
+    // hour 1000 ("1e3") keeps its date; only the timestamp is impossible
+    assert(got("9030").getAs[Long]("hour") == 1000L)
+    assert(got("9030").getAs[java.sql.Date]("date").toString == "2024-01-02")
+    assert(got("9030").isNullAt(5))
+    // month 13: no date, so no date features and no timestamp
+    Seq(2, 3, 4, 5).foreach(i => assert(got("9031").isNullAt(i), s"column $i"))
+  }
+
   test("WKT coords extracted; malformed/empty -> null; geometry dropped") {
     val ok = norm.filter(col("request_id") === "9001").collect().head
     assert(math.abs(ok.getAs[Double]("x_coord") - 997407.0998) < 1e-9)

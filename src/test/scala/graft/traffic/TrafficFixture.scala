@@ -60,8 +60,23 @@ object TrafficFixture {
       // ISO week-53 date (2021-01-01 is ISO week 53 of 2020)
       ("9020", "Queens", "2021", "1", "1", "6", "0", "10", "100020",
         "POINT (1 2)", "BROADWAY", "a", "b", "NB"))
-    (clean ++ adversarial).toDF(
-      "requestid", "boro", "yr", "m", "d", "hh", "mm", "vol", "segmentid",
-      "wktgeom", "street", "fromst", "tost", "direction")
+    (clean ++ adversarial).toDF(Columns: _*)
   }
+
+  /** Rows whose date/time fields are numeric but out of range: hour 1000
+    * ("1e3") and month 13. Normalize must null the derived date/time, not
+    * fail the query. Kept out of [[raw]], whose goldens they would move. */
+  def outOfRange(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      ("9030", "Queens", "2024", "1", "2", "1e3", "0", "10", "100030",
+        "POINT (997407.0998 208620.9261)", "BROADWAY", "a", "b", "NB"),
+      ("9031", "Queens", "2024", "13", "2", "3", "0", "10", "100031",
+        "POINT (997407.0998 208620.9261)", "BROADWAY", "a", "b", "NB")
+    ).toDF(Columns: _*)
+  }
+
+  private val Columns = Seq(
+    "requestid", "boro", "yr", "m", "d", "hh", "mm", "vol", "segmentid",
+    "wktgeom", "street", "fromst", "tost", "direction")
 }
