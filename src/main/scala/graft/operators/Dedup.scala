@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.expressions.SimHash64.simhash64
 import graft.functions.TextFunctions
@@ -151,14 +154,19 @@ object Dedup {
     * Input needs columns `id` and `sig`; `carry` names extra columns to
     * keep on each banded row. */
   private def bandedRows(sig: DataFrame, k: Int, bands: Int, carry: Seq[String]): DataFrame = {
-    val r = k / bands
     val keep = col("id") +: carry.map(col)
-    sig.select(keep :+
-        explode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          struct(b.as("band"), xxhash64(b, array_join(
-            transform(slice(col("sig"), b * r + 1, lit(r)), h => h.cast("string")),
-            ",")).as("bh")))).as("e"): _*)
+    sig.select(keep :+ explode(bandHashes(k, bands)).as("e"): _*)
       .select(keep :+ col("e.band") :+ col("e.bh"): _*)
+  }
+
+  /** A `sig` row's bands as an array of (band, bh) structs — the
+    * banding formula itself, which [[bandedRows]] explodes. */
+  private def bandHashes(k: Int, bands: Int): Column = {
+    val r = k / bands
+    transform(sequence(lit(0), lit(bands - 1)), b =>
+      struct(b.as("band"), xxhash64(b, array_join(
+        transform(slice(col("sig"), b * r + 1, lit(r)), h => h.cast("string")),
+        ",")).as("bh")))
   }
 
   /** MinHash+LSH near-dup candidates (approximate; the 100 TB scale path).
@@ -1048,9 +1056,9 @@ object Dedup {
     // index under the same prefix (same-JVM or orphaned-location) would
     // silently hide rows of the NEW index — and their location blocks
     // deleteFromCorpusIndex's first saveAsTable in a later JVM. The
-    // write SEEDS an empty tombstones table so every load anti-joins
-    // unconditionally: delete visibility can never depend on whether a
-    // first delete happened to precede the load. Seeded AFTER the data
+    // write SEEDS an empty tombstones table so the table always exists:
+    // delete visibility can never depend on whether a first delete
+    // happened to precede the load. Seeded AFTER the data
     // writes succeed: a crash mid-rebuild leaves the OLD tombstones
     // over broken data tables (which indexMeta surfaces loudly) rather
     // than cleared tombstones silently resurrecting deleted rows.
@@ -1132,58 +1140,52 @@ object Dedup {
     * nor needed (steady-state probes touch only the buckets the shard's
     * band hashes land in). Probe results are bit-equal to a same-session
     * build (gated in `IndexLifecycleSpec` and oracle-gated end to end as
-    * q189). */
+    * q189).
+    *
+    * Tombstone-aware: a [[deleteFromCorpusIndex]]-ed id is invisible to
+    * every probe through this ONE load definition. The load reads the
+    * tombstone ids once ([[Tombstones]], the read path shared with
+    * [[Similarity]]'s indexes) and both relations filter them out with a
+    * predicate over one broadcast variable — no join and no job per
+    * probe, and a filter keeps the bucketed scans' distribution, so the
+    * exchange-free probe plan survives (gated in IndexLifecycleSpec).
+    * Delete VISIBILITY matches append visibility: a load performed after
+    * the delete sees it; a handle held from before keeps the tombstones
+    * read when it was loaded. */
   def loadCorpusIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): CorpusIndex = {
     val m = indexMeta(spark, tablePrefix)
-    // Tombstone-aware: a [[deleteFromCorpusIndex]]-ed id is invisible to
-    // every probe through this ONE load definition. The anti-join
-    // BROADCASTS (tombstones are request-sized between compactions) and
-    // sits above the bucketed scans, so the exchange-free probe plan
-    // survives — BroadcastHashJoin preserves the streamed side's
-    // distribution (gated in IndexLifecycleSpec). Delete VISIBILITY
-    // matches append visibility: a load performed after the delete sees
-    // it; a handle held from before is a snapshot of the relations it
-    // resolved at load time.
-    val live = liveOnly(spark, tablePrefix) _
-    CorpusIndex(
-      live(spark.table(s"${tablePrefix}_rel")),
-      live(spark.table(s"${tablePrefix}_banded")),
-      m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
+    corpusTables(spark, tablePrefix, m, corpusTombstones(spark, tablePrefix))
   }
+
+  private def corpusTables(
+      spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
+      m: Row, tombs: Tombstones): CorpusIndex =
+    CorpusIndex(
+      tombs.live(spark.table(s"${tablePrefix}_rel")),
+      tombs.live(spark.table(s"${tablePrefix}_banded")),
+      m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
 
   private def tombstonesTable(tablePrefix: String): String =
     s"${tablePrefix}_tombstones"
 
-  /** The exists check only grandfathers indexes written before
-    * tombstone seeding; current [[writeCorpusIndex]] always seeds, so
-    * loads always anti-join. */
-  private def liveOnly(
+  /** The tombstone table's location; `None` only for an index written
+    * before tombstone seeding (current [[writeCorpusIndex]] always
+    * seeds). */
+  private def tombstoneDir(
       spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String)(df: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(tombstonesTable(tablePrefix))) df
-    else df.join(tombstoneSide(spark, tablePrefix), Seq("id"), "left_anti")
-
-  /** The tombstone id frame as a join side, broadcast-gated on the
-    * table's file bytes (driver-side listing, no job) — the
-    * [[graft.operators.Similarity]] tombstoneSide discipline: the hint
-    * stays FORCED inside [[Similarity.TombstoneBroadcastCapBytes]]
-    * (the anti-join must broadcast to keep the bucketed side's
-    * exchange-free probe plan, which is plan-gated with the session
-    * threshold at −1; tombstones are request-sized between compactions
-    * by contract), and past the cap a months-un-compacted delete
-    * stream degrades to the optimizer's shuffled anti-join instead of
-    * failing every load with broadcast pressure;
-    * [[compactCorpusIndex]] restores the broadcast-cheap regime. */
-  private def tombstoneSide(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): DataFrame = {
-    val tomb = spark.table(tombstonesTable(tablePrefix)).select(col("id"))
-    val bytes = tombstoneTableFiles(spark, tablePrefix).map(_.getLen).sum
-    if (bytes <= Similarity.TombstoneBroadcastCapBytes) broadcast(tomb)
-    else tomb
+      tablePrefix: String): Option[String] = {
+    val name = tombstonesTable(tablePrefix)
+    if (!spark.catalog.tableExists(name)) None
+    else Some(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name)).location.toString)
   }
+
+  private def corpusTombstones(
+      spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String): Tombstones =
+    Tombstones.at(spark, tombstoneDir(spark, tablePrefix))
 
   private case class CorpusHealthInfo(
       numBuckets: Int, nBandedFiles: Int, nRelFiles: Int,
@@ -1219,9 +1221,7 @@ object Dedup {
       if (ids.isEmpty) fs.size
       else ids.groupBy(identity).values.map(_.size).max
     }
-    val tombs = tombstoneTableFiles(spark, tablePrefix)
-      .filter(s => !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+    val tombs = Tombstones.list(spark, tombstoneDir(spark, tablePrefix))
     CorpusHealthInfo(buckets, banded.size, rel.size,
       math.max(maxPerBucket(banded), maxPerBucket(rel)),
       tombs.size, tombs.map(_.getLen).sum)
@@ -1242,7 +1242,7 @@ object Dedup {
     import spark.implicits._
     Seq((h.numBuckets, h.nBandedFiles, h.nRelFiles, h.maxFilesPerBucket,
         h.nTombstoneFiles, h.tombstoneBytes,
-        h.tombstoneBytes <= Similarity.TombstoneBroadcastCapBytes,
+        h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
         corpusNeedsCompaction(h, maxFilesPerBucket, maxTombstoneBytes)))
       .toDF("n_buckets", "n_banded_files", "n_rel_files",
         "max_files_per_bucket", "n_tombstone_files", "tombstone_bytes",
@@ -1272,33 +1272,16 @@ object Dedup {
     due
   }
 
-  /** File statuses currently under the tombstone table's location — the
-    * compaction snapshot (and the broadcast gate's byte count). */
-  private def tombstoneTableFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val name = tombstonesTable(tablePrefix)
-    if (!spark.catalog.tableExists(name)) Seq.empty
-    else {
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)).location
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(_.isFile).toSeq
-    }
-  }
-
   /** Logical delete from a durable corpus index — RTBF reaching the
     * ARTIFACT, not just the corpus ([[deletionCascade]] handles the
     * corpus side; without this, a probe against a months-old index
     * keeps returning the deleted doc, and its content-derived rows —
     * shingle sets, signatures — stay on disk). Ids append to
-    * `<prefix>_tombstones`; every [[loadCorpusIndex]] anti-joins it, so
+    * `<prefix>_tombstones`; every [[loadCorpusIndex]] filters by it, so
     * one request-sized write makes the delete visible to every probe
     * form on the next load (handles held from before the delete are
     * snapshots — they see it on their next re-resolve, exactly like
-    * appends). Physical erasure (and the broadcast-bound reset) is
+    * appends). Physical erasure (and the reset of the tombstone set) is
     * [[compactCorpusIndex]] — the two-phase discipline shared with
     * [[graft.operators.Similarity]]'s ANN index deletes. A tombstoned
     * id stays deleted until compaction clears the tombstones;
@@ -1329,14 +1312,16 @@ object Dedup {
   def compactCorpusIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): Unit = {
-    // Snapshot the tombstone FILES before anything reads them: the
-    // rewrite below erases exactly this set, so a deleteFromCorpusIndex
-    // raced in while the survivor rewrite runs lands as a file outside
-    // the snapshot and SURVIVES the compaction (the Similarity
-    // compaction discipline — a blanket reset would silently discard
-    // the late delete and resurrect its rows in every later probe).
-    val snapshot = tombstoneTableFiles(spark, tablePrefix)
-    val idx = loadCorpusIndex(spark, tablePrefix) // survivors view
+    // Snapshot the tombstones before anything reads the tables: the
+    // survivors view applies exactly this snapshot and the erase below
+    // deletes exactly its files, so a deleteFromCorpusIndex raced in
+    // while the survivor rewrite runs lands as a file outside the
+    // snapshot and SURVIVES the compaction (the Similarity compaction
+    // discipline — a blanket reset would silently discard the late
+    // delete and resurrect its rows in every later probe).
+    val m = indexMeta(spark, tablePrefix)
+    val tombs = corpusTombstones(spark, tablePrefix)
+    val idx = corpusTables(spark, tablePrefix, m, tombs) // survivors view
     // The bucket count is a property of the EXISTING index, read from
     // the catalog (appendToCorpusIndex's discipline) — a parameter here
     // would silently re-lay a non-default index on the default.
@@ -1352,12 +1337,7 @@ object Dedup {
     // Erase only the snapshotted files; the table itself stays (its
     // schema lives in the catalog, so an all-files-erased table reads
     // as empty and later deletes still Append into it).
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(
-        tombstonesTable(tablePrefix))).location
-    val fs = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    snapshot.foreach(s => fs.delete(s.getPath, false))
+    tombs.erase()
     // The files changed behind the catalog's back — drop the cached
     // listing so the next read doesn't chase deleted part files.
     spark.catalog.refreshTable(tombstonesTable(tablePrefix))
@@ -1377,7 +1357,7 @@ object Dedup {
     * surfaces as a bare catalog/analysis error). */
   private def indexMeta(
       spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): org.apache.spark.sql.Row = {
+      tablePrefix: String): Row = {
     requireIndexPrefix(tablePrefix)
     val missing = Seq("meta", "banded", "rel")
       .map(s => s"${tablePrefix}_$s")
@@ -1429,26 +1409,19 @@ object Dedup {
     val spark = shard.sparkSession
     val m = indexMeta(spark, tablePrefix)
     // Guard the re-ingest-of-a-tombstoned-id edge (the Similarity
-    // append discipline): the appended rows would land in the tables
-    // but every load anti-joins the tombstones, so the id would stay
-    // invisible to every probe until a compaction — silent data loss
-    // under a delete-by-mistake-then-re-add churn. One broadcast-sized
-    // semi-join per append; the error names the fix.
+    // append discipline, one shared [[Tombstones.requireNoneOf]]): the
+    // appended rows would land in the tables but every load filters the
+    // tombstones out, so the id would stay invisible to every probe
+    // until a compaction — silent data loss under a
+    // delete-by-mistake-then-re-add churn. The error names the fix.
     // Both guards are independent bounded jobs — run concurrently
     // (Similarity.inParallel; the lowest-index error wins, so the
     // tombstone guard keeps its documented precedence over the
     // live-id one).
     Similarity.inParallel(
-      () => if (spark.catalog.tableExists(tombstonesTable(tablePrefix))) {
-        val clash = shard.select(id.cast("long").as("id"))
-          .join(tombstoneSide(spark, tablePrefix), Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(clash.isEmpty,
-          s"append would re-ingest tombstoned id(s) ${clash.mkString(", ")} " +
-            s"into corpus index '$tablePrefix' — a tombstoned id stays " +
-            "invisible to every probe until compaction clears the " +
-            "tombstones; run compactCorpusIndex first, then re-append")
-      },
+      () => corpusTombstones(spark, tablePrefix).requireNoneOf(
+        shard.select(id.cast("long").as("id")),
+        s"into corpus index '$tablePrefix'", "compactCorpusIndex"),
       // Live-duplicate guard (the Similarity requireNewIds discipline):
       // tombstoned ids are rejected by the guard above, so any clash
       // here is an id whose rows are LIVE — a retry would land them
@@ -1512,15 +1485,70 @@ object Dedup {
     * qualifying pair is missed with p = (1−τ^r)^b ≈ 6e-7 at defaults —
     * oracle-checkable against the exhaustive cross join (q66).
     *
+    * Point probes read the index by key. A shard whose rows are already
+    * on the driver (its optimized plan is a `LocalRelation` — an
+    * interactive lookup of a few documents) with at most
+    * [[PointProbeMaxKeys]] band keys skips the join: it reads only the
+    * `_banded` rows under its own band hashes, then only the `_rel` rows
+    * of the candidates, and verifies with the same Column expressions as
+    * the join ([[candidatePair]], [[jaccardVerified]]) — two small jobs
+    * (one when nothing shares a band), where the join runs six, scans
+    * every bucket and ships the whole `_rel` table to verify a handful
+    * of candidates. The result is a local DataFrame. The key bound keeps
+    * the `bh IN (…)` literal small: past it a shard touches most buckets
+    * anyway and the join is the better plan. Every other shard —
+    * parquet-backed, streaming, persisted, or over the bound — takes the
+    * join unchanged.
+    *
     * `persistNewRel = false` skips caching the new-side shingle relation
     * (it feeds the banded AND verify subtrees, so it is computed twice):
     * pass false from per-micro-batch callers that already cache the
-    * batch rows and must not leak cache entries per batch.
+    * batch rows and must not leak cache entries per batch. A point probe
+    * caches nothing either way.
     * Output: (new_id, corpus_id, jaccard ≥ threshold). */
   def nearDupAgainstIndex(
       newDocs: DataFrame, id: Column, text: Column,
       index: CorpusIndex, threshold: Double,
-      persistNewRel: Boolean = true): DataFrame = {
+      persistNewRel: Boolean = true): DataFrame =
+    if (isPointProbe(newDocs, index.bands))
+      nearDupByKey(newDocs, id, text, index, threshold)
+    else nearDupByJoin(newDocs, id, text, index, threshold, persistNewRel)
+
+  /** Past this many band keys (rows × bands) a driver-resident shard
+    * takes the distributed join: a 10⁴-entry `IN` literal costs the plan
+    * more than the bucket pruning saves, and a shard with that many keys
+    * reads most buckets anyway. 1024 keys is 51 documents at the
+    * default 20 bands. */
+  private val PointProbeMaxKeys = 1024
+
+  private def isPointProbe(newDocs: DataFrame, bands: Int): Boolean =
+    !newDocs.isStreaming && (newDocs.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size.toLong * bands <= PointProbeMaxKeys
+      case _ => false
+    })
+
+  /** The candidate condition beyond the shared band hash: another doc,
+    * and sizes within a τ factor both ways. */
+  private def candidatePair(
+      aId: Column, aN: Column, bId: Column, bN: Column,
+      threshold: Double): Column =
+    aId =!= bId && aN >= ceil(bN * threshold) && bN >= ceil(aN * threshold)
+
+  /** Exact verification of (new_id, corpus_id, hs_a, n_a, hs_b, n_b)
+    * candidate rows: the n-gram Jaccard, kept at or above `threshold`. */
+  private def jaccardVerified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("n_inter", size(array_intersect(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard",
+        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("new_id"), col("corpus_id"), col("jaccard"))
+
+  private def nearDupByJoin(
+      newDocs: DataFrame, id: Column, text: Column,
+      index: CorpusIndex, threshold: Double,
+      persistNewRel: Boolean): DataFrame = {
     val rel0 = shingleRel(newDocs, id, text, index.n, index.k)
     val rel =
       if (persistNewRel)
@@ -1538,25 +1566,73 @@ object Dedup {
     // co-partitioning, which the planner requires all keys for).
     val cand = banded.as("a").join(index.banded.as("b"),
         col("a.bh") === col("b.bh") &&
-          col("a.id") =!= col("b.id") &&
-          col("a.n_sh") >= ceil(col("b.n_sh") * threshold) &&
-          col("b.n_sh") >= ceil(col("a.n_sh") * threshold))
+          candidatePair(col("a.id"), col("a.n_sh"), col("b.id"), col("b.n_sh"),
+            threshold))
       .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
       .dropDuplicates("new_id", "corpus_id")
-    val verified = cand
+    val verified = jaccardVerified(cand
       .join(rel.select(col("id").as("new_id"), col("hs").as("hs_a"),
         col("n_sh").as("n_a")), "new_id")
       .join(index.rel.select(col("id").as("corpus_id"), col("hs").as("hs_b"),
-        col("n_sh").as("n_b")), "corpus_id")
-      .withColumn("n_inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("jaccard"))
+        col("n_sh").as("n_b")), "corpus_id"), threshold)
     // persistNewRel = false callers (per-micro-batch) stay fully lazy —
     // nothing to release, and an eager checkpoint per batch would defeat
     // the stream-static join shape.
     if (persistNewRel) materializeAndRelease(verified, rel) else verified
+  }
+
+  /** [[nearDupAgainstIndex]] for a driver-resident shard: the join's
+    * semantics, evaluated over key-selected index rows. */
+  private def nearDupByKey(
+      newDocs: DataFrame, id: Column, text: Column,
+      index: CorpusIndex, threshold: Double): DataFrame = {
+    val spark = newDocs.sparkSession
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+    // 1. Band the shard with the join's banding formula. A projection of
+    //    local rows folds into a local relation, so this runs no job.
+    val rel = shingleRel(newDocs, id, text, index.n, index.k)
+    val shardRel = rel.select(col("id"), col("hs"), col("n_sh"),
+      bandHashes(index.k, index.bands).as("bands")).collect().toSeq
+    val byKey = shardRel
+      .flatMap(a => a.getSeq[Row](3).map(band => band.getLong(1) -> a))
+      .groupMap(_._1)(_._2)
+    // 2. The index's band rows under the shard's keys (bucket-pruned).
+    val hits =
+      if (byKey.isEmpty) Array.empty[Row]
+      else index.banded.filter(col("bh").isin(byKey.keys.toSeq: _*))
+        .select("id", "n_sh", "bh").collect()
+    val (hsType, nType) = (rel.schema("hs").dataType, rel.schema("n_sh").dataType)
+    val pairSchema = StructType(Seq(
+      StructField("new_id", LongType), StructField("n_a", nType),
+      StructField("corpus_id", LongType), StructField("n_b", nType)))
+    val cand = local(
+        for (b <- hits.toSeq; a <- byKey(b.getLong(2)))
+          yield Row(a.get(0), a.get(2), b.get(0), b.get(1)),
+        pairSchema)
+      .filter(candidatePair(col("new_id"), col("n_a"), col("corpus_id"), col("n_b"),
+        threshold))
+      .select(col("new_id"), col("corpus_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
+    // 3. The candidates' verification rows; no read without candidates.
+    val corpusRel =
+      if (cand.isEmpty) Map.empty[Long, Array[Row]]
+      else index.rel.filter(col("id").isin(cand.map(_._2).distinct.toSeq: _*))
+        .select("id", "hs", "n_sh").collect().groupBy(_.getLong(0))
+    // 4. Verify over a local frame with the join's expressions.
+    val newRel = shardRel.filter(!_.isNullAt(0)).groupBy(_.getLong(0))
+    val verifySchema = StructType(Seq(
+      StructField("new_id", LongType), StructField("corpus_id", LongType),
+      StructField("hs_a", hsType), StructField("n_a", nType),
+      StructField("hs_b", hsType), StructField("n_b", nType)))
+    val verified = jaccardVerified(local(
+      for {
+        (n, c) <- cand.toSeq
+        a <- newRel.getOrElse(n, Nil)
+        b <- corpusRel.getOrElse(c, Array.empty[Row])
+      } yield Row(n, c, a.get(1), a.get(2), b.get(1), b.get(2)),
+      verifySchema), threshold)
+    local(verified.collect().toSeq, verified.schema)
   }
 
   /** Resolve near-dup pairs into clusters: connected components by

@@ -584,8 +584,8 @@ object Similarity {
         .parquet(s"$path/centroids"))
     // A fresh index has no deletions: stale tombstones from a previous
     // index at this path would silently hide rows of the NEW one. The
-    // write SEEDS an empty tombstone table, so every load anti-joins
-    // unconditionally — delete visibility can never depend on whether a
+    // write SEEDS an empty tombstone table, so the tombstone relation
+    // always exists — delete visibility can never depend on whether a
     // first delete happened to precede the load. Seeded AFTER the data
     // writes succeed: a crash mid-rebuild then leaves the OLD
     // tombstones over a broken data dir instead of freshly cleared
@@ -671,7 +671,7 @@ object Similarity {
       path: String): (Array[Array[Float]], DataFrame) = {
     requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
     (loadIvfCentroids(spark, path),
-      withoutTombstones(spark, path, spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists")))
+      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists")))
   }
 
   /** ===== Deletion + compaction for the durable ANN indexes =====
@@ -685,13 +685,14 @@ object Similarity {
     *
     *   - [[deleteFromIvfIndex]]/[[deleteFromLshIndex]]/
     *     [[deleteFromPqIndex]] are the LOGICAL delete — ids append to a
-    *     `tombstones` table beside the index, and every load path
-    *     anti-joins it (broadcast: the tombstone set is bounded by
-    *     delete-request volume between compactions — parameter-sized
-    *     by the RTBF workload's nature, and reset by compaction).
-    *     Immediate, cheap (one request-sized write), probe plans keep
-    *     their partition pruning (the anti-join sits ABOVE the pruned
-    *     scan and broadcasts, so the scan's distribution survives).
+    *     `tombstones` table beside the index. Every load reads the ids
+    *     once ([[Tombstones]]: the set is bounded by delete-request
+    *     volume between compactions — parameter-sized by the RTBF
+    *     workload's nature, and reset by compaction) and filters them
+    *     out with a predicate over a broadcast variable. Immediate,
+    *     cheap (one request-sized write), and probe plans keep their
+    *     partition pruning and gain no job: the filter sits above the
+    *     pruned scan and keeps its distribution.
     *   - [[compactIvfIndex]]/[[compactLshIndex]]/[[compactPqIndex]] are
     *     the PHYSICAL erasure + layout reset: rewrite the data
     *     directory without the tombstoned rows (and without the
@@ -708,13 +709,13 @@ object Similarity {
     *
     * A tombstoned id stays deleted until compaction clears the
     * tombstones — re-ingesting it via an append path would land rows
-    * every load anti-joins away, so the append verbs GUARD the edge
+    * every load filters out, so the append verbs GUARD the edge
     * ([[requireNotTombstoned]]): appending a tombstoned id fails
     * readably, naming the compaction that makes it legal.
     *
     * Concurrency: delete-during-compaction is safe — compaction erases
     * only the tombstone FILES it snapshotted at start
-    * ([[tombstoneFileSnapshot]]), so a tombstone appended mid-compaction
+    * ([[clearSnapshottedTombstones]]), so a tombstone appended mid-compaction
     * survives and keeps hiding its id. Two compactions of the SAME
     * index must not run concurrently (the swap-in-place rename window;
     * [[swapInPlace]] detects and names the interrupted state). */
@@ -746,9 +747,9 @@ object Similarity {
   def compactIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
-    val snapshot = tombstoneFileSnapshot(spark, path)
-    val survivors = withoutTombstones(
-      spark, path, spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists"))
+    val tombs = tombstonesAt(spark, path)
+    val survivors = tombs.live(
+      spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists"))
     requireNonEmptySurvivors(survivors, path)
     swapInPlace(spark, s"$path/lists") { tmp =>
       survivors.repartition(
@@ -757,7 +758,7 @@ object Similarity {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(tmp)
     }
-    clearSnapshottedTombstones(spark, path, snapshot)
+    clearSnapshottedTombstones(spark, path, tombs)
   }
 
   /** [[compactIvfIndex]] for the LSH layout: erasure + merging the
@@ -766,16 +767,16 @@ object Similarity {
   def compactLshIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
-    val snapshot = tombstoneFileSnapshot(spark, path)
-    val survivors = withoutTombstones(
-      spark, path, spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets"))
+    val tombs = tombstonesAt(spark, path)
+    val survivors = tombs.live(
+      spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets"))
     requireNonEmptySurvivors(survivors, path)
     val nBits = loadLshNBits(spark, path)
     swapInPlace(spark, s"$path/buckets") { tmp =>
       writeLshBuckets(survivors, nBits, tmp,
         org.apache.spark.sql.SaveMode.Overwrite)
     }
-    clearSnapshottedTombstones(spark, path, snapshot)
+    clearSnapshottedTombstones(spark, path, tombs)
   }
 
   /** [[compactIvfIndex]] for the PQ code table (unpartitioned — the ADC
@@ -783,15 +784,15 @@ object Similarity {
   def compactPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
-    val snapshot = tombstoneFileSnapshot(spark, path)
-    val survivors = withoutTombstones(
-      spark, path, spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes"))
+    val tombs = tombstonesAt(spark, path)
+    val survivors = tombs.live(
+      spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes"))
     requireNonEmptySurvivors(survivors, path)
     swapInPlace(spark, s"$path/codes") { tmp =>
       Dedup.spread(survivors)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
     }
-    clearSnapshottedTombstones(spark, path, snapshot)
+    clearSnapshottedTombstones(spark, path, tombs)
   }
 
   /** A compaction whose survivor set is EMPTY would commit a data dir
@@ -822,8 +823,6 @@ object Similarity {
     * names against the declared type. */
   private object ArtifactSchemas {
     import org.apache.spark.sql.types._
-    val tombstones: StructType = StructType(Seq(
-      StructField("id", LongType)))
     val ivfCentroids: StructType = StructType(Seq(
       StructField("list", IntegerType),
       StructField("centroid", ArrayType(FloatType))))
@@ -863,78 +862,24 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(s"$path/tombstones")
 
-  /** Anti-join a data frame against the index's tombstones — THE one
-    * definition every load path routes through, so a deleted id is
+  /** The index's tombstones as one snapshot ([[Tombstones]] — the read
+    * path shared with [[Dedup]]'s corpus index), so a deleted id is
     * invisible to every probe form (single, batch, pruned) at once.
-    * Broadcast by contract (see the deletion scaladoc). The exists
-    * check only grandfathers indexes written before tombstone seeding;
-    * current writers always seed, so loads always anti-join. Delete
-    * VISIBILITY matches append visibility: a load (or a
-    * [[graft.streaming.StreamingAnn.startRefreshing]] batch boundary)
-    * after the delete sees it; a handle held from before is a
-    * snapshot — its parquet file listings were frozen at load. */
-  private def withoutTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) df
-    else df.join(tombstoneSide(spark, path), Seq("id"), "left_anti")
-  }
+    * Every load takes one: delete VISIBILITY matches append visibility —
+    * a load (or a [[graft.streaming.StreamingAnn.startRefreshing]] batch
+    * boundary) after the delete sees it; a handle held from before keeps
+    * the tombstones read when it was loaded. */
+  private def tombstonesAt(
+      spark: org.apache.spark.sql.SparkSession, path: String): Tombstones =
+    Tombstones.at(spark, Some(s"$path/tombstones"))
 
-  /** Hard cap (file bytes) on the FORCED tombstone broadcast. The hint
-    * is deliberately forced, not left to autoBroadcastJoinThreshold:
-    * the anti-join must broadcast to preserve the streamed side's
-    * distribution (the exchange-free probe plans the durable layouts
-    * exist for — plan-gated with the session threshold at −1), and
-    * tombstones are request-sized between compactions BY CONTRACT. The
-    * cap is the safety net past that contract: a months-un-compacted
-    * delete stream degrades to the optimizer's stats decision (a
-    * shuffled anti-join — slower, still correct) instead of failing
-    * every load with driver/broadcast pressure. 32 MB of parquet longs
-    * ≈ 4M deleted ids — far past the compaction knee and still an
-    * order of magnitude inside driver headroom. */
-  private[operators] val TombstoneBroadcastCapBytes: Long = 32L << 20
-
-  /** The tombstone id frame as a JOIN SIDE, broadcast-gated on the
-    * files' bytes (a driver-side listing — no job) against
-    * [[TombstoneBroadcastCapBytes]]. Parquet bytes under-count the
-    * in-memory relation, but by well under the order of magnitude the
-    * gate is guarding against. Callers must have checked the directory
-    * exists. */
-  private def tombstoneSide(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tomb = spark.read.schema(ArtifactSchemas.tombstones).parquet(s"$path/tombstones").select(col("id"))
-    val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-    if (bytes <= TombstoneBroadcastCapBytes) broadcast(tomb)
-    else tomb
-  }
-
-  /** Fail an append that would re-ingest a TOMBSTONED id: the appended
-    * rows would land in the data dir but every load anti-joins the
-    * tombstones, so the id stays invisible to every probe until a
-    * compaction clears it — a churn workflow (delete by mistake,
-    * re-add) would lose the rows with no signal. One broadcast-sized
-    * semi-join over the shard, paid per append; the error names the
-    * compaction verb that makes the re-ingest legal. */
+  /** Fail an append that would re-ingest a TOMBSTONED id
+    * ([[Tombstones.requireNoneOf]]); the error names the compaction verb
+    * that makes the re-ingest legal. */
   private def requireNotTombstoned(
-      shardIds: DataFrame, path: String, compactVerb: String): Unit = {
-    val spark = shardIds.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val clash = shardIds.select(col("id"))
-        .join(tombstoneSide(spark, path), Seq("id"), "left_semi")
-        .limit(5).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"append would re-ingest tombstoned id(s) ${clash.mkString(", ")} " +
-          s"at '$path' — a tombstoned id stays invisible to every probe " +
-          s"until compaction clears the tombstones; run $compactVerb " +
-          "first, then re-append")
-    }
-  }
+      shardIds: DataFrame, path: String, compactVerb: String): Unit =
+    tombstonesAt(shardIds.sparkSession, path)
+      .requireNoneOf(shardIds, s"at '$path'", compactVerb)
 
   /** Past this many touched stripes the live-id guard scans the whole
     * id column instead of stripe-pruning: a 10⁴-entry `IN` literal
@@ -980,10 +925,8 @@ object Similarity {
 
   /** Written by every index write AND at the end of every compaction,
     * so the tombstone relation always EXISTS and is empty exactly when
-    * there is nothing deleted: loads anti-join unconditionally, and
-    * the first delete has the same visibility semantics as the
-    * hundredth (without this, a handle loaded before the first delete
-    * skipped the anti-join entirely). The Overwrite doubles as the
+    * there is nothing deleted, and the first delete has the same
+    * visibility semantics as the hundredth. The Overwrite doubles as the
     * stale-tombstone reset. An empty parquet write emits one
     * schema-only file. */
   private def seedEmptyTombstones(
@@ -993,42 +936,19 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/tombstones")
 
-  /** The tombstone FILES present when a compaction starts — its
-    * erasure scope. Compaction clears exactly this snapshot, never
-    * "whatever is there at the end": a deleteFrom*Index tombstone
-    * appended while the survivor rewrite runs lands as a NEW file the
-    * snapshot doesn't cover, so it survives the compaction and keeps
-    * hiding its id — instead of being silently discarded by a blanket
-    * reset (the lost-delete race: the late delete's row would
-    * resurrect in every later probe, an RTBF violation). A tombstone
-    * appended between the snapshot and the survivor SCAN is both
-    * applied and preserved — its id anti-joins rows already erased,
-    * which is merely redundant. */
-  private def tombstoneFileSnapshot(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isFile).map(_.getPath).toSeq
-  }
-
-  /** Erase the snapshotted tombstone files (their ids are physically
-    * gone from the rewritten data dir), preserving any file appended
-    * since the snapshot. If no data file remains afterwards, an empty
-    * seed is APPENDED (not overwritten — an overwrite would clobber a
-    * delete racing this very step) so the relation stays readable and
-    * loads keep anti-joining unconditionally. */
+  /** Erase the compaction's tombstone snapshot (its ids are physically
+    * gone from the rewritten data dir — [[Tombstones.erase]]), preserving
+    * any file appended since: a deleteFrom*Index racing the survivor
+    * rewrite keeps hiding its id instead of being silently discarded by
+    * a blanket reset (the lost-delete race, an RTBF violation). If no
+    * data file remains afterwards, an empty seed is APPENDED (not
+    * overwritten — an overwrite would clobber a delete racing this very
+    * step) so the relation stays readable. */
   private def clearSnapshottedTombstones(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      snapshot: Seq[org.apache.hadoop.fs.Path]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    snapshot.foreach(f => fs.delete(f, false))
-    val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    if (!hasData)
+      snapshot: Tombstones): Unit = {
+    snapshot.erase()
+    if (Tombstones.list(spark, Some(s"$path/tombstones")).isEmpty)
       spark.range(0).select(col("id"))
         .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -1198,7 +1118,7 @@ object Similarity {
       path: String): (Int, DataFrame) = {
     requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
     (loadLshNBits(spark, path),
-      withoutTombstones(spark, path, spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets")))
+      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets")))
   }
 
   /** Meta alone — the append path's need ([[loadIvfCentroids]]'s
@@ -1512,7 +1432,7 @@ object Similarity {
       path: String): (Seq[(Int, Int, Array[Double])], DataFrame) = {
     requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
     (loadPqCodebooks(spark, path),
-      withoutTombstones(spark, path, spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes")))
+      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes")))
   }
 
   /** Codebooks alone — the append path's need ([[loadIvfCentroids]]'s
@@ -1549,7 +1469,7 @@ object Similarity {
     * `list`, clustered one file per stripe; `centroids/` — the frozen
     * IVF centroids ([[writeIvfIndex]]'s table); `codebooks/` — the
     * frozen PQ codebooks ([[writePqIndex]]'s table); `tombstones/` —
-    * the logical-delete relation every load anti-joins. Growth encodes
+    * the logical-delete relation every load filters by. Growth encodes
     * against the FROZEN artifacts ([[ivfPqEncode]] — the same
     * expressions as the build, so appended rows are byte-identical);
     * retraining either half is a rebuild by definition (new centroids
@@ -1781,7 +1701,7 @@ object Similarity {
       () => enc = loadIvfPqEncoding(spark, path),
       () => cbs = loadPqCodebooks(spark, path))
     (cents, IvfPqCodebooks(enc, cbs),
-      withoutTombstones(spark, path, spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists")))
+      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists")))
   }
 
   /** Fold new vectors INTO a durable composed index: encode against
@@ -1840,9 +1760,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     requireIndexDir(spark, path,
       Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    val snapshot = tombstoneFileSnapshot(spark, path)
-    val survivors = withoutTombstones(
-      spark, path, spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists"))
+    val tombs = tombstonesAt(spark, path)
+    val survivors = tombs.live(
+      spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists"))
     requireNonEmptySurvivors(survivors, path)
     swapInPlace(spark, s"$path/lists") { tmp =>
       survivors.repartition(
@@ -1851,7 +1771,7 @@ object Similarity {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(tmp)
     }
-    clearSnapshottedTombstones(spark, path, snapshot)
+    clearSnapshottedTombstones(spark, path, tombs)
   }
 
   /** Probe the composed index: driver-side centroid scoring picks the
@@ -1947,14 +1867,9 @@ object Similarity {
         val n = dataFiles(dp)
         (1, n, n)
       }
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tfs =
-      if (!tp.getFileSystem(conf).exists(tp)) Seq.empty
-      else tp.getFileSystem(conf).listStatus(tp).filter(_.isFile).toSeq
+    val tfs = Tombstones.list(spark, Some(s"$path/tombstones"))
     IndexHealthInfo(kind, nStripes, nFiles, maxPerStripe,
-      tfs.count(s => !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")),
-      tfs.map(_.getLen).sum)
+      tfs.size, tfs.map(_.getLen).sum)
   }
 
   /** `path` names a durable CORPUS index (table-prefix layout,
@@ -1976,8 +1891,9 @@ object Similarity {
     * .corpusIndexHealth]]'s frame (same knee thresholds, the bucketed-
     * table column names). `needs_compaction` applies the measured-knee
     * thresholds [[compactIfNeeded]] enforces; `tombstone_broadcast_ok`
-    * is the [[TombstoneBroadcastCapBytes]] headroom — false means
-    * loads have already degraded off the broadcast anti-join. */
+    * is the [[Tombstones.BroadcastCapBytes]] headroom — false means
+    * loads have already degraded from the broadcast id set to a
+    * shuffled anti-join. */
   def indexHealth(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerStripe: Int = DefaultMaxFilesPerStripe,
@@ -1989,7 +1905,7 @@ object Similarity {
     import spark.implicits._
     Seq((h.kind, h.nStripes, h.nDataFiles, h.maxFilesPerStripe,
         h.nTombstoneFiles, h.tombstoneBytes,
-        h.tombstoneBytes <= TombstoneBroadcastCapBytes,
+        h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
         needsCompaction(h, maxFilesPerStripe, maxTombstoneBytes)))
       .toDF("kind", "n_stripes", "n_data_files", "max_files_per_stripe",
         "n_tombstone_files", "tombstone_bytes", "tombstone_broadcast_ok",
@@ -2006,8 +1922,8 @@ object Similarity {
 
   /** Default tombstone-volume knee: a quarter of the broadcast cap —
     * compaction fires while every load is still broadcast-cheap, well
-    * before [[TombstoneBroadcastCapBytes]] degrades the probe plans. */
-  val DefaultMaxTombstoneBytes: Long = TombstoneBroadcastCapBytes / 4
+    * before [[Tombstones.BroadcastCapBytes]] degrades the probe plans. */
+  val DefaultMaxTombstoneBytes: Long = Tombstones.BroadcastCapBytes / 4
 
   private def needsCompaction(
       h: IndexHealthInfo, maxFilesPerStripe: Int,
@@ -2251,20 +2167,22 @@ object Similarity {
 
   /** IVF ANN top-k: score the query against every centroid on the driver
     * (nLists is small), then scan only the `nProbe` nearest posting
-    * lists. Approximate; recall grows with nProbe. Output: (id, sim). */
+    * lists. Approximate; recall grows with nProbe. Output: (id, sim).
+    *
+    * The query vector enters the plan as a literal (its norm folds to a
+    * constant at optimization, through the same [[VectorFunctions.normSq]]
+    * arithmetic the batch form evaluates per row), so a probe of a loaded
+    * index is ONE job: the pruned list scan plus the top-k — no broadcast
+    * of a one-row query frame. */
   def ivfTopK(
       centroids: Array[Array[Float]], indexed: DataFrame,
       queryVec: Array[Float], k: Int, nProbe: Int): DataFrame = {
     val probe = probeLists(centroids, queryVec, nProbe)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val q = Seq(Tuple1(queryVec)).toDF("qv")
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
+    val qv = typedLit(queryVec.toSeq)
     indexed.filter(col("list").isin(probe.toSeq: _*))
       .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .crossJoin(broadcast(q))
       .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4))
+        VectorFunctions.dot(col("v"), qv) / (col("nrm") * sqrt(VectorFunctions.normSq(qv))), 4))
       .orderBy(desc("sim"), asc("id"))
       .limit(k)
       .select(col("id"), col("sim"))

@@ -1554,8 +1554,8 @@ object PipelineQueries {
     * q189's lifecycle). The index is built and written on
     * everything-but-src0, then src8∪src12's doc ids are DELETED from
     * the durable index ([[Dedup.deleteFromCorpusIndex]] — a
-    * request-sized tombstone write; the probe-side anti-join is the
-    * cheap interim form, physical erasure is
+    * request-sized tombstone write; the load-time tombstone filter is
+    * the cheap interim form, physical erasure is
     * [[Dedup.compactCorpusIndex]], both gated in `IndexLifecycleSpec`).
     * A fresh session reloads and probes src0: the output must equal
     * the exhaustive near-dup join over the SURVIVING corpus — every

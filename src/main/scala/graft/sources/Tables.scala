@@ -19,19 +19,30 @@ object Tables {
   /** Per-JVM parquet schema cache (round 21): every query build calls
     * `spark.read.parquet` 1–3×, and each call re-infers the schema from
     * the file footer — pure metadata work repeated hundreds of times
-    * per bench/Verify sweep. The schema of a given parquet path is a
-    * pure function of its bytes (the testdata is immutable per run, and
-    * a RE-generated dataset lands under a different sfDir), so it is
-    * cached per path and passed explicitly — exactly what a production
-    * job does by declaring its table schemas. Results are unchanged:
-    * the explicit schema IS the inferred one. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * per bench/Verify sweep. The schema is a pure function of the
+    * dataset's bytes, so it is cached and passed explicitly — exactly
+    * what a production job does by declaring its table schemas. Results
+    * are unchanged: the explicit schema IS the inferred one.
+    *
+    * The key is (path, bytes, modification time), not the path alone: a
+    * dataset regenerated at the same path (a writer that changed a
+    * column's type, as the `events.ts` encodings did) is read with its
+    * new schema, never a stale one. For a directory dataset the bytes
+    * are its contents' total and the time is the directory's, which a
+    * rewrite replaces. A missing path is not cached: the read fails as
+    * an uncached one would. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) return spark.read.parquet(path)
+    val st = fs.getFileStatus(p)
+    val bytes = if (st.isDirectory) fs.getContentSummary(p).getLength else st.getLen
+    val schema = schemaCache.computeIfAbsent((path, bytes, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -39,7 +39,7 @@ import graft.operators.Similarity
   * daemon sees appends AND deletes without a restart (the centroid
   * re-read is a parameter-sized collect; appended list files surface
   * because the probe scan lists its probed stripes at read time; the
-  * tombstone anti-join is part of the load) — and
+  * tombstone read is part of the load) — and
   * [[startRefreshingPq]] is the same resident shape over the COMPOSED
   * IVF+PQ index, probing code stripes at one long per row.
   *

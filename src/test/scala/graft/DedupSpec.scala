@@ -782,4 +782,60 @@ class DedupSpec extends SparkSpec {
         s"trial $trial missing=${brute -- got} extra=${got -- brute}")
     }
   }
+
+  test("nearDupAgainstIndex: a driver-resident shard's point probe ≡ the join on the same rows, duplicate, null-id and empty shards included") {
+    val index = Dedup.corpusIndex(docs.filter(col("id") =!= 2L), col("id"), col("text"))
+    try {
+      val text2 = docs.filter(col("id") === 2L).select("text").as[String].collect().head
+      def id(i: Long): java.lang.Long = java.lang.Long.valueOf(i)
+      val shards: Seq[(String, Seq[(java.lang.Long, String)])] = Seq(
+        "one document" -> Seq((id(2L), text2)),
+        "a duplicated row" -> Seq((id(2L), text2), (id(2L), text2), (id(7L), "nothing like it")),
+        "a null id" -> Seq((id(2L), text2), (null, text2)),
+        "no rows" -> Seq.empty)
+      for ((name, rows) <- shards) {
+        val local = rows.toDF("id", "text")
+        val point = Dedup.nearDupAgainstIndex(local, col("id"), col("text"), index, 0.8)
+        assert(point.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+          s"$name: a local shard must take the point path")
+        // A persisted shard is not driver-resident: the join path.
+        val cached = local.persist()
+        val joined = Dedup.nearDupAgainstIndex(cached, col("id"), col("text"), index, 0.8)
+        def rows3(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+        assert(rows3(point) === rows3(joined), s"$name: point probe ≠ join")
+        if (name == "one document") assert(rows3(point).map(_._2) === Seq(0L, 1L))
+        cached.unpersist()
+      }
+    } finally index.unpersist()
+  }
+
+  test("a one-document point probe of a loaded corpus index runs at most 2 jobs, tombstones included, and its result reads without a job") {
+    val prefix = s"graft_dedup_pt_${java.util.UUID.randomUUID.toString.take(8).replace("-", "")}"
+    val all = graft.sources.Tables.documents(spark, sf)
+    val built = Dedup.corpusIndex(all.filter(col("source") =!= "src0"), col("doc_id"), col("text"))
+    Dedup.writeCorpusIndex(built, prefix, buckets = 4)
+    built.unpersist()
+    val shard = all.filter(col("source") === "src0").select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    def probe(idx: Dedup.CorpusIndex, d: (Long, String)) =
+      Dedup.nearDupAgainstIndex(Seq(d).toDF("doc_id", "text"), col("doc_id"), col("text"),
+        idx, threshold = 0.8)
+    // A document with a near duplicate runs every step of the probe.
+    val idx0 = Dedup.loadCorpusIndex(spark.newSession(), prefix)
+    val hit = shard.find(d => probe(idx0, d).count() > 0).get
+    val victim = probe(idx0, hit).collect().head.getLong(1)
+    Dedup.deleteFromCorpusIndex(Seq(victim).toDF("id"), col("id"), prefix)
+    val idx = Dedup.loadCorpusIndex(spark.newSession(), prefix)
+    probe(idx, hit).collect() // warm
+    val (result, jobs) = JobCount(spark)(probe(idx, hit))
+    // Measured: 2 jobs — the bucket-pruned `_banded` read and the `_rel`
+    // read of the candidates; banding the local row runs none. (The join
+    // ran 6 jobs and 40 tasks on the corpus benchmark's index.)
+    assert(jobs <= 2, s"one-document point probe ran $jobs jobs")
+    val (rows, readJobs) = JobCount(spark)(result.collect())
+    assert(readJobs === 0, "the point probe's result must be local")
+    assert(!rows.exists(_.getLong(1) == victim), "the tombstoned near-duplicate must be gone")
+  }
 }

@@ -576,6 +576,131 @@ class IndexLifecycleSpec extends SparkSpec {
       "compaction must physically remove the deleted docs' index rows")
   }
 
+  /** `rows` as a driver-resident shard: `toDF` over local rows, so the
+    * probe's optimized plan is a LocalRelation and it reads by key. */
+  private def localShard(
+      s: org.apache.spark.sql.SparkSession, rows: Seq[(Long, String)]): DataFrame = {
+    import s.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  private def docRows(s: org.apache.spark.sql.SparkSession, sources: String*): Seq[(Long, String)] =
+    Tables.documents(s, sf).filter(col("source").isInCollection(sources))
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private def sortedPairs(rows: Seq[Row]): Seq[(Long, Long, Double)] =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+
+  test("MinHash point probe ≡ the join on the same documents, as a local and as a parquet shard: fresh load, append, a delete that tombstones a true near-duplicate, compaction") {
+    val prefix = s"graft_idx_pt_$runId"
+    val docs = Tables.documents(spark, sf)
+    val shardSrc = Seq("src8", "src12")
+    val built = Dedup.corpusIndex(
+      docs.filter(col("source") =!= "src0" && !col("source").isInCollection(shardSrc)),
+      col("doc_id"), col("text"))
+    Dedup.writeCorpusIndex(built, prefix, buckets = 4)
+    built.unpersist()
+    val probeDocs = docRows(spark, "src0")
+    /** Both paths against a fresh load; the join's pairs. */
+    def agree(stage: String): Seq[(Long, Long, Double)] = {
+      val fresh = spark.newSession()
+      val idx = Dedup.loadCorpusIndex(fresh, prefix)
+      def probe(shard: DataFrame): DataFrame =
+        Dedup.nearDupAgainstIndex(shard, col("doc_id"), col("text"), idx, threshold = 0.8)
+      val joined = sortedPairs(probe(Tables.documents(fresh, sf)
+        .filter(col("source") === "src0").select(col("doc_id"), col("text"))).collect())
+      val point = probe(localShard(fresh, probeDocs))
+      assert(isLocal(point), s"$stage: a local shard must take the point path")
+      assert(sortedPairs(point.collect()) === joined,
+        s"$stage: the whole shard's point probe must equal the join")
+      // One document at a time — the interactive probe's shape: every
+      // document with a pair, and two without.
+      val withPairs = joined.map(_._1).toSet
+      val one = probeDocs.filter(d => withPairs(d._1)) ++
+        probeDocs.filterNot(d => withPairs(d._1)).take(2)
+      assert(sortedPairs(one.flatMap(d => probe(localShard(fresh, Seq(d))).collect())) ===
+        joined, s"$stage: one-document point probes must equal the join")
+      joined
+    }
+    val atWrite = agree("fresh load")
+    assert(atWrite.nonEmpty, "fixture must produce near-dup pairs")
+    Dedup.appendToCorpusIndex(docs.filter(col("source").isInCollection(shardSrc)),
+      col("doc_id"), col("text"), prefix)
+    val appendedIds = docRows(spark, shardSrc: _*).map(_._1).toSet
+    val afterAppend = agree("after append")
+    assert(afterAppend.exists(p => appendedIds(p._2)),
+      "the appended shard must contribute pairs")
+    val victim = afterAppend.find(p => appendedIds(p._2)).get._2
+    Dedup.deleteFromCorpusIndex(localShard(spark, Seq((victim, ""))),
+      col("doc_id"), prefix)
+    val afterDelete = agree("after delete")
+    assert(!afterDelete.exists(_._2 == victim), "the deleted near-duplicate must be gone")
+    assert(afterDelete === afterAppend.filterNot(_._2 == victim))
+    Dedup.compactCorpusIndex(spark, prefix)
+    assert(agree("after compaction") === afterDelete)
+  }
+
+  test("MinHash point probe: a local shard above the key bound takes the join, with the same pairs") {
+    val (prefix, _) = writtenIndex
+    val fresh = spark.newSession()
+    val idx = Dedup.loadCorpusIndex(fresh, prefix)
+    // 75 documents × 20 bands = 1500 band keys, past the 1024-key bound.
+    val srcs = Seq("src0", "src1", "src2")
+    val big = Dedup.nearDupAgainstIndex(localShard(fresh, docRows(fresh, srcs: _*)),
+      col("doc_id"), col("text"), idx, threshold = 0.8, persistNewRel = false)
+    assert(!isLocal(big) && big.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.nonEmpty,
+      s"an over-bound shard must take the join:\n${big.queryExecution.optimizedPlan}")
+    val parquet = Dedup.nearDupAgainstIndex(
+      Tables.documents(fresh, sf).filter(col("source").isInCollection(srcs)),
+      col("doc_id"), col("text"), idx, threshold = 0.8)
+    val got = sortedPairs(big.collect())
+    assert(got.nonEmpty && got === sortedPairs(parquet.collect()))
+  }
+
+  test("tombstones are read at load, on both stacks: a handle loaded before a delete still returns the deleted id, a load after it does not") {
+    // MinHash corpus index (catalog tables).
+    val prefix = s"graft_idx_snap_$runId"
+    val built = Dedup.corpusIndex(
+      Tables.documents(spark, sf).filter(col("source") =!= "src0"),
+      col("doc_id"), col("text"))
+    Dedup.writeCorpusIndex(built, prefix, buckets = 4)
+    built.unpersist()
+    val shard = docRows(spark, "src0")
+    def corpusIds(idx: Dedup.CorpusIndex): Set[Long] =
+      Dedup.nearDupAgainstIndex(localShard(spark, shard), col("doc_id"), col("text"),
+        idx, threshold = 0.8).collect().map(_.getLong(1)).toSet
+    val before = Dedup.loadCorpusIndex(spark.newSession(), prefix)
+    val victim = corpusIds(before).min
+    Dedup.deleteFromCorpusIndex(localShard(spark, Seq((victim, ""))), col("doc_id"), prefix)
+    assert(corpusIds(before).contains(victim),
+      "a corpus handle loaded before the delete keeps the tombstones of its load")
+    assert(!corpusIds(Dedup.loadCorpusIndex(spark.newSession(), prefix)).contains(victim),
+      "a corpus load after the delete must not return the deleted id")
+    // IVF index (paths).
+    val emb = Tables.embeddings(spark, sf)
+    val qv = emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).collect().head.getSeq[Float](0).toArray
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb.filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"), nLists = 8)
+    val path = tmpDir("ivf_snap")
+    Similarity.writeIvfIndex(centroids, indexed, path)
+    def topIds(h: (Array[Array[Float]], DataFrame)): Seq[Long] =
+      Similarity.ivfTopK(h._1, h._2, qv, k = 10, nProbe = 3).collect().map(_.getLong(0)).toSeq
+    val ivfBefore = Similarity.loadIvfIndex(spark.newSession(), path)
+    val top = topIds(ivfBefore).head
+    Similarity.deleteFromIvfIndex(localShard(spark, Seq((top, ""))), col("doc_id"), path)
+    assert(topIds(ivfBefore).contains(top),
+      "an IVF handle loaded before the delete keeps the tombstones of its load")
+    assert(!topIds(Similarity.loadIvfIndex(spark.newSession(), path)).contains(top),
+      "an IVF load after the delete must not return the deleted id")
+  }
+
   test("IVF delete + compact: tombstoned vectors vanish from every probe form; compaction is probe-bit-equal, physically erases, and resets stripe file counts") {
     val emb = Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") =!= 0)

@@ -286,4 +286,26 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(proj == exact)
   }
+
+  test("ivfTopK against a loaded index with tombstones runs one job, and equals the one-query batch probe") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb.filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"), nLists = 8)
+    val path = java.nio.file.Files.createTempDirectory("graft-sim-ivf-").toString
+    Similarity.writeIvfIndex(centroids, indexed, path)
+    Similarity.deleteFromIvfIndex(Seq(1L, 2L, 3L).toDF("id"), col("id"), path)
+    val (cents, lists) = Similarity.loadIvfIndex(spark.newSession(), path)
+    val q0 = emb.filter(col("vec_id") === 0)
+    val qv = q0.select(col("embedding")).collect().head.getSeq[Float](0).toArray
+    Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect() // warm
+    val (single, jobs) = JobCount(spark)(
+      Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect().toSeq)
+    // Measured: 1 job, the pruned list scan plus the top-k. (With the
+    // query broadcast and the tombstone anti-join it was 3.)
+    assert(jobs === 1, s"ivfTopK ran $jobs jobs")
+    val batch = Similarity.ivfTopKBatch(cents, lists, q0, col("vec_id"), col("embedding"),
+      k = 10, nProbe = 3).orderBy(asc("rank")).select(col("id"), col("sim")).collect().toSeq
+    assert(single === batch)
+    assert(!single.exists(r => Set(1L, 2L, 3L)(r.getLong(0))))
+  }
 }

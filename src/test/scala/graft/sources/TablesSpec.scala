@@ -64,4 +64,18 @@ class TablesSpec extends SparkSpec {
     val expected = microsUtc
     results.foreach(r => assert(r == expected, "instants must be identical across encodings"))
   }
+
+  test("a dataset rewritten at the same path is loaded with its new schema, not a cached one") {
+    val dir = writeDir()
+    Seq((1L, "a")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Tables.load(spark, dir, "documents").columns.toSeq === Seq("doc_id", "text"))
+    // Regenerated in place: a column added and one retyped.
+    Seq((1, "a", 7L)).toDF("doc_id", "text", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val again = Tables.load(spark, dir, "documents")
+    assert(again.columns.toSeq === Seq("doc_id", "text", "n_chars"))
+    assert(again.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(again.as[(Int, String, Long)].collect().toSeq === Seq((1, "a", 7L)))
+  }
 }

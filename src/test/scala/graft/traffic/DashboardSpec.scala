@@ -1,9 +1,5 @@
 package graft.traffic
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -24,28 +20,7 @@ class DashboardSpec extends SparkSpec {
     "borough_bar" -> TrafficAnalytics.boroughTraffic(snapshot),
     "map_points" -> TrafficAnalytics.mapPoints(snapshot))
 
-  /** Jobs `body` starts, counted by a listener on a job group of its own
-    * (the figure threads inherit the group from the calling thread). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"dashboard-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "DashboardSpec", interruptOnCancel = false)
-    try {
-      val out = body
-      TestListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[T](body: => T): (T, Int) = graft.JobCount(spark)(body)
 
   test("prepare adds datetime and WGS84 coordinates to every snapshot") {
     assert(snapshot.columns.contains("datetime"))
