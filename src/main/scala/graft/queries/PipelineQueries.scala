@@ -1,5 +1,10 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+import java.util.{Comparator, UUID}
+
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,6 +35,29 @@ object PipelineQueries {
     * top-k / pair-set sized, so the checkpoint is trivially small).
     * Same result bit-for-bit — the pin only stops re-computation. */
   private def pinLeg(df: DataFrame): DataFrame = Materialize.pin(df)
+
+  /** Run a lifecycle query against an index directory of this run's own
+    * (under a fresh temp directory), removed when `body` returns or
+    * fails: two runs never share or inherit an index. `body`'s result
+    * must no longer read the index (a pinned leg, or a frame over
+    * pinned legs). */
+  private def withScratchDir(name: String)(body: String => DataFrame): DataFrame = {
+    val root = Files.createTempDirectory(s"graft_${name}_")
+    try body(root.resolve("index").toString)
+    finally Using.resource(Files.walk(root))(
+      _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
+  }
+
+  /** [[withScratchDir]] for a corpus index in the catalog: a table prefix
+    * of this run's own, its four tables dropped when `body` returns or
+    * fails. */
+  private def withScratchIndex(spark: SparkSession, name: String)(
+      body: String => DataFrame): DataFrame = {
+    val prefix = s"graft_${name}_" + UUID.randomUUID.toString.replace("-", "").take(12)
+    try body(prefix)
+    finally Seq("banded", "rel", "meta", "tombstones").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+  }
 
   /** Pin several INDEPENDENT legs concurrently (guide §2.6 — each pin
     * is an eager localCheckpoint job, and nothing orders the exact
@@ -773,9 +801,9 @@ object PipelineQueries {
     * centroids, HardNegAnnProbe; the floor is the contract, the
     * measurements its margin). Oracle
     * as q186: n_exact verified from the exact side, booleans literal. */
-  def q195HardNegativesAnnIvf(spark: SparkSession, dir: String): DataFrame = {
+  def q195HardNegativesAnnIvf(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q195_ivf") { path =>
     val emb = Tables.embeddings(spark, dir)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q195_ivf"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val anchors = emb2.filter(col("vec_id") < 10)
@@ -848,13 +876,13 @@ object PipelineQueries {
     * iteration-count-blind by construction. Oracle as q78: n_exact
     * verified from the data, booleans literal — any regression flips
     * Spark's output and the driver's hash. */
-  def q196IvfPqReloadProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q196IvfPqReloadProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q196_ivfpq") { path =>
     val emb = Tables.embeddings(spark, dir)
     val old = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) === 3)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q196_ivfpq"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val corpus = emb2.filter(col("vec_id") =!= 0)
@@ -918,14 +946,14 @@ object PipelineQueries {
     * exhaustive [[q65BatchKnn]] row for row — q65's oracle SQL
     * verbatim, through build → durable write → `newSession()` reload
     * (the lifecycle-invisibility convention). */
-  def q197IvfPqBatchProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q197IvfPqBatchProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q197_ivfpq") { path =>
     val emb = Tables.embeddings(spark, dir)
     val (centroids, _) = Similarity.ivfIndex(
       emb, col("vec_id"), col("embedding"), nLists = 8)
     val cbs = Similarity.ivfPqFitCodebooks(
       emb, col("vec_id"), col("embedding"), centroids,
       m = 16, ksub = 16, iters = 1)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q197_ivfpq"
     Similarity.writeIvfPqIndex(centroids, cbs,
       Similarity.ivfPqEncode(
         emb, col("vec_id"), col("embedding"), centroids, cbs), path)
@@ -934,11 +962,11 @@ object PipelineQueries {
     val emb2 = Tables.embeddings(fresh, dir)
     val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
     val n = emb2.count()
-    Similarity.ivfPqTopKBatch(cents, cbs2, codes,
+    pinLeg(Similarity.ivfPqTopKBatch(cents, cbs2, codes,
         emb2, col("vec_id"), col("embedding"),
         emb2.filter(col("vec_id") < 5), col("vec_id"), col("embedding"),
         k = 5, nProbe = 8,
-        rerankN = math.min(n, Int.MaxValue.toLong).toInt)
+        rerankN = math.min(n, Int.MaxValue.toLong).toInt))
       .orderBy(asc("query_id"), asc("rank"))
   }
 
@@ -958,9 +986,9 @@ object PipelineQueries {
     * the contract, the measurements its margin). Oracle
     * as q186/q195: n_exact verified from the exact side, booleans
     * literal. */
-  def q198HardNegativesAnnPq(spark: SparkSession, dir: String): DataFrame = {
+  def q198HardNegativesAnnPq(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q198_ivfpq") { path =>
     val emb = Tables.embeddings(spark, dir)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q198_ivfpq"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val anchors = emb2.filter(col("vec_id") < 10)
@@ -1027,13 +1055,13 @@ object PipelineQueries {
     * completeness gate would catch the ordering, this boolean names
     * the cause). Oracle as q196: n_exact from the data, booleans
     * literal. */
-  def q199IvfPqResidualProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q199IvfPqResidualProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q199_ivfpq") { path =>
     val emb = Tables.embeddings(spark, dir)
     val old = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) === 3)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q199_ivfpq"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val corpus = emb2.filter(col("vec_id") =!= 0)
@@ -1351,18 +1379,19 @@ object PipelineQueries {
     * build AND the index write — the cost the layout amortizes across
     * weeks of probes; the steady-state number is the reload-probe
     * ScaleFixture row. */
-  def q189IndexReloadProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q189IndexReloadProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchIndex(spark, "q189_idx") { prefix =>
     val landing = graft.sources.Ingest.documentsBySourceLanding(spark, dir)
     val built = Dedup.corpusIndex(
       spark.read.parquet(landing).filter(col("source") =!= "src0"),
       col("doc_id"), col("text"))
-    Dedup.writeCorpusIndex(built, "graft_q189_idx")
+    Dedup.writeCorpusIndex(built, prefix)
     built.unpersist()
     val fresh = spark.newSession()
-    val loaded = Dedup.loadCorpusIndex(fresh, "graft_q189_idx")
+    val loaded = Dedup.loadCorpusIndex(fresh, prefix)
     val shard = fresh.read.parquet(landing).filter(col("source") === "src0")
-    Dedup.nearDupAgainstIndex(
-        shard, col("doc_id"), col("text"), loaded, threshold = 0.8)
+    pinLeg(Dedup.nearDupAgainstIndex(
+        shard, col("doc_id"), col("text"), loaded, threshold = 0.8))
       .orderBy(asc("new_id"), asc("corpus_id"))
   }
 
@@ -1378,7 +1407,8 @@ object PipelineQueries {
     * (`IndexLifecycleSpec` pins that plan). Like q66/q189 the bench
     * number includes the one-time build+write+append; the steady state
     * is the same reload-probe ScaleFixture row. */
-  def q190IndexAppendProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q190IndexAppendProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchIndex(spark, "q190_idx") { prefix =>
     val landing = graft.sources.Ingest.documentsBySourceLanding(spark, dir)
     val shardSrc = Seq("src8", "src12")
     val docs = spark.read.parquet(landing)
@@ -1386,16 +1416,16 @@ object PipelineQueries {
       docs.filter(col("source") =!= "src0" &&
         !col("source").isInCollection(shardSrc)),
       col("doc_id"), col("text"))
-    Dedup.writeCorpusIndex(built, "graft_q190_idx")
+    Dedup.writeCorpusIndex(built, prefix)
     built.unpersist()
     Dedup.appendToCorpusIndex(
       docs.filter(col("source").isInCollection(shardSrc)),
-      col("doc_id"), col("text"), "graft_q190_idx")
+      col("doc_id"), col("text"), prefix)
     val fresh = spark.newSession()
-    val loaded = Dedup.loadCorpusIndex(fresh, "graft_q190_idx")
+    val loaded = Dedup.loadCorpusIndex(fresh, prefix)
     val shard = fresh.read.parquet(landing).filter(col("source") === "src0")
-    Dedup.nearDupAgainstIndex(
-        shard, col("doc_id"), col("text"), loaded, threshold = 0.8)
+    pinLeg(Dedup.nearDupAgainstIndex(
+        shard, col("doc_id"), col("text"), loaded, threshold = 0.8))
       .orderBy(asc("new_id"), asc("corpus_id"))
   }
 
@@ -1414,13 +1444,13 @@ object PipelineQueries {
     * ≥ 0.5 even though the centroids never saw the shard. Same oracle
     * SQL as q78 (the exact side is unchanged; the booleans are the
     * contract as literals). */
-  def q191IvfAppendProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q191IvfAppendProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q191_ivf") { path =>
     val emb = Tables.embeddings(spark, dir)
     val old = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) === 3)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q191_ivf"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val corpus = emb2.filter(col("vec_id") =!= 0)
@@ -1475,18 +1505,18 @@ object PipelineQueries {
     * `newSession()` reload (the lifecycle-invisibility convention).
     * The partial-probe recall floor and the partition-pruned plan are
     * gated in `IndexLifecycleSpec`. */
-  def q192IvfBatchProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q192IvfBatchProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q192_ivf") { path =>
     val emb = Tables.embeddings(spark, dir)
     val (centroids, indexed) = Similarity.ivfIndex(
       emb, col("vec_id"), col("embedding"), nLists = 8)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q192_ivf"
     Similarity.writeIvfIndex(centroids, indexed, path)
 
     val fresh = spark.newSession()
     val (cents, lists) = Similarity.loadIvfIndex(fresh, path)
     val queries = Tables.embeddings(fresh, dir).filter(col("vec_id") < 5)
-    Similarity.ivfTopKBatch(cents, lists,
-        queries, col("vec_id"), col("embedding"), k = 5, nProbe = 8)
+    pinLeg(Similarity.ivfTopKBatch(cents, lists,
+        queries, col("vec_id"), col("embedding"), k = 5, nProbe = 8))
       .orderBy(asc("query_id"), asc("rank"))
   }
 
@@ -1507,14 +1537,14 @@ object PipelineQueries {
     * (q79's floor at the mid-recall regime: testdata neighbors sit at
     * ~2.7 expected bit flips of 8, so Hamming-2 is the honest
     * mid-recall ball, not the recall≈1 regime). */
-  def q193LshReloadProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q193LshReloadProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("q193_lsh") { path =>
     val nBits = 8
     val emb = Tables.embeddings(spark, dir)
     val old = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) === 3)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_q193_lsh"
     val fresh = spark.newSession()
     val emb2 = Tables.embeddings(fresh, dir)
     val corpus = emb2.filter(col("vec_id") =!= 0)
@@ -1561,23 +1591,24 @@ object PipelineQueries {
     * the exhaustive near-dup join over the SURVIVING corpus — every
     * pair against a deleted doc is gone, every other pair untouched
     * (the q66/q189/q190 oracle with the deleted sources excluded). */
-  def q194IndexDeleteProbe(spark: SparkSession, dir: String): DataFrame = {
+  def q194IndexDeleteProbe(spark: SparkSession, dir: String): DataFrame =
+    withScratchIndex(spark, "q194_idx") { prefix =>
     val landing = graft.sources.Ingest.documentsBySourceLanding(spark, dir)
     val delSrc = Seq("src8", "src12")
     val docs = spark.read.parquet(landing)
     val built = Dedup.corpusIndex(
       docs.filter(col("source") =!= "src0"), col("doc_id"), col("text"))
-    Dedup.writeCorpusIndex(built, "graft_q194_idx")
+    Dedup.writeCorpusIndex(built, prefix)
     built.unpersist()
     Dedup.deleteFromCorpusIndex(
       docs.filter(col("source").isInCollection(delSrc))
         .select(col("doc_id")),
-      col("doc_id"), "graft_q194_idx")
+      col("doc_id"), prefix)
     val fresh = spark.newSession()
-    val loaded = Dedup.loadCorpusIndex(fresh, "graft_q194_idx")
+    val loaded = Dedup.loadCorpusIndex(fresh, prefix)
     val shard = fresh.read.parquet(landing).filter(col("source") === "src0")
-    Dedup.nearDupAgainstIndex(
-        shard, col("doc_id"), col("text"), loaded, threshold = 0.8)
+    pinLeg(Dedup.nearDupAgainstIndex(
+        shard, col("doc_id"), col("text"), loaded, threshold = 0.8))
       .orderBy(asc("new_id"), asc("corpus_id"))
   }
 

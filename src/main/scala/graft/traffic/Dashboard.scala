@@ -1,7 +1,5 @@
 package graft.traffic
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,9 +8,11 @@ import graft.operators.Similarity
 /** The dashboard's six figures (`Dash.update_graphs`, `Dash.py:148-252`;
   * SURVEY.md §3.2) over one snapshot frame. Like `update_graphs`, which
   * returns all six figures from one fetched snapshot, one tick is ONE
-  * eager pass: [[figures]] runs the figure queries concurrently and
-  * returns their result tables already collected. Every consumer reads
-  * the immutable published snapshot
+  * eager pass: [[figures]] answers the four grouped figures from one
+  * grouping-sets aggregate ([[TrafficAnalytics.fused]]) and runs it
+  * concurrently with the capped map projection, the tick's only other
+  * query, and returns their tables already collected. Every consumer
+  * reads the immutable published snapshot
   * ([[graft.streaming.SnapshotRefresh.SnapshotStore]]), which removes the
   * reference's reader/writer race by construction.
   *
@@ -33,24 +33,24 @@ object Dashboard {
     snapshot.select(col("street")).where(col("street").isNotNull)
       .distinct().orderBy(asc("street"))
 
-  /** All six figures, keyed as in the reference's callback. The five
-    * distinct figure queries run concurrently (the pie and the bar chart
-    * share one borough table), so one tick pays the Spark job floor once
-    * rather than once per figure. Each table comes back as a local
-    * DataFrame over its collected rows: a caller's `collect()` runs no
-    * job. The first failing query's error fails the call. */
+  /** All six figures, keyed as in the reference's callback. The selected
+    * street's series, the top-5 streets, the latest day's hours and the
+    * borough totals come from ONE grouping-sets aggregate (the pie and
+    * the bar chart share its borough table); it runs concurrently with
+    * the map projection, the only other query of a tick. Each table
+    * equals its figure's lazy [[TrafficAnalytics]] query, row for
+    * row, and comes back as a local DataFrame over its collected rows:
+    * a caller's `collect()` runs no job. The first failing query's error
+    * fails the call. */
   def figures(snapshot: DataFrame, selectedStreet: String): Seq[(String, DataFrame)] = {
-    val queries = Seq(
-      TrafficAnalytics.streetTimeSeries(snapshot, selectedStreet),
-      TrafficAnalytics.topStreets(snapshot),
-      TrafficAnalytics.latestDayHourly(snapshot),
-      TrafficAnalytics.boroughTraffic(snapshot),
-      TrafficAnalytics.mapPoints(snapshot))
-    val tables = new Array[DataFrame](queries.size)
-    Similarity.inParallel(queries.zipWithIndex.map { case (q, i) =>
-      () => tables(i) = q.sparkSession.createDataFrame(q.collect().toSeq.asJava, q.schema)
-    }: _*)
-    val Array(series, top, latest, boroughs, points) = tables
+    var grouped: Seq[DataFrame] = Nil
+    var points: DataFrame = null
+    Similarity.inParallel(
+      () => grouped = TrafficAnalytics.fused(snapshot, Seq(
+        TrafficAnalytics.series(selectedStreet), TrafficAnalytics.busiest(5),
+        TrafficAnalytics.LatestDay, TrafficAnalytics.ByBorough)),
+      () => points = TrafficAnalytics.collected(TrafficAnalytics.mapPoints(snapshot)))
+    val Seq(series, top, latest, boroughs) = grouped
     Seq(
       "street_time_series" -> series,
       "top_streets" -> top,

@@ -3,7 +3,6 @@ package graft.traffic
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -101,14 +100,15 @@ object Normalize {
       "latitude" -> GeoFunctions.latFromStatePlane(col("x_coord"), col("y_coord"))))
 
   /** F54: pandas `cat.codes` — integer codes assigned by sorted distinct
-    * value, null → −1. Distributed: dense_rank over the (tiny) distinct
-    * dimension, broadcast back; no collect. */
+    * value, null → −1. The sorted distinct values are one array, a
+    * scalar subquery (`sort_array(collect_set(c))`, bounded by the
+    * column's distinct count, sorted by Spark's ordering); a row's code
+    * is its value's position there. No join, no window, no collect.
+    * Column order as a USING join gives: the key first, the code last. */
   def categoryCodes(df: DataFrame, c: String, codeCol: String): DataFrame = {
-    val codes = df.select(col(c)).where(col(c).isNotNull).distinct()
-      .withColumn(codeCol,
-        (dense_rank().over(Window.orderBy(col(c))) - 1).cast("int"))
-    df.join(broadcast(codes), Seq(c), "left")
-      .withColumn(codeCol, coalesce(col(codeCol), lit(-1)))
+    val sorted = df.agg(sort_array(collect_set(col(c)))).scalar()
+    df.select(col(c) +: df.columns.filter(_ != c).map(col) :+
+      coalesce((array_position(sorted, col(c)) - 1).cast("int"), lit(-1)).as(codeCol): _*)
   }
 
   /** F55: half-open volume bins [0,50) Low, [50,200) Medium, [200,∞) High;

@@ -1,9 +1,16 @@
 package graft.traffic
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.expressions.PandasCorr
 import graft.traffic.Normalize.{directionLabel, volumeBin}
 
 /** The reference's analysis battery over the normalized long traffic
@@ -13,22 +20,172 @@ import graft.traffic.Normalize.{directionLabel, volumeBin}
   * caller collects (chart rendering is out of engine scope; the engine's
   * deliverable is the result table each chart consumes — SURVEY.md §7.5).
   *
-  * All are hash group-bys over low-cardinality keys → partial+final
-  * HashAggregate, TakeOrderedAndProject for top-k; nothing here shuffles
-  * more than |distinct keys| rows. Full (non-top-k) outputs are ordered
-  * in ONE task (`ordered`), not by a global sort.
+  * Every grouped analysis and figure is DECLARED once, as a [[Grouped]]:
+  * its keys, its measures over `volume`, its order and its k. Its lazy
+  * query ([[Grouped.query]]) and its share of a fused pass
+  * ([[fused]]) both derive from that declaration. The lazy queries are
+  * hash group-bys over low-cardinality keys → partial+final
+  * HashAggregate, TakeOrderedAndProject for top-k, full outputs ordered
+  * in ONE task (`ordered`), not by a global sort. [[fused]] answers many
+  * of them from ONE grouping-sets aggregate collected once and sliced
+  * locally — what a dashboard tick and a batch pass run
+  * ([[Dashboard.figures]], [[TrafficPipeline.analyses]]).
   */
 object TrafficAnalytics {
 
-  /** pandas `groupby` drops NaN keys (dropna=True default); Spark keeps a
-    * null group. Every analysis filters null keys for exact reference
-    * parity (SURVEY.md §5.2 adversarial note). */
-  private def byKey(df: DataFrame, key: Column): DataFrame =
-    df.where(key.isNotNull)
+  /** A measure over `volume`. */
+  private[traffic] sealed abstract class Measure(val column: Column)
 
   /** pandas `sum()` over an all-NaN group returns 0 (min_count=0); SQL
     * returns NULL — coalesce for parity (SURVEY.md §7.4.3). */
-  private def sum0(c: String): Column = coalesce(sum(c), lit(0L))
+  private[traffic] case object Sum0 extends Measure(coalesce(sum("volume"), lit(0L)))
+
+  private[traffic] case object Mean extends Measure(avg("volume"))
+
+  /** One key of an output order: the output column and its direction
+    * (Spark's: ascending puts nulls first, descending last). */
+  private[traffic] final case class SortKey(column: String, ascending: Boolean) {
+    def toColumn: Column = if (ascending) col(column).asc else col(column).desc
+  }
+  private def up(c: String) = SortKey(c, ascending = true)
+  private def down(c: String) = SortKey(c, ascending = false)
+
+  /** A grouped analysis, declared once.
+    *
+    * @param keys     output name → expression over the input rows. pandas
+    *                 `groupby` drops NaN keys (dropna=True default), Spark
+    *                 keeps a null group: a group with any null key is
+    *                 dropped (SURVEY.md §5.2 adversarial note).
+    * @param measures output name → measure, after the keys
+    * @param order    a total order on the output columns
+    * @param k        keep only the first k rows of that order
+    * @param latest   a key whose maximum selects the rows; the output
+    *                 drops it
+    */
+  private[traffic] final case class Grouped(
+      keys: Seq[(String, Column)],
+      measures: Seq[(String, Measure)],
+      order: Seq[SortKey],
+      k: Option[Int] = None,
+      latest: Option[String] = None) {
+
+    def keyNames: Seq[String] = keys.map(_._1)
+
+    /** Output columns, in order. */
+    def outputNames: Seq[String] =
+      keyNames.filterNot(latest.contains) ++ measures.map(_._1)
+
+    /** The lazy query. */
+    def query(df: DataFrame): DataFrame = {
+      val aggs = measures.map { case (n, m) => m.column.as(n) }
+      val grouped = project(df, keys)
+        .where(keyNames.map(col(_).isNotNull).reduce(_ && _))
+        .groupBy(keyNames.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+      val rows = latest.fold(grouped) { day =>
+        // Unpartitioned window over one partition: no exchange. Its
+        // input is bounded by the key domain (days × 24 for the latest
+        // day), and a max-key subquery would be a stage and a broadcast
+        // that the main scan waits for.
+        grouped.coalesce(1)
+          .withColumn("__latest", max(col(day)).over(Window.partitionBy()))
+          .where(col(day) === col("__latest"))
+          .select(outputNames.map(col): _*)
+      }
+      val sort = order.map(_.toColumn)
+      k.fold(ordered(rows, sort: _*))(n => rows.orderBy(sort: _*).limit(n))
+    }
+
+    /** The local half of [[query]], for [[fused]]: `rows` are this
+      * analysis's groups laid out as `fields` (keys, then measures).
+      * Drops null keys, picks the latest key's rows, projects, orders and
+      * cuts as [[query]] does; returns the output schema and rows. The
+      * order is Spark's own (strings by their UTF-8 bytes, as
+      * `UTF8String.compareTo`), so ties break as in [[query]]. */
+    private[TrafficAnalytics] def finish(
+        rows: Seq[InternalRow], fields: StructType): (StructType, Seq[InternalRow]) = {
+      val keyed = rows.filter(r => keyNames.indices.forall(!r.isNullAt(_)))
+      val picked = latest.fold(keyed) { day =>
+        val byDay = ordering(fields, Seq(up(day)))
+        if (keyed.isEmpty) keyed
+        else { val top = keyed.max(byDay); keyed.filter(byDay.compare(_, top) == 0) }
+      }
+      val schema = StructType(outputNames.map(fields(_)))
+      val projected = picked.map(r => InternalRow.fromSeq(
+        schema.map(f => r.get(fields.fieldIndex(f.name), f.dataType))))
+      val sorted = projected.sorted(ordering(schema, order))
+      (schema, k.fold(sorted)(sorted.take))
+    }
+  }
+
+  /** Spark's ordering of rows laid out as `schema` by `keys`. */
+  private def ordering(schema: StructType, keys: Seq[SortKey]): InterpretedOrdering =
+    new InterpretedOrdering(keys.map { o =>
+      val i = schema.fieldIndex(o.column)
+      SortOrder(BoundReference(i, schema(i).dataType, schema(i).nullable),
+        if (o.ascending) Ascending else Descending)
+    })
+
+  /** The key columns under their output names, then `volume`. Grouping
+    * sets take these projected columns: an aliased expression handed
+    * straight to `groupingSets` becomes an extra grouping column, and
+    * `grouping_id()` grows a bit for each. */
+  private def project(df: DataFrame, keys: Seq[(String, Column)]): DataFrame =
+    df.select(keys.map { case (n, e) => e.as(n) } :+ col("volume"): _*)
+
+  /** `analyses` over `df`, eagerly, from ONE grouping-sets aggregate:
+    * one set per distinct key list, every measure any of them needs
+    * computed for every group, collected once (one map stage and one
+    * result job) and sliced locally by `grouping_id()` into one
+    * local DataFrame per analysis, each equal to its [[Grouped.query]]
+    * row for row, schema included. Keys that share a name must share
+    * their expression. What is collected is bounded by the key domains
+    * (SCALE.md §Aggregations): distinct streets, dates, days × 24, hours,
+    * boroughs, directions, one street's timestamps. */
+  private[traffic] def fused(df: DataFrame, analyses: Seq[Grouped]): Seq[DataFrame] = {
+    val keys = analyses.flatMap(_.keys).distinct
+    val names = keys.map(_._1).distinct
+    require(names.size == keys.size,
+      s"keys that share a name must share their expression: ${keys.mkString(", ")}")
+    val measures = analyses.flatMap(_.measures.map(_._2)).distinct
+    val sets = analyses.map(_.keyNames).distinct
+    val input = project(df, keys)
+    val aggs = measures.zipWithIndex.map { case (m, i) => m.column.as(s"__measure$i") } :+
+      grouping_id().as("__grouping_id")
+    val agg = input.groupingSets(sets.map(_.map(col)), names.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(agg.schema)
+    val rows = agg.collect().toSeq.map(toInternal(_).asInstanceOf[InternalRow])
+    // grouping_id() sets bit (n-1-i) when the i-th grouping column is
+    // NOT in the row's set.
+    def gid(set: Seq[String]): Long = names.indices.foldLeft(0L) { (g, i) =>
+      if (set.contains(names(i))) g else g | (1L << (names.size - 1 - i))
+    }
+    val gidAt = names.size + measures.size
+    analyses.map { a =>
+      val at = a.keyNames.map(names.indexOf) ++
+        a.measures.map { case (_, m) => names.size + measures.indexOf(m) }
+      // Keys keep the input's field (the aggregate makes every grouping
+      // column nullable); measures keep the aggregate's, renamed.
+      val fields = StructType(a.keyNames.map(input.schema(_)) ++
+        a.measures.zip(at.drop(a.keys.size)).map { case ((n, _), i) => agg.schema(i).copy(name = n) })
+      val set = gid(a.keyNames)
+      val mine = rows.filter(_.getLong(gidAt) == set).map(r =>
+        InternalRow.fromSeq(at.zip(fields).map { case (i, f) => r.get(i, f.dataType) }))
+      val (schema, out) = a.finish(mine, fields)
+      local(df, out, schema)
+    }
+  }
+
+  /** A local DataFrame over `rows`: reading it runs no Spark job. */
+  private def local(like: DataFrame, rows: Seq[InternalRow], schema: StructType): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    like.sparkSession.createDataFrame(rows.map(toRow(_).asInstanceOf[Row]).asJava, schema)
+  }
+
+  /** `df` collected into a local DataFrame of the same schema. */
+  private[traffic] def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** Total order for an output bounded by a small key domain (hours,
     * dates, boroughs, directions, one street's timestamps): its size
@@ -41,51 +198,73 @@ object TrafficAnalytics {
   private def ordered(df: DataFrame, by: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(by: _*)
 
+  private def total = Seq("total_volume" -> Sum0)
+
   /** D26/E44 — "busiest streets": top-k by total volume (tie-break on
     * street for determinism; pandas keeps insertion order). */
-  def busiestStreets(df: DataFrame, k: Int = 10): DataFrame =
-    byKey(df, col("street")).groupBy(col("street"))
-      .agg(sum0("volume").as("total_volume"), avg("volume").as("avg_volume"))
-      .orderBy(desc("total_volume"), asc("street"))
-      .limit(k)
+  private[traffic] def busiest(k: Int): Grouped = Grouped(
+    Seq("street" -> col("street")),
+    total :+ ("avg_volume" -> Mean),
+    Seq(down("total_volume"), up("street")), k = Some(k))
 
   /** D27 — traffic volume over time (time-series by date). */
-  def trafficByDate(df: DataFrame): DataFrame =
-    ordered(byKey(df, col("date")).groupBy(col("date"))
-      .agg(sum0("volume").as("total_volume")), asc("date"))
+  private[traffic] val ByDate = Grouped(Seq("date" -> col("date")), total, Seq(up("date")))
 
   /** E44 — busiest dates: top-k days by volume. */
-  def busiestDates(df: DataFrame, k: Int = 10): DataFrame =
-    byKey(df, col("date")).groupBy(col("date"))
-      .agg(sum0("volume").as("total_volume"))
-      .orderBy(desc("total_volume"), asc("date"))
-      .limit(k)
+  private[traffic] def busiestDays(k: Int): Grouped = Grouped(
+    Seq("date" -> col("date")), total, Seq(down("total_volume"), up("date")), k = Some(k))
 
   /** D28 — peak hours: volume by hour-of-day. */
-  def peakHours(df: DataFrame): DataFrame =
-    ordered(byKey(df, col("hour")).groupBy(col("hour"))
-      .agg(sum0("volume").as("total_volume")), desc("total_volume"), asc("hour"))
+  private[traffic] val ByHour = Grouped(
+    Seq("hour" -> col("hour")), total, Seq(down("total_volume"), up("hour")))
 
   /** F53/D25 — directional traffic: code → compass label then group-sum
     * (unmapped codes → null group, as pandas map). */
-  def directionalTraffic(df: DataFrame): DataFrame = {
-    val labeled = df.withColumn("direction_label", directionLabel(col("direction_code")))
-    ordered(byKey(labeled, col("direction_label"))
-      .groupBy(col("direction_label"))
-      .agg(sum0("volume").as("total_volume")), asc("direction_label"))
-  }
+  private[traffic] val ByDirection = Grouped(
+    Seq("direction_label" -> directionLabel(col("direction_code"))), total,
+    Seq(up("direction_label")))
 
   /** D24 — borough totals. */
-  def boroughTraffic(df: DataFrame): DataFrame =
-    ordered(byKey(df, col("borough")).groupBy(col("borough"))
-      .agg(sum0("volume").as("total_volume")), desc("total_volume"), asc("borough"))
+  private[traffic] val ByBorough = Grouped(
+    Seq("borough" -> col("borough")), total, Seq(down("total_volume"), up("borough")))
+
+  /** C19 — per-street time series (dashboard line chart). Rows of other
+    * streets get a null key and drop like any null key, so in a fused
+    * pass this set holds one street's timestamps at most. */
+  private[traffic] def series(street: String): Grouped = Grouped(
+    Seq("datetime" -> when(col("street") === lit(street), col("datetime"))),
+    Seq("volume" -> Sum0), Seq(up("datetime")))
+
+  /** C20/D30 — hourly volumes on the latest day in the data: aggregated
+    * by (day, hour), the max day's rows kept. A null `datetime` gives a
+    * null day, dropped like any null key. */
+  private[traffic] val LatestDay = Grouped(
+    Seq("day" -> to_date(col("datetime")), "hour" -> hour(col("datetime"))),
+    Seq("volume" -> Sum0), Seq(up("hour")), latest = Some("day"))
+
+  def busiestStreets(df: DataFrame, k: Int = 10): DataFrame = busiest(k).query(df)
+
+  def trafficByDate(df: DataFrame): DataFrame = ByDate.query(df)
+
+  def busiestDates(df: DataFrame, k: Int = 10): DataFrame = busiestDays(k).query(df)
+
+  def peakHours(df: DataFrame): DataFrame = ByHour.query(df)
+
+  def directionalTraffic(df: DataFrame): DataFrame = ByDirection.query(df)
+
+  def boroughTraffic(df: DataFrame): DataFrame = ByBorough.query(df)
 
   /** D37 — pairwise Pearson correlation matrix over numeric columns:
     * all n² pairs in ONE aggregate pass (n is small — this is a single
-    * row of n² corr aggregates, not n² scans like the reference). */
+    * row of n² corr aggregates, not n² scans like the reference). As
+    * pandas `DataFrame.corr`, a pair with a constant side is NaN (the
+    * diagonal included) where Spark's `corr` would fail the query under
+    * ANSI ([[graft.expressions.PandasCorr]]). Not part of a [[fused]]
+    * pass: a grouping-sets aggregate evaluates every aggregate in every
+    * group of every set, and a key is constant within its own groups. */
   def correlationMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = for (a <- cols; b <- cols)
-      yield corr(col(a), col(b)).as(s"${a}__$b")
+      yield PandasCorr.corr(col(a), col(b)).as(s"${a}__$b")
     df.agg(aggs.head, aggs.tail: _*)
   }
 
@@ -96,33 +275,12 @@ object TrafficAnalytics {
 
   // ----- dashboard queries (Dash.py:148-252) -----
 
-  /** C19 — per-street time series (dashboard line chart). */
-  def streetTimeSeries(df: DataFrame, street: String): DataFrame =
-    ordered(byKey(df.filter(col("street") === lit(street)), col("datetime"))
-      .groupBy(col("datetime"))
-      .agg(sum0("volume").as("volume")), asc("datetime"))
+  def streetTimeSeries(df: DataFrame, street: String): DataFrame = series(street).query(df)
 
   /** D29/E45 — top-5 streets (dashboard bar chart). */
-  def topStreets(df: DataFrame, k: Int = 5): DataFrame =
-    busiestStreets(df, k)
+  def topStreets(df: DataFrame, k: Int = 5): DataFrame = busiestStreets(df, k)
 
-  /** C20/D30 — hourly volumes on the latest day in the data. One
-    * aggregation by (day, hour), then the latest day's rows picked in
-    * the single ordering task: its input is bounded by days × 24. A
-    * max-date subquery would be a stage and a broadcast that the main
-    * scan waits for — the longest job chain of a dashboard tick. A null
-    * `datetime` never equals the max day, so null keys drop as in
-    * [[byKey]]. */
-  def latestDayHourly(df: DataFrame): DataFrame = {
-    val byDayHour = df
-      .groupBy(to_date(col("datetime")).as("day"), hour(col("datetime")).as("hour"))
-      .agg(sum0("volume").as("volume"))
-    // Unpartitioned window over one partition: no exchange.
-    val latest = byDayHour.coalesce(1)
-      .withColumn("max_day", max(col("day")).over(Window.partitionBy()))
-      .where(col("day") === col("max_day"))
-    ordered(latest.select(col("hour"), col("volume")), asc("hour"))
-  }
+  def latestDayHourly(df: DataFrame): DataFrame = LatestDay.query(df)
 
   /** Map projection (bounded: the only full-row projection, capped). */
   def mapPoints(df: DataFrame, cap: Int = 100000): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
 import graft.ml.TrafficModels
+import graft.operators.Similarity
 
 /** The reference's `TrafficAnalysis.main()` equivalent, end-to-end
   * (`TrafficAnalysis.py:441-497`): acquire → normalize → the seven
@@ -31,16 +32,31 @@ object TrafficPipeline {
     Normalize(bound.load())
   }
 
-  /** Stage 4: the seven batch analyses (TA:455-468 order). */
-  def analyses(norm: DataFrame): Seq[(String, DataFrame)] = Seq(
-    "correlation_heatmap" -> TrafficAnalytics.correlationMatrix(norm,
-      Seq("volume", "hour", "day_of_week", "is_weekend")),
-    "busiest_streets" -> TrafficAnalytics.busiestStreets(norm),
-    "traffic_by_date" -> TrafficAnalytics.trafficByDate(norm),
-    "busiest_dates" -> TrafficAnalytics.busiestDates(norm),
-    "peak_hours" -> TrafficAnalytics.peakHours(norm),
-    "directional_traffic" -> TrafficAnalytics.directionalTraffic(norm),
-    "borough_traffic" -> TrafficAnalytics.boroughTraffic(norm))
+  /** Stage 4: the seven batch analyses (TA:455-468 order), run eagerly
+    * and returned as local tables (reading one runs no Spark job), each
+    * equal to its lazy [[TrafficAnalytics]] query row for row. The six
+    * grouped analyses come from ONE grouping-sets aggregate
+    * ([[TrafficAnalytics.fused]]; `traffic_by_date` and `busiest_dates`
+    * share its per-date set); the correlation heatmap is its own one-row
+    * aggregate (see [[TrafficAnalytics.correlationMatrix]] for why it
+    * cannot join the grouping sets). The two run concurrently; the first
+    * failing one's error fails the call. */
+  def analyses(norm: DataFrame): Seq[(String, DataFrame)] = {
+    val grouped = Seq(
+      "busiest_streets" -> TrafficAnalytics.busiest(10),
+      "traffic_by_date" -> TrafficAnalytics.ByDate,
+      "busiest_dates" -> TrafficAnalytics.busiestDays(10),
+      "peak_hours" -> TrafficAnalytics.ByHour,
+      "directional_traffic" -> TrafficAnalytics.ByDirection,
+      "borough_traffic" -> TrafficAnalytics.ByBorough)
+    var heatmap: DataFrame = null
+    var tables: Seq[DataFrame] = Nil
+    Similarity.inParallel(
+      () => heatmap = TrafficAnalytics.collected(TrafficAnalytics.correlationMatrix(norm,
+        Seq("volume", "hour", "day_of_week", "is_weekend"))),
+      () => tables = TrafficAnalytics.fused(norm, grouped.map(_._2)))
+    ("correlation_heatmap" -> heatmap) +: grouped.map(_._1).zip(tables)
+  }
 
   /** Stage 5: the model battery (TA:473-491) — regression on
     * (segment_id, hour), three classifiers on the derived labels. */

@@ -96,12 +96,12 @@ class DashboardSpec extends SparkSpec {
     assert(messages.exists(_.contains("map points broke")), e.toString)
   }
 
-  test("one figures call runs at most 9 jobs; reading its tables runs none") {
-    // Measured 9 on this cached snapshot: a map stage and a result job
-    // for each of the 4 grouped figures, 1 for the capped map points. A
-    // global orderBy's range exchange adds 2 jobs to each ordered figure.
+  test("one figures call runs at most 3 jobs; reading its tables runs none") {
+    // Measured 3 on this cached snapshot: a map stage and a result job
+    // for the one grouping-sets aggregate behind the four grouped
+    // figures, 1 for the capped map points.
     val (figs, figureJobs) = jobsOf(Dashboard.figures(snapshot, "BROADWAY"))
-    assert(figureJobs > 0 && figureJobs <= 9, s"$figureJobs jobs")
+    assert(figureJobs > 0 && figureJobs <= 3, s"$figureJobs jobs")
     val (_, readJobs) = jobsOf(figs.foreach { case (_, df) => df.collect() })
     assert(readJobs == 0, s"reading the figure tables ran $readJobs jobs")
   }

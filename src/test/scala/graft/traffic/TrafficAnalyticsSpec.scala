@@ -57,6 +57,22 @@ class TrafficAnalyticsSpec extends SparkSpec {
       r.getAs[Double]("hour__volume")) < 1e-12)
   }
 
+  test("correlation matrix: a constant column gives NaN pairs, as pandas, not a failure") {
+    // Weekdays only: is_weekend is 0 on every row. Spark's corr divides
+    // by its zero variance, an ANSI DIVIDE_BY_ZERO.
+    val weekdays = norm.where(col("is_weekend") === 0)
+    val cols = Seq("volume", "hour", "is_weekend")
+    val r = TrafficAnalytics.correlationMatrix(weekdays, cols).collect().head
+    for (a <- cols; b <- cols) {
+      val v = r.getAs[Double](s"${a}__$b")
+      if (a == "is_weekend" || b == "is_weekend") assert(v.isNaN, s"${a}__$b = $v")
+      else {
+        val want = weekdays.agg(corr(col(a), col(b))).collect().head.getDouble(0)
+        assert(v == want, s"${a}__$b")
+      }
+    }
+  }
+
   test("3-sigma abnormal flag: flags exist only outside mu±3sigma") {
     val flagged = TrafficAnalytics.withAbnormalFlag(norm)
     val stats = norm.agg(avg("volume"), stddev_samp(col("volume")))
