@@ -1094,16 +1094,14 @@ object Dedup {
     requireIndexPrefix(tablePrefix)
     val spark = index.rel.sparkSession
     def reset(name: String): Unit = resetCorpusTable(spark, name)
-    // Cluster to the bucket layout BEFORE the bucketed write:
-    // repartition(buckets, key) maps rows by pmod(murmur3(key), buckets)
-    // — the identical expression bucketBy uses to assign bucket ids —
-    // so each task holds exactly one bucket and writes ONE file.
-    // Without it every task opens a file per bucket it touches
-    // (partitions × buckets small files: measured ~2000/table at
-    // sf0.1, IndexCompactionSweep). One extra exchange at write time
-    // is the write-once/probe-for-weeks trade; the probe plan never
-    // sees it (the scan's distribution comes from the catalog bucket
-    // spec, not the file layout).
+    // Place whole buckets on the write tasks BEFORE the bucketed write
+    // ([[bucketPlaced]]): each task then writes ONE file per bucket it
+    // holds. Without it every task opens a file per bucket it touches
+    // (partitions × buckets small files: measured ~2000/table at sf0.1,
+    // IndexCompactionSweep). One extra exchange at write time is the
+    // write-once/probe-for-weeks trade; the probe plan never sees it
+    // (the scan's distribution comes from the catalog bucket spec, not
+    // the file layout).
     import spark.implicits._
     // The three tables are independent artifacts — reset+write each on
     // its own thread (Similarity.inParallel, guide §2.6: back to back
@@ -1112,14 +1110,14 @@ object Dedup {
     Similarity.inParallel(
       () => {
         reset(s"${tablePrefix}_banded")
-        index.banded.repartition(buckets, col("bh"))
+        bucketPlaced(index.banded, buckets, Seq("bh"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .bucketBy(buckets, "bh").sortBy("bh")
           .format("parquet").saveAsTable(s"${tablePrefix}_banded")
       },
       () => {
         reset(s"${tablePrefix}_rel")
-        index.rel.repartition(buckets, col("id"))
+        bucketPlaced(index.rel, buckets, Seq("id"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .bucketBy(buckets, "id").sortBy("id")
           .format("parquet").saveAsTable(s"${tablePrefix}_rel")
@@ -1131,6 +1129,16 @@ object Dedup {
           .format("parquet").saveAsTable(s"${tablePrefix}_meta")
       })
   }
+
+  /** `df` placed for a `bucketBy(numBuckets, cols)` write: the stripe is
+    * the bucket id the bucketed writer itself computes —
+    * `pmod(murmur3(cols, seed 42), numBuckets)`, `HashPartitioning`'s
+    * expression, which `hash` is — so whole buckets land on
+    * [[IndexFiles.placed]]'s tasks. */
+  private def bucketPlaced(
+      df: DataFrame, numBuckets: Int, cols: Seq[String]): DataFrame =
+    IndexFiles.placed(df,
+      pmod(hash(cols.map(col): _*), lit(numBuckets)), numBuckets)
 
   /** Reload a [[writeCorpusIndex]]-persisted index in (possibly) a fresh
     * session. The returned relations are the bucketed table scans
@@ -1195,17 +1203,9 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): CorpusHealthInfo = {
     indexMeta(spark, tablePrefix) // readable failure on a wrong prefix
-    val conf = spark.sessionState.newHadoopConf()
-    def files(table: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")).toSeq
-    }
+    def files(table: String): Seq[org.apache.hadoop.fs.FileStatus] =
+      IndexFiles.dataFiles(spark, Some(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).location.toString))
     val banded = files(s"${tablePrefix}_banded")
     val rel = files(s"${tablePrefix}_rel")
     val buckets = spark.sessionState.catalog.getTableMetadata(
@@ -1221,7 +1221,7 @@ object Dedup {
       if (ids.isEmpty) fs.size
       else ids.groupBy(identity).values.map(_.size).max
     }
-    val tombs = Tombstones.list(spark, tombstoneDir(spark, tablePrefix))
+    val tombs = IndexFiles.dataFiles(spark, tombstoneDir(spark, tablePrefix))
     CorpusHealthInfo(buckets, banded.size, rel.size,
       math.max(maxPerBucket(banded), maxPerBucket(rel)),
       tombs.size, tombs.map(_.getLen).sum)
@@ -1366,7 +1366,10 @@ object Dedup {
       s"no corpus index at prefix '$tablePrefix': missing table(s) " +
         s"${missing.mkString(", ")} — was writeCorpusIndex run against " +
         s"this metastore?")
-    val rows = spark.table(s"${tablePrefix}_meta").collect()
+    // Parameter-sized: read on the driver, no Spark job.
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${tablePrefix}_meta"))
+    val rows = IndexFiles.readRows(spark, meta.location.toString, meta.schema)
     require(rows.nonEmpty,
       s"corpus index at prefix '$tablePrefix' has an EMPTY meta table — " +
         s"the index write was interrupted; rebuild with writeCorpusIndex")
@@ -1450,7 +1453,7 @@ object Dedup {
       // the same persist.
       rel.count()
       // insertInto matches columns BY POSITION — select in table order.
-      // Cluster to the table's own bucket spec first (the
+      // Place by the table's own bucket spec first (the
       // writeCorpusIndex discipline): without it a shard written by T
       // tasks opens up to T files per touched bucket, and nightly
       // appends compound exactly the accretion compactCorpusIndex
@@ -1460,8 +1463,8 @@ object Dedup {
           org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
         val ordered = df.select(
           spark.table(table).columns.map(col).toIndexedSeq: _*)
-        val clustered = spec.fold(ordered)(s => ordered.repartition(
-          s.numBuckets, s.bucketColumnNames.map(col): _*))
+        val clustered = spec.fold(ordered)(s =>
+          bucketPlaced(ordered, s.numBuckets, s.bucketColumnNames))
         clustered.write.mode(org.apache.spark.sql.SaveMode.Append)
           .insertInto(table)
       }

@@ -489,38 +489,6 @@ object Similarity {
     cents.map(_.map(_.toFloat))
   }
 
-  /** Durable form of the IVF index — write once, probe across sessions.
-    * The posting lists land as parquet PARTITIONED by `list` (each
-    * inverted list is its own directory stripe), the centroids as a tiny
-    * (list, centroid) table beside them. A reloaded probe's
-    * `list IN (probes)` filter is then PARTITION PRUNING: the scan opens
-    * only the `nProbe` probed directories and never touches the rest of
-    * the corpus — the layout that makes IVF an index rather than a
-    * filter (gated in `IndexLifecycleSpec`: probe ≡ same-session build
-    * bit-equal, plan carries the partition filter). */
-  /** Write-task fan-out for the cluster-before-write exchange (guide
-    * §2.5: synthetic partitioning keys with too few distinct values):
-    * `repartition(col)` hashes the stripe key into
-    * spark.sql.shuffle.partitions buckets, and hash collisions hand one
-    * task SEVERAL stripes — that task then opens its stripes' files
-    * sequentially, so the straggler pays ~(stripes/tasks)× the per-file
-    * writer cost (measured on the 254-stripe LSH write at sf0.1:
-    * 3.9 s → 1.6 s by fanning to one task per stripe). One task per
-    * stripe is the documented write discipline; this picks the
-    * partition count to MATCH it: the stripe count, floored at the core
-    * count (empty partitions cost ~nothing) and capped
-    * (`graft.index.writeFanout.max`, default 4096) so a 65536-list
-    * production index fans to a bounded task count of whole stripes.
-    * Scale-adaptive by construction — derived from index geometry, not
-    * a local-mode constant. */
-  private def stripeFanout(
-      spark: org.apache.spark.sql.SparkSession, nStripes: Long): Int = {
-    val cap = spark.conf.getOption("graft.index.writeFanout.max")
-      .flatMap(_.toIntOption).getOrElse(4096)
-    math.max(spark.sparkContext.defaultParallelism,
-      math.min(nStripes, cap.toLong).toInt)
-  }
-
   /** Run INDEPENDENT index-artifact jobs concurrently (guide §2.6 —
     * actions are only sequential because the caller calls them
     * sequentially): the small-table writes beside a data write, or an
@@ -560,22 +528,29 @@ object Similarity {
     }
   }
 
+  /** Durable form of the IVF index — write once, probe across sessions.
+    * The posting lists land as parquet PARTITIONED by `list` (each
+    * inverted list is its own directory stripe), the centroids as a tiny
+    * (list, centroid) table beside them. A reloaded probe's
+    * `list IN (probes)` filter is then PARTITION PRUNING: the scan opens
+    * only the `nProbe` probed directories and never touches the rest of
+    * the corpus — the layout that makes IVF an index rather than a
+    * filter (gated in `IndexLifecycleSpec`: probe ≡ same-session build
+    * bit-equal, plan carries the partition filter). Each write lands one
+    * file per stripe ([[IndexFiles.placed]]). */
   def writeIvfIndex(
       centroids: Array[Array[Float]], indexed: DataFrame,
       path: String): Unit = {
     val spark = indexed.sparkSession
     import spark.implicits._
     clearCompletionMarker(spark, path)
-    // Cluster by the partition column before the partitioned write
-    // (writeLshIndex's discipline): one task per stripe → one file per
+    // Whole stripes per write task ([[IndexFiles.placed]]): one file per
     // stripe, instead of a file per (task × touched stripe). The two
     // data artifacts are independent — written concurrently
     // ([[inParallel]]); the tombstone seed and marker stay ordered
     // AFTER both (the crash discipline below).
     inParallel(
-      () => indexed
-        .repartition(stripeFanout(spark, centroids.length.toLong),
-          col("list"))
+      () => IndexFiles.placed(indexed, col("list"), centroids.length)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(s"$path/lists"),
       () => centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -599,13 +574,6 @@ object Similarity {
     writeCompletionMarker(spark, path)
   }
 
-  /** Reload a [[writeIvfIndex]]-persisted index in (possibly) a fresh
-    * session: (centroids ordered by list id, posting-list scan). The
-    * centroid table is parameter-sized (`nLists` rows) — the only
-    * driver-side collect. The posting-list frame is the partitioned
-    * scan itself, not a cache: [[ivfTopK]]'s probe filter prunes to the
-    * probed partitions, so steady-state probe cost is the probed lists'
-    * bytes, independent of corpus size. */
   /** The write-completion marker: an empty file every `write*Index`
     * DELETES before its first artifact write and CREATES as its LAST
     * step (after the tombstone seed). Every later verb requires it
@@ -666,6 +634,13 @@ object Similarity {
         s"marker format; rebuild with write${kind}Index")
   }
 
+  /** Reload a [[writeIvfIndex]]-persisted index in (possibly) a fresh
+    * session: (centroids ordered by list id, posting-list scan). The
+    * centroid table is parameter-sized (`nLists` rows), read on the
+    * driver with no Spark job. The posting-list frame is the partitioned
+    * scan itself, not a cache: [[ivfTopK]]'s probe filter prunes to the
+    * probed partitions, so steady-state probe cost is the probed lists'
+    * bytes, independent of corpus size. */
   def loadIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Float]], DataFrame) = {
@@ -741,7 +716,7 @@ object Similarity {
 
   /** Physical erasure + stripe compaction for a durable IVF index:
     * rewrite `lists` without tombstoned rows, one file per posting-list
-    * stripe (the repartition-by-partition-column write discipline),
+    * stripe ([[IndexFiles.placed]], the shared write placement),
     * swap in place, clear tombstones. Probe-bit-equal before/after
     * (gated). */
   def compactIvfIndex(
@@ -751,10 +726,9 @@ object Similarity {
     val survivors = tombs.live(
       spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists"))
     requireNonEmptySurvivors(survivors, path)
+    val nLists = loadIvfCentroids(spark, path).length
     swapInPlace(spark, s"$path/lists") { tmp =>
-      survivors.repartition(
-          stripeFanout(spark, loadIvfCentroids(spark, path).length.toLong),
-          col("list"))
+      IndexFiles.placed(survivors, col("list"), nLists)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(tmp)
     }
@@ -762,7 +736,7 @@ object Similarity {
   }
 
   /** [[compactIvfIndex]] for the LSH layout: erasure + merging the
-    * appends' file accretion back to one [[writeLshBuckets]] fan-out
+    * appends' file accretion back to one [[writeLshBuckets]] placement
     * of range-sorted files. */
   def compactLshIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
@@ -948,7 +922,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snapshot: Tombstones): Unit = {
     snapshot.erase()
-    if (Tombstones.list(spark, Some(s"$path/tombstones")).isEmpty)
+    if (IndexFiles.dataFiles(spark, Some(s"$path/tombstones")).isEmpty)
       spark.range(0).select(col("id"))
         .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -985,15 +959,15 @@ object Similarity {
   /** The parameter-sized artifact alone — what the APPEND path needs.
     * Constructing the posting-list frame just to discard it would pay
     * a recursive listing of every `list=` stripe (a cost that grows
-    * with exactly the nightly file count appends create). */
+    * with exactly the nightly file count appends create). Read on the
+    * driver ([[IndexFiles.readRows]]), no Spark job — like every
+    * parameter table of the path-based indexes. */
   private def loadIvfCentroids(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Float]] =
-    spark.read.schema(ArtifactSchemas.ivfCentroids).parquet(s"$path/centroids")
-      .select(col("list").cast("int"), col("centroid"))
-      .collect()
+    IndexFiles.readRows(spark, s"$path/centroids", ArtifactSchemas.ivfCentroids)
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1).map(_._2)
+      .sortBy(_._1).map(_._2).toArray
 
   /** Assign vectors to their nearest inverted list under FROZEN
     * centroids (squared-L2 argmin, 6-dp-rounded distance, lowest list
@@ -1042,32 +1016,19 @@ object Similarity {
     * a tight [min, max] bucket interval and the probes' existing
     * `bucket IN (ball)` / `bucket = qb` filters push down to the scan
     * (plan-gated in IndexLifecycleSpec) — footers are the only read
-    * amplification. The range group is derived ARITHMETICALLY
-    * (`⌊bucket·n / 2^nBits⌋` — buckets are hyperplane hashes, ≈uniform)
-    * rather than via repartitionByRange, so no sampling job re-runs
-    * the banding. Fan-out = one write task per core
-    * (`graft.index.flatWriteFanout` overrides for production writers
-    * that want more); appends reuse the same shape, so nightly growth
-    * adds ≤ fan-out range-sorted files, merged by compaction. */
+    * amplification. Each write task holds a contiguous bucket range
+    * ([[IndexFiles.placed]] with the bucket as the stripe:
+    * `⌊bucket·T / 2^nBits⌋`, computed, so no sampling job re-runs the
+    * banding the way repartitionByRange would) and writes it as one
+    * sorted file, so the files' bucket intervals never overlap. Appends
+    * reuse the same shape, so nightly growth adds ≤ T range-sorted
+    * files, merged by compaction. */
   private def writeLshBuckets(
       banded: DataFrame, nBits: Int, dir: String,
-      mode: org.apache.spark.sql.SaveMode): Unit = {
-    val spark = banded.sparkSession
-    val n = spark.conf.getOption("graft.index.flatWriteFanout")
-      .flatMap(_.toIntOption)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    banded
-      // products stay far under 2^53 (bucket < 2^32, n bounded), so the
-      // double floor-divide is exact; and the group id is a placement
-      // hint only — correctness never depends on it.
-      .withColumn("__grp",
-        floor(col("bucket").cast("double") * n / (1L << nBits).toDouble)
-          .cast("int"))
-      .repartition(n, col("__grp"))
-      .drop("__grp")
+      mode: org.apache.spark.sql.SaveMode): Unit =
+    IndexFiles.placed(banded, col("bucket"), 1L << nBits)
       .sortWithinPartitions(col("bucket"), col("id"))
       .write.mode(mode).parquet(dir)
-  }
 
   /** Durable form of the hyperplane-LSH index — the fourth ANN
     * structure's lifecycle ([[writeIvfIndex]]/[[writePqIndex]]'s
@@ -1125,7 +1086,7 @@ object Similarity {
     * rationale: never list every bucket stripe just to read one int). */
   private def loadLshNBits(
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val rows = spark.read.schema(ArtifactSchemas.lshMeta).parquet(s"$path/meta").collect()
+    val rows = IndexFiles.readRows(spark, s"$path/meta", ArtifactSchemas.lshMeta)
     require(rows.nonEmpty,
       s"LSH index at '$path' has an EMPTY meta table — the index write " +
         "was interrupted; rebuild with writeLshIndex")
@@ -1135,7 +1096,7 @@ object Similarity {
   /** Fold new vectors INTO a durable LSH index: band with the
     * meta-pinned nBits through the SAME [[bucketize]] definition the
     * build used (hash-seeded hyperplanes — appended rows are
-    * byte-identical to a build-time banding) and append ≤ fan-out new
+    * byte-identical to a build-time banding) and append ≤ T (write tasks) new
     * range-sorted files beside the existing ones ([[writeLshBuckets]]'s
     * flat layout; existing files are never rewritten). Pays the SHARD's
     * banding + write. Ids must be NEW — enforced by [[requireNewIds]]
@@ -1144,21 +1105,16 @@ object Similarity {
       newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
     val spark = newVecs.sparkSession
     requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
-    // Guard and meta load are independent bounded jobs — run
-    // concurrently (the appendToIvfPqIndex discipline). (Round 21
-    // NOTE: a wider 3-way overlap — banding ∥ tombstone guard ∥ an
-    // UNFILTERED live-id scan — was tried and MEASURED SLOWER in the
+    // (Round 21 NOTE: overlapping the banding, the tombstone guard and
+    // an UNFILTERED live-id scan was tried and MEASURED SLOWER in the
     // composed q193 (5.45 → 7.46 s at sf0.1/32c): the unpruned
     // 2^nBits-stripe id scan plans a shuffled semi-join where the
     // touched-pruned form stays a pruned scan + broadcast against the
     // persisted shard, and the write still waits on the slowest leg.
     // Reverted to the pruned serial guard.)
-    var nBits0: Int = -1
-    inParallel(
-      () => requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-        path, "compactLshIndex"),
-      () => nBits0 = loadLshNBits(spark, path))
-    val nBits = nBits0
+    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
+      path, "compactLshIndex")
+    val nBits = loadLshNBits(spark, path)
     val banded = bucketize(newVecs, id, vec, nBits)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1175,7 +1131,7 @@ object Similarity {
         else None,
         banded, "appendToLshIndex")
       // Same flat range-sorted landing as the build path (guide §6):
-      // the append adds ≤ fan-out new files, each a sorted contiguous
+      // the append adds ≤ T new files, each a sorted contiguous
       // bucket range — instead of one file per touched stripe (~197
       // small files per nightly append at sf0.1, the small-file mode
       // compaction exists to undo).
@@ -1336,15 +1292,9 @@ object Similarity {
       newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
     val spark = newVecs.sparkSession
     requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
-    // Guard and centroid load are independent bounded jobs — run
-    // concurrently (the appendToIvfPqIndex discipline; the wider
-    // unfiltered-guard overlap was measured slower — see
-    // [[appendToLshIndex]]'s round-21 note).
-    var cents0: Array[Array[Float]] = null
-    inParallel(
-      () => requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-        path, "compactIvfIndex"),
-      () => cents0 = loadIvfCentroids(spark, path))
+    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
+      path, "compactIvfIndex")
+    val cents0 = loadIvfCentroids(spark, path)
     val assigned = ivfAssign(newVecs, id, vec, cents0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1355,11 +1305,10 @@ object Similarity {
       requireNewIds(spark, s"$path/lists", ArtifactSchemas.ivfLists,
         Some(col("list").isin(touched: _*)), assigned,
         "appendToIvfIndex")
-      // Same cluster-before-write as the build path and appendToLshIndex:
-      // one file per touched stripe per append, not one per (task ×
-      // stripe) — nightly accretion is linear in nights, not tasks.
-      assigned
-        .repartition(stripeFanout(spark, touched.size.toLong), col("list"))
+      // Same placement as the build path and appendToLshIndex: one
+      // file per touched stripe per append, not one per (task × stripe)
+      // — nightly accretion is linear in nights, not tasks.
+      IndexFiles.placed(assigned, col("list"), cents0.length)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("list").parquet(s"$path/lists")
     } finally {
@@ -1378,20 +1327,18 @@ object Similarity {
       newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
     val spark = newVecs.sparkSession
     requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
-    // Both guards and the codebook load are independent bounded jobs —
-    // run concurrently ([[inParallel]]; the lowest-index error wins, so
-    // the tombstone guard still takes precedence over the live-id one).
+    // Both guards are independent bounded jobs — run concurrently
+    // ([[inParallel]]; the lowest-index error wins, so the tombstone
+    // guard still takes precedence over the live-id one).
     // Live-duplicate guard: the code table is unpartitioned (no probe
     // key to prune by), so the guard is a column-pruned scan of the
     // id longs alone — the same bandwidth class as the ADC probe scan.
-    var cbs0: Seq[(Int, Int, Array[Double])] = null
     inParallel(
       () => requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
         path, "compactPqIndex"),
       () => requireNewIds(spark, s"$path/codes", ArtifactSchemas.pqCodes, None,
-        newVecs.select(id.cast("long").as("id")), "appendToPqIndex"),
-      () => cbs0 = loadPqCodebooks(spark, path))
-    pqEncode(newVecs, id, vec, cbs0)
+        newVecs.select(id.cast("long").as("id")), "appendToPqIndex"))
+    pqEncode(newVecs, id, vec, loadPqCodebooks(spark, path))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(s"$path/codes")
   }
@@ -1426,7 +1373,8 @@ object Similarity {
 
   /** Reload a [[writePqIndex]]-persisted index in (possibly) a fresh
     * session: (codebooks in (j, cl) order, codes scan). The codebook
-    * collect is m·ksub rows — the same bounded class as the build. */
+    * table is m·ksub rows — the same bounded class as the build — read
+    * on the driver. */
   def loadPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[(Int, Int, Array[Double])], DataFrame) = {
@@ -1440,11 +1388,9 @@ object Similarity {
   private def loadPqCodebooks(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Int, Array[Double])] =
-    spark.read.schema(ArtifactSchemas.pqCodebooks).parquet(s"$path/codebooks")
-      .select(col("j").cast("int"), col("cl").cast("int"), col("c"))
-      .collect()
+    IndexFiles.readRows(spark, s"$path/codebooks", ArtifactSchemas.pqCodebooks)
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .sortBy(p => (p._1, p._2)).toSeq
+      .sortBy(p => (p._1, p._2))
 
   /** ===== Composed IVF+PQ durable index (the FAISS IVFADC layout —
     * Jégou et al. 2011, public literature) =====
@@ -1624,7 +1570,7 @@ object Similarity {
   }
 
   /** Durable form of the composed index — [[writeIvfIndex]]'s write
-    * discipline (cluster-by-stripe, tombstones seeded AFTER the data
+    * discipline (whole stripes per write task, tombstones seeded AFTER the data
     * writes succeed), plus a 1-row `meta` table pinning the artifact's
     * `encoding` ([[writeLshIndex]]'s nBits discipline: the convention
     * is STRUCTURAL — codes written under one target are garbage under
@@ -1642,9 +1588,7 @@ object Similarity {
     // ([[inParallel]] — sequentially they paid four job floors back to
     // back); seed + marker stay ordered after all of them.
     inParallel(
-      () => encoded
-        .repartition(stripeFanout(spark, centroids.length.toLong),
-          col("list"))
+      () => IndexFiles.placed(encoded, col("list"), centroids.length)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(s"$path/lists"),
       () => centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -1669,7 +1613,7 @@ object Similarity {
     * code. */
   private def loadIvfPqEncoding(
       spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val rows = spark.read.schema(ArtifactSchemas.ivfPqMeta).parquet(s"$path/meta").collect()
+    val rows = IndexFiles.readRows(spark, s"$path/meta", ArtifactSchemas.ivfPqMeta)
     require(rows.nonEmpty,
       s"IvfPq index at '$path' has an EMPTY meta table — the index " +
         "write was interrupted (or predates the encoding-pinned " +
@@ -1681,7 +1625,7 @@ object Similarity {
     * fresh session: (centroids by list id, the [[IvfPqCodebooks]]
     * artifact — codebooks in (j, cl) order plus the meta-pinned
     * encoding — and the tombstone-filtered code scan). The parameter
-    * tables are bounded driver collects; the code frame is the
+    * tables are bounded driver-side reads; the code frame is the
     * partitioned scan itself — [[ivfPqTopK]]'s probe filter prunes it
     * to the probed stripes. */
   def loadIvfPqIndex(
@@ -1689,18 +1633,8 @@ object Similarity {
       (Array[Array[Float]], IvfPqCodebooks, DataFrame) = {
     requireIndexDir(spark, path,
       Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    // The three parameter-table loads are independent bounded collects
-    // — run concurrently ([[inParallel]], the appendToIvfPqIndex
-    // discipline; round 21): sequentially they paid three job floors
-    // back to back on every fresh-session reload.
-    var cents: Array[Array[Float]] = null
-    var enc: String = null
-    var cbs: Seq[(Int, Int, Array[Double])] = null
-    inParallel(
-      () => cents = loadIvfCentroids(spark, path),
-      () => enc = loadIvfPqEncoding(spark, path),
-      () => cbs = loadPqCodebooks(spark, path))
-    (cents, IvfPqCodebooks(enc, cbs),
+    (loadIvfCentroids(spark, path),
+      IvfPqCodebooks(loadIvfPqEncoding(spark, path), loadPqCodebooks(spark, path)),
       tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists")))
   }
 
@@ -1714,20 +1648,11 @@ object Similarity {
     val spark = newVecs.sparkSession
     requireIndexDir(spark, path,
       Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    // The tombstone guard and the three parameter-table loads are
-    // independent bounded jobs — run concurrently ([[inParallel]]);
-    // Thread.join orders the writes below after all four.
-    var cents0: Array[Array[Float]] = null
-    var enc0: String = null
-    var cbs0: Seq[(Int, Int, Array[Double])] = null
-    inParallel(
-      () => requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-        path, "compactIvfPqIndex"),
-      () => cents0 = loadIvfCentroids(spark, path),
-      () => enc0 = loadIvfPqEncoding(spark, path),
-      () => cbs0 = loadPqCodebooks(spark, path))
-    val encoded = ivfPqEncode(newVecs, id, vec,
-        cents0, IvfPqCodebooks(enc0, cbs0))
+    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
+      path, "compactIvfPqIndex")
+    val cents0 = loadIvfCentroids(spark, path)
+    val encoded = ivfPqEncode(newVecs, id, vec, cents0,
+        IvfPqCodebooks(loadIvfPqEncoding(spark, path), loadPqCodebooks(spark, path)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val touched = encoded.select(col("list")).distinct()
@@ -1735,8 +1660,7 @@ object Similarity {
       requireNewIds(spark, s"$path/lists", ArtifactSchemas.ivfPqLists,
         Some(col("list").isin(touched: _*)), encoded,
         "appendToIvfPqIndex")
-      encoded
-        .repartition(stripeFanout(spark, touched.size.toLong), col("list"))
+      IndexFiles.placed(encoded, col("list"), cents0.length)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("list").parquet(s"$path/lists")
     } finally {
@@ -1764,10 +1688,9 @@ object Similarity {
     val survivors = tombs.live(
       spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists"))
     requireNonEmptySurvivors(survivors, path)
+    val nLists = loadIvfCentroids(spark, path).length
     swapInPlace(spark, s"$path/lists") { tmp =>
-      survivors.repartition(
-          stripeFanout(spark, loadIvfCentroids(spark, path).length.toLong),
-          col("list"))
+      IndexFiles.placed(survivors, col("list"), nLists)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("list").parquet(tmp)
     }
@@ -1867,7 +1790,7 @@ object Similarity {
         val n = dataFiles(dp)
         (1, n, n)
       }
-    val tfs = Tombstones.list(spark, Some(s"$path/tombstones"))
+    val tfs = IndexFiles.dataFiles(spark, Some(s"$path/tombstones"))
     IndexHealthInfo(kind, nStripes, nFiles, maxPerStripe,
       tfs.size, tfs.map(_.getLen).sum)
   }

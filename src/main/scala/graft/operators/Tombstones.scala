@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -106,43 +104,22 @@ private[operators] object Tombstones {
 
   private val Schema = StructType(Seq(StructField("id", LongType)))
 
-  /** The data files under `dir` (none when it does not exist): no
-    * `_SUCCESS` marker, no hidden checksum files. Driver-side listing, no
-    * job — also the health reports' tombstone count. */
-  def list(spark: SparkSession, dir: Option[String]): Seq[FileStatus] =
-    dir.toSeq.flatMap { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")).toSeq
-    }
-
   /** Snapshot the tombstones under `dir` (`None`: the index has none). */
   def at(spark: SparkSession, dir: Option[String]): Tombstones = {
-    val files = list(spark, dir)
+    val files = IndexFiles.dataFiles(spark, dir)
     val ids =
       if (files.map(_.getLen).sum > BroadcastCapBytes) None
       else Some(readIds(spark, files))
     new Tombstones(spark, files, ids)
   }
 
-  /** The ids of `files`, sorted and distinct, read on the driver. */
+  /** The ids of `files`, sorted and distinct, read on the driver
+    * ([[IndexFiles.foreachRecord]], the parameter artifacts' reader). */
   private def readIds(spark: SparkSession, files: Seq[FileStatus]): Array[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
     val out = Array.newBuilder[Long]
-    files.foreach { f =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), f.getPath)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val i = g.getType.getFieldIndex("id")
-          if (g.getFieldRepetitionCount(i) > 0) out += g.getLong(i, 0)
-          g = reader.read()
-        }
-      } finally reader.close()
+    IndexFiles.foreachRecord(spark, files) { g =>
+      val i = g.getType.getFieldIndex("id")
+      if (g.getFieldRepetitionCount(i) > 0) out += g.getLong(i, 0)
     }
     out.result().sorted.distinct
   }

@@ -948,6 +948,134 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(bad.getMessage.contains("[1, 32]"))
   }
 
+  test("LSH write: one file per write task, and the files' bucket intervals (from the footers) do not overlap") {
+    val nBits = 8
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val tasks = spark.sparkContext.defaultParallelism
+    // The input populates every task's range ⌊bucket·T / 2^nBits⌋, so
+    // every task has rows to write.
+    val ranges = Similarity.bucketize(emb, col("vec_id"), col("embedding"), nBits)
+      .select(floor(col("bucket") * tasks / (1 << nBits)).as("r"))
+      .distinct().count()
+    assert(ranges >= tasks, s"fixture populates $ranges of $tasks ranges")
+    val path = tmpDir("lsh_files")
+    Similarity.writeLshIndex(emb, col("vec_id"), col("embedding"), nBits, path)
+    val dir = new org.apache.hadoop.fs.Path(s"$path/buckets")
+    val conf = spark.sessionState.newHadoopConf()
+    val files = dir.getFileSystem(conf).listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    assert(files.size === tasks, s"expected one file per write task ($tasks), got ${files.size}")
+    val intervals = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+      try {
+        val stats = r.getFooter.getBlocks.toArray.toSeq.map { b =>
+          val c = b.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData]
+            .getColumns.toArray.toSeq
+            .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+            .find(_.getPath.toDotString == "bucket").get.getStatistics
+          (c.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            c.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+        }
+        (stats.map(_._1).min, stats.map(_._2).max)
+      } finally r.close()
+    }.sortBy(_._1)
+    intervals.sliding(2).foreach { case Seq(a, b) =>
+      assert(a._2 < b._1, s"bucket intervals overlap: $intervals")
+    }
+  }
+
+  test("verb budgets: IVF and MinHash write/append/delete/compact job counts; write + append leaves 2 files per IVF stripe and at most 2 per MinHash bucket") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb.filter(pmod(col("vec_id"), lit(5)) =!= 3),
+      col("vec_id"), col("embedding"), nLists = 4)
+    indexed.count() // the fit's own jobs stay out of the write's count
+    val shard = emb.filter(pmod(col("vec_id"), lit(5)) === 3)
+    val path = tmpDir("ivf_budget")
+    val jobs = scala.collection.mutable.LinkedHashMap[String, Int]()
+    jobs("ivf.write") = JobCount(spark)(Similarity.writeIvfIndex(centroids, indexed, path))._2
+    jobs("ivf.append") = JobCount(spark)(
+      Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), path))._2
+    // Every stripe the append touched holds the write's file and the
+    // append's; the others only the write's.
+    val touched = Similarity.ivfAssign(shard, col("vec_id"), col("embedding"), centroids)
+      .select(col("list")).distinct().collect().map(r => s"list=${r.getInt(0)}").toSet
+    val stripes = new java.io.File(s"$path/lists").listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(touched.size === 4, s"the shard must touch every list, touched $touched")
+    assert(stripes.values.forall(_ == 2),
+      s"write + append must leave 2 files per IVF stripe, got $stripes")
+    jobs("ivf.delete") = JobCount(spark)(Similarity.deleteFromIvfIndex(
+      shard.filter(pmod(col("vec_id"), lit(2)) === 0).select(col("vec_id")),
+      col("vec_id"), path))._2
+    jobs("ivf.compact") = JobCount(spark)(Similarity.compactIvfIndex(spark, path))._2
+
+    val prefix = s"graft_idx_budget_$runId"
+    val docs = Tables.documents(spark, sf)
+    val built = Dedup.corpusIndex(
+      docs.filter(!col("source").isin("src0", "src8")), col("doc_id"), col("text"))
+    built.banded.count(); built.rel.count()
+    jobs("minhash.write") = JobCount(spark)(Dedup.writeCorpusIndex(built, prefix, buckets = 8))._2
+    built.unpersist()
+    val docShard = docs.filter(col("source") === "src8")
+    jobs("minhash.append") = JobCount(spark)(
+      Dedup.appendToCorpusIndex(docShard, col("doc_id"), col("text"), prefix))._2
+    for (t <- Seq("banded", "rel")) {
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_$t")).location
+      val perBucket = new java.io.File(loc).listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet"))
+        .flatMap(n => "_(\\d{5})\\.".r.findFirstMatchIn(n).map(_.group(1)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      assert(perBucket.nonEmpty && perBucket.values.forall(_ <= 2),
+        s"write + append must leave at most 2 files per $t bucket, got $perBucket")
+    }
+    jobs("minhash.delete") = JobCount(spark)(Dedup.deleteFromCorpusIndex(
+      docShard.limit(3).select(col("doc_id")), col("doc_id"), prefix))._2
+    jobs("minhash.compact") = JobCount(spark)(Dedup.compactCorpusIndex(spark, prefix))._2
+    // Budgets at the measured counts (4 cores); a parameter table is
+    // read on the driver, so no verb spends a job on one.
+    val budget = Map(
+      "ivf.write" -> 5, "ivf.append" -> 9, "ivf.delete" -> 2, "ivf.compact" -> 4,
+      "minhash.write" -> 6, "minhash.append" -> 10, "minhash.delete" -> 2,
+      "minhash.compact" -> 7)
+    assert(budget.forall { case (verb, n) => jobs(verb) <= n },
+      s"job budget exceeded: measured $jobs, budget $budget")
+  }
+
+  test("parameter tables are read on the driver: loads start no Spark job, and an empty meta table still fails readably") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb, col("vec_id"), col("embedding"), nLists = 4)
+    val ivfPath = tmpDir("ivf_params")
+    Similarity.writeIvfIndex(centroids, indexed, ivfPath)
+    val ((cents, _), ivfJobs) = JobCount(spark)(Similarity.loadIvfIndex(spark, ivfPath))
+    assert(ivfJobs === 0, s"an IVF load ran $ivfJobs jobs")
+    assert(cents.length === centroids.length &&
+      cents.zip(centroids).forall { case (a, b) => a.sameElements(b) },
+      "centroids must come back bit-equal, in list order")
+
+    val prefix = s"graft_idx_params_$runId"
+    val built = Dedup.corpusIndex(Tables.documents(spark, sf), col("doc_id"), col("text"))
+    Dedup.writeCorpusIndex(built, prefix, buckets = 4)
+    built.unpersist()
+    val (loaded, corpusJobs) = JobCount(spark)(Dedup.loadCorpusIndex(spark, prefix))
+    assert(corpusJobs === 0, s"a corpus-index load ran $corpusJobs jobs")
+    assert((loaded.n, loaded.k, loaded.bands) === (built.n, built.k, built.bands))
+    spark.sql(s"TRUNCATE TABLE ${prefix}_meta")
+    val e = intercept[IllegalArgumentException](Dedup.loadCorpusIndex(spark, prefix))
+    assert(e.getMessage.contains("EMPTY meta table"), e.getMessage)
+
+    val lshPath = tmpDir("lsh_params")
+    Similarity.writeLshIndex(emb, col("vec_id"), col("embedding"), 8, lshPath)
+    import spark.implicits._
+    Seq.empty[Int].toDF("n_bits").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$lshPath/meta")
+    val e2 = intercept[IllegalArgumentException](Similarity.loadLshIndex(spark, lshPath))
+    assert(e2.getMessage.contains("EMPTY meta table"), e2.getMessage)
+  }
+
   test("IVF+PQ composed index: write → append → reload probe ≡ exact; pruned scan reads CODES not vectors; delete/compact lifecycle; re-ingest guarded") {
     val emb = Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") =!= 0)
