@@ -1055,7 +1055,7 @@ object Dedup {
     // A fresh index has no deletions: stale tombstones from a previous
     // index under the same prefix (same-JVM or orphaned-location) would
     // silently hide rows of the NEW index — and their location blocks
-    // deleteFromCorpusIndex's first saveAsTable in a later JVM. The
+    // creating the table in a later JVM. The
     // write SEEDS an empty tombstones table so the table always exists:
     // delete visibility can never depend on whether a first delete
     // happened to precede the load. Seeded AFTER the data
@@ -1064,8 +1064,18 @@ object Dedup {
     // than cleared tombstones silently resurrecting deleted rows.
     val spark = index.rel.sparkSession
     resetCorpusTable(spark, tombstonesTable(tablePrefix))
-    spark.range(0).select(col("id"))
-      .write.format("parquet").saveAsTable(tombstonesTable(tablePrefix))
+    seedTombstones(spark, tablePrefix)
+  }
+
+  /** Create `<prefix>_tombstones` in the catalog and seed it with an
+    * empty batch ([[Tombstones.seed]]); returns its location. */
+  private def seedTombstones(
+      spark: org.apache.spark.sql.SparkSession, tablePrefix: String): String = {
+    spark.sql(s"CREATE TABLE ${tombstonesTable(tablePrefix)} (id BIGINT) USING parquet")
+    val dir = tombstoneDir(spark, tablePrefix).get
+    Tombstones.seed(spark, dir, org.apache.spark.sql.SaveMode.Overwrite)
+    spark.catalog.refreshTable(tombstonesTable(tablePrefix))
+    dir
   }
 
   /** Drop a managed table AND its surviving default location — Overwrite
@@ -1180,7 +1190,7 @@ object Dedup {
 
   /** The tombstone table's location; `None` only for an index written
     * before tombstone seeding (current [[writeCorpusIndex]] always
-    * seeds). */
+    * seeds; a delete seeds such an index first). */
   private def tombstoneDir(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): Option[String] = {
@@ -1243,18 +1253,12 @@ object Dedup {
     Seq((h.numBuckets, h.nBandedFiles, h.nRelFiles, h.maxFilesPerBucket,
         h.nTombstoneFiles, h.tombstoneBytes,
         h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
-        corpusNeedsCompaction(h, maxFilesPerBucket, maxTombstoneBytes)))
+        Similarity.needsCompaction(h.maxFilesPerBucket, h.nTombstoneFiles,
+          h.tombstoneBytes, maxFilesPerBucket, maxTombstoneBytes)))
       .toDF("n_buckets", "n_banded_files", "n_rel_files",
         "max_files_per_bucket", "n_tombstone_files", "tombstone_bytes",
         "tombstone_broadcast_ok", "needs_compaction")
   }
-
-  private def corpusNeedsCompaction(
-      h: CorpusHealthInfo, maxFilesPerBucket: Int,
-      maxTombstoneBytes: Long): Boolean =
-    h.maxFilesPerBucket > maxFilesPerBucket ||
-      h.nTombstoneFiles > maxFilesPerBucket ||
-      h.tombstoneBytes > maxTombstoneBytes
 
   /** [[compactCorpusIndex]] iff the health is past the knee — the
     * measured-defaults policy wrapper ([[graft.operators.Similarity
@@ -1265,9 +1269,9 @@ object Dedup {
       maxFilesPerBucket: Int = Similarity.DefaultMaxFilesPerStripe,
       maxTombstoneBytes: Long = Similarity.DefaultMaxTombstoneBytes)
       : Boolean = {
-    val due = corpusNeedsCompaction(
-      corpusHealthInfo(spark, tablePrefix), maxFilesPerBucket,
-      maxTombstoneBytes)
+    val h = corpusHealthInfo(spark, tablePrefix)
+    val due = Similarity.needsCompaction(h.maxFilesPerBucket,
+      h.nTombstoneFiles, h.tombstoneBytes, maxFilesPerBucket, maxTombstoneBytes)
     if (due) compactCorpusIndex(spark, tablePrefix)
     due
   }
@@ -1293,10 +1297,10 @@ object Dedup {
       ids: DataFrame, id: Column, tablePrefix: String): Unit = {
     val spark = ids.sparkSession
     indexMeta(spark, tablePrefix) // readable failure on a wrong prefix
-    ids.select(id.cast("long").as("id")).distinct()
-      .coalesce(1) // request-sized: one file per delete batch
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .format("parquet").saveAsTable(tombstonesTable(tablePrefix))
+    Tombstones.append(ids, id, tombstoneDir(spark, tablePrefix)
+      .getOrElse(seedTombstones(spark, tablePrefix)))
+    // Written behind the catalog's back — drop its cached listing.
+    spark.catalog.refreshTable(tombstonesTable(tablePrefix))
   }
 
   /** Physical erasure + layout reset for a durable corpus index:
@@ -1425,25 +1429,13 @@ object Dedup {
       () => corpusTombstones(spark, tablePrefix).requireNoneOf(
         shard.select(id.cast("long").as("id")),
         s"into corpus index '$tablePrefix'", "compactCorpusIndex"),
-      // Live-duplicate guard (the Similarity requireNewIds discipline):
-      // tombstoned ids are rejected by the guard above, so any clash
+      // Live-duplicate guard, shared with the path indexes: any clash
       // here is an id whose rows are LIVE — a retry would land them
       // twice.
-      () => {
-        val liveClash = spark.table(s"${tablePrefix}_rel").select(col("id"))
-          .join(shard.select(id.cast("long").as("id")), Seq("id"), "left_semi")
-          .limit(5).collect().map(_.getLong(0))
-        require(liveClash.isEmpty,
-          s"appendToCorpusIndex would duplicate LIVE id(s) " +
-            s"${liveClash.mkString(", ")}" +
-            (if (liveClash.length == 5) ", …" else "") +
-            s" already in corpus index '$tablePrefix' — append ids must be " +
-            "NEW (a retried partially-failed append is the usual cause; " +
-            "the two-table append is not atomic), else probes see the id's " +
-            "rows twice. Recover by appending only the missing rows " +
-            "(anti-join the shard against the index) or by deleting + " +
-            "compacting the id first")
-      })
+      () => PathIndex.requireNewIds(
+        spark.table(s"${tablePrefix}_rel").select(col("id")),
+        shard.select(id.cast("long").as("id")), "appendToCorpusIndex",
+        s"corpus index '$tablePrefix'"))
     val (k, bands) = (m.getAs[Int]("k"), m.getAs[Int]("bands"))
     val rel = shingleRel(shard, id, text, m.getAs[Int]("n"), k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

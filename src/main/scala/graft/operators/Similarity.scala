@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -528,126 +528,31 @@ object Similarity {
     }
   }
 
-  /** Durable form of the IVF index — write once, probe across sessions.
-    * The posting lists land as parquet PARTITIONED by `list` (each
-    * inverted list is its own directory stripe), the centroids as a tiny
-    * (list, centroid) table beside them. A reloaded probe's
+  /** Durable form of the IVF index ([[Ivf]]) — write once, probe across
+    * sessions. The posting lists land as parquet PARTITIONED by `list`
+    * (each inverted list is its own directory stripe), the centroids as
+    * a tiny (list, centroid) table beside them. A reloaded probe's
     * `list IN (probes)` filter is then PARTITION PRUNING: the scan opens
     * only the `nProbe` probed directories and never touches the rest of
     * the corpus — the layout that makes IVF an index rather than a
     * filter (gated in `IndexLifecycleSpec`: probe ≡ same-session build
-    * bit-equal, plan carries the partition filter). Each write lands one
-    * file per stripe ([[IndexFiles.placed]]). */
+    * bit-equal, plan carries the partition filter). The write and
+    * crash discipline is [[PathIndex.write]]'s. */
   def writeIvfIndex(
       centroids: Array[Array[Float]], indexed: DataFrame,
-      path: String): Unit = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    clearCompletionMarker(spark, path)
-    // Whole stripes per write task ([[IndexFiles.placed]]): one file per
-    // stripe, instead of a file per (task × touched stripe). The two
-    // data artifacts are independent — written concurrently
-    // ([[inParallel]]); the tombstone seed and marker stay ordered
-    // AFTER both (the crash discipline below).
-    inParallel(
-      () => IndexFiles.placed(indexed, col("list"), centroids.length)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list").parquet(s"$path/lists"),
-      () => centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list", "centroid")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/centroids"))
-    // A fresh index has no deletions: stale tombstones from a previous
-    // index at this path would silently hide rows of the NEW one. The
-    // write SEEDS an empty tombstone table, so the tombstone relation
-    // always exists — delete visibility can never depend on whether a
-    // first delete happened to precede the load. Seeded AFTER the data
-    // writes succeed: a crash mid-rebuild then leaves the OLD
-    // tombstones over a broken data dir instead of freshly cleared
-    // tombstones over the old data — which would silently resurrect
-    // deleted rows. The remaining window (crash after the data writes
-    // COMPLETE but before this seed: stale tombstones over a loadable
-    // new index, silently hiding its rows) is closed by the completion
-    // marker — cleared first above, re-created last below, required by
-    // every later verb.
-    seedEmptyTombstones(spark, path)
-    writeCompletionMarker(spark, path)
-  }
-
-  /** The write-completion marker: an empty file every `write*Index`
-    * DELETES before its first artifact write and CREATES as its LAST
-    * step (after the tombstone seed). Every later verb requires it
-    * ([[requireIndexDir]]), which closes BOTH rebuild-crash windows at
-    * once: a crash before the data writes finish leaves old tombstones
-    * over broken data (loud anyway), and a crash AFTER the data writes
-    * but before the tombstone seed leaves stale non-empty tombstones
-    * over a complete, loadable new index — previously silent (rows of
-    * the new index sharing ids with old tombstones were hidden on
-    * every load), now a readable must-rebuild failure because the
-    * marker was cleared first and never re-created. Compactions never
-    * touch it ([[swapInPlace]] carries its own crash discipline). */
-  private val CompletionMarker = "_GRAFT_INDEX_COMPLETE"
-
-  private def markerPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/$CompletionMarker")
-
-  /** First step of every index write: from here to
-    * [[writeCompletionMarker]] the path is formally incomplete. */
-  private def clearCompletionMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = markerPath(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
-    ()
-  }
-
-  /** Last step of every index write — after the data artifacts AND the
-    * tombstone seed, so its existence certifies the whole layout. */
-  private def writeCompletionMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = markerPath(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
-      .close()
-  }
-
-  /** Readable failure for a wrong index path — a fresh-session user
-    * otherwise gets a bare PATH_NOT_FOUND on an internal subdirectory —
-    * and for an INCOMPLETE one (the [[CompletionMarker]] discipline):
-    * missing directories mean the wrong path, a missing marker over
-    * present directories means an interrupted write*Index (or an index
-    * from before the marker format) — rebuild. */
-  private def requireIndexDir(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, parts: Seq[String], kind: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val missing = parts.map(s => s"$path/$s").filterNot { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      p.getFileSystem(conf).exists(p)
-    }
-    require(missing.isEmpty,
-      s"no $kind index at '$path': missing ${missing.mkString(", ")} — " +
-        s"was write${kind}Index run against this filesystem?")
-    require(markerPath(path).getFileSystem(conf).exists(markerPath(path)),
-      s"$kind index at '$path' is INCOMPLETE: its directories exist " +
-        s"but the completion marker does not — the write${kind}Index " +
-        "run crashed before finishing (stale tombstones or partial " +
-        "artifacts may sit over the data), or the index predates the " +
-        s"marker format; rebuild with write${kind}Index")
-  }
+      path: String): Unit =
+    PathIndex.write(Ivf, centroids, indexed, path)
 
   /** Reload a [[writeIvfIndex]]-persisted index in (possibly) a fresh
     * session: (centroids ordered by list id, posting-list scan). The
-    * centroid table is parameter-sized (`nLists` rows), read on the
-    * driver with no Spark job. The posting-list frame is the partitioned
-    * scan itself, not a cache: [[ivfTopK]]'s probe filter prunes to the
-    * probed partitions, so steady-state probe cost is the probed lists'
-    * bytes, independent of corpus size. */
+    * posting-list frame is the partitioned scan itself, not a cache:
+    * [[ivfTopK]]'s probe filter prunes to the probed partitions, so
+    * steady-state probe cost is the probed lists' bytes, independent of
+    * corpus size. */
   def loadIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Float]], DataFrame) = {
-    requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
-    (loadIvfCentroids(spark, path),
-      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists")))
-  }
+      path: String): (Array[Array[Float]], DataFrame) =
+    PathIndex.load(Ivf, spark, path)
 
   /** ===== Deletion + compaction for the durable ANN indexes =====
     *
@@ -656,131 +561,51 @@ object Similarity {
     * otherwise keep being RETURNED by probes against a months-old
     * index, and its content-derived rows (the vector itself, its
     * codes, its bucket signature) would stay on disk indefinitely.
-    * Two-phase, like every production vector store:
-    *
-    *   - [[deleteFromIvfIndex]]/[[deleteFromLshIndex]]/
-    *     [[deleteFromPqIndex]] are the LOGICAL delete — ids append to a
-    *     `tombstones` table beside the index. Every load reads the ids
-    *     once ([[Tombstones]]: the set is bounded by delete-request
-    *     volume between compactions — parameter-sized by the RTBF
-    *     workload's nature, and reset by compaction) and filters them
-    *     out with a predicate over a broadcast variable. Immediate,
-    *     cheap (one request-sized write), and probe plans keep their
-    *     partition pruning and gain no job: the filter sits above the
-    *     pruned scan and keeps its distribution.
-    *   - [[compactIvfIndex]]/[[compactLshIndex]]/[[compactPqIndex]] are
-    *     the PHYSICAL erasure + layout reset: rewrite the data
-    *     directory without the tombstoned rows (and without the
-    *     append-accreted small files — each bucket/stripe comes back as
-    *     one task's output), swap it in place, clear the tombstones.
-    *     Run it when the tombstone set has grown past broadcast-cheap
-    *     or the per-stripe file count degrades probe open times (the
-    *     nightly-append accretion measured in `IndexAppendSweep`).
+    * Two-phase, like every production vector store: `deleteFrom*Index`
+    * is the LOGICAL delete (ids appended to `tombstones/`, filtered out
+    * by every later load), `compact*Index` the PHYSICAL erasure and
+    * layout reset. Run a compaction when the tombstone set has grown
+    * past broadcast-cheap or the per-stripe file count degrades probe
+    * open times ([[compactIfNeeded]]). The discipline — snapshot-scoped
+    * erase, re-ingest guard, crash states — is [[PathIndex]]'s.
     *
     * Gates (`IndexLifecycleSpec`): post-delete probe ≡ probe against an
     * index REBUILT on the surviving corpus (same frozen centroids /
     * codebooks / nBits), compaction probe-bit-equal before/after with
-    * the tombstone dir gone and per-stripe file counts reset.
-    *
-    * A tombstoned id stays deleted until compaction clears the
-    * tombstones — re-ingesting it via an append path would land rows
-    * every load filters out, so the append verbs GUARD the edge
-    * ([[requireNotTombstoned]]): appending a tombstoned id fails
-    * readably, naming the compaction that makes it legal.
-    *
-    * Concurrency: delete-during-compaction is safe — compaction erases
-    * only the tombstone FILES it snapshotted at start
-    * ([[clearSnapshottedTombstones]]), so a tombstone appended mid-compaction
-    * survives and keeps hiding its id. Two compactions of the SAME
-    * index must not run concurrently (the swap-in-place rename window;
-    * [[swapInPlace]] detects and names the interrupted state). */
+    * the tombstone dir gone and per-stripe file counts reset. */
   def deleteFromIvfIndex(
-      ids: DataFrame, id: Column, path: String): Unit = {
-    requireIndexDir(ids.sparkSession, path, Seq("centroids", "lists"), "Ivf")
-    writeTombstones(ids, id, path)
-  }
+      ids: DataFrame, id: Column, path: String): Unit =
+    PathIndex.delete(Ivf, ids, id, path)
 
   /** [[deleteFromIvfIndex]]'s contract for the LSH lifecycle. */
   def deleteFromLshIndex(
-      ids: DataFrame, id: Column, path: String): Unit = {
-    requireIndexDir(ids.sparkSession, path, Seq("meta", "buckets"), "Lsh")
-    writeTombstones(ids, id, path)
-  }
+      ids: DataFrame, id: Column, path: String): Unit =
+    PathIndex.delete(Lsh, ids, id, path)
 
   /** [[deleteFromIvfIndex]]'s contract for the PQ lifecycle. */
   def deleteFromPqIndex(
-      ids: DataFrame, id: Column, path: String): Unit = {
-    requireIndexDir(ids.sparkSession, path, Seq("codebooks", "codes"), "Pq")
-    writeTombstones(ids, id, path)
-  }
+      ids: DataFrame, id: Column, path: String): Unit =
+    PathIndex.delete(Pq, ids, id, path)
 
-  /** Physical erasure + stripe compaction for a durable IVF index:
-    * rewrite `lists` without tombstoned rows, one file per posting-list
-    * stripe ([[IndexFiles.placed]], the shared write placement),
-    * swap in place, clear tombstones. Probe-bit-equal before/after
-    * (gated). */
+  /** Physical erasure + stripe compaction: the survivors rewritten one
+    * file per posting-list stripe and swapped in place, the snapshot's
+    * tombstones erased ([[PathIndex.compact]]). Probe-bit-equal
+    * before/after (gated). */
   def compactIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
-    val tombs = tombstonesAt(spark, path)
-    val survivors = tombs.live(
-      spark.read.schema(ArtifactSchemas.ivfLists).parquet(s"$path/lists"))
-    requireNonEmptySurvivors(survivors, path)
-    val nLists = loadIvfCentroids(spark, path).length
-    swapInPlace(spark, s"$path/lists") { tmp =>
-      IndexFiles.placed(survivors, col("list"), nLists)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list").parquet(tmp)
-    }
-    clearSnapshottedTombstones(spark, path, tombs)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    PathIndex.compact(Ivf, spark, path)
 
-  /** [[compactIvfIndex]] for the LSH layout: erasure + merging the
-    * appends' file accretion back to one [[writeLshBuckets]] placement
-    * of range-sorted files. */
+  /** [[compactIvfIndex]] for the LSH layout: the appends' files merge back
+    * into one [[writeLshBuckets]] placement of range-sorted files. */
   def compactLshIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
-    val tombs = tombstonesAt(spark, path)
-    val survivors = tombs.live(
-      spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets"))
-    requireNonEmptySurvivors(survivors, path)
-    val nBits = loadLshNBits(spark, path)
-    swapInPlace(spark, s"$path/buckets") { tmp =>
-      writeLshBuckets(survivors, nBits, tmp,
-        org.apache.spark.sql.SaveMode.Overwrite)
-    }
-    clearSnapshottedTombstones(spark, path, tombs)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    PathIndex.compact(Lsh, spark, path)
 
-  /** [[compactIvfIndex]] for the PQ code table (unpartitioned — the ADC
-    * scan's layout; compaction here is erasure + small-file merge). */
+  /** [[compactIvfIndex]] for the flat PQ code table: erasure + small-file
+    * merge. */
   def compactPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
-    val tombs = tombstonesAt(spark, path)
-    val survivors = tombs.live(
-      spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes"))
-    requireNonEmptySurvivors(survivors, path)
-    swapInPlace(spark, s"$path/codes") { tmp =>
-      Dedup.spread(survivors)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    }
-    clearSnapshottedTombstones(spark, path, tombs)
-  }
-
-  /** A compaction whose survivor set is EMPTY would commit a data dir
-    * with no parquet files (empty dynamic-partition writes emit
-    * nothing) — the next load would fail schema inference with the
-    * backup already deleted, bricking the index. Checked BEFORE any
-    * mutation; `limit 1`-cheap. */
-  private def requireNonEmptySurvivors(
-      survivors: DataFrame, path: String): Unit =
-    require(!survivors.isEmpty,
-      s"compaction would EMPTY the index at '$path' — every row is " +
-        "tombstoned, and an empty partitioned layout is unreadable. An " +
-        "all-deleted index has nothing left to probe: delete the index " +
-        "directory (or rebuild on a non-empty corpus) instead")
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    PathIndex.compact(Pq, spark, path)
 
   /** Declared read schemas for every artifact the durable-index
     * writers in this file produce (round 21, guide §1.2 job-count
@@ -828,146 +653,111 @@ object Similarity {
       StructField("codes", LongType)))
   }
 
-  /** Logical-delete write: request-sized, one file per delete batch. */
-  private def writeTombstones(
-      ids: DataFrame, id: Column, path: String): Unit =
-    ids.select(id.cast("long").as("id")).distinct()
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/tombstones")
+  /** ===== The path families =====
+    *
+    * Each durable family is a [[PathFamily]] value; [[PathIndex]] writes
+    * every verb once over it. What differs per family is only this:
+    *
+    * | family | parameters                    | data      | stripe                | landing |
+    * |--------|-------------------------------|-----------|-----------------------|---------|
+    * | Ivf    | centroids                     | lists     | list (centroid count) | `partitionBy("list")` |
+    * | IvfPq  | centroids, codebooks, meta    | lists     | list (centroid count) | `partitionBy("list")` |
+    * | Lsh    | meta (`n_bits`)               | buckets   | bucket (`1 << nBits`) | [[writeLshBuckets]] |
+    * | Pq     | codebooks                     | codes     | none                  | flat |
+    *
+    * The encode steps are [[ivfAssign]], [[ivfPqEncode]], [[bucketize]]
+    * and [[pqEncode]]. A striped landing places whole stripes on each
+    * write task ([[IndexFiles.placed]]), one file per stripe per write. */
+  private val Ivf = PathFamily[Array[Array[Float]]](
+    "Ivf", Seq("centroids"), "lists", ArtifactSchemas.ivfLists,
+    Some(("list", c => c.length.toLong)), loadIvfCentroids,
+    (spark, c, path) => Seq(() => writeCentroids(spark, c, path)),
+    ivfAssign, landLists)
 
-  /** The index's tombstones as one snapshot ([[Tombstones]] — the read
-    * path shared with [[Dedup]]'s corpus index), so a deleted id is
-    * invisible to every probe form (single, batch, pruned) at once.
-    * Every load takes one: delete VISIBILITY matches append visibility —
-    * a load (or a [[graft.streaming.StreamingAnn.startRefreshing]] batch
-    * boundary) after the delete sees it; a handle held from before keeps
-    * the tombstones read when it was loaded. */
-  private def tombstonesAt(
-      spark: org.apache.spark.sql.SparkSession, path: String): Tombstones =
-    Tombstones.at(spark, Some(s"$path/tombstones"))
+  private val IvfPq = PathFamily[(Array[Array[Float]], IvfPqCodebooks)](
+    "IvfPq", Seq("centroids", "codebooks", "meta"), "lists", ArtifactSchemas.ivfPqLists,
+    Some(("list", p => p._1.length.toLong)),
+    (spark, path) => (loadIvfCentroids(spark, path),
+      IvfPqCodebooks(loadMeta(spark, path, ArtifactSchemas.ivfPqMeta, "IvfPq").getString(0),
+        loadPqCodebooks(spark, path))),
+    (spark, p, path) => Seq(
+      () => writeCentroids(spark, p._1, path),
+      () => writeCodebooks(spark, p._2.codebooks, path),
+      () => writeParam(spark.createDataFrame(Seq(Tuple1(p._2.encoding))).toDF("encoding"),
+        s"$path/meta")),
+    (vecs, id, vec, p) => ivfPqEncode(vecs, id, vec, p._1, p._2), landLists)
 
-  /** Fail an append that would re-ingest a TOMBSTONED id
-    * ([[Tombstones.requireNoneOf]]); the error names the compaction verb
-    * that makes the re-ingest legal. */
-  private def requireNotTombstoned(
-      shardIds: DataFrame, path: String, compactVerb: String): Unit =
-    tombstonesAt(shardIds.sparkSession, path)
-      .requireNoneOf(shardIds, s"at '$path'", compactVerb)
+  private val Lsh = PathFamily[Int](
+    "Lsh", Seq("meta"), "buckets", ArtifactSchemas.lshBuckets,
+    Some(("bucket", nBits => 1L << nBits)),
+    loadMeta(_, _, ArtifactSchemas.lshMeta, "Lsh").getInt(0),
+    (spark, nBits, path) => Seq(() => writeParam(
+      spark.createDataFrame(Seq(Tuple1(nBits))).toDF("n_bits"), s"$path/meta")),
+    bucketize, writeLshBuckets)
 
-  /** Past this many touched stripes the live-id guard scans the whole
-    * id column instead of stripe-pruning: a 10⁴-entry `IN` literal
-    * costs the plan more than the pruning saves, and a shard touching
-    * that many stripes reads most of them anyway. */
-  private val LiveGuardMaxStripes = 1024
+  private val Pq = PathFamily[Seq[(Int, Int, Array[Double])]](
+    "Pq", Seq("codebooks"), "codes", ArtifactSchemas.pqCodes, None, loadPqCodebooks,
+    (spark, cbs, path) => Seq(() => writeCodebooks(spark, cbs, path)),
+    pqEncode, (df, _, dir, mode) => df.write.mode(mode).parquet(dir))
 
-  /** Fail an append whose shard contains an id ALREADY LIVE in the
-    * index: `SaveMode.Append` is not atomic, so the realistic trigger
-    * is a RETRIED partially-failed nightly append — re-running it
-    * re-lands rows the first attempt already committed, after which
-    * probes return the same id twice (two identical (sim, id) rows
-    * enter the rerank and the GroupTopK heaps) with every gate green.
-    * Tombstoned ids never reach this check ([[requireNotTombstoned]]
-    * runs first and names the compaction), so any clash here is a
-    * live duplicate. Cost: one semi-join of the existing rows' ID
-    * COLUMN against the shard's ids — pruned to the stripes the shard
-    * touches when the index is striped (`stripeFilter`, bounded by the
-    * shard's list/bucket set), column-pruned to the id alone
-    * otherwise. The error names the recovery: append exactly the
-    * missing rows (anti-join the shard against the index's ids), or
-    * delete + compact to replace. */
-  private def requireNewIds(
-      spark: org.apache.spark.sql.SparkSession, dataDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      stripeFilter: Option[Column], shardIds: DataFrame,
-      verb: String): Unit = {
-    val existing0 = spark.read.schema(schema).parquet(dataDir)
-    val existing = stripeFilter.fold(existing0)(existing0.filter)
-    val clash = existing.select(col("id"))
-      .join(shardIds.select(col("id")), Seq("id"), "left_semi")
-      .limit(5).collect().map(_.getLong(0))
-    require(clash.isEmpty,
-      s"$verb would duplicate LIVE id(s) ${clash.mkString(", ")}" +
-        (if (clash.length == 5) ", …" else "") +
-        s" already in the index at '$dataDir' — append ids must be NEW " +
-        "(a retried partially-failed append is the usual cause; " +
-        "SaveMode.Append is not atomic), else probes return the id " +
-        "twice. Recover by appending only the missing rows (anti-join " +
-        "the shard against the index's ids) or by deleting + " +
-        "compacting the id first")
-  }
+  /** Health detection's table. */
+  private val PathFamilies: Seq[PathFamily[_]] = Seq(IvfPq, Ivf, Lsh, Pq)
 
-  /** Written by every index write AND at the end of every compaction,
-    * so the tombstone relation always EXISTS and is empty exactly when
-    * there is nothing deleted, and the first delete has the same
-    * visibility semantics as the hundredth. The Overwrite doubles as the
-    * stale-tombstone reset. An empty parquet write emits one
-    * schema-only file. */
-  private def seedEmptyTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    spark.range(0).select(col("id"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/tombstones")
+  /** IVF and IVF+PQ landing: posting lists partitioned by `list`. */
+  private def landLists(
+      df: DataFrame, nLists: Long, dir: String,
+      mode: org.apache.spark.sql.SaveMode): Unit =
+    IndexFiles.placed(df, col("list"), nLists)
+      .write.mode(mode).partitionBy("list").parquet(dir)
 
-  /** Erase the compaction's tombstone snapshot (its ids are physically
-    * gone from the rewritten data dir — [[Tombstones.erase]]), preserving
-    * any file appended since: a deleteFrom*Index racing the survivor
-    * rewrite keeps hiding its id instead of being silently discarded by
-    * a blanket reset (the lost-delete race, an RTBF violation). If no
-    * data file remains afterwards, an empty seed is APPENDED (not
-    * overwritten — an overwrite would clobber a delete racing this very
-    * step) so the relation stays readable. */
-  private def clearSnapshottedTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snapshot: Tombstones): Unit = {
-    snapshot.erase()
-    if (IndexFiles.dataFiles(spark, Some(s"$path/tombstones")).isEmpty)
-      spark.range(0).select(col("id"))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$path/tombstones")
-  }
+  private def writeParam(df: DataFrame, dir: String): Unit =
+    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
 
-  /** Rewrite a data directory in place via tmp-dir + two renames. The
-    * new copy is FULLY written before the original moves, so no crash
-    * window loses the index: interrupted before the first rename —
-    * original intact, stray `<dir>__compact` cleaned on retry; between
-    * the renames — original preserved at `<dir>__pre_compact` (the
-    * require below names it on the next attempt; rename it back or
-    * delete the partial state); after — only the stale pre-compact
-    * copy remained and is deleted. */
-  private def swapInPlace(
-      spark: org.apache.spark.sql.SparkSession, dir: String)(
-      writeTmp: String => Unit): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val fs = cur.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compact")
-    val old = new org.apache.hadoop.fs.Path(dir + "__pre_compact")
-    require(!fs.exists(old),
-      s"$old exists — a previous compaction was interrupted between " +
-        s"renames; rename it back to $dir (if $dir is missing) or delete it")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeTmp(tmp.toString)
-    require(fs.rename(cur, old), s"rename $cur -> $old failed")
-    require(fs.rename(tmp, cur), s"rename $tmp -> $cur failed")
-    fs.delete(old, true)
-    ()
-  }
+  private def writeCentroids(
+      spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Array[Float]], path: String): Unit =
+    writeParam(spark.createDataFrame(
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq)
+      .toDF("list", "centroid"), s"$path/centroids")
 
-  /** The parameter-sized artifact alone — what the APPEND path needs.
-    * Constructing the posting-list frame just to discard it would pay
-    * a recursive listing of every `list=` stripe (a cost that grows
-    * with exactly the nightly file count appends create). Read on the
-    * driver ([[IndexFiles.readRows]]), no Spark job — like every
-    * parameter table of the path-based indexes. */
+  private def writeCodebooks(
+      spark: org.apache.spark.sql.SparkSession,
+      codebooks: Seq[(Int, Int, Array[Double])], path: String): Unit =
+    writeParam(spark.createDataFrame(
+      codebooks.map { case (j, cl, c) => (j, cl, c.toSeq) })
+      .toDF("j", "cl", "c"), s"$path/codebooks")
+
+  /** The parameter readers: parameter-sized tables read on the driver
+    * ([[IndexFiles.readRows]]), no Spark job, and never a listing of the
+    * data directory (an append or compaction needs only these). */
   private def loadIvfCentroids(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Float]] =
     IndexFiles.readRows(spark, s"$path/centroids", ArtifactSchemas.ivfCentroids)
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2).toArray
+
+  private def loadPqCodebooks(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[(Int, Int, Array[Double])] =
+    IndexFiles.readRows(spark, s"$path/codebooks", ArtifactSchemas.pqCodebooks)
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .sortBy(p => (p._1, p._2))
+
+  /** The one-row `meta` table (LSH `n_bits`, IVF+PQ `encoding`). An empty
+    * one — an interrupted write, or an index from before the pinned
+    * format — fails toward a rebuild: guessing would mis-decode every
+    * row. */
+  private def loadMeta(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType, family: String): Row = {
+    val rows = IndexFiles.readRows(spark, s"$path/meta", schema)
+    require(rows.nonEmpty,
+      s"$family index at '$path' has an EMPTY meta table — the index " +
+        "write was interrupted (or predates the pinned format); rebuild " +
+        s"with write${family}Index")
+    rows(0)
+  }
 
   /** Assign vectors to their nearest inverted list under FROZEN
     * centroids (squared-L2 argmin, 6-dp-rounded distance, lowest list
@@ -1024,124 +814,40 @@ object Similarity {
     * reuse the same shape, so nightly growth adds ≤ T range-sorted
     * files, merged by compaction. */
   private def writeLshBuckets(
-      banded: DataFrame, nBits: Int, dir: String,
+      banded: DataFrame, nStripes: Long, dir: String,
       mode: org.apache.spark.sql.SaveMode): Unit =
-    IndexFiles.placed(banded, col("bucket"), 1L << nBits)
+    IndexFiles.placed(banded, col("bucket"), nStripes)
       .sortWithinPartitions(col("bucket"), col("id"))
       .write.mode(mode).parquet(dir)
 
-  /** Durable form of the hyperplane-LSH index — the fourth ANN
-    * structure's lifecycle ([[writeIvfIndex]]/[[writePqIndex]]'s
-    * discipline): the bucketed corpus lands in [[writeLshBuckets]]'s
-    * flat bucket-range-sorted layout (probes prune via parquet
-    * row-group stats on the sorted `bucket` column) with a 1-row meta
-    * table pinning `nBits` so later sessions and appends band new
-    * vectors identically (the hyperplanes are hash-seeded from the bit
-    * index — deterministic by construction, nothing else to pin). */
+  /** Durable form of the hyperplane-LSH index ([[Lsh]]): the corpus is
+    * banded here through [[bucketize]] with the nBits the meta table pins,
+    * so the pinned scheme and the banding cannot disagree. */
   def writeLshIndex(
       vecs: DataFrame, id: Column, vec: Column,
       nBits: Int, path: String): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
     // [1, 32] is HyperplaneBucket64's own domain — accepting more here
     // would pin a meta nBits every probe/append then throws on.
     require(nBits >= 1 && nBits <= 32,
       s"nBits must be in [1, 32] (HyperplaneBucket64's domain), got $nBits")
-    clearCompletionMarker(spark, path)
-    // The meta nBits IS the probe scheme, so consistency is STRUCTURAL:
-    // this writer bands the raw vectors itself through [[bucketize]]
-    // with the same nBits it pins (the pqEncode derived-width
-    // discipline — one definition, nothing to cross-check). The
-    // previous take-a-prebucketed-frame form could only check the
-    // mismatch one way (a frame banded WIDER than meta had
-    // max(bucket) ≥ 2^nBits; one banded NARROWER passed silently and
-    // split the bucket space for every later append/probe).
-    inParallel(
-      () => writeLshBuckets(bucketize(vecs, id, vec, nBits), nBits,
-        s"$path/buckets", org.apache.spark.sql.SaveMode.Overwrite),
-      () => Seq(Tuple1(nBits)).toDF("n_bits")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/meta"))
-    // Same stale-tombstone reset + empty-seed as writeIvfIndex, AFTER
-    // the data writes: a failed rebuild keeps the old tombstones (RTBF-
-    // safe) rather than un-deleting rows over surviving old data; the
-    // marker (cleared first, created last) closes the seed-crash window.
-    seedEmptyTombstones(spark, path)
-    writeCompletionMarker(spark, path)
+    PathIndex.write(Lsh, nBits, bucketize(vecs, id, vec, nBits), path)
   }
 
-  /** Reload a [[writeLshIndex]]-persisted index: (nBits, bucketed
-    * scan). The scan is the flat bucket-range-sorted layout itself — a
-    * [[lshTopKPruned]] probe's ball filter pushes down to the parquet
-    * row-group stats, so only the ball's row groups are read. */
+  /** Reload a [[writeLshIndex]]-persisted index: (nBits, bucketed scan).
+    * A [[lshTopKPruned]] probe's ball filter pushes down to the sorted
+    * flat layout's row-group stats. */
   def loadLshIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, DataFrame) = {
-    requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
-    (loadLshNBits(spark, path),
-      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.lshBuckets).parquet(s"$path/buckets")))
-  }
+      path: String): (Int, DataFrame) =
+    PathIndex.load(Lsh, spark, path)
 
-  /** Meta alone — the append path's need ([[loadIvfCentroids]]'s
-    * rationale: never list every bucket stripe just to read one int). */
-  private def loadLshNBits(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val rows = IndexFiles.readRows(spark, s"$path/meta", ArtifactSchemas.lshMeta)
-    require(rows.nonEmpty,
-      s"LSH index at '$path' has an EMPTY meta table — the index write " +
-        "was interrupted; rebuild with writeLshIndex")
-    rows(0).getInt(0)
-  }
-
-  /** Fold new vectors INTO a durable LSH index: band with the
-    * meta-pinned nBits through the SAME [[bucketize]] definition the
-    * build used (hash-seeded hyperplanes — appended rows are
-    * byte-identical to a build-time banding) and append ≤ T (write tasks) new
-    * range-sorted files beside the existing ones ([[writeLshBuckets]]'s
-    * flat layout; existing files are never rewritten). Pays the SHARD's
-    * banding + write. Ids must be NEW — enforced by [[requireNewIds]]
-    * ([[appendToIvfIndex]]'s contract). */
+  /** Fold new vectors into a durable LSH index, banded with the
+    * meta-pinned nBits through the build's [[bucketize]]; the shard lands
+    * as ≤ T new range-sorted files, existing files never rewritten
+    * ([[PathIndex.append]]). */
   def appendToLshIndex(
-      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    requireIndexDir(spark, path, Seq("meta", "buckets"), "Lsh")
-    // (Round 21 NOTE: overlapping the banding, the tombstone guard and
-    // an UNFILTERED live-id scan was tried and MEASURED SLOWER in the
-    // composed q193 (5.45 → 7.46 s at sf0.1/32c): the unpruned
-    // 2^nBits-stripe id scan plans a shuffled semi-join where the
-    // touched-pruned form stays a pruned scan + broadcast against the
-    // persisted shard, and the write still waits on the slowest leg.
-    // Reverted to the pruned serial guard.)
-    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-      path, "compactLshIndex")
-    val nBits = loadLshNBits(spark, path)
-    val banded = bucketize(newVecs, id, vec, nBits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Live-duplicate guard. The touched-bucket set is bounded by
-      // min(|shard|, 2^nBits) — prune when it stays IN-literal-sized
-      // (a pushed row-group filter over the flat sorted layout), fall
-      // back to the column-pruned full id scan past that.
-      val touched = banded.select(col("bucket")).distinct()
-        .limit(LiveGuardMaxStripes + 1)
-        .collect().map(_.getLong(0)).toSeq
-      requireNewIds(spark, s"$path/buckets", ArtifactSchemas.lshBuckets,
-        if (touched.size <= LiveGuardMaxStripes)
-          Some(col("bucket").isin(touched: _*))
-        else None,
-        banded, "appendToLshIndex")
-      // Same flat range-sorted landing as the build path (guide §6):
-      // the append adds ≤ T new files, each a sorted contiguous
-      // bucket range — instead of one file per touched stripe (~197
-      // small files per nightly append at sf0.1, the small-file mode
-      // compaction exists to undo).
-      writeLshBuckets(banded, nBits, s"$path/buckets",
-        org.apache.spark.sql.SaveMode.Append)
-    } finally {
-      banded.unpersist()
-      ()
-    }
-  }
+      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit =
+    PathIndex.append(Lsh, newVecs, id, vec, path)
 
   /** |ball(·, radius)| over nBits bits = Σ_{h≤radius} C(nBits, h),
     * computed arithmetically (capped at `cap`) so [[lshTopKPruned]]'s
@@ -1277,120 +983,36 @@ object Similarity {
       .select(col("query_id"), col("id"), col("sim"), col("rank"))
   }
 
-  /** Fold new vectors INTO a durable IVF index — the nightly-growth
-    * path: assign against the index's FROZEN centroids ([[ivfAssign]])
-    * and land the rows as new files in the probed partition
-    * directories (`SaveMode.Append` under `partitionBy(list)` only ADDS
-    * files to the touched `list=` stripes — existing posting lists are
-    * never rewritten, and the reloaded probe's partition pruning is
-    * untouched). Pays the SHARD's assignment + write, never a re-shard
-    * of the corpus. Ids must be NEW — enforced by [[requireNewIds]]
-    * (tombstoned ids by [[requireNotTombstoned]] first), so a retried
-    * partially-failed append fails readably instead of silently
-    * double-landing rows; the error names the recovery. */
+  /** Fold new vectors into a durable IVF index, assigned against its
+    * frozen centroids ([[ivfAssign]]): the nightly-growth path. Appends
+    * add files to the touched `list=` stripes; existing posting lists
+    * are never rewritten ([[PathIndex.append]]). */
   def appendToIvfIndex(
-      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    requireIndexDir(spark, path, Seq("centroids", "lists"), "Ivf")
-    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-      path, "compactIvfIndex")
-    val cents0 = loadIvfCentroids(spark, path)
-    val assigned = ivfAssign(newVecs, id, vec, cents0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Live-duplicate guard, pruned to the shard's own stripe set
-      // (≤ nLists — parameter-bounded by construction).
-      val touched = assigned.select(col("list")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      requireNewIds(spark, s"$path/lists", ArtifactSchemas.ivfLists,
-        Some(col("list").isin(touched: _*)), assigned,
-        "appendToIvfIndex")
-      // Same placement as the build path and appendToLshIndex: one
-      // file per touched stripe per append, not one per (task × stripe)
-      // — nightly accretion is linear in nights, not tasks.
-      IndexFiles.placed(assigned, col("list"), cents0.length)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("list").parquet(s"$path/lists")
-    } finally {
-      assigned.unpersist()
-      ()
-    }
-  }
+      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit =
+    PathIndex.append(Ivf, newVecs, id, vec, path)
 
-  /** Fold new vectors INTO a durable PQ index: encode against the
-    * FROZEN codebooks ([[pqEncode]] — the same definition the build
-    * used, so appended codes are byte-identical to a
-    * build-time encode) and append to the code table. The codebooks are
-    * the trained artifact; growing the corpus never retrains them
-    * (retraining re-codes every existing row — a rebuild). */
+  /** Fold new vectors into a durable PQ index, encoded against its frozen
+    * codebooks ([[pqEncode]]); growing the corpus never retrains them
+    * (retraining re-codes every row — a rebuild). */
   def appendToPqIndex(
-      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
-    // Both guards are independent bounded jobs — run concurrently
-    // ([[inParallel]]; the lowest-index error wins, so the tombstone
-    // guard still takes precedence over the live-id one).
-    // Live-duplicate guard: the code table is unpartitioned (no probe
-    // key to prune by), so the guard is a column-pruned scan of the
-    // id longs alone — the same bandwidth class as the ADC probe scan.
-    inParallel(
-      () => requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-        path, "compactPqIndex"),
-      () => requireNewIds(spark, s"$path/codes", ArtifactSchemas.pqCodes, None,
-        newVecs.select(id.cast("long").as("id")), "appendToPqIndex"))
-    pqEncode(newVecs, id, vec, loadPqCodebooks(spark, path))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/codes")
-  }
+      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit =
+    PathIndex.append(Pq, newVecs, id, vec, path)
 
-  /** Durable form of the PQ index: the packed codes land as plain
-    * parquet — which IS the optimal layout for the ADC scan (one long
-    * per row, LUT scoring + TakeOrderedAndProject; there is no probe
-    * key to prune by, the 32× compression is the whole bandwidth
-    * story) — and the codebooks as a parameter-sized (j, cl, c) table
-    * beside them. Doubles round-trip parquet bit-exact, so a reloaded
-    * probe is bit-equal to the build-session probe (gated in
+  /** Durable form of the PQ index ([[Pq]]): `encoded` is [[pqEncode]]'s
+    * output. Doubles round-trip parquet bit-exact, so a reloaded probe is
+    * bit-equal to the build-session probe (gated in
     * `IndexLifecycleSpec`). */
   def writePqIndex(
       codebooks: Seq[(Int, Int, Array[Double])], encoded: DataFrame,
-      path: String): Unit = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    clearCompletionMarker(spark, path)
-    inParallel(
-      () => encoded.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/codes"),
-      () => codebooks.map { case (j, cl, c) => (j, cl, c.toSeq) }
-        .toDF("j", "cl", "c")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/codebooks"))
-    // Same stale-tombstone reset + empty-seed as writeIvfIndex, AFTER
-    // the data writes (failed rebuild keeps the old tombstones); the
-    // marker closes the seed-crash window.
-    seedEmptyTombstones(spark, path)
-    writeCompletionMarker(spark, path)
-  }
+      path: String): Unit =
+    PathIndex.write(Pq, codebooks, encoded, path)
 
-  /** Reload a [[writePqIndex]]-persisted index in (possibly) a fresh
-    * session: (codebooks in (j, cl) order, codes scan). The codebook
-    * table is m·ksub rows — the same bounded class as the build — read
-    * on the driver. */
+  /** Reload a [[writePqIndex]]-persisted index: (codebooks in (j, cl)
+    * order, tombstone-filtered codes scan). */
   def loadPqIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Seq[(Int, Int, Array[Double])], DataFrame) = {
-    requireIndexDir(spark, path, Seq("codebooks", "codes"), "Pq")
-    (loadPqCodebooks(spark, path),
-      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.pqCodes).parquet(s"$path/codes")))
-  }
-
-  /** Codebooks alone — the append path's need ([[loadIvfCentroids]]'s
-    * rationale: never list the code table just to discard it). */
-  private def loadPqCodebooks(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Int, Int, Array[Double])] =
-    IndexFiles.readRows(spark, s"$path/codebooks", ArtifactSchemas.pqCodebooks)
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .sortBy(p => (p._1, p._2))
+      path: String): (Seq[(Int, Int, Array[Double])], DataFrame) =
+    PathIndex.load(Pq, spark, path)
 
   /** ===== Composed IVF+PQ durable index (the FAISS IVFADC layout —
     * Jégou et al. 2011, public literature) =====
@@ -1569,133 +1191,45 @@ object Similarity {
     }
   }
 
-  /** Durable form of the composed index — [[writeIvfIndex]]'s write
-    * discipline (whole stripes per write task, tombstones seeded AFTER the data
-    * writes succeed), plus a 1-row `meta` table pinning the artifact's
-    * `encoding` ([[writeLshIndex]]'s nBits discipline: the convention
-    * is STRUCTURAL — codes written under one target are garbage under
+  /** Durable form of the composed index ([[IvfPq]]): `encoded` must be
+    * [[ivfPqEncode]]'s output under the same frozen artifacts. A 1-row
+    * `meta` table pins the artifact's `encoding` ([[writeLshIndex]]'s
+    * nBits discipline: codes written under one target are garbage under
     * the other's decode, so later sessions, appends and probes read it
-    * back instead of guessing). `encoded` must be [[ivfPqEncode]]'s
-    * output under the same frozen artifacts. */
+    * back instead of guessing). */
   def writeIvfPqIndex(
       centroids: Array[Array[Float]],
       cbs: IvfPqCodebooks,
-      encoded: DataFrame, path: String): Unit = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    clearCompletionMarker(spark, path)
-    // Four independent data artifacts, written concurrently
-    // ([[inParallel]] — sequentially they paid four job floors back to
-    // back); seed + marker stay ordered after all of them.
-    inParallel(
-      () => IndexFiles.placed(encoded, col("list"), centroids.length)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list").parquet(s"$path/lists"),
-      () => centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list", "centroid")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/centroids"),
-      () => cbs.codebooks.map { case (j, cl, c) => (j, cl, c.toSeq) }
-        .toDF("j", "cl", "c")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/codebooks"),
-      () => Seq(Tuple1(cbs.encoding)).toDF("encoding")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/meta"))
-    seedEmptyTombstones(spark, path)
-    writeCompletionMarker(spark, path)
-  }
+      encoded: DataFrame, path: String): Unit =
+    PathIndex.write(IvfPq, (centroids, cbs), encoded, path)
 
-  /** Meta alone — the append path's need ([[loadIvfCentroids]]'s
-    * rationale). Indexes written before the encoding-pinning format
-    * (or whose meta write was interrupted) fail readably toward a
-    * rebuild: guessing the convention would silently mis-decode every
-    * code. */
-  private def loadIvfPqEncoding(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val rows = IndexFiles.readRows(spark, s"$path/meta", ArtifactSchemas.ivfPqMeta)
-    require(rows.nonEmpty,
-      s"IvfPq index at '$path' has an EMPTY meta table — the index " +
-        "write was interrupted (or predates the encoding-pinned " +
-        "format); rebuild with writeIvfPqIndex")
-    rows(0).getString(0)
-  }
-
-  /** Reload a [[writeIvfPqIndex]]-persisted index in (possibly) a
-    * fresh session: (centroids by list id, the [[IvfPqCodebooks]]
-    * artifact — codebooks in (j, cl) order plus the meta-pinned
-    * encoding — and the tombstone-filtered code scan). The parameter
-    * tables are bounded driver-side reads; the code frame is the
-    * partitioned scan itself — [[ivfPqTopK]]'s probe filter prunes it
-    * to the probed stripes. */
+  /** Reload a [[writeIvfPqIndex]]-persisted index: (centroids by list id,
+    * the [[IvfPqCodebooks]] artifact with its meta-pinned encoding, the
+    * tombstone-filtered code scan — [[ivfPqTopK]]'s probe filter prunes
+    * it to the probed stripes). */
   def loadIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String):
       (Array[Array[Float]], IvfPqCodebooks, DataFrame) = {
-    requireIndexDir(spark, path,
-      Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    (loadIvfCentroids(spark, path),
-      IvfPqCodebooks(loadIvfPqEncoding(spark, path), loadPqCodebooks(spark, path)),
-      tombstonesAt(spark, path).live(spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists")))
+    val ((centroids, cbs), codes) = PathIndex.load(IvfPq, spark, path)
+    (centroids, cbs, codes)
   }
 
-  /** Fold new vectors INTO a durable composed index: encode against
-    * the FROZEN persisted centroids AND codebooks — under the
-    * meta-pinned encoding, in one pass ([[ivfPqEncode]]) — and append
-    * files into the touched stripes — [[appendToIvfIndex]]'s growth
-    * contract, including the tombstone re-ingest guard. */
+  /** Fold new vectors into a durable composed index, encoded against
+    * the frozen centroids and codebooks under the meta-pinned encoding
+    * ([[PathIndex.append]]). */
   def appendToIvfPqIndex(
-      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    requireIndexDir(spark, path,
-      Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    requireNotTombstoned(newVecs.select(id.cast("long").as("id")),
-      path, "compactIvfPqIndex")
-    val cents0 = loadIvfCentroids(spark, path)
-    val encoded = ivfPqEncode(newVecs, id, vec, cents0,
-        IvfPqCodebooks(loadIvfPqEncoding(spark, path), loadPqCodebooks(spark, path)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = encoded.select(col("list")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      requireNewIds(spark, s"$path/lists", ArtifactSchemas.ivfPqLists,
-        Some(col("list").isin(touched: _*)), encoded,
-        "appendToIvfPqIndex")
-      IndexFiles.placed(encoded, col("list"), cents0.length)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("list").parquet(s"$path/lists")
-    } finally {
-      encoded.unpersist()
-      ()
-    }
-  }
+      newVecs: DataFrame, id: Column, vec: Column, path: String): Unit =
+    PathIndex.append(IvfPq, newVecs, id, vec, path)
 
-  /** [[deleteFromIvfIndex]]'s logical-delete contract for the composed
-    * lifecycle. */
+  /** Logical delete ([[PathIndex.delete]]). */
   def deleteFromIvfPqIndex(
-      ids: DataFrame, id: Column, path: String): Unit = {
-    requireIndexDir(ids.sparkSession, path,
-      Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    writeTombstones(ids, id, path)
-  }
+      ids: DataFrame, id: Column, path: String): Unit =
+    PathIndex.delete(IvfPq, ids, id, path)
 
-  /** [[compactIvfIndex]]'s physical erasure + stripe compaction for
-    * the composed code stripes (snapshot-scoped tombstone clear). */
+  /** Physical erasure + stripe compaction ([[PathIndex.compact]]). */
   def compactIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    requireIndexDir(spark, path,
-      Seq("centroids", "codebooks", "lists", "meta"), "IvfPq")
-    val tombs = tombstonesAt(spark, path)
-    val survivors = tombs.live(
-      spark.read.schema(ArtifactSchemas.ivfPqLists).parquet(s"$path/lists"))
-    requireNonEmptySurvivors(survivors, path)
-    val nLists = loadIvfCentroids(spark, path).length
-    swapInPlace(spark, s"$path/lists") { tmp =>
-      IndexFiles.placed(survivors, col("list"), nLists)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list").parquet(tmp)
-    }
-    clearSnapshottedTombstones(spark, path, tombs)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    PathIndex.compact(IvfPq, spark, path)
 
   /** Probe the composed index: driver-side centroid scoring picks the
     * `nProbe` lists ([[probeLists]] — [[ivfTopK]]'s order), the pruned
@@ -1748,53 +1282,6 @@ object Similarity {
     * Both are driver-side FILESYSTEM METADATA only — no Spark job, so
     * they are safe to call at any frequency. */
 
-  private case class IndexHealthInfo(
-      kind: String, nStripes: Int, nDataFiles: Int, maxFilesPerStripe: Int,
-      nTombstoneFiles: Int, tombstoneBytes: Long)
-
-  /** Detect the family at `path` and collect its layout counts. */
-  private def pathIndexHealth(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): IndexHealthInfo = {
-    val conf = spark.sessionState.newHadoopConf()
-    def exists(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
-    val (kind, dataDir, striped) =
-      if (exists("centroids") && exists("codebooks") && exists("lists"))
-        ("ivfpq", "lists", true)
-      else if (exists("centroids") && exists("lists")) ("ivf", "lists", true)
-      // lsh is FLAT since round 21 (writeLshBuckets): files live
-      // directly under buckets/, so its health counts them like pq's.
-      else if (exists("meta") && exists("buckets")) ("lsh", "buckets", false)
-      else if (exists("codebooks") && exists("codes")) ("pq", "codes", false)
-      else throw new IllegalArgumentException(
-        s"no durable index at '$path': expected an IvfPq/Ivf/Lsh/Pq " +
-          "layout (was a write*Index run against this filesystem?), " +
-          "or a corpus-index TABLE PREFIX (writeCorpusIndex's layout — " +
-          "indexHealth/compactIfNeeded dispatch there when " +
-          "'<prefix>_meta' exists in the catalog)")
-    val dp = new org.apache.hadoop.fs.Path(s"$path/$dataDir")
-    val fs = dp.getFileSystem(conf)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    val (nStripes, nFiles, maxPerStripe) =
-      if (striped) {
-        val stripes = fs.listStatus(dp).filter(_.isDirectory)
-        val counts = stripes.map(s => dataFiles(s.getPath))
-        (stripes.length, counts.sum, if (counts.isEmpty) 0 else counts.max)
-      } else {
-        val n = dataFiles(dp)
-        (1, n, n)
-      }
-    val tfs = IndexFiles.dataFiles(spark, Some(s"$path/tombstones"))
-    IndexHealthInfo(kind, nStripes, nFiles, maxPerStripe,
-      tfs.size, tfs.map(_.getLen).sum)
-  }
-
   /** `path` names a durable CORPUS index (table-prefix layout,
     * [[graft.operators.Dedup.writeCorpusIndex]]) rather than a
     * path-based ANN index: a plain SQL identifier whose `_meta` table
@@ -1824,12 +1311,13 @@ object Similarity {
     if (isCorpusIndexPrefix(spark, path))
       return Dedup.corpusIndexHealth(
         spark, path, maxFilesPerStripe, maxTombstoneBytes)
-    val h = pathIndexHealth(spark, path)
+    val h = PathIndex.health(spark, path, PathFamilies)
     import spark.implicits._
-    Seq((h.kind, h.nStripes, h.nDataFiles, h.maxFilesPerStripe,
+    Seq((h.family.kind, h.nStripes, h.nDataFiles, h.maxFilesPerStripe,
         h.nTombstoneFiles, h.tombstoneBytes,
         h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
-        needsCompaction(h, maxFilesPerStripe, maxTombstoneBytes)))
+        needsCompaction(h.maxFilesPerStripe, h.nTombstoneFiles, h.tombstoneBytes,
+          maxFilesPerStripe, maxTombstoneBytes)))
       .toDF("kind", "n_stripes", "n_data_files", "max_files_per_stripe",
         "n_tombstone_files", "tombstone_bytes", "tombstone_broadcast_ok",
         "needs_compaction")
@@ -1848,12 +1336,15 @@ object Similarity {
     * before [[Tombstones.BroadcastCapBytes]] degrades the probe plans. */
   val DefaultMaxTombstoneBytes: Long = Tombstones.BroadcastCapBytes / 4
 
-  private def needsCompaction(
-      h: IndexHealthInfo, maxFilesPerStripe: Int,
-      maxTombstoneBytes: Long): Boolean =
-    h.maxFilesPerStripe > maxFilesPerStripe ||
-      h.nTombstoneFiles > maxFilesPerStripe ||
-      h.tombstoneBytes > maxTombstoneBytes
+  /** The knee, for both stacks: a stripe (or bucket) past
+    * `maxFilesPerStripe` files, as many tombstone files, or tombstones
+    * past `maxTombstoneBytes`. */
+  private[operators] def needsCompaction(
+      filesPerStripe: Int, nTombstoneFiles: Int, tombstoneBytes: Long,
+      maxFilesPerStripe: Int, maxTombstoneBytes: Long): Boolean =
+    filesPerStripe > maxFilesPerStripe ||
+      nTombstoneFiles > maxFilesPerStripe ||
+      tombstoneBytes > maxTombstoneBytes
 
   /** Compact `path` iff its health is past the knee, dispatching to
     * the family's compact verb — ANY family: the four path-based ANN
@@ -1872,14 +1363,10 @@ object Similarity {
     if (isCorpusIndexPrefix(spark, path))
       return Dedup.compactCorpusIndexIfNeeded(
         spark, path, maxFilesPerStripe, maxTombstoneBytes)
-    val h = pathIndexHealth(spark, path)
-    val due = needsCompaction(h, maxFilesPerStripe, maxTombstoneBytes)
-    if (due) h.kind match {
-      case "ivfpq" => compactIvfPqIndex(spark, path)
-      case "ivf"   => compactIvfIndex(spark, path)
-      case "lsh"   => compactLshIndex(spark, path)
-      case "pq"    => compactPqIndex(spark, path)
-    }
+    val h = PathIndex.health(spark, path, PathFamilies)
+    val due = needsCompaction(h.maxFilesPerStripe, h.nTombstoneFiles,
+      h.tombstoneBytes, maxFilesPerStripe, maxTombstoneBytes)
+    if (due) PathIndex.compact(h.family, spark, path)
     due
   }
 

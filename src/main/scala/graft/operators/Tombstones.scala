@@ -2,14 +2,15 @@ package graft.operators
 
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** One snapshot of a durable index's tombstones — THE tombstone read
   * path of both index stacks: [[Similarity]]'s `<path>/tombstones`
   * directories and [[Dedup]]'s `<prefix>_tombstones` tables are both a
-  * directory of parquet `id` files, appended one file per delete batch.
+  * directory of parquet `id` files, appended one file per delete batch
+  * ([[Tombstones.append]], the one writer, with [[Tombstones.seed]]).
   *
   * [[Tombstones.at]] lists the directory's data files ONCE, and while
   * their bytes stay within [[Tombstones.BroadcastCapBytes]] it also reads
@@ -103,6 +104,20 @@ private[operators] object Tombstones {
   val BroadcastCapBytes: Long = 32L << 20
 
   private val Schema = StructType(Seq(StructField("id", LongType)))
+
+  /** One delete batch: the distinct ids, appended as one file. */
+  def append(ids: DataFrame, id: Column, dir: String): Unit =
+    write(ids.select(id.cast(LongType).as("id")).distinct(), dir, SaveMode.Append)
+
+  /** An empty batch (one schema-only file), so the relation exists and is
+    * readable with nothing deleted. `Overwrite` also resets stale
+    * tombstones (an index write); `Append` keeps a delete racing the
+    * caller (a compaction's re-seed). */
+  def seed(spark: SparkSession, dir: String, mode: SaveMode): Unit =
+    write(spark.range(0).select(col("id")), dir, mode)
+
+  private def write(ids: DataFrame, dir: String, mode: SaveMode): Unit =
+    ids.coalesce(1).write.mode(mode).parquet(dir)
 
   /** Snapshot the tombstones under `dir` (`None`: the index has none). */
   def at(spark: SparkSession, dir: Option[String]): Tombstones = {

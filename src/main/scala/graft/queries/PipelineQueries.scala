@@ -74,6 +74,31 @@ object PipelineQueries {
     out.toSeq
   }
 
+  /** The recall verdict of the ANN queries: `n_exact`, whether the full
+    * leg reproduces the exact one on `fullOn` (column `fullExact`), and
+    * whether the partial leg keeps `floor` recall on `partialOn`
+    * (`partial_recall_ok`). `beside` is cross-joined in for the `extra`
+    * columns. */
+  private def recallVerdict(
+      exact: DataFrame, full: DataFrame, partial: DataFrame,
+      fullExact: String, floor: Double = 0.5,
+      fullOn: Seq[String] = Seq("id", "sim"), partialOn: Seq[String] = Seq("id"),
+      beside: Option[DataFrame] = None, extra: Seq[Column] = Nil): DataFrame = {
+    val partStats = Similarity.recallStats(exact, partial, partialOn)
+      .select(col("n_hit").as("n_hit_partial"))
+    val stats = Similarity.recallStats(exact, full, fullOn).crossJoin(partStats)
+    beside.fold(stats)(stats.crossJoin).select(Seq(
+      col("n_exact"),
+      (col("n_approx") === col("n_exact") &&
+        col("n_hit") === col("n_exact")).as(fullExact),
+      (col("n_hit_partial") >= col("n_exact") * floor).as("partial_recall_ok")) ++
+      extra: _*)
+  }
+
+  /** The hard-negative queries' match keys for [[recallVerdict]]. */
+  private val HardNegFullOn = Seq("anchor_id", "rank", "neg_id", "neg_label", "sim")
+  private val HardNegPartialOn = Seq("anchor_id", "neg_id")
+
   /** q18 — per-document text metrics: token count, punctuation ratio,
     * stopword ratio, mean token length, 0-4 quality score. */
   def q18TextStats(spark: SparkSession, dir: String): DataFrame = {
@@ -773,17 +798,8 @@ object PipelineQueries {
       k = 5, inDim = 64, outDim = 16,
       shortlist = math.max(50L, n * 3 / 10).toInt)
     val Seq(exactP, fullP, partialP) = pinLegs(exact, full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP,
-      Seq("anchor_id", "rank", "neg_id", "neg_label", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP,
-        Seq("anchor_id", "neg_id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_shortlist_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5)
-        .as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
+      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
   }
 
   /** q195 — hard-negative mining THROUGH the durable IVF index
@@ -834,17 +850,8 @@ object PipelineQueries {
       emb2, col("vec_id"), col("embedding"), col("label"), anchors,
       k = 5, nProbe = 3, shortlist = math.max(50L, n * 3 / 10).toInt)
     val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP,
-      Seq("anchor_id", "rank", "neg_id", "neg_label", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP,
-        Seq("anchor_id", "neg_id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_shortlist_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5)
-        .as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
+      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
   }
 
   /** q196 — composed IVF+PQ durable index (FAISS IVFADC's layout), the
@@ -877,7 +884,13 @@ object PipelineQueries {
     * verified from the data, booleans literal — any regression flips
     * Spark's output and the driver's hash. */
   def q196IvfPqReloadProbe(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q196_ivfpq") { path =>
+    ivfPqReloadProbe(spark, dir, "raw")
+
+  /** q196's composition under one codebook `encoding` (q199 forces
+    * `"residual"` and adds `residual_pinned`). */
+  private def ivfPqReloadProbe(
+      spark: SparkSession, dir: String, encoding: String): DataFrame =
+    withScratchDir(s"q196_ivfpq_$encoding") { path =>
     val emb = Tables.embeddings(spark, dir)
     val old = emb.filter(col("vec_id") =!= 0 &&
       pmod(col("vec_id"), lit(5)) =!= 3)
@@ -904,7 +917,7 @@ object PipelineQueries {
           old, col("vec_id"), col("embedding"), nLists = 8)
         val cbs = Similarity.ivfPqFitCodebooks(
           old, col("vec_id"), col("embedding"), centroids,
-          m = 16, ksub = 16, iters = 1)
+          m = 16, ksub = 16, iters = 1, encoding = encoding)
         Similarity.writeIvfPqIndex(centroids, cbs,
           Similarity.ivfPqEncode(
             old, col("vec_id"), col("embedding"), centroids, cbs), path)
@@ -923,14 +936,9 @@ object PipelineQueries {
       col("vec_id"), col("embedding"), qv, k = 10, nProbe = 3,
       rerankN = 100)
     val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_probe_exact", extra =
+      if (encoding == "residual") Seq(lit(cbs2.encoding == "residual").as("residual_pinned"))
+      else Nil)
   }
 
   /** q197 — batch probe over the composed IVF+PQ index: q192's
@@ -1023,17 +1031,8 @@ object PipelineQueries {
       emb2, col("vec_id"), col("embedding"), col("label"), anchors,
       k = 5, nProbe = 3, shortlist = math.max(50L, n * 3 / 10).toInt)
     val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP,
-      Seq("anchor_id", "rank", "neg_id", "neg_label", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP,
-        Seq("anchor_id", "neg_id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_shortlist_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5)
-        .as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
+      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
   }
 
   /** q199 — the composed lifecycle under FORCED RESIDUAL encoding
@@ -1056,58 +1055,7 @@ object PipelineQueries {
     * the cause). Oracle as q196: n_exact from the data, booleans
     * literal. */
   def q199IvfPqResidualProbe(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q199_ivfpq") { path =>
-    val emb = Tables.embeddings(spark, dir)
-    val old = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) =!= 3)
-    val shard = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) === 3)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val corpus = emb2.filter(col("vec_id") =!= 0)
-    val q = emb2.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopK(
-      corpus, col("vec_id"), col("embedding"), q, k = 10)
-    // Overlap (guide §2.6): exact baseline + query-vector collect vs
-    // the residual fit → write → append chain — q196's discipline.
-    var exactP: DataFrame = null
-    var qv: Array[Float] = null
-    Similarity.inParallel(
-      () => {
-        val (centroids, _) = Similarity.ivfIndex(
-          old, col("vec_id"), col("embedding"), nLists = 8)
-        val cbs = Similarity.ivfPqFitCodebooks(
-          old, col("vec_id"), col("embedding"), centroids,
-          m = 16, ksub = 16, iters = 1, encoding = "residual")
-        Similarity.writeIvfPqIndex(centroids, cbs,
-          Similarity.ivfPqEncode(
-            old, col("vec_id"), col("embedding"), centroids, cbs), path)
-        Similarity.appendToIvfPqIndex(
-          shard, col("vec_id"), col("embedding"), path)
-      },
-      () => {
-        qv = q.collect().head.getSeq[Float](0).toArray
-        exactP = pinLeg(exact)
-      })
-    val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
-    val full = Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
-      col("vec_id"), col("embedding"), qv, k = 10, nProbe = 8,
-      rerankN = 1 << 20)
-    val partial = Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
-      col("vec_id"), col("embedding"), qv, k = 10, nProbe = 3,
-      rerankN = 100)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"),
-      lit(cbs2.encoding == "residual").as("residual_pinned"))
-  }
+    ivfPqReloadProbe(spark, dir, "residual")
 
   /** q142 — truncated-dimension recall audit
     * ([[Similarity.truncatedDimRecall]]): exact top-10 for the vec_id-0
@@ -1188,14 +1136,7 @@ object PipelineQueries {
     val full = Similarity.ivfTopK(centroids, indexed, qv, k = 10, nProbe = 8)
     val partial = Similarity.ivfTopK(centroids, indexed, qv, k = 10, nProbe = 3)
     val Seq(exactP, fullP, partialP) = pinLegs(exact, full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_probe_exact")
   }
 
   /** q79 — hyperplane-LSH recall gate (top-k and near-dup pairs):
@@ -1228,19 +1169,13 @@ object PipelineQueries {
       .withColumn("cosine", round(col("cosine"), 4))
     val Seq(exactP, fullP, partialP, exactPairsP, lshPairsP) =
       pinLegs(exact, full, partial, exactPairs, lshPairs)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
     val pairStats = Similarity
       .recallStats(exactPairsP, lshPairsP,
         Seq("id_a", "id_b", "cosine"))
       .select(col("n_approx").as("n_lsh_pairs"), col("n_hit").as("n_pair_hit"))
-    fullStats.crossJoin(partStats).crossJoin(pairStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.3).as("partial_recall_ok"),
-      (col("n_pair_hit") === col("n_lsh_pairs")).as("pairs_sound"))
+    recallVerdict(exactP, fullP, partialP, "full_probe_exact", floor = 0.3,
+      beside = Some(pairStats),
+      extra = Seq((col("n_pair_hit") === col("n_lsh_pairs")).as("pairs_sound")))
   }
 
   /** q89 — product-quantization ANN recall gate ([[Similarity.pqIndex]]
@@ -1270,14 +1205,7 @@ object PipelineQueries {
     val partial = Similarity.pqTopK(cbs, encoded, corpus,
       col("vec_id"), col("embedding"), qv, k = 10, rerankN = 100)
     val Seq(exactP, fullP, partialP) = pinLegs(exact, full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_rerank_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_rerank_exact")
   }
 
   /** q127 — seeded random projection ([[Similarity.randomProjection]],
@@ -1328,14 +1256,7 @@ object PipelineQueries {
       col("embedding"), q, inDim = 64, outDim = 16,
       shortlist = math.max(50L, n * 3 / 10).toInt, k = 10)
     val Seq(exactP, fullP, partialP) = pinLegs(exact, full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_shortlist_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact")
   }
 
   /** q66 — incremental shard-vs-corpus near-dup: the src0 slice plays
@@ -1481,14 +1402,7 @@ object PipelineQueries {
     val full = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 8)
     val partial = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3)
     val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.5).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_probe_exact")
   }
 
   /** q192 — batch IVF probe over the durable index: the MANY-queries
@@ -1569,14 +1483,7 @@ object PipelineQueries {
     val partial = Similarity.lshTopKPruned(loaded, q, k = 10, nBits = nb,
       probeHamming = 2)
     val Seq(fullP, partialP) = pinLegs(full, partial)
-    val fullStats = Similarity.recallStats(exactP, fullP, Seq("id", "sim"))
-    val partStats = Similarity.recallStats(exactP, partialP, Seq("id"))
-      .select(col("n_hit").as("n_hit_partial"))
-    fullStats.crossJoin(partStats).select(
-      col("n_exact"),
-      (col("n_approx") === col("n_exact") &&
-        col("n_hit") === col("n_exact")).as("full_probe_exact"),
-      (col("n_hit_partial") >= col("n_exact") * 0.3).as("partial_recall_ok"))
+    recallVerdict(exactP, fullP, partialP, "full_probe_exact", floor = 0.3)
   }
 
   /** q194 — RTBF through the durable-index lifecycle: deletion reaches

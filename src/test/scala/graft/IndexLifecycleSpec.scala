@@ -1044,6 +1044,56 @@ class IndexLifecycleSpec extends SparkSpec {
       s"job budget exceeded: measured $jobs, budget $budget")
   }
 
+  test("verb budgets: LSH, PQ and IVF+PQ write/append/delete/compact job counts") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val old = emb.filter(pmod(col("vec_id"), lit(5)) =!= 3)
+    val shard = emb.filter(pmod(col("vec_id"), lit(5)) === 3)
+    val deleted = shard.filter(pmod(col("vec_id"), lit(2)) === 0).select(col("vec_id"))
+    val jobs = scala.collection.mutable.LinkedHashMap[String, Int]()
+    def lifecycle(family: String)(
+        write: => Unit, append: => Unit, delete: => Unit, compact: => Unit): Unit = {
+      jobs(s"$family.write") = JobCount(spark)(write)._2
+      jobs(s"$family.append") = JobCount(spark)(append)._2
+      jobs(s"$family.delete") = JobCount(spark)(delete)._2
+      jobs(s"$family.compact") = JobCount(spark)(compact)._2
+    }
+
+    val lshPath = tmpDir("lsh_budget")
+    lifecycle("lsh")(
+      Similarity.writeLshIndex(old, col("vec_id"), col("embedding"), 8, lshPath),
+      Similarity.appendToLshIndex(shard, col("vec_id"), col("embedding"), lshPath),
+      Similarity.deleteFromLshIndex(deleted, col("vec_id"), lshPath),
+      Similarity.compactLshIndex(spark, lshPath))
+
+    val (cbs, encoded) = Similarity.pqIndex(
+      old, col("vec_id"), col("embedding"), m = 16, ksub = 16, iters = 1)
+    val pqPath = tmpDir("pq_budget")
+    lifecycle("pq")(
+      Similarity.writePqIndex(cbs, encoded, pqPath),
+      Similarity.appendToPqIndex(shard, col("vec_id"), col("embedding"), pqPath),
+      Similarity.deleteFromPqIndex(deleted, col("vec_id"), pqPath),
+      Similarity.compactPqIndex(spark, pqPath))
+
+    val (centroids, _) = Similarity.ivfIndex(
+      old, col("vec_id"), col("embedding"), nLists = 4)
+    val icbs = Similarity.ivfPqFitCodebooks(
+      old, col("vec_id"), col("embedding"), centroids, m = 16, ksub = 16, iters = 1)
+    val ivfPqPath = tmpDir("ivfpq_budget")
+    lifecycle("ivfpq")(
+      Similarity.writeIvfPqIndex(centroids, icbs, Similarity.ivfPqEncode(
+        old, col("vec_id"), col("embedding"), centroids, icbs), ivfPqPath),
+      Similarity.appendToIvfPqIndex(shard, col("vec_id"), col("embedding"), ivfPqPath),
+      Similarity.deleteFromIvfPqIndex(deleted, col("vec_id"), ivfPqPath),
+      Similarity.compactIvfPqIndex(spark, ivfPqPath))
+    // Budgets at the measured counts (4 cores).
+    val budget = Map(
+      "lsh.write" -> 5, "lsh.append" -> 9, "lsh.delete" -> 2, "lsh.compact" -> 4,
+      "pq.write" -> 4, "pq.append" -> 5, "pq.delete" -> 2, "pq.compact" -> 4,
+      "ivfpq.write" -> 7, "ivfpq.append" -> 9, "ivfpq.delete" -> 2, "ivfpq.compact" -> 4)
+    assert(budget.forall { case (verb, n) => jobs(verb) <= n },
+      s"job budget exceeded: measured $jobs, budget $budget")
+  }
+
   test("parameter tables are read on the driver: loads start no Spark job, and an empty meta table still fails readably") {
     val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
     val (centroids, indexed) = Similarity.ivfIndex(
@@ -1069,6 +1119,28 @@ class IndexLifecycleSpec extends SparkSpec {
 
     val lshPath = tmpDir("lsh_params")
     Similarity.writeLshIndex(emb, col("vec_id"), col("embedding"), 8, lshPath)
+    val ((nBits, _), lshJobs) = JobCount(spark)(Similarity.loadLshIndex(spark, lshPath))
+    assert(lshJobs === 0 && nBits === 8, s"an LSH load ran $lshJobs jobs")
+
+    val (cbs, encoded) = Similarity.pqIndex(
+      emb, col("vec_id"), col("embedding"), m = 16, ksub = 16, iters = 1)
+    val pqPath = tmpDir("pq_params")
+    Similarity.writePqIndex(cbs, encoded, pqPath)
+    val ((pqCbs, _), pqJobs) = JobCount(spark)(Similarity.loadPqIndex(spark, pqPath))
+    assert(pqJobs === 0, s"a PQ load ran $pqJobs jobs")
+    assert(pqCbs.map(c => (c._1, c._2, c._3.toSeq)) === cbs.map(c => (c._1, c._2, c._3.toSeq)),
+      "codebooks must come back bit-equal, in (j, cl) order")
+
+    val icbs = Similarity.ivfPqFitCodebooks(
+      emb, col("vec_id"), col("embedding"), centroids, m = 16, ksub = 16, iters = 1)
+    val ivfPqPath = tmpDir("ivfpq_params")
+    Similarity.writeIvfPqIndex(centroids, icbs, Similarity.ivfPqEncode(
+      emb, col("vec_id"), col("embedding"), centroids, icbs), ivfPqPath)
+    val ((_, ivfPqCbs, _), ivfPqJobs) =
+      JobCount(spark)(Similarity.loadIvfPqIndex(spark, ivfPqPath))
+    assert(ivfPqJobs === 0, s"an IVF+PQ load ran $ivfPqJobs jobs")
+    assert(ivfPqCbs.encoding === icbs.encoding)
+
     import spark.implicits._
     Seq.empty[Int].toDF("n_bits").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$lshPath/meta")
@@ -1586,6 +1658,106 @@ class IndexLifecycleSpec extends SparkSpec {
     Similarity.writeIvfIndex(centroids, indexed, path)
     val (_, lists) = Similarity.loadIvfIndex(spark.newSession(), path)
     assert(lists.count() > 0)
+  }
+
+  test("crash states: every interrupted verb's leftovers make the next load, delete, append and compact fail naming the state or match a clean twin bit for bit, on all four path families") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val old = emb.filter(pmod(col("vec_id"), lit(5)) =!= 3)
+    val shard = emb.filter(pmod(col("vec_id"), lit(5)) === 3)
+    val deleted = old.filter(pmod(col("vec_id"), lit(7)) === 1).select(col("vec_id"))
+    val (centroids, indexed) = Similarity.ivfIndex(
+      old, col("vec_id"), col("embedding"), nLists = 4)
+    val (pqCbs, pqCodes) = Similarity.pqIndex(
+      old, col("vec_id"), col("embedding"), m = 16, ksub = 16, iters = 1)
+    val icbs = Similarity.ivfPqFitCodebooks(
+      old, col("vec_id"), col("embedding"), centroids, m = 16, ksub = 16, iters = 1)
+    // (family, data directory, write, load, append, delete, compact)
+    case class Family(name: String, data: String, write: String => Unit,
+        load: String => DataFrame, append: String => Unit,
+        delete: String => Unit, compact: String => Unit)
+    val families = Seq(
+      Family("ivf", "lists", Similarity.writeIvfIndex(centroids, indexed, _),
+        p => Similarity.loadIvfIndex(spark, p)._2,
+        Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), _),
+        Similarity.deleteFromIvfIndex(deleted, col("vec_id"), _),
+        Similarity.compactIvfIndex(spark, _)),
+      Family("lsh", "buckets",
+        Similarity.writeLshIndex(old, col("vec_id"), col("embedding"), 8, _),
+        p => Similarity.loadLshIndex(spark, p)._2,
+        Similarity.appendToLshIndex(shard, col("vec_id"), col("embedding"), _),
+        Similarity.deleteFromLshIndex(deleted, col("vec_id"), _),
+        Similarity.compactLshIndex(spark, _)),
+      Family("pq", "codes", Similarity.writePqIndex(pqCbs, pqCodes, _),
+        p => Similarity.loadPqIndex(spark, p)._2,
+        Similarity.appendToPqIndex(shard, col("vec_id"), col("embedding"), _),
+        Similarity.deleteFromPqIndex(deleted, col("vec_id"), _),
+        Similarity.compactPqIndex(spark, _)),
+      Family("ivfpq", "lists", Similarity.writeIvfPqIndex(centroids, icbs,
+          Similarity.ivfPqEncode(old, col("vec_id"), col("embedding"), centroids, icbs), _),
+        p => Similarity.loadIvfPqIndex(spark, p)._3,
+        Similarity.appendToIvfPqIndex(shard, col("vec_id"), col("embedding"), _),
+        Similarity.deleteFromIvfPqIndex(deleted, col("vec_id"), _),
+        Similarity.compactIvfPqIndex(spark, _)))
+
+    // A half-written delete batch: a task attempt's file of ids under
+    // the committer's `_temporary`, the job never committed. The ids are
+    // live ones, so applying them would move every probe.
+    val pending = tmpDir("crash_pending")
+    old.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id").cast("long").as("id"))
+      .coalesce(1).write.parquet(pending)
+    val pendingFile = new java.io.File(pending).listFiles().find(_.getName.endsWith(".parquet")).get
+    def copyTree(from: java.io.File, to: java.io.File): Unit =
+      org.apache.commons.io.FileUtils.copyDirectory(from, to)
+    // Each state as the interrupted verb leaves it, made with file
+    // operations only; `None` when the next verbs must run as on a clean
+    // index, else the words their error must contain.
+    val states: Seq[(String, (String, Family) => Unit, Option[Seq[String]])] = Seq(
+      ("write without its completion marker",
+        (p, _) => assert(new java.io.File(s"$p/_GRAFT_INDEX_COMPLETE").delete()),
+        Some(Seq("INCOMPLETE", "rebuild"))),
+      ("a half-written tombstone batch",
+        (p, _) => org.apache.commons.io.FileUtils.copyFile(pendingFile, new java.io.File(
+          s"$p/tombstones/_temporary/0/_temporary/attempt_202610190000_0001_m_000000_0/part-00000.snappy.parquet")),
+        None),
+      ("a compaction stopped before its first rename",
+        (p, f) => copyTree(new java.io.File(s"$p/${f.data}"), new java.io.File(s"$p/${f.data}__compact")),
+        None),
+      ("a compaction stopped between its two renames",
+        (p, f) => assert(new java.io.File(s"$p/${f.data}")
+          .renameTo(new java.io.File(s"$p/${f.data}__pre_compact"))),
+        Some(Seq("interrupted", "__pre_compact"))))
+
+    def rows(df: DataFrame): Seq[Row] = df.orderBy(col("id")).collect().toSeq
+    for (f <- families) {
+      val base = tmpDir(s"crash_${f.name}")
+      f.write(base)
+      // The clean twin's rows after each verb: load, delete, append, compact.
+      val steps: Seq[(String, String => Unit)] = Seq(
+        "load" -> (_ => ()), "delete" -> f.delete, "append" -> f.append, "compact" -> f.compact)
+      def run(p: String): Seq[Either[String, Seq[Row]]] = steps.map { case (_, verb) =>
+        try { verb(p); Right(rows(f.load(p))) }
+        catch { case e: IllegalArgumentException => Left(e.getMessage) }
+      }
+      val twin = s"${base}_twin"
+      copyTree(new java.io.File(base), new java.io.File(twin))
+      val want = run(twin)
+      assert(want.forall(_.isRight), s"${f.name}: the clean twin must run every verb: $want")
+      for (((state, make, fails), i) <- states.zipWithIndex) {
+        val p = s"${base}_state$i"
+        copyTree(new java.io.File(base), new java.io.File(p))
+        make(p, f)
+        run(p).zip(steps).zip(want).foreach { case ((got, (verb, _)), clean) =>
+          fails match {
+            case Some(words) =>
+              assert(got.left.exists(m => words.forall(m.contains)),
+                s"${f.name} $verb after $state must fail naming it ($words), got $got")
+            case None =>
+              assert(got === clean,
+                s"${f.name} $verb after $state must match the clean twin")
+          }
+        }
+      }
+    }
   }
 
   test("ONE policy verb for every family: indexHealth + compactIfNeeded dispatch on a corpus-index table prefix") {
