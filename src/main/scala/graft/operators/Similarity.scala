@@ -8,58 +8,124 @@ import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
-  *   - [[bruteForceTopK]]: exact linear scan — one broadcast of the query
-  *     vector, one pass, TakeOrderedAndProject top-k. This IS the right
-  *     plan for single queries even at 100 TB (embarrassingly parallel,
-  *     no shuffle of the corpus).
-  *   - [[lshTopK]]: random-hyperplane bucketed scan for repeated/batch
-  *     queries — corpus pre-bucketed once; a query probes only buckets
-  *     within small Hamming distance of its own bucket, scanning a
-  *     fraction of the corpus at some recall cost.
+  * Every probe is a composition of a few private steps, each written
+  * once:
+  *   - the exact cosine [[cosine4]] over the norm columns of [[vectors]]
+  *     and [[queryBatch]] (4 dp, the oracle SQL's association);
+  *   - the single-query tail [[topKBySim]], and [[scoreQuery]], which
+  *     scores candidate rows against one broadcast query row through it;
+  *   - the ranked per-group top-k [[rankedTopK]]: bounded
+  *     [[graft.plans.GroupTopK]] heaps, then the `row_number` rank;
+  *   - the batch probe-list choice [[batchProbe]] of the IVF and IVF+PQ
+  *     batch forms;
+  *   - the mining frames [[labelCorpus]] and [[anchorSide]], and the
+  *     exact rerank of a shortlist, [[rerankShortlist]];
+  *   - the array&lt;double&gt; fold [[ddot]].
+  * The exhaustive forms ([[bruteForceTopK]], [[bruteForceTopKBatch]],
+  * [[hardNegatives]]) are what the index probes (IVF, LSH, PQ, IVF+PQ,
+  * random projection) degenerate to at full probe.
   */
 object Similarity {
+
+  /** `sqrt(Σ v²)`, the norm column every exact cosine divides by. */
+  private def norm(v: Column): Column = sqrt(VectorFunctions.normSq(v))
+
+  /** The exact cosine every probe ranks and reports by:
+    * `round(dot(v, qv) / (nrm * qnrm), 4)`. The association mirrors the
+    * oracle SQL; a probe with a literal query or an inline norm passes
+    * those in place of the columns. */
+  private def cosine4(
+      qv: Column = col("qv"), nrm: Column = col("nrm"),
+      qnrm: Column = col("qnrm")): Column =
+    round(VectorFunctions.dot(col("v"), qv) / (nrm * qnrm), 4)
+
+  /** Dot product of two array&lt;double&gt; columns, products folded left
+    * to right (the HOF fold: the native FloatVecDot is float-only). */
+  private def ddot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+
+  /** Cosine of two array&lt;double&gt; columns through [[ddot]], unrounded:
+    * the projected-space shortlist score. */
+  private def dcos(a: Column, b: Column): Column =
+    ddot(a, b) / (sqrt(ddot(a, a)) * sqrt(ddot(b, b)))
+
+  /** The scored side of a corpus: (id, v, nrm). */
+  private def vectors(corpus: DataFrame, id: Column, vec: Column): DataFrame =
+    corpus.select(id.cast("long").as("id"), vec.as("v")).withColumn("nrm", norm(col("v")))
+
+  /** A query batch: (query_id, qv, qnrm). */
+  private def queryBatch(queries: DataFrame, qid: Column, qvec: Column): DataFrame =
+    queries.select(qid.cast("long").as("query_id"), qvec.as("qv"))
+      .withColumn("qnrm", norm(col("qv")))
+
+  /** The single-query tail: top `k` by (sim desc, id asc), as (id, sim). */
+  private def topKBySim(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(desc("sim"), asc("id")).limit(k).select(col("id"), col("sim"))
+
+  /** Candidate rows (id, v, …) scored against a one-row query frame (`qv`)
+    * broadcast beside them: [[cosine4]], then [[topKBySim]]. */
+  private def scoreQuery(
+      cands: DataFrame, query: DataFrame, k: Int,
+      nrm: Column = col("nrm")): DataFrame =
+    topKBySim(cands.crossJoin(broadcast(query.withColumn("qnrm", norm(col("qv")))))
+      .withColumn("sim", cosine4(nrm = nrm)), k)
+
+  /** [[cosine4]] over (group, candidate) pairs, then the top `k` per
+    * `group` by (sim desc, id asc) through the custom
+    * [[graft.plans.GroupTopK]] operator — partial bounded heaps on the
+    * map side, so the shuffle carries ≤k candidates per (group,
+    * partition); the row_number window that assigns `rank` only ever
+    * sees the ≤k survivors per group. */
+  private def rankedTopK(pairs: DataFrame, group: String, k: Int): DataFrame = {
+    val top = graft.plans.GroupTopK.topK(pairs.withColumn("sim", cosine4()),
+      Seq(col(group)), Seq(col("sim").desc, col("id").asc), k)
+    top.withColumn("rank", row_number().over(
+      Window.partitionBy(col(group)).orderBy(desc("sim"), asc("id"))))
+  }
+
+  /** The batch probes' output: (query_id, id, sim, rank). */
+  private val BatchOut = Seq("query_id", "id", "sim", "rank").map(col)
+
+  /** The mining forms' output: (anchor_id, rank, neg_id, neg_label, sim). */
+  private val NegativesOut = Seq(col("anchor_id"), col("rank"), col("id").as("neg_id"),
+    col("neg_label"), col("sim"))
+
+  /** A mining pair's eligibility: not the anchor itself, another label. */
+  private val isNegative = col("id") =!= col("anchor_id") && col("neg_label") =!= col("qlabel")
+
+  /** The mining corpus side: (id, v, neg_label, nrm), spread. */
+  private def labelCorpus(
+      corpus: DataFrame, id: Column, vec: Column, label: Column): DataFrame =
+    Dedup.spread(corpus).select(id.cast("long").as("id"), vec.as("v"), label.as("neg_label"))
+      .withColumn("nrm", norm(col("v")))
+
+  /** The anchor batch (query_id, qv, qlabel) as (anchor_id, qv, qlabel,
+    * qnrm). */
+  private def anchorSide(anchors: DataFrame): DataFrame =
+    anchors.select(col("query_id").cast("long").as("anchor_id"), col("qv"), col("qlabel"))
+      .withColumn("qnrm", norm(col("qv")))
 
   /** Exact top-k by cosine against one query vector (a 1-row DataFrame
     * with column `qv`). Ordering uses the score rounded to 4 dp with id
     * tie-break so results are deterministic across engines and partition
-    * orders. Output: (id, sim). */
+    * orders. One broadcast of the query vector, one pass,
+    * TakeOrderedAndProject top-k: the right plan for single queries even
+    * at 100 TB (no shuffle of the corpus). Output: (id, sim). */
   def bruteForceTopK(
       corpus: DataFrame, id: Column, vec: Column,
       query: DataFrame, k: Int): DataFrame =
-    Dedup.spread(corpus).select(id.cast("long").as("id"), vec.as("v"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .crossJoin(broadcast(
-        query.withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+    scoreQuery(vectors(Dedup.spread(corpus), id, vec), query, k)
 
   /** Batch exact top-k: every query row against the whole corpus (small
-    * query set broadcast). Per-query top-k runs through the custom
-    * [[graft.plans.GroupTopK]] operator — partial bounded heaps on the
-    * map side, so the shuffle carries ≤k candidates per (query,
-    * partition) instead of every |corpus|·|queries| scored row; the
-    * row_number window that assigns `rank` only ever sees the ≤k
-    * survivors per query. Output: (query_id, id, sim, rank). */
+    * query set broadcast), self-pairs excluded, per-query top-k through
+    * [[rankedTopK]]. Output: (query_id, id, sim, rank). */
   def bruteForceTopKBatch(
       corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, qid: Column, qvec: Column, k: Int): DataFrame = {
-    val c = Dedup.spread(corpus).select(id.cast("long").as("id"), vec.as("v"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-    val q = queries.select(qid.cast("long").as("query_id"), qvec.as("qv"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-    val scored = c.crossJoin(broadcast(q))
+    val pairs = vectors(Dedup.spread(corpus), id, vec)
+      .crossJoin(broadcast(queryBatch(queries, qid, qvec)))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4))
-    val top = graft.plans.GroupTopK.topK(scored,
-      Seq(col("query_id")), Seq(col("sim").desc, col("id").asc), k)
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("query_id"), col("id"), col("sim"), col("rank"))
+    rankedTopK(pairs, "query_id", k).select(BatchOut: _*)
   }
 
   /** Hard-negative mining for contrastive training: per anchor, the
@@ -76,35 +142,17 @@ object Similarity {
     * the custom [[graft.plans.GroupTopK]] bounded heaps keep the
     * shuffle at ≤k rows per (anchor × partition). At billion-vector
     * scale, swap the exhaustive scan for an ANN shortlist
-    * ([[projectedTopK]] / [[pqTopK]] with k' ≫ k, or [[ivfTopKBatch]]
-    * over the durable posting lists for a whole anchor batch in one
-    * partition-pruned plan) and apply the same label-filter + exact
-    * rerank to the shortlist — the contract (exact top-k among
-    * differently-labeled) then degrades to the index's recall, which
-    * is why the exhaustive form stays the gate. */
+    * ([[hardNegativesShortlist]], or [[hardNegativesAnn]] /
+    * [[hardNegativesAnnPq]] over a durable index) and apply the same
+    * label-filter + exact rerank to the shortlist — the contract (exact
+    * top-k among differently-labeled) then degrades to the index's
+    * recall, which is why the exhaustive form stays the gate. */
   def hardNegatives(
       corpus: DataFrame, id: Column, vec: Column, label: Column,
       anchors: DataFrame, k: Int): DataFrame = {
-    val c = Dedup.spread(corpus).select(id.cast("long").as("id"),
-        vec.as("v"), label.as("neg_label"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-    val q = anchors
-      .select(col("query_id").cast("long").as("anchor_id"), col("qv"),
-        col("qlabel"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("anchor_id") &&
-        col("neg_label") =!= col("qlabel"))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) /
-          (col("nrm") * col("qnrm")), 4))
-    val top = graft.plans.GroupTopK.topK(scored,
-      Seq(col("anchor_id")), Seq(col("sim").desc, col("id").asc), k)
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(desc("sim"), asc("id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("anchor_id"), col("rank"), col("id").as("neg_id"),
-        col("neg_label"), col("sim"))
+    val pairs = labelCorpus(corpus, id, vec, label)
+      .crossJoin(broadcast(anchorSide(anchors))).filter(isNegative)
+    rankedTopK(pairs, "anchor_id", k).select(NegativesOut: _*)
   }
 
   /** [[hardNegatives]] through an ANN shortlist — the billion-vector
@@ -138,26 +186,15 @@ object Similarity {
       anchors: DataFrame, k: Int, inDim: Int, outDim: Int,
       shortlist: Int, seed: String = "rp"): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
-    val c = Dedup.spread(corpus).select(id.cast("long").as("id"),
-        vec.as("v"), label.as("neg_label"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-    val q = anchors
-      .select(col("query_id").cast("long").as("anchor_id"), col("qv"),
-        col("qlabel"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
+    val c = labelCorpus(corpus, id, vec, label)
+    val q = anchorSide(anchors)
       .withColumn("pq", projectedVec(col("qv"), inDim, outDim, seed))
-    // pv/pq are array<double> — the HOF fold, not the float-only
-    // native FloatVecDot expression (projectedTopK's convention).
-    def ddot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
     val scoredP = c
       .withColumn("pv", projectedVec(col("v"), inDim, outDim, seed))
       .crossJoin(broadcast(q.select(col("anchor_id").as("__aid"),
         col("pq"), col("qlabel").as("__ql"))))
       .filter(col("id") =!= col("__aid") && col("neg_label") =!= col("__ql"))
-      .withColumn("psim", ddot(col("pv"), col("pq")) /
-        (sqrt(ddot(col("pv"), col("pv"))) * sqrt(ddot(col("pq"), col("pq")))))
+      .withColumn("psim", dcos(col("pv"), col("pq")))
     val short = graft.plans.GroupTopK.topK(scoredP,
         Seq(col("__aid")), Seq(col("psim").desc, col("id").asc), shortlist)
       .select(col("__aid").as("anchor_id"), col("id"))
@@ -172,9 +209,9 @@ object Similarity {
     * 100 TB shape the scaladocs above name: the shortlist comes from
     * ONE [[ivfTopKBatch]] plan over [[loadIvfIndex]]'s handle (whole
     * anchor batch, partition-pruned to the probed stripes, bounded
-    * heaps), then the [[hardNegativesShortlist]] tail — exact
-    * full-dimension rerank with the label filter — runs on the
-    * parameter-sized shortlist. Identical output contract:
+    * heaps), then [[rerankIndexShortlist]] — exact full-dimension
+    * rerank with the label filter — runs on the parameter-sized
+    * shortlist. Identical output contract:
     * (anchor_id, rank, neg_id, neg_label, sim).
     *
     * Label semantics differ from [[hardNegativesShortlist]] BY
@@ -199,26 +236,29 @@ object Similarity {
   def hardNegativesAnn(
       centroids: Array[Array[Float]], indexed: DataFrame,
       corpus: DataFrame, id: Column, vec: Column, label: Column,
-      anchors: DataFrame, k: Int, nProbe: Int, shortlist: Int): DataFrame = {
+      anchors: DataFrame, k: Int, nProbe: Int, shortlist: Int): DataFrame =
+    rerankIndexShortlist(corpus, id, vec, label, anchors, k, shortlist)(
+      ivfTopKBatch(centroids, indexed, _, col("query_id"), col("qv"),
+        k = shortlist, nProbe = nProbe))
+
+  /** The mining tail of the durable-index forms ([[hardNegativesAnn]],
+    * [[hardNegativesAnnPq]]), which differ only in `shortlistOf`: the
+    * index's per-anchor shortlist of (query_id, id, …) for the anchors'
+    * (query_id, qv). The index is label-blind, so [[rerankShortlist]]
+    * applies the self/label exclusions at the rerank. */
+  private def rerankIndexShortlist(
+      corpus: DataFrame, id: Column, vec: Column, label: Column,
+      anchors: DataFrame, k: Int, shortlist: Int)(
+      shortlistOf: DataFrame => DataFrame): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
-    val short = ivfTopKBatch(centroids, indexed,
-        anchors.select(col("query_id"), col("qv")),
-        col("query_id"), col("qv"), k = shortlist, nProbe = nProbe)
+    val short = shortlistOf(anchors.select(col("query_id"), col("qv")))
       .select(col("query_id").as("anchor_id"), col("id"))
-    val c = Dedup.spread(corpus).select(id.cast("long").as("id"),
-        vec.as("v"), label.as("neg_label"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-    val q = anchors
-      .select(col("query_id").cast("long").as("anchor_id"), col("qv"),
-        col("qlabel"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-    // The index-served shortlist is label-blind, so the shared tail
-    // applies the self/label exclusions at the rerank.
-    rerankShortlist(c, q, short, k, shortlist, filterLabels = true)
+    rerankShortlist(labelCorpus(corpus, id, vec, label), anchorSide(anchors),
+      short, k, shortlist, filterLabels = true)
   }
 
   /** The shared exact-rerank tail of [[hardNegativesShortlist]] and
-    * [[hardNegativesAnn]] — ONE definition, so the "identical output
+    * [[rerankIndexShortlist]] — ONE definition, so the "identical output
     * contract" the mining forms promise cannot drift apart: gate the
     * |anchors|×shortlist id frame's broadcast on the PRODUCT
     * (driver-safe by construction; the anchor count is one cheap job
@@ -230,10 +270,9 @@ object Similarity {
     * broadcast anchor frame, optionally re-apply the self/label
     * exclusions (the ANN path must — its shortlist came from a
     * label-blind index; the projected path already filtered BEFORE its
-    * heap), score with the exact 4-dp cosine, and emit the top-k per
-    * anchor through the bounded GroupTopK heaps. Inputs: `c` =
-    * (id, v, neg_label, nrm), `q` = (anchor_id, qv, qlabel, qnrm),
-    * `short` = (anchor_id, id). */
+    * heap), and emit the top-k per anchor through [[rankedTopK]].
+    * Inputs: `c` = [[labelCorpus]], `q` = [[anchorSide]], `short` =
+    * (anchor_id, id). */
   private def rerankShortlist(
       c: DataFrame, q: DataFrame, short: DataFrame,
       k: Int, shortlist: Int, filterLabels: Boolean): DataFrame = {
@@ -243,21 +282,8 @@ object Similarity {
       else short
     val joined = c.join(shortSide, Seq("id"))
       .join(broadcast(q), Seq("anchor_id"))
-    val eligible =
-      if (filterLabels)
-        joined.filter(col("id") =!= col("anchor_id") &&
-          col("neg_label") =!= col("qlabel"))
-      else joined
-    val rescored = eligible.withColumn("sim", round(
-      VectorFunctions.dot(col("v"), col("qv")) /
-        (col("nrm") * col("qnrm")), 4))
-    val top = graft.plans.GroupTopK.topK(rescored,
-      Seq(col("anchor_id")), Seq(col("sim").desc, col("id").asc), k)
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(desc("sim"), asc("id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("anchor_id"), col("rank"), col("id").as("neg_id"),
-        col("neg_label"), col("sim"))
+    rankedTopK(if (filterLabels) joined.filter(isNegative) else joined, "anchor_id", k)
+      .select(NegativesOut: _*)
   }
 
   /** Corpus bucketing for the LSH path: adds `bucket` (nBits-bit
@@ -302,16 +328,14 @@ object Similarity {
     * q191 regression). The final corpus-wide assignment runs through
     * [[ivfAssign]] against the float-rounded centroids — the append
     * path's own definition, so a built row and an appended row can
-    * never disagree on their list. `seed` is retained for source
-    * compatibility; the deterministic schedule has no randomness to
-    * seed (pinned in `IndexLifecycleSpec`: two sessions with different
-    * shuffle-partition counts build bit-identical centroids and
-    * assignments). */
+    * never disagree on their list. The schedule has no randomness, so
+    * it takes no seed (pinned in `IndexLifecycleSpec`: two sessions with
+    * different shuffle-partition counts build bit-identical centroids
+    * and assignments). */
   def ivfIndex(
       corpus: DataFrame, id: Column, vec: Column,
-      nLists: Int, seed: Long = 42L,
+      nLists: Int,
       fitSampleRows: Long = 100000L): (Array[Array[Float]], DataFrame) = {
-    val _ = seed // no randomness left to seed; see scaladoc
     val c = Dedup.spread(corpus).select(id.cast("long").as("id"), vec.as("v"))
     // The fit sample is the `fitSampleRows` smallest values of
     // (xxhash64(id), id) — one TakeOrderedAndProject (bounded
@@ -912,12 +936,9 @@ object Similarity {
       s"Hamming ball has >= $ballSize buckets > maxProbeBuckets " +
         s"$maxProbeBuckets — use lshTopK's scan+filter form at this radius")
     val ball = hammingBall(center, nBits, probeHamming)
-    bucketed.filter(col("bucket").isin(ball: _*))
+    topKBySim(bucketed.filter(col("bucket").isin(ball: _*))
       .crossJoin(broadcast(qb))
-      .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+      .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4)), k)
   }
 
   /** Batch IVF ANN top-k — the MANY-queries probe path. [[ivfTopK]]
@@ -946,9 +967,23 @@ object Similarity {
       centroids: Array[Array[Float]], indexed: DataFrame,
       queries: DataFrame, qid: Column, qvec: Column,
       k: Int, nProbe: Int): DataFrame = {
-    def ddot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
+    val cand = batchProbe(centroids, indexed, queryBatch(queries, qid, qvec), nProbe)(
+      _.withColumn("nrm", norm(col("v"))))
+    rankedTopK(cand, "query_id", k).select(BatchOut: _*)
+  }
+
+  /** The batch probe-list choice of [[ivfTopKBatch]] and
+    * [[ivfPqShortlistBatch]]: each query row (query_id, qv, …) explodes
+    * to its `nProbe` nearest lists as `probe_list` (cosine argmin against
+    * the centroid literal — [[probeLists]]'s double arithmetic,
+    * descending cosine then ascending list), the union of probed list
+    * ids is collected (≤ nLists rows) and applied as a static
+    * `list IN (…)` filter so a loaded index scan prunes to the probed
+    * stripes, and `scan` of the probed rows joins the broadcast query
+    * rows on their lists, self-pairs excluded. */
+  private def batchProbe(
+      centroids: Array[Array[Float]], indexed: DataFrame, q: DataFrame,
+      nProbe: Int)(scan: DataFrame => DataFrame): DataFrame = {
     val cands = array(centroids.zipWithIndex.map { case (cv, i) =>
       struct(lit(i).as("list"), typedLit(cv.map(_.toDouble).toSeq).as("c"))
     }: _*)
@@ -962,25 +997,12 @@ object Similarity {
       ct.getField("list").as("list")))
     val probes = transform(
       slice(array_sort(scoredCands), 1, nProbe), s => s.getField("list"))
-    val q = queries
-      .select(qid.cast("long").as("query_id"), qvec.as("qv"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-      .withColumn("probe_list", explode(probes))
-    val probedLists = q.select(col("probe_list")).distinct()
+    val qp = q.withColumn("probe_list", explode(probes))
+    val probedLists = qp.select(col("probe_list")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val cand = indexed.filter(col("list").isin(probedLists: _*))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .join(broadcast(q), col("list") === col("probe_list"))
+    scan(indexed.filter(col("list").isin(probedLists: _*)))
+      .join(broadcast(qp), col("list") === col("probe_list"))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) /
-          (col("nrm") * col("qnrm")), 4))
-    val top = graft.plans.GroupTopK.topK(cand,
-      Seq(col("query_id")), Seq(col("sim").desc, col("id").asc), k)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("sim"), asc("id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("query_id"), col("id"), col("sim"), col("rank"))
   }
 
   /** Fold new vectors into a durable IVF index, assigned against its
@@ -1373,7 +1395,7 @@ object Similarity {
   /** Batch probe over the composed index — [[ivfTopKBatch]]'s
     * many-queries shape reading CODES instead of float vectors: the
     * whole anchor batch probes in ONE plan (per-query probe lists
-    * picked declaratively with [[ivfTopKBatch]]'s exact centroid
+    * picked declaratively by [[batchProbe]], [[ivfTopKBatch]]'s centroid
     * arithmetic; the bounded union of probed list ids applied as a
     * static filter, so a [[loadIvfPqIndex]] scan partition-prunes to
     * the probed stripes AND reads one long per row — the two scale
@@ -1398,9 +1420,7 @@ object Similarity {
     require(rerankN >= k, "rerankN must be >= k")
     val short = ivfPqShortlistBatch(centroids, cbs, indexed,
       queries, qid, qvec, nProbe, rerankN)
-    val q = queries
-      .select(qid.cast("long").as("query_id"), qvec.as("qv"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
+    val q = queryBatch(queries, qid, qvec)
     // Exact rerank: fetch the survivors' full vectors by id, rescore
     // with the 4-dp cosine, top-k per query. Broadcast gating runs on
     // rerankN ALONE — the query batch is parameter-sized by contract
@@ -1412,8 +1432,6 @@ object Similarity {
     val shortSide =
       if (rerankN <= RerankIsinMax) broadcast(short)
       else short
-    val c = corpus.select(id.cast("long").as("id"), vec.as("v"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
     // COVERAGE CONTRACT: `corpus` must supply the full vector of every
     // id in the index — a corpus handle resolved BEFORE the index's
     // latest append silently drops the appended ids at this inner join
@@ -1424,24 +1442,15 @@ object Similarity {
     // this to a corpus-wide shuffle). Resident daemons re-resolve the
     // corpus each batch (StreamingAnn.startRefreshingPq), which
     // discharges the contract by construction.
-    val rescored = c.join(shortSide, Seq("id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) /
-          (col("nrm") * col("qnrm")), 4))
-    val top = graft.plans.GroupTopK.topK(rescored,
-      Seq(col("query_id")), Seq(col("sim").desc, col("id").asc), k)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("sim"), asc("id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("query_id"), col("id"), col("sim"), col("rank"))
+    rankedTopK(vectors(corpus, id, vec).join(shortSide, Seq("id"))
+      .join(broadcast(q), Seq("query_id")), "query_id", k).select(BatchOut: _*)
   }
 
   /** The ADC shortlist half of [[ivfPqTopKBatch]] — also the durable
     * mining path's candidate source ([[hardNegativesAnnPq]]): probe
-    * lists picked declaratively ([[ivfTopKBatch]]'s expression
-    * verbatim), static partition pruning, per-(query, code) ADC
-    * expression mirroring [[adcApproxCol]]'s driver LUT term for term
+    * lists picked declaratively and the index pruned by [[batchProbe]],
+    * per-(query, code) ADC expression mirroring [[adcApproxCol]]'s
+    * driver LUT term for term
     * (per-subspace left-fold dots, left-to-right subspace sum, 6-dp
     * round — the single-query bit-equality gate), self-pairs excluded
     * before the bounded GroupTopK heaps. Output: (query_id, id) —
@@ -1452,25 +1461,6 @@ object Similarity {
       queries: DataFrame, qid: Column, qvec: Column,
       nProbe: Int, shortlistN: Int): DataFrame = {
     val codebooks = cbs.codebooks
-    def ddot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
-    val cands = array(centroids.zipWithIndex.map { case (cv, i) =>
-      struct(lit(i).as("list"), typedLit(cv.map(_.toDouble).toSeq).as("c"))
-    }: _*)
-    val qd = transform(col("qv"), _.cast("double"))
-    val scoredCands = transform(cands, ct => struct(
-      (ddot(qd, ct.getField("c")) * lit(-1.0d) /
-        (sqrt(ddot(qd, qd)) *
-          sqrt(ddot(ct.getField("c"), ct.getField("c"))))).as("negcos"),
-      ct.getField("list").as("list")))
-    val probes = transform(
-      slice(array_sort(scoredCands), 1, nProbe), s => s.getField("list"))
-    val q = queries
-      .select(qid.cast("long").as("query_id"), qvec.as("qv"))
-      .withColumn("probe_list", explode(probes))
-    val probedLists = q.select(col("probe_list")).distinct()
-      .collect().map(_.getInt(0)).toSeq
     // ADC per (query, code): scored with the RAW query vector exactly
     // like adcApproxCol's LUT (ranking-equivalent to unit-normalized —
     // qnrm is constant per query — and bit-mirroring is the contract),
@@ -1498,9 +1488,8 @@ object Similarity {
         round(lutSum + ddot(transform(col("qv"), _.cast("double")),
           element_at(ucArr, col("probe_list") + 1)), 6)
       } else round(lutSum, 6)
-    val cand = indexed.filter(col("list").isin(probedLists: _*))
-      .join(broadcast(q), col("list") === col("probe_list"))
-      .filter(col("id") =!= col("query_id"))
+    val cand = batchProbe(centroids, indexed,
+        queries.select(qid.cast("long").as("query_id"), qvec.as("qv")), nProbe)(identity)
       .withColumn("approx", approx)
     graft.plans.GroupTopK.topK(cand,
         Seq(col("query_id")), Seq(col("approx").desc, col("id").asc),
@@ -1528,23 +1517,10 @@ object Similarity {
       centroids: Array[Array[Float]],
       cbs: IvfPqCodebooks, indexed: DataFrame,
       corpus: DataFrame, id: Column, vec: Column, label: Column,
-      anchors: DataFrame, k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, "shortlist must be >= k")
-    val short = ivfPqShortlistBatch(centroids, cbs, indexed,
-        anchors.select(col("query_id"), col("qv")),
-        col("query_id"), col("qv"), nProbe, shortlist)
-      .select(col("query_id").as("anchor_id"), col("id"))
-    val c = Dedup.spread(corpus).select(id.cast("long").as("id"),
-        vec.as("v"), label.as("neg_label"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-    val q = anchors
-      .select(col("query_id").cast("long").as("anchor_id"), col("qv"),
-        col("qlabel"))
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-    // The code-served shortlist is label-blind, so the shared tail
-    // applies the self/label exclusions at the rerank.
-    rerankShortlist(c, q, short, k, shortlist, filterLabels = true)
-  }
+      anchors: DataFrame, k: Int, nProbe: Int, shortlist: Int): DataFrame =
+    rerankIndexShortlist(corpus, id, vec, label, anchors, k, shortlist)(
+      ivfPqShortlistBatch(centroids, cbs, indexed, _, col("query_id"), col("qv"),
+        nProbe, shortlist))
 
   /** The `nProbe` nearest inverted lists for a query — the driver-side
     * centroid scoring shared by [[ivfTopK]] and [[ivfPqTopK]] (nLists
@@ -1552,7 +1528,7 @@ object Similarity {
     * stable sortBy keeps the original index order for equal keys).
     *
     * The arithmetic MIRRORS the batch probes' declarative negcos
-    * expression term for term ([[ivfTopKBatch]]/[[ivfPqShortlistBatch]]:
+    * expression term for term ([[batchProbe]]:
     * per-element double products folded left-to-right, `dot * -1.0`
     * divided by the product of left-to-right-accumulated norms), so a
     * 1-query batch selects the same probe lists as this driver loop
@@ -1589,13 +1565,9 @@ object Similarity {
       queryVec: Array[Float], k: Int, nProbe: Int): DataFrame = {
     val probe = probeLists(centroids, queryVec, nProbe)
     val qv = typedLit(queryVec.toSeq)
-    indexed.filter(col("list").isin(probe.toSeq: _*))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), qv) / (col("nrm") * sqrt(VectorFunctions.normSq(qv))), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+    topKBySim(indexed.filter(col("list").isin(probe.toSeq: _*))
+      .withColumn("nrm", norm(col("v")))
+      .withColumn("sim", cosine4(qv = qv, qnrm = norm(qv))), k)
   }
 
   /** ANN top-k via hyperplane LSH with multi-probe: scan only corpus rows
@@ -1607,12 +1579,9 @@ object Similarity {
       nBits: Int, probeHamming: Int = 1): DataFrame = {
     val qb = query.withColumn("qbucket",
       VectorFunctions.hyperplaneBucket(col("qv"), nBits))
-    bucketed.crossJoin(broadcast(qb))
+    topKBySim(bucketed.crossJoin(broadcast(qb))
       .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming)
-      .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+      .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4)), k)
   }
 
   /** 1-row recall summary of an approximate result against its exact
@@ -1956,9 +1925,7 @@ object Similarity {
     * head of [[pqEncode]] and [[ivfPqEncode]]. */
   private def unitNormalized(
       vecs: DataFrame, id: Column, vec: Column): DataFrame =
-    Dedup.spread(vecs)
-      .select(id.cast("long").as("id"), vec.as("v"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
+    vectors(Dedup.spread(vecs), id, vec)
       .filter(col("nrm") > 0)
       .select(col("id"), col("v"),
         transform(col("v"), x => x.cast("double") / col("nrm")).as("u"))
@@ -2087,9 +2054,6 @@ object Similarity {
   private[graft] def adcLutSumHof(
       codebooks: Seq[(Int, Int, Array[Double])],
       qv: Column, codes: Column): Column = {
-    def ddot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
     val m = codebooks.map(_._1).max + 1
     val ksub = codebooks.map(_._2).max + 1
     val bits = java.lang.Integer.numberOfTrailingZeros(ksub)
@@ -2135,23 +2099,14 @@ object Similarity {
       queryVec: Array[Float], k: Int, rerankN: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = Seq(Tuple1(queryVec)).toDF("qv")
-      .withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))
-    val vecs = corpus.select(id.cast("long").as("id"), vec.as("v"))
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
+    val vecs = vectors(corpus, id, vec)
     val fetched =
       if (rerankN <= RerankIsinMax) {
         val ids = shortlist.select(col("id")).collect().map(_.getLong(0))
         if (ids.isEmpty) vecs.filter(lit(false))
         else vecs.filter(col("id").isin(ids.toSeq: _*))
       } else shortlist.join(vecs, "id")
-    fetched
-      .crossJoin(broadcast(q))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+    scoreQuery(fetched, Seq(Tuple1(queryVec)).toDF("qv"), k)
   }
 
   /** Per-group embedding centroids: mean vector over each `group`'s
@@ -2458,27 +2413,11 @@ object Similarity {
       query.select(lit(0L).as("qid"), col("qv").as("v")),
       col("qid"), col("v"), inDim, outDim, seed)
       .collect()(0).getSeq[Double](1)
-    val pq = typedLit(qp)
-    // pv/pq are array<double> — the HOF fold, not the float-only native
-    // FloatVecDot expression.
-    def ddot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
     val cand = projected
-      .withColumn("psim",
-        ddot(col("pv"), pq) /
-          (sqrt(ddot(col("pv"), col("pv"))) * sqrt(ddot(pq, pq))))
+      .withColumn("psim", dcos(col("pv"), typedLit(qp)))
       .orderBy(desc("psim"), asc("id"))
       .limit(shortlist)
       .select(col("id"))
-    c.join(broadcast(cand), "id")
-      .crossJoin(broadcast(
-        query.withColumn("qnrm", sqrt(VectorFunctions.normSq(col("qv"))))))
-      .withColumn("sim", round(
-        VectorFunctions.dot(col("v"), col("qv")) /
-          (sqrt(VectorFunctions.normSq(col("v"))) * col("qnrm")), 4))
-      .orderBy(desc("sim"), asc("id"))
-      .limit(k)
-      .select(col("id"), col("sim"))
+    scoreQuery(c.join(broadcast(cand), "id"), query, k, nrm = norm(col("v")))
   }
 }

@@ -41,7 +41,7 @@ object PipelineQueries {
     * fails: two runs never share or inherit an index. `body`'s result
     * must no longer read the index (a pinned leg, or a frame over
     * pinned legs). */
-  private def withScratchDir(name: String)(body: String => DataFrame): DataFrame = {
+  private def withScratchDir[T](name: String)(body: String => T): T = {
     val root = Files.createTempDirectory(s"graft_${name}_")
     try body(root.resolve("index").toString)
     finally Using.resource(Files.walk(root))(
@@ -98,6 +98,89 @@ object PipelineQueries {
   /** The hard-negative queries' match keys for [[recallVerdict]]. */
   private val HardNegFullOn = Seq("anchor_id", "rank", "neg_id", "neg_label", "sim")
   private val HardNegPartialOn = Seq("anchor_id", "neg_id")
+
+  /** The reload-recall skeleton of the durable ANN queries, in a scratch
+    * index directory of this run's own: `build` writes the index (and
+    * appends to it) from the build session while, beside it, `side` (the
+    * probes' driver-side input: the query vector, the corpus count) runs
+    * and the `exact` leg is pinned — nothing orders those reads of the
+    * corpus against the build chain, and concurrency changes no value.
+    * Strictly after the build, `probes` reloads the index in the fresh
+    * session the legs were built on and gives the full and partial legs.
+    * Returns the pinned (exact, full, partial) legs. */
+  private def reloadRecall[A](name: String)(
+      build: String => Unit, exact: DataFrame, side: => A)(
+      probes: (String, A) => (DataFrame, DataFrame)): (DataFrame, DataFrame, DataFrame) =
+    withScratchDir(name) { path =>
+      var exactP: DataFrame = null
+      var a: Option[A] = None
+      Similarity.inParallel(() => build(path), () => {
+        a = Some(side)
+        exactP = pinLeg(exact)
+      })
+      val (full, partial) = probes(path, a.get)
+      val Seq(fullP, partialP) = pinLegs(full, partial)
+      (exactP, fullP, partialP)
+    }
+
+  /** [[reloadRecall]] under q78's single-query contract over a corpus
+    * grown by append (q191, q193, q196, q199): `build` gets the build
+    * session's 4/5 of the corpus and the appended fifth; the exact leg is
+    * brute-force top-10 for vec 0 over the fresh session's corpus, `side`
+    * reads its query frame, and `probes` gets the fresh session, the
+    * index path, the corpus, the query frame and `side`'s value. */
+  private def appendRecall[A](spark: SparkSession, dir: String, name: String)(
+      build: (DataFrame, DataFrame, String) => Unit, side: DataFrame => A)(
+      probes: (SparkSession, String, DataFrame, DataFrame, A) => (DataFrame, DataFrame))
+      : (DataFrame, DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, dir)
+    val old = emb.filter(col("vec_id") =!= 0 &&
+      pmod(col("vec_id"), lit(5)) =!= 3)
+    val shard = emb.filter(col("vec_id") =!= 0 &&
+      pmod(col("vec_id"), lit(5)) === 3)
+    val fresh = spark.newSession()
+    val emb2 = Tables.embeddings(fresh, dir)
+    val corpus = emb2.filter(col("vec_id") =!= 0)
+    val q = emb2.filter(col("vec_id") === 0)
+      .select(col("embedding").as("qv"))
+    reloadRecall(name)(build(old, shard, _),
+        Similarity.bruteForceTopK(corpus, col("vec_id"), col("embedding"), q, k = 10),
+        side(q))(
+      probes(fresh, _, corpus, q, _))
+  }
+
+  /** The query vector of a one-row `qv` frame, for the literal probes. */
+  private def queryVector(q: DataFrame): Array[Float] =
+    q.collect().head.getSeq[Float](0).toArray
+
+  /** [[reloadRecall]] under q186's hard-negative contract (q195, q198):
+    * `build` gets the build session's corpus; the exact leg is
+    * [[Similarity.hardNegatives]] top-5 for the fresh session's anchors
+    * vec 0–9, beside the corpus count; `mine` reloads the index from the
+    * fresh session and mines it, given the fresh session's corpus and
+    * anchors, at (nProbe, shortlist): all 8 lists with a corpus-sized
+    * shortlist must be exact, 3 lists with a 30%-of-corpus shortlist
+    * (floored at 50) must keep recall ≥ 0.5. */
+  private def hardNegRecall(spark: SparkSession, dir: String, name: String)(
+      build: (DataFrame, String) => Unit)(
+      mine: (SparkSession, String, DataFrame, DataFrame) => (Int, Int) => DataFrame)
+      : DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    val fresh = spark.newSession()
+    val emb2 = Tables.embeddings(fresh, dir)
+    val anchors = emb2.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("label").as("qlabel"))
+    val (exactP, fullP, partialP) = reloadRecall(name)(build(emb, _),
+        Similarity.hardNegatives(
+          emb2, col("vec_id"), col("embedding"), col("label"), anchors, k = 5),
+        emb2.count()) { (path, n) =>
+      val probe = mine(fresh, path, emb2, anchors)
+      (probe(8, 1 << 20), probe(3, math.max(50L, n * 3 / 10).toInt))
+    }
+    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
+      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
+  }
 
   /** q18 — per-document text metrics: token count, punctuation ratio,
     * stopword ratio, mean token length, 0-4 quality score. */
@@ -818,41 +901,16 @@ object PipelineQueries {
     * measurements its margin). Oracle
     * as q186: n_exact verified from the exact side, booleans literal. */
   def q195HardNegativesAnnIvf(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q195_ivf") { path =>
-    val emb = Tables.embeddings(spark, dir)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val anchors = emb2.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("label").as("qlabel"))
-    val exact = Similarity.hardNegatives(
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors, k = 5)
-    // Overlap (guide §2.6): the exact mining leg and the corpus count
-    // read only the corpus — independent of the fit → write chain
-    // (q191's discipline; the reload stays strictly after the write).
-    var exactP: DataFrame = null
-    var n = 0L
-    Similarity.inParallel(
-      () => {
-        val (centroids, indexed) = Similarity.ivfIndex(
-          emb, col("vec_id"), col("embedding"), nLists = 8)
-        Similarity.writeIvfIndex(centroids, indexed, path)
-      },
-      () => {
-        n = emb2.count()
-        exactP = pinLeg(exact)
-      })
-    val (cents, lists) = Similarity.loadIvfIndex(fresh, path)
-    val full = Similarity.hardNegativesAnn(cents, lists,
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors,
-      k = 5, nProbe = 8, shortlist = 1 << 20)
-    val partial = Similarity.hardNegativesAnn(cents, lists,
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors,
-      k = 5, nProbe = 3, shortlist = math.max(50L, n * 3 / 10).toInt)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
-    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
-      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
-  }
+    hardNegRecall(spark, dir, "q195_ivf") { (emb, path) =>
+      val (centroids, indexed) = Similarity.ivfIndex(
+        emb, col("vec_id"), col("embedding"), nLists = 8)
+      Similarity.writeIvfIndex(centroids, indexed, path)
+    } { (fresh, path, emb2, anchors) =>
+      val (cents, lists) = Similarity.loadIvfIndex(fresh, path)
+      (nProbe, shortlist) => Similarity.hardNegativesAnn(cents, lists,
+        emb2, col("vec_id"), col("embedding"), col("label"), anchors,
+        k = 5, nProbe = nProbe, shortlist = shortlist)
+    }
 
   /** q196 — composed IVF+PQ durable index (FAISS IVFADC's layout), the
     * FIFTH durable family through the full write(4/5) → APPEND(1/5) →
@@ -889,30 +947,14 @@ object PipelineQueries {
   /** q196's composition under one codebook `encoding` (q199 forces
     * `"residual"` and adds `residual_pinned`). */
   private def ivfPqReloadProbe(
-      spark: SparkSession, dir: String, encoding: String): DataFrame =
-    withScratchDir(s"q196_ivfpq_$encoding") { path =>
-    val emb = Tables.embeddings(spark, dir)
-    val old = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) =!= 3)
-    val shard = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) === 3)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val corpus = emb2.filter(col("vec_id") =!= 0)
-    val q = emb2.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopK(
-      corpus, col("vec_id"), col("embedding"), q, k = 10)
+      spark: SparkSession, dir: String, encoding: String): DataFrame = {
+    var pinned = ""
     // Both frozen artifacts fit on the BUILD corpus: the deterministic
     // ivfIndex fit (its distributed assignment half is lazy and unused
     // here — ivfPqEncode re-derives the list inline) and q89's PQ
-    // codebook fit. Overlap (guide §2.6): the exact baseline and the
-    // query-vector collect read only the corpus — independent of the
-    // whole fit → write → append chain (q191's discipline).
-    var exactP: DataFrame = null
-    var qv: Array[Float] = null
-    Similarity.inParallel(
-      () => {
+    // codebook fit.
+    val (exactP, fullP, partialP) = appendRecall(spark, dir, s"q196_ivfpq_$encoding")(
+      (old, shard, path) => {
         val (centroids, _) = Similarity.ivfIndex(
           old, col("vec_id"), col("embedding"), nLists = 8)
         val cbs = Similarity.ivfPqFitCodebooks(
@@ -923,21 +965,18 @@ object PipelineQueries {
             old, col("vec_id"), col("embedding"), centroids, cbs), path)
         Similarity.appendToIvfPqIndex(
           shard, col("vec_id"), col("embedding"), path)
-      },
-      () => {
-        qv = q.collect().head.getSeq[Float](0).toArray
-        exactP = pinLeg(exact)
-      })
-    val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
-    val full = Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
-      col("vec_id"), col("embedding"), qv, k = 10, nProbe = 8,
-      rerankN = 1 << 20)
-    val partial = Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
-      col("vec_id"), col("embedding"), qv, k = 10, nProbe = 3,
-      rerankN = 100)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
+      }, queryVector) { (fresh, path, corpus, _, qv) =>
+      val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
+      pinned = cbs2.encoding
+      (Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
+          col("vec_id"), col("embedding"), qv, k = 10, nProbe = 8,
+          rerankN = 1 << 20),
+        Similarity.ivfPqTopK(cents, cbs2, codes, corpus,
+          col("vec_id"), col("embedding"), qv, k = 10, nProbe = 3,
+          rerankN = 100))
+    }
     recallVerdict(exactP, fullP, partialP, "full_probe_exact", extra =
-      if (encoding == "residual") Seq(lit(cbs2.encoding == "residual").as("residual_pinned"))
+      if (encoding == "residual") Seq(lit(pinned == "residual").as("residual_pinned"))
       else Nil)
   }
 
@@ -995,45 +1034,21 @@ object PipelineQueries {
     * as q186/q195: n_exact verified from the exact side, booleans
     * literal. */
   def q198HardNegativesAnnPq(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q198_ivfpq") { path =>
-    val emb = Tables.embeddings(spark, dir)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val anchors = emb2.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("label").as("qlabel"))
-    val exact = Similarity.hardNegatives(
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors, k = 5)
-    // Overlap (guide §2.6): exact mining leg + corpus count vs the
-    // fit → write chain — q191's discipline.
-    var exactP: DataFrame = null
-    var n = 0L
-    Similarity.inParallel(
-      () => {
-        val (centroids, _) = Similarity.ivfIndex(
-          emb, col("vec_id"), col("embedding"), nLists = 8)
-        val cbs = Similarity.ivfPqFitCodebooks(
-          emb, col("vec_id"), col("embedding"), centroids,
-          m = 16, ksub = 16, iters = 1)
-        Similarity.writeIvfPqIndex(centroids, cbs,
-          Similarity.ivfPqEncode(
-            emb, col("vec_id"), col("embedding"), centroids, cbs), path)
-      },
-      () => {
-        n = emb2.count()
-        exactP = pinLeg(exact)
-      })
-    val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
-    val full = Similarity.hardNegativesAnnPq(cents, cbs2, codes,
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors,
-      k = 5, nProbe = 8, shortlist = 1 << 20)
-    val partial = Similarity.hardNegativesAnnPq(cents, cbs2, codes,
-      emb2, col("vec_id"), col("embedding"), col("label"), anchors,
-      k = 5, nProbe = 3, shortlist = math.max(50L, n * 3 / 10).toInt)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
-    recallVerdict(exactP, fullP, partialP, "full_shortlist_exact",
-      fullOn = HardNegFullOn, partialOn = HardNegPartialOn)
-  }
+    hardNegRecall(spark, dir, "q198_ivfpq") { (emb, path) =>
+      val (centroids, _) = Similarity.ivfIndex(
+        emb, col("vec_id"), col("embedding"), nLists = 8)
+      val cbs = Similarity.ivfPqFitCodebooks(
+        emb, col("vec_id"), col("embedding"), centroids,
+        m = 16, ksub = 16, iters = 1)
+      Similarity.writeIvfPqIndex(centroids, cbs,
+        Similarity.ivfPqEncode(
+          emb, col("vec_id"), col("embedding"), centroids, cbs), path)
+    } { (fresh, path, emb2, anchors) =>
+      val (cents, cbs2, codes) = Similarity.loadIvfPqIndex(fresh, path)
+      (nProbe, shortlist) => Similarity.hardNegativesAnnPq(cents, cbs2, codes,
+        emb2, col("vec_id"), col("embedding"), col("label"), anchors,
+        k = 5, nProbe = nProbe, shortlist = shortlist)
+    }
 
   /** q199 — the composed lifecycle under FORCED RESIDUAL encoding
     * (IVFADC proper): q196's exact write(4/5) → append(1/5) →
@@ -1365,43 +1380,19 @@ object PipelineQueries {
     * ≥ 0.5 even though the centroids never saw the shard. Same oracle
     * SQL as q78 (the exact side is unchanged; the booleans are the
     * contract as literals). */
-  def q191IvfAppendProbe(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q191_ivf") { path =>
-    val emb = Tables.embeddings(spark, dir)
-    val old = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) =!= 3)
-    val shard = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) === 3)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val corpus = emb2.filter(col("vec_id") =!= 0)
-    val q = emb2.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopK(
-      corpus, col("vec_id"), col("embedding"), q, k = 10)
-    // Overlap (guide §2.6): the exact baseline and the query-vector
-    // collect read only the corpus parquet — nothing orders them
-    // against the build chain (fit → write → append), a long sequence
-    // of small bounded jobs. Concurrency changes no value; the reload
-    // below still happens strictly after the append.
-    var exactP: DataFrame = null
-    var qv: Array[Float] = null
-    Similarity.inParallel(
-      () => {
+  def q191IvfAppendProbe(spark: SparkSession, dir: String): DataFrame = {
+    val (exactP, fullP, partialP) = appendRecall(spark, dir, "q191_ivf")(
+      (old, shard, path) => {
         val (centroids, indexed) = Similarity.ivfIndex(
           old, col("vec_id"), col("embedding"), nLists = 8)
         Similarity.writeIvfIndex(centroids, indexed, path)
         Similarity.appendToIvfIndex(
           shard, col("vec_id"), col("embedding"), path)
-      },
-      () => {
-        qv = q.collect().head.getSeq[Float](0).toArray
-        exactP = pinLeg(exact)
-      })
-    val (cents, lists) = Similarity.loadIvfIndex(fresh, path)
-    val full = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 8)
-    val partial = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
+      }, queryVector) { (fresh, path, _, _, qv) =>
+      val (cents, lists) = Similarity.loadIvfIndex(fresh, path)
+      (Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 8),
+        Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3))
+    }
     recallVerdict(exactP, fullP, partialP, "full_probe_exact")
   }
 
@@ -1437,52 +1428,34 @@ object PipelineQueries {
   /** q193 — durable LSH index lifecycle: the FOURTH ANN structure
     * through the same write→APPEND→fresh-reload discipline as
     * q190/q191. The bucketed corpus is built on 4/5 of the vectors and
-    * landed partitioned by `bucket` (nBits = 8 — partition count is a
-    * layout parameter, sized small locally, with the corpus at scale),
-    * the remaining fifth appends via [[Similarity.appendToLshIndex]]
+    * landed in the flat layout: files sorted by `bucket`, each holding a
+    * contiguous bucket range (nBits = 8 — a layout parameter, sized
+    * small locally, with the corpus at scale); the remaining fifth
+    * appends via [[Similarity.appendToLshIndex]]
     * (banded by the meta-pinned nBits through the same hash-seeded
     * [[Similarity.bucketize]], so appended rows are byte-identical to
     * a build-time banding). A fresh session reloads and runs the q78
     * contract: probing the FULL Hamming ball must reproduce exact
     * brute-force top-10 over the union (every vector is in some
     * bucket — the append is provably complete), and a Hamming-2
-    * multi-probe through [[Similarity.lshTopKPruned]] — the partition-
-    * pruned form, 37 of ≤256 stripes opened — must keep recall ≥ 0.3
+    * multi-probe through [[Similarity.lshTopKPruned]] — the pruned
+    * form: its 37-bucket ball (of 256) pushes down to the files'
+    * row-group statistics on `bucket` — must keep recall ≥ 0.3
     * (q79's floor at the mid-recall regime: testdata neighbors sit at
     * ~2.7 expected bit flips of 8, so Hamming-2 is the honest
     * mid-recall ball, not the recall≈1 regime). */
-  def q193LshReloadProbe(spark: SparkSession, dir: String): DataFrame =
-    withScratchDir("q193_lsh") { path =>
-    val nBits = 8
-    val emb = Tables.embeddings(spark, dir)
-    val old = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) =!= 3)
-    val shard = emb.filter(col("vec_id") =!= 0 &&
-      pmod(col("vec_id"), lit(5)) === 3)
-    val fresh = spark.newSession()
-    val emb2 = Tables.embeddings(fresh, dir)
-    val corpus = emb2.filter(col("vec_id") =!= 0)
-    val q = emb2.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val exact = Similarity.bruteForceTopK(
-      corpus, col("vec_id"), col("embedding"), q, k = 10)
-    // Overlap (guide §2.6): the exact baseline reads only the corpus —
-    // independent of the write → append chain (q191's discipline).
-    var exactP: DataFrame = null
-    Similarity.inParallel(
-      () => {
+  def q193LshReloadProbe(spark: SparkSession, dir: String): DataFrame = {
+    val (exactP, fullP, partialP) = appendRecall(spark, dir, "q193_lsh")(
+      (old, shard, path) => {
         Similarity.writeLshIndex(
-          old, col("vec_id"), col("embedding"), nBits, path)
+          old, col("vec_id"), col("embedding"), nBits = 8, path)
         Similarity.appendToLshIndex(
           shard, col("vec_id"), col("embedding"), path)
-      },
-      () => exactP = pinLeg(exact))
-    val (nb, loaded) = Similarity.loadLshIndex(fresh, path)
-    val full = Similarity.lshTopK(loaded, q, k = 10, nBits = nb,
-      probeHamming = nb)
-    val partial = Similarity.lshTopKPruned(loaded, q, k = 10, nBits = nb,
-      probeHamming = 2)
-    val Seq(fullP, partialP) = pinLegs(full, partial)
+      }, _ => ()) { (fresh, path, _, q, _) =>
+      val (nb, loaded) = Similarity.loadLshIndex(fresh, path)
+      (Similarity.lshTopK(loaded, q, k = 10, nBits = nb, probeHamming = nb),
+        Similarity.lshTopKPruned(loaded, q, k = 10, nBits = nb, probeHamming = 2))
+    }
     recallVerdict(exactP, fullP, partialP, "full_probe_exact", floor = 0.3)
   }
 

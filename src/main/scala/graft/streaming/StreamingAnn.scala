@@ -142,8 +142,8 @@ object StreamingAnn {
   private def startWith(
       spark: SparkSession, inputDir: String, schema: StructType,
       checkpointDir: String, trigger: Trigger)(
-      probe: Dataset[Row] => Unit): StreamingQuery = {
-    val probeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
+      probe: Dataset[Row] => Unit): StreamingQuery =
+    ParquetScreen.start(spark, inputDir, schema, checkpointDir, trigger) { (batch, _) =>
       // Cache the batch rows once: the operator reads them twice (the
       // probe-list projection collected driver-side and the broadcast
       // join side), and caching inside the operator would leak one
@@ -155,11 +155,4 @@ object StreamingAnn {
         ()
       }
     }
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch(probeBatch)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
 }

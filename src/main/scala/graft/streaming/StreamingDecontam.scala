@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -51,17 +51,10 @@ object StreamingDecontam {
       idCol: Column, textCol: Column,
       filterBytes: Array[Byte], n: Int, minOverlap: Double,
       outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val screen: (Dataset[Row], Long) => Unit = { (batch, _) =>
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ParquetScreen.start(spark, inputDir, schema, checkpointDir, trigger) { (batch, _) =>
       scoreBatch(batch, idCol, textCol, filterBytes, n)
         .filter(col("overlap") >= minOverlap)
         .write.mode(SaveMode.Append).parquet(outDir)
     }
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch(screen)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -41,8 +41,8 @@ object StreamingDedup {
       idCol: Column, textCol: Column,
       index: Dedup.CorpusIndex, threshold: Double,
       outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val flagBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ParquetScreen.start(spark, inputDir, schema, checkpointDir, trigger) { (batch, _) =>
       // Cache the batch rows once; the operator's shingle relation is
       // computed from them twice (banded + verify side) and caching
       // INSIDE the operator would leak one cache entry per micro-batch.
@@ -53,11 +53,4 @@ object StreamingDedup {
           .write.mode(SaveMode.Append).parquet(outDir)
       } finally batch.unpersist()
     }
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch(flagBatch)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -106,8 +106,8 @@ object StreamingGovernance {
       blockedHosts: Seq[String], blockedDomains: Seq[String],
       multiPartTlds: Seq[String], capPerDomain: Int,
       outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val screen: (Dataset[Row], Long) => Unit = { (batch, _) =>
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ParquetScreen.start(spark, inputDir, schema, checkpointDir, trigger) { (batch, _) =>
       val screened = screenBatch(batch, idCol, urlCol,
         blockedHosts, blockedDomains, multiPartTlds)
       // The sink IS the state: cap-bounded, so this read is cheap
@@ -129,11 +129,4 @@ object StreamingGovernance {
       admitBatch(screened, admitted, capPerDomain)
         .write.mode(SaveMode.Append).parquet(outDir)
     }
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch(screen)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
 }

@@ -4,8 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
+
+  private val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+
+  override def afterAll(): Unit =
+    try SpecScratch.clean(spark, runId) finally super.afterAll()
 
   // Planted corpus: 0/1 exact dups, 2 near-dup of them (one word changed),
   // 3/4 shuffled-word dups, 5 unrelated.
@@ -812,7 +817,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("a one-document point probe of a loaded corpus index runs at most 2 jobs, tombstones included, and its result reads without a job") {
-    val prefix = s"graft_dedup_pt_${java.util.UUID.randomUUID.toString.take(8).replace("-", "")}"
+    val prefix = s"graft_dedup_pt_$runId"
     val all = graft.sources.Tables.documents(spark, sf)
     val built = Dedup.corpusIndex(all.filter(col("source") =!= "src0"), col("doc_id"), col("text"))
     Dedup.writeCorpusIndex(built, prefix, buckets = 4)

@@ -40,10 +40,14 @@ import graft.sources.Tables
   * by whichever test runs first — a `-z` single-test run still works)
   * and lands under per-run names/paths, so concurrent suite runs never
   * collide on a shared warehouse or /tmp. */
-class IndexLifecycleSpec extends SparkSpec {
+class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val runId =
     java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+
+  override def afterAll(): Unit =
+    try SpecScratch.clean(spark, runId) finally super.afterAll()
+
   private def tmpDir(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${name}_$runId"
 

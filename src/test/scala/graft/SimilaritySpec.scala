@@ -291,21 +291,87 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val (centroids, indexed) = Similarity.ivfIndex(
       emb.filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"), nLists = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft-sim-ivf-").toString
-    Similarity.writeIvfIndex(centroids, indexed, path)
-    Similarity.deleteFromIvfIndex(Seq(1L, 2L, 3L).toDF("id"), col("id"), path)
-    val (cents, lists) = Similarity.loadIvfIndex(spark.newSession(), path)
-    val q0 = emb.filter(col("vec_id") === 0)
-    val qv = q0.select(col("embedding")).collect().head.getSeq[Float](0).toArray
-    Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect() // warm
-    val (single, jobs) = JobCount(spark)(
-      Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect().toSeq)
-    // Measured: 1 job, the pruned list scan plus the top-k. (With the
-    // query broadcast and the tombstone anti-join it was 3.)
-    assert(jobs === 1, s"ivfTopK ran $jobs jobs")
-    val batch = Similarity.ivfTopKBatch(cents, lists, q0, col("vec_id"), col("embedding"),
-      k = 10, nProbe = 3).orderBy(asc("rank")).select(col("id"), col("sim")).collect().toSeq
-    assert(single === batch)
-    assert(!single.exists(r => Set(1L, 2L, 3L)(r.getLong(0))))
+    val root = java.nio.file.Files.createTempDirectory("graft-sim-ivf-")
+    val path = root.toString
+    try {
+      Similarity.writeIvfIndex(centroids, indexed, path)
+      Similarity.deleteFromIvfIndex(Seq(1L, 2L, 3L).toDF("id"), col("id"), path)
+      val (cents, lists) = Similarity.loadIvfIndex(spark.newSession(), path)
+      val q0 = emb.filter(col("vec_id") === 0)
+      val qv = q0.select(col("embedding")).collect().head.getSeq[Float](0).toArray
+      Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect() // warm
+      val (single, jobs) = JobCount(spark)(
+        Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect().toSeq)
+      // Measured: 1 job, the pruned list scan plus the top-k. (With the
+      // query broadcast and the tombstone anti-join it was 3.)
+      assert(jobs === 1, s"ivfTopK ran $jobs jobs")
+      val batch = Similarity.ivfTopKBatch(cents, lists, q0, col("vec_id"), col("embedding"),
+        k = 10, nProbe = 3).orderBy(asc("rank")).select(col("id"), col("sim")).collect().toSeq
+      assert(single === batch)
+      assert(!single.exists(r => Set(1L, 2L, 3L)(r.getLong(0))))
+    } finally SpecScratch.deleteTree(root.toFile)
+  }
+
+  test("probe budgets: construction plus collect of each probe") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
+    val qv = q.collect().head.getSeq[Float](0).toArray
+    val queries = emb.filter(col("vec_id") < 5)
+    val anchors = emb.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"),
+      col("embedding").as("qv"), col("label").as("qlabel"))
+    val (id, vec, label) = (col("vec_id"), col("embedding"), col("label"))
+    val root = java.nio.file.Files.createTempDirectory("graft-sim-budget-")
+    try {
+      val (centroids, indexed) = Similarity.ivfIndex(corpus, id, vec, nLists = 8)
+      Similarity.writeIvfIndex(centroids, indexed, s"$root/ivf")
+      val (cents, lists) = Similarity.loadIvfIndex(spark, s"$root/ivf")
+      val cbs = Similarity.ivfPqFitCodebooks(corpus, id, vec, centroids,
+        m = 16, ksub = 16, iters = 1)
+      Similarity.writeIvfPqIndex(centroids, cbs,
+        Similarity.ivfPqEncode(corpus, id, vec, centroids, cbs), s"$root/ivfpq")
+      val (pqCents, pqCbs, codes) = Similarity.loadIvfPqIndex(spark, s"$root/ivfpq")
+      val (flatCbs, encoded) = Similarity.pqIndex(corpus, id, vec, m = 16, ksub = 16, iters = 1)
+      Similarity.writePqIndex(flatCbs, encoded, s"$root/pq")
+      val (flatCbs2, flatCodes) = Similarity.loadPqIndex(spark, s"$root/pq")
+      Similarity.writeLshIndex(corpus, id, vec, nBits = 8, s"$root/lsh")
+      val (nBits, buckets) = Similarity.loadLshIndex(spark, s"$root/lsh")
+      Similarity.randomProjection(corpus, id, vec, 64, 16).write.parquet(s"$root/rp")
+      val projected = spark.read.parquet(s"$root/rp")
+      val probes = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "bruteForceTopK" -> (() => Similarity.bruteForceTopK(corpus, id, vec, q, 10)),
+        "bruteForceTopKBatch" -> (() =>
+          Similarity.bruteForceTopKBatch(corpus, id, vec, queries, id, vec, 5)),
+        "hardNegatives" -> (() => Similarity.hardNegatives(corpus, id, vec, label, anchors, 5)),
+        "hardNegativesShortlist" -> (() => Similarity.hardNegativesShortlist(
+          corpus, id, vec, label, anchors, k = 5, inDim = 64, outDim = 16, shortlist = 50)),
+        "hardNegativesAnn" -> (() => Similarity.hardNegativesAnn(cents, lists,
+          corpus, id, vec, label, anchors, k = 5, nProbe = 3, shortlist = 50)),
+        "hardNegativesAnnPq" -> (() => Similarity.hardNegativesAnnPq(pqCents, pqCbs, codes,
+          corpus, id, vec, label, anchors, k = 5, nProbe = 3, shortlist = 50)),
+        "ivfTopKBatch" -> (() => Similarity.ivfTopKBatch(cents, lists,
+          queries, id, vec, k = 5, nProbe = 3)),
+        "ivfPqTopK" -> (() => Similarity.ivfPqTopK(pqCents, pqCbs, codes,
+          corpus, id, vec, qv, k = 10, nProbe = 3, rerankN = 100)),
+        "ivfPqTopKBatch" -> (() => Similarity.ivfPqTopKBatch(pqCents, pqCbs, codes,
+          corpus, id, vec, queries, id, vec, k = 5, nProbe = 3, rerankN = 50)),
+        "pqTopK" -> (() => Similarity.pqTopK(flatCbs2, flatCodes,
+          corpus, id, vec, qv, k = 10, rerankN = 100)),
+        "lshTopKPruned" -> (() => Similarity.lshTopKPruned(buckets, q, k = 10,
+          nBits = nBits, probeHamming = 2)),
+        "projectedTopKPrebuilt" -> (() => Similarity.projectedTopKPrebuilt(corpus, id, vec,
+          projected, q, inDim = 64, outDim = 16, shortlist = 50, k = 10)))
+      val jobs = probes.map { case (name, probe) =>
+        name -> JobCount(spark)(probe().collect())._2 }
+      // Budgets at the measured counts (4 cores).
+      val budget = Map(
+        "bruteForceTopK" -> 3, "bruteForceTopKBatch" -> 5, "hardNegatives" -> 5,
+        "hardNegativesShortlist" -> 11, "hardNegativesAnn" -> 12,
+        "hardNegativesAnnPq" -> 12, "ivfTopKBatch" -> 6, "ivfPqTopK" -> 3,
+        "ivfPqTopKBatch" -> 9, "pqTopK" -> 3, "lshTopKPruned" -> 3,
+        "projectedTopKPrebuilt" -> 6)
+      assert(jobs.forall { case (probe, n) => n <= budget(probe) },
+        s"job budget exceeded: measured $jobs, budget $budget")
+    } finally SpecScratch.deleteTree(root.toFile)
   }
 }

@@ -7,8 +7,13 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Dedup
 
-class StreamingDedupSpec extends SparkSpec {
+class StreamingDedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
+
+  private val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+
+  override def afterAll(): Unit =
+    try graft.SpecScratch.clean(spark, runId) finally super.afterAll()
 
   // Reference corpus (ids 100+) and three "arriving" shards (ids 0-5):
   // 0 exact-dups corpus 100, 1 near-dups it (last word changed,
@@ -30,7 +35,7 @@ class StreamingDedupSpec extends SparkSpec {
         (5L, "another novel document with fresh words only")))
 
   test("streaming shard-vs-corpus near-dup equals the batch operator, with zero streaming state") {
-    val root = Files.createTempDirectory("streamdedup").toString
+    val root = Files.createTempDirectory(s"graft_sd_$runId").toString
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"
@@ -79,7 +84,6 @@ class StreamingDedupSpec extends SparkSpec {
     // handle over the bucketed tables. The stream's per-batch probe must
     // equal the batch operator run with the same reloaded handle (and,
     // via IndexLifecycleSpec's bit-equal gate, the original build).
-    val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
     val prefix = s"graft_idx_sd_$runId"
     val built = Dedup.corpusIndex(
       corpusRows.toDF("doc_id", "text"), col("doc_id"), col("text"))
@@ -88,7 +92,7 @@ class StreamingDedupSpec extends SparkSpec {
 
     val fresh = spark.newSession()
     val loaded = Dedup.loadCorpusIndex(fresh, prefix)
-    val root = Files.createTempDirectory("streamdedup_reload").toString
+    val root = Files.createTempDirectory(s"graft_sd_reload_$runId").toString
     val inDir = s"$root/in"
     shardRows.flatten.toDF("doc_id", "text").write.parquet(inDir)
     val schema = fresh.read.parquet(inDir).schema
