@@ -1051,7 +1051,9 @@ object Dedup {
     * prefix (e.g. `graft_idx_<corpus>`). */
   def writeCorpusIndex(
       index: CorpusIndex, tablePrefix: String, buckets: Int = 32): Unit = {
-    writeCorpusTables(index, tablePrefix, buckets)
+    requireIndexPrefix(tablePrefix)
+    writeCorpusTables(index, tablePrefix, buckets, withMeta = true)
+    val spark = index.rel.sparkSession
     // A fresh index has no deletions: stale tombstones from a previous
     // index under the same prefix (same-JVM or orphaned-location) would
     // silently hide rows of the NEW index — and their location blocks
@@ -1062,7 +1064,6 @@ object Dedup {
     // writes succeed: a crash mid-rebuild leaves the OLD tombstones
     // over broken data tables (which indexMeta surfaces loudly) rather
     // than cleared tombstones silently resurrecting deleted rows.
-    val spark = index.rel.sparkSession
     resetCorpusTable(spark, tombstonesTable(tablePrefix))
     seedTombstones(spark, tablePrefix)
   }
@@ -1094,16 +1095,19 @@ object Dedup {
     ()
   }
 
-  /** The DATA half of [[writeCorpusIndex]] — banded/rel/meta only,
-    * tombstones untouched. [[compactCorpusIndex]] routes here so its
-    * tombstone handling can be the snapshot-scoped erase (a blanket
-    * reset would discard a delete raced in while the survivor rewrite
-    * ran — the lost-delete hazard the ANN compactions guard too). */
+  /** The DATA half of [[writeCorpusIndex]] — banded/rel, and meta when
+    * `withMeta`; tombstones untouched. [[compactCorpusIndex]] routes here
+    * so its tombstone handling can be the snapshot-scoped erase (a
+    * blanket reset would discard a delete raced in while the survivor
+    * rewrite ran — the lost-delete hazard the ANN compactions guard too),
+    * without `withMeta`: the scheme row does not change, and a crash
+    * mid-compaction must not leave the index without it. */
   private def writeCorpusTables(
-      index: CorpusIndex, tablePrefix: String, buckets: Int): Unit = {
-    requireIndexPrefix(tablePrefix)
+      index: CorpusIndex, tablePrefix: String, buckets: Int,
+      withMeta: Boolean): Unit = {
     val spark = index.rel.sparkSession
     def reset(name: String): Unit = resetCorpusTable(spark, name)
+    import spark.implicits._
     // Place whole buckets on the write tasks BEFORE the bucketed write
     // ([[bucketPlaced]]): each task then writes ONE file per bucket it
     // holds. Without it every task opens a file per bucket it touches
@@ -1112,12 +1116,17 @@ object Dedup {
     // write-once/probe-for-weeks trade; the probe plan never sees it
     // (the scan's distribution comes from the catalog bucket spec, not
     // the file layout).
-    import spark.implicits._
-    // The three tables are independent artifacts — reset+write each on
-    // its own thread (Similarity.inParallel, guide §2.6: back to back
-    // they paid three job floors; the banded/rel relations are both
-    // persisted, so the concurrent writes read the cache, not recompute).
-    Similarity.inParallel(
+    // The tables are independent artifacts — reset+write each on its own
+    // thread (Similarity.inParallel: back to back they paid a job floor
+    // each; the banded/rel relations are both persisted, so the
+    // concurrent writes read the cache, not recompute).
+    val meta = () => {
+      reset(s"${tablePrefix}_meta")
+      Seq((index.n, index.k, index.bands)).toDF("n", "k", "bands")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .format("parquet").saveAsTable(s"${tablePrefix}_meta")
+    }
+    Similarity.inParallel(Seq(
       () => {
         reset(s"${tablePrefix}_banded")
         bucketPlaced(index.banded, buckets, Seq("bh"))
@@ -1131,13 +1140,7 @@ object Dedup {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .bucketBy(buckets, "id").sortBy("id")
           .format("parquet").saveAsTable(s"${tablePrefix}_rel")
-      },
-      () => {
-        reset(s"${tablePrefix}_meta")
-        Seq((index.n, index.k, index.bands)).toDF("n", "k", "bands")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").saveAsTable(s"${tablePrefix}_meta")
-      })
+      }) ++ (if (withMeta) Seq(meta) else Nil): _*)
   }
 
   /** `df` placed for a `bucketBy(numBuckets, cols)` write: the stripe is
@@ -1337,7 +1340,7 @@ object Dedup {
     val banded = Materialize.pin(idx.banded)
     writeCorpusTables(
       CorpusIndex(rel, banded, idx.n, idx.k, idx.bands),
-      tablePrefix, buckets)
+      tablePrefix, buckets, withMeta = false)
     // Erase only the snapshotted files; the table itself stays (its
     // schema lives in the catalog, so an all-files-erased table reads
     // as empty and later deletes still Append into it).
@@ -1440,10 +1443,9 @@ object Dedup {
     val rel = shingleRel(shard, id, text, m.getAs[Int]("n"), k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Materialize the shared shingle relation ONCE before the two
-      // inserts run concurrently — otherwise both would race to compute
-      // the same persist.
-      rel.count()
+      // The two inserts below share the persisted shingle relation; the
+      // block manager computes each cached partition once and the other
+      // insert waits for it, so no count() materializes it first.
       // insertInto matches columns BY POSITION — select in table order.
       // Place by the table's own bucket spec first (the
       // writeCorpusIndex discipline): without it a shard written by T

@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
@@ -12,12 +15,13 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** The file side every durable index shares — both stacks, every family:
-  * where a write's rows go ([[placed]]) and how the small artifacts are
-  * read back ([[dataFiles]], [[readRows]]).
+  * where a write's rows go ([[placed]]), how the small artifacts are
+  * read back ([[dataFiles]], [[readRows]]) and the stripe interval each
+  * data file covers ([[intervals]]).
   *
   * '''Placement.''' Every index writer lands its rows in stripes: an IVF
-  * or IVF+PQ posting list (`partitionBy("list")`), a MinHash table bucket
-  * (`bucketBy`), an LSH bucket range (the flat sorted layout). A write
+  * or IVF+PQ posting list and an LSH bucket (the flat sorted layout,
+  * [[PathIndex]]'s one writer), a MinHash table bucket (`bucketBy`). A write
   * task that holds a whole stripe writes it as ONE file, so every writer
   * clusters its rows by stripe first. [[placed]] is that clustering for
   * all of them: it gives each of `T` write tasks a contiguous range of
@@ -27,7 +31,7 @@ import org.apache.spark.sql.types._
   * tasks idle and doubles others up: hashing 4 lists into 4 partitions
   * fills 2 of them) and no sampling job runs (`repartitionByRange`
   * would). Placement is a hint only: the writer still assigns bucket ids
-  * and directories and sorts within each task, so no result depends on
+  * and sorts within each task, so no result depends on
   * it, only the file count and the task count.
   *
   * `T` comes from the input, not from the stripe count
@@ -83,6 +87,27 @@ private[operators] object IndexFiles {
         !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith(".")).toSeq
     }
+
+  /** Each parquet file's [min, max] of the integral `column`, from its
+    * footer's row-group statistics, read on the driver (no Spark job). A
+    * file with no rows has no interval; a row group without statistics
+    * makes its file's interval unbounded, since any probe may have to
+    * open it. */
+  def intervals(spark: SparkSession, files: Seq[FileStatus], column: String): Seq[(Long, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.flatMap { s =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+      val bounds = try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+        val stats = b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
+        stats.fold((Long.MinValue, Long.MaxValue)) { st =>
+          (st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue)
+        }
+      } finally reader.close()
+      if (bounds.isEmpty) None else Some((bounds.map(_._1).min, bounds.map(_._2).max))
+    }
+  }
 
   /** Each record of the parquet `files`, read on the driver (parquet
     * pages, no Spark job). For parameter-sized artifacts and the

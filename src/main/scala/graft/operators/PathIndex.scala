@@ -1,7 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -18,14 +20,12 @@ import org.apache.spark.storage.StorageLevel
   * @param data       the data subdirectory every verb scans or lands in
   * @param schema     the data directory's declared read schema
   * @param stripe     the stripe column and its stripe count; `None` for a
-  *                   flat table with no probe key to prune by
+  *                   table with no probe key to prune by
   * @param readParams the parameter artifacts, read on the driver (no job)
   * @param writeParams one writer per parameter artifact
   * @param encode     assign or encode raw vectors under frozen parameters:
   *                   the same expression a build runs, so an appended row
-  *                   is byte-identical to a built one
-  * @param land       write encoded rows (the stripe count given) into a
-  *                   data directory: shared by write, append and compact */
+  *                   is byte-identical to a built one */
 private[operators] final case class PathFamily[P](
     name: String,
     params: Seq[String],
@@ -34,8 +34,7 @@ private[operators] final case class PathFamily[P](
     stripe: Option[(String, P => Long)],
     readParams: (SparkSession, String) => P,
     writeParams: (SparkSession, P, String) => Seq[() => Unit],
-    encode: (DataFrame, Column, Column, P) => DataFrame,
-    land: (DataFrame, Long, String, SaveMode) => Unit) {
+    encode: (DataFrame, Column, Column, P) => DataFrame) {
   def parts: Seq[String] = params :+ data
   def kind: String = name.toLowerCase
   def nStripes(p: P): Long = stripe.fold(1L)(_._2(p))
@@ -58,6 +57,20 @@ private[operators] final case class PathFamily[P](
   * closes it: cleared first, created last, required by every later verb
   * ([[requireIndexDir]]), so any interrupted write reads as a
   * must-rebuild failure.
+  *
+  * '''Layout.''' A striped family (IVF, IVF+PQ, LSH) lands every write,
+  * append and compaction through one writer ([[land]]): whole stripes
+  * placed on the write tasks ([[IndexFiles.placed]]), rows sorted by
+  * (stripe, id), plain parquet files in a flat data directory. Each file
+  * holds a contiguous stripe range, so its footer's min/max of the stripe
+  * column is a tight interval, the intervals of one write do not overlap,
+  * and a probe's `stripe IN (…)` filter is answered from footer and
+  * row-group statistics: only the files whose interval covers a probed
+  * stripe return rows. There is no directory per stripe: a directory per
+  * LSH bucket cost 5.6–16 s per write against 1.3–1.5 s for the flat
+  * layout (sf0.1, 32 cores, same data and tasks), and is 65,536
+  * directories at nBits = 16. A family without stripes (PQ) writes its
+  * rows as they come.
   *
   * '''Load''' checks the layout and the marker, reads the parameters on
   * the driver, and returns the data scan filtered by one tombstone
@@ -90,9 +103,12 @@ private[operators] final case class PathFamily[P](
   * named by the next verb: an unfinished write (no marker) and a
   * compaction stopped between its renames (`<data>__pre_compact`, no
   * `<data>`) fail with a message naming the state; a half-written
-  * tombstone batch (`_temporary` under `tombstones/`) is never read, and
-  * a compaction stopped before its first rename leaves a stray
-  * `<data>__compact` the next compaction replaces. */
+  * tombstone batch (`_temporary` under `tombstones/`) is never read, nor
+  * is a half-written seed (the driver writes it under a `_` name and
+  * renames it into place, [[Tombstones.seed]]: before the rename the
+  * directory reads as no tombstones); and a compaction stopped before
+  * its first rename leaves a stray `<data>__compact` the next compaction
+  * replaces. */
 private[operators] object PathIndex {
 
   private val CompletionMarker = "_GRAFT_INDEX_COMPLETE"
@@ -114,12 +130,21 @@ private[operators] object PathIndex {
   private def scan(f: PathFamily[_], spark: SparkSession, path: String): DataFrame =
     spark.read.schema(f.schema).parquet(s"$path/${f.data}")
 
+  /** The one data writer of write, append and compaction: the layout
+    * above. An append adds at most one file per write task, merged back
+    * by compaction. */
+  private def land[P](f: PathFamily[P], df: DataFrame, p: P, dir: String,
+      mode: SaveMode): Unit =
+    f.stripe.fold(df) { case (s, _) =>
+      IndexFiles.placed(df, col(s), f.nStripes(p)).sortWithinPartitions(col(s), col("id"))
+    }.write.mode(mode).parquet(dir)
+
   def write[P](f: PathFamily[P], p: P, encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
     val marker = new Path(s"$path/$CompletionMarker")
     fs(spark, path).delete(marker, false)
     Similarity.inParallel(
-      (() => f.land(encoded, f.nStripes(p), s"$path/${f.data}", SaveMode.Overwrite)) +:
+      (() => land(f, encoded, p, s"$path/${f.data}", SaveMode.Overwrite)) +:
         f.writeParams(spark, p, path): _*)
     Tombstones.seed(spark, tombstones(path), SaveMode.Overwrite)
     fs(spark, path).create(marker, true).close()
@@ -156,21 +181,17 @@ private[operators] object PathIndex {
         // precedence over the live-id one.
         Similarity.inParallel(() => notTombstoned(), () => newIds(None, ids))
         val p = f.readParams(spark, path)
-        f.land(f.encode(newVecs, id, vec, p), f.nStripes(p), dir, SaveMode.Append)
+        land(f, f.encode(newVecs, id, vec, p), p, dir, SaveMode.Append)
       case Some((stripe, _)) =>
         notTombstoned()
         val p = f.readParams(spark, path)
-        val n = f.nStripes(p)
         val encoded = f.encode(newVecs, id, vec, p).persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          // The touched set is bounded by min(|shard|, nStripes); prune
-          // while it stays IN-literal-sized.
-          val distinct = encoded.select(col(stripe)).distinct()
-          val touched = (if (n > LiveGuardMaxStripes) distinct.limit(LiveGuardMaxStripes + 1)
-            else distinct).collect().map(_.get(0)).toSeq
+          // Prune while the touched set stays IN-literal-sized.
+          val touched = touchedStripes(encoded.select(col(stripe)))
           newIds(if (touched.size > LiveGuardMaxStripes) None
             else Some(col(stripe).isin(touched: _*)), encoded)
-          f.land(encoded, n, dir, SaveMode.Append)
+          land(f, encoded, p, dir, SaveMode.Append)
         } finally {
           encoded.unpersist()
           ()
@@ -184,14 +205,13 @@ private[operators] object PathIndex {
     val survivors = tombs.live(scan(f, spark, path))
     require(!survivors.isEmpty,
       s"compaction would EMPTY the index at '$path' — every row is " +
-        "tombstoned, and an empty partitioned layout is unreadable. An " +
-        "all-deleted index has nothing left to probe: delete the index " +
+        "tombstoned. An all-deleted index has nothing left to probe: delete the index " +
         "directory (or rebuild on a non-empty corpus) instead")
-    val n = f.nStripes(f.readParams(spark, path))
+    val p = f.readParams(spark, path)
     // Survivors come back at the core count; a striped landing's own
     // placement replaces that repartition (Spark collapses the two).
     swapInPlace(spark, s"$path/${f.data}") { tmp =>
-      f.land(Dedup.spread(survivors), n, tmp, SaveMode.Overwrite)
+      land(f, Dedup.spread(survivors), p, tmp, SaveMode.Overwrite)
     }
     tombs.erase()
     // Keep the relation readable: an empty batch, appended so that a
@@ -253,8 +273,7 @@ private[operators] object PathIndex {
     * both index stacks ([[Dedup.appendToCorpusIndex]]). */
   def requireNewIds(existingIds: DataFrame, shard: DataFrame, verb: String,
       where: String): Unit = {
-    val clash = existingIds.join(shard.select(col("id")), Seq("id"), "left_semi")
-      .limit(5).collect().map(_.getLong(0))
+    val clash = firstIds(existingIds.join(shard.select(col("id")), Seq("id"), "left_semi"), 5)
     require(clash.isEmpty,
       s"$verb would duplicate LIVE id(s) ${clash.mkString(", ")}" +
         (if (clash.length == 5) ", …" else "") +
@@ -265,16 +284,46 @@ private[operators] object PathIndex {
         "ids) or by deleting + compacting the id first")
   }
 
+  /** Up to `n` non-null values of `ids`' `id` column, in ONE job: each
+    * partition keeps its first `n` and the driver keeps the first `n` of
+    * those. `limit(n).collect()` would run a one-task job first and then,
+    * when that partition falls short, a second job over the rest. For the
+    * guards' error messages, which name a few offending ids. */
+  def firstIds(ids: DataFrame, n: Int): Array[Long] =
+    ids.select(col("id").cast("long").as("id")).filter(col("id").isNotNull)
+      .as(Encoders.scalaLong).mapPartitions(_.take(n))(Encoders.scalaLong)
+      .collect().take(n)
+
+  /** The distinct non-null values of `stripes`' one column, in ONE job:
+    * each partition keeps a set of at most [[LiveGuardMaxStripes]] + 1
+    * values and the driver merges them, so no distinct exchange runs. A
+    * result past [[LiveGuardMaxStripes]] means "too many to prune by" and
+    * may be cut short. */
+  private def touchedStripes(stripes: DataFrame): Seq[Any] = {
+    val cap = LiveGuardMaxStripes + 1
+    stripes.mapPartitions { rows =>
+      val seen = mutable.HashSet[Row]()
+      while (rows.hasNext && seen.size < cap) {
+        val r = rows.next()
+        if (!r.isNullAt(0)) seen += r
+      }
+      seen.iterator
+    }(Encoders.row(stripes.schema)).collect().map(_.get(0)).distinct.toSeq
+  }
+
   /** One index's family and layout counts: the health report's row. */
-  final case class Health(family: PathFamily[_], nStripes: Int, nDataFiles: Int,
+  final case class Health(family: PathFamily[_], nStripes: Long, nDataFiles: Int,
       maxFilesPerStripe: Int, nTombstoneFiles: Int, tombstoneBytes: Long)
 
   /** The family at `path` — the one with the most of its subdirectories
     * present, its data directory and a parameter directory among them
     * (ties go to the family with fewer parts: an IVF index is also a
-    * partial IVF+PQ one) — and its layout counts. A striped data
-    * directory's stripes are its subdirectories; a flat one is one
-    * stripe. Driver-side metadata only, no job. */
+    * partial IVF+PQ one) — and its layout counts. `nStripes` is the
+    * family's stripe count (1 for a family without stripes), and
+    * `maxFilesPerStripe` the most files a one-stripe probe opens: the
+    * deepest overlap of the files' stripe intervals, read from their
+    * footers (every file, for a family without stripes). Driver-side
+    * metadata only, no job. */
   def health(spark: SparkSession, path: String,
       families: Seq[PathFamily[_]]): Health = {
     val present = families.map(f => f -> f.parts.count(s => exists(spark, s"$path/$s")))
@@ -286,12 +335,24 @@ private[operators] object PathIndex {
         "(writeCorpusIndex's layout — indexHealth/compactIfNeeded dispatch " +
         "there when '<prefix>_meta' exists in the catalog)")
     val f = present.maxBy { case (f, n) => (n, -f.parts.size) }._1
-    val stripes = fs(spark, path).listStatus(new Path(s"$path/${f.data}")).filter(s =>
-      s.isDirectory && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    val counts =
-      if (stripes.isEmpty) Seq(IndexFiles.dataFiles(spark, Some(s"$path/${f.data}")).size)
-      else stripes.toSeq.map(s => IndexFiles.dataFiles(spark, Some(s.getPath.toString)).size)
-    val tfs = IndexFiles.dataFiles(spark, Some(tombstones(path)))
-    Health(f, counts.size, counts.sum, counts.max, tfs.size, tfs.map(_.getLen).sum)
+    health(spark, path, f)
   }
+
+  private def health[P](spark: SparkSession, path: String, f: PathFamily[P]): Health = {
+    val files = IndexFiles.dataFiles(spark, Some(s"$path/${f.data}"))
+    val perStripe = f.stripe.fold(files.size) { case (s, _) =>
+      maxOverlap(IndexFiles.intervals(spark, files, s))
+    }
+    val tfs = IndexFiles.dataFiles(spark, Some(tombstones(path)))
+    Health(f, f.nStripes(f.readParams(spark, path)), files.size, perStripe,
+      tfs.size, tfs.map(_.getLen).sum)
+  }
+
+  /** The most closed intervals covering any one point: a sweep over the
+    * sorted endpoints, a start counted before an end at the same point. */
+  private def maxOverlap(intervals: Seq[(Long, Long)]): Int =
+    intervals.flatMap { case (lo, hi) => Seq((lo, 0), (hi, 1)) }.sorted
+      .foldLeft((0, 0)) { case ((open, most), (_, end)) =>
+        if (end == 0) (open + 1, most max (open + 1)) else (open - 1, most)
+      }._2
 }

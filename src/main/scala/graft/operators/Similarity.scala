@@ -208,7 +208,7 @@ object Similarity {
   /** [[hardNegatives]] mined through a DURABLE IVF index — the actual
     * 100 TB shape the scaladocs above name: the shortlist comes from
     * ONE [[ivfTopKBatch]] plan over [[loadIvfIndex]]'s handle (whole
-    * anchor batch, partition-pruned to the probed stripes, bounded
+    * anchor batch, pruned to the probed stripes' files, bounded
     * heaps), then [[rerankIndexShortlist]] — exact full-dimension
     * rerank with the label filter — runs on the parameter-sized
     * shortlist. Identical output contract:
@@ -226,7 +226,7 @@ object Similarity {
     * [[hardNegatives]] EXACTLY (the q195 completeness gate); a finite
     * shortlist is recall-floor-gated like q186.
     *
-    * Scale shape: one partition-pruned index scan + broadcast
+    * Scale shape: one stripe-pruned index scan + broadcast
     * equi-join for the whole batch (never a job per anchor), a
     * ≤ shortlist-per-(anchor × partition) heap shuffle, and a rerank
     * that reads |anchors|·shortlist corpus rows via the same
@@ -299,8 +299,9 @@ object Similarity {
   /** IVF index: k-means centroids trained on a bounded SAMPLE of the
     * corpus, every vector assigned to its nearest centroid (the
     * "inverted list" it lives in). [[writeIvfIndex]]/[[loadIvfIndex]]
-    * are the durable form: posting lists land partitioned by `list`,
-    * so at 100 TB each list is a partition-prunable stripe and probes
+    * are the durable form: posting lists land sorted by `list` in flat
+    * files of contiguous list ranges, so at 100 TB a probe's list filter
+    * prunes by the files' statistics and probes
     * in later sessions never rescan the corpus.
     *
     * Sample fit is the scale design, not an approximation shortcut: the
@@ -553,15 +554,16 @@ object Similarity {
   }
 
   /** Durable form of the IVF index ([[Ivf]]) — write once, probe across
-    * sessions. The posting lists land as parquet PARTITIONED by `list`
-    * (each inverted list is its own directory stripe), the centroids as
-    * a tiny (list, centroid) table beside them. A reloaded probe's
-    * `list IN (probes)` filter is then PARTITION PRUNING: the scan opens
-    * only the `nProbe` probed directories and never touches the rest of
-    * the corpus — the layout that makes IVF an index rather than a
-    * filter (gated in `IndexLifecycleSpec`: probe ≡ same-session build
-    * bit-equal, plan carries the partition filter). The write and
-    * crash discipline is [[PathIndex.write]]'s. */
+    * sessions. The posting lists land as flat parquet files, each a
+    * contiguous range of lists sorted by (list, id), the centroids as a
+    * tiny (list, centroid) table beside them. A reloaded probe's
+    * `list IN (probes)` filter pushes down to the files' footer and
+    * row-group statistics: only the files whose list interval covers a
+    * probed list return rows, and the rest of the corpus is never read —
+    * the layout that makes IVF an index rather than a filter (gated in
+    * `IndexLifecycleSpec`: probe ≡ same-session build bit-equal, the scan
+    * carries the pushed `list` filter). The write and crash discipline is
+    * [[PathIndex.write]]'s. */
   def writeIvfIndex(
       centroids: Array[Array[Float]], indexed: DataFrame,
       path: String): Unit =
@@ -569,8 +571,8 @@ object Similarity {
 
   /** Reload a [[writeIvfIndex]]-persisted index in (possibly) a fresh
     * session: (centroids ordered by list id, posting-list scan). The
-    * posting-list frame is the partitioned scan itself, not a cache:
-    * [[ivfTopK]]'s probe filter prunes to the probed partitions, so
+    * posting-list frame is the flat scan itself, not a cache:
+    * [[ivfTopK]]'s probe filter prunes to the probed lists' files, so
     * steady-state probe cost is the probed lists' bytes, independent of
     * corpus size. */
   def loadIvfIndex(
@@ -620,7 +622,7 @@ object Similarity {
     PathIndex.compact(Ivf, spark, path)
 
   /** [[compactIvfIndex]] for the LSH layout: the appends' files merge back
-    * into one [[writeLshBuckets]] placement of range-sorted files. */
+    * into one placement of range-sorted files. */
   def compactLshIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     PathIndex.compact(Lsh, spark, path)
@@ -641,9 +643,7 @@ object Similarity {
     * object store at scale. The schemas are fixed by our own writers,
     * so the read side declares them; a drifted file still fails
     * LOUDLY at scan time (parquet verifies the requested columns
-    * against the footer), never silently. Partition columns (IVF's
-    * `list`) are declared too — Spark resolves them from the directory
-    * names against the declared type. */
+    * against the footer), never silently. */
   private object ArtifactSchemas {
     import org.apache.spark.sql.types._
     val ivfCentroids: StructType = StructType(Seq(
@@ -656,17 +656,19 @@ object Similarity {
       StructField("n_bits", IntegerType)))
     val ivfPqMeta: StructType = StructType(Seq(
       StructField("encoding", StringType)))
-    /** [[bucketize]]'s output, [[writeLshBuckets]]'s flat landing. */
+    /** [[bucketize]]'s output, flat, sorted by `bucket`. */
     val lshBuckets: StructType = StructType(Seq(
       StructField("id", LongType),
       StructField("v", ArrayType(FloatType)),
       StructField("bucket", LongType)))
-    /** [[ivfAssign]]'s output under `partitionBy(list)`. */
+    /** [[ivfAssign]]'s output, flat, sorted by `list`: `list` is a data
+      * column, so a probe's `list IN (…)` reaches the file footers. */
     val ivfLists: StructType = StructType(Seq(
       StructField("id", LongType),
       StructField("v", ArrayType(FloatType)),
       StructField("list", IntegerType)))
-    /** [[ivfPqEncode]]'s output under `partitionBy(list)`. */
+    /** [[ivfPqEncode]]'s output, flat, sorted by `list` (a data column,
+      * as in [[ivfLists]]). */
     val ivfPqLists: StructType = StructType(Seq(
       StructField("id", LongType),
       StructField("codes", LongType),
@@ -684,19 +686,23 @@ object Similarity {
     *
     * | family | parameters                    | data      | stripe                | landing |
     * |--------|-------------------------------|-----------|-----------------------|---------|
-    * | Ivf    | centroids                     | lists     | list (centroid count) | `partitionBy("list")` |
-    * | IvfPq  | centroids, codebooks, meta    | lists     | list (centroid count) | `partitionBy("list")` |
-    * | Lsh    | meta (`n_bits`)               | buckets   | bucket (`1 << nBits`) | [[writeLshBuckets]] |
-    * | Pq     | codebooks                     | codes     | none                  | flat |
+    * | Ivf    | centroids                     | lists     | list (centroid count) | striped |
+    * | IvfPq  | centroids, codebooks, meta    | lists     | list (centroid count) | striped |
+    * | Lsh    | meta (`n_bits`)               | buckets   | bucket (`1 << nBits`) | striped |
+    * | Pq     | codebooks                     | codes     | none                  | as it comes |
     *
     * The encode steps are [[ivfAssign]], [[ivfPqEncode]], [[bucketize]]
-    * and [[pqEncode]]. A striped landing places whole stripes on each
-    * write task ([[IndexFiles.placed]]), one file per stripe per write. */
+    * and [[pqEncode]]. Every family lands in a flat data directory through
+    * [[PathIndex]]'s one writer; a striped landing places whole stripes on
+    * each write task ([[IndexFiles.placed]]) and sorts them by
+    * (stripe, id), one file per task whose stripe intervals do not
+    * overlap, and the stripe is a data column every probe filter pushes
+    * down to the footer and row-group statistics. */
   private val Ivf = PathFamily[Array[Array[Float]]](
     "Ivf", Seq("centroids"), "lists", ArtifactSchemas.ivfLists,
     Some(("list", c => c.length.toLong)), loadIvfCentroids,
     (spark, c, path) => Seq(() => writeCentroids(spark, c, path)),
-    ivfAssign, landLists)
+    ivfAssign)
 
   private val IvfPq = PathFamily[(Array[Array[Float]], IvfPqCodebooks)](
     "IvfPq", Seq("centroids", "codebooks", "meta"), "lists", ArtifactSchemas.ivfPqLists,
@@ -709,7 +715,7 @@ object Similarity {
       () => writeCodebooks(spark, p._2.codebooks, path),
       () => writeParam(spark.createDataFrame(Seq(Tuple1(p._2.encoding))).toDF("encoding"),
         s"$path/meta")),
-    (vecs, id, vec, p) => ivfPqEncode(vecs, id, vec, p._1, p._2), landLists)
+    (vecs, id, vec, p) => ivfPqEncode(vecs, id, vec, p._1, p._2))
 
   private val Lsh = PathFamily[Int](
     "Lsh", Seq("meta"), "buckets", ArtifactSchemas.lshBuckets,
@@ -717,22 +723,15 @@ object Similarity {
     loadMeta(_, _, ArtifactSchemas.lshMeta, "Lsh").getInt(0),
     (spark, nBits, path) => Seq(() => writeParam(
       spark.createDataFrame(Seq(Tuple1(nBits))).toDF("n_bits"), s"$path/meta")),
-    bucketize, writeLshBuckets)
+    bucketize)
 
   private val Pq = PathFamily[Seq[(Int, Int, Array[Double])]](
     "Pq", Seq("codebooks"), "codes", ArtifactSchemas.pqCodes, None, loadPqCodebooks,
     (spark, cbs, path) => Seq(() => writeCodebooks(spark, cbs, path)),
-    pqEncode, (df, _, dir, mode) => df.write.mode(mode).parquet(dir))
+    pqEncode)
 
   /** Health detection's table. */
   private val PathFamilies: Seq[PathFamily[_]] = Seq(IvfPq, Ivf, Lsh, Pq)
-
-  /** IVF and IVF+PQ landing: posting lists partitioned by `list`. */
-  private def landLists(
-      df: DataFrame, nLists: Long, dir: String,
-      mode: org.apache.spark.sql.SaveMode): Unit =
-    IndexFiles.placed(df, col("list"), nLists)
-      .write.mode(mode).partitionBy("list").parquet(dir)
 
   private def writeParam(df: DataFrame, dir: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
@@ -814,36 +813,6 @@ object Similarity {
     l2Assign(cands, transform(v, _.cast("double")))
   }
 
-  /** Land a banded (id, v, bucket) frame as the LSH index's FLAT
-    * bucket-range-sorted layout (round 21, guide §6): a bounded number
-    * of plain parquet files, each holding a contiguous bucket RANGE
-    * with rows sorted by (bucket, id) — instead of one directory+file
-    * per bucket. Rationale, measured (R21Lsh3, sf0.1/32c): the
-    * dir-per-bucket dynamic-partition write cost 5.6–16 s against
-    * 1.3–1.5 s for this layout — at 2^nBits = 256 stripes the
-    * file/directory COUNT is the cost (same data, same tasks:
-    * range-partitioned writes into the same 254 dirs stayed at ~5 s) —
-    * and at the production nBits = 16 geometry the old layout is 65536
-    * directories of file-sized stripes, pure FS-metadata pressure.
-    * Probe pruning moves from directory names to parquet ROW-GROUP
-    * statistics: rows are sorted by bucket, so every row group carries
-    * a tight [min, max] bucket interval and the probes' existing
-    * `bucket IN (ball)` / `bucket = qb` filters push down to the scan
-    * (plan-gated in IndexLifecycleSpec) — footers are the only read
-    * amplification. Each write task holds a contiguous bucket range
-    * ([[IndexFiles.placed]] with the bucket as the stripe:
-    * `⌊bucket·T / 2^nBits⌋`, computed, so no sampling job re-runs the
-    * banding the way repartitionByRange would) and writes it as one
-    * sorted file, so the files' bucket intervals never overlap. Appends
-    * reuse the same shape, so nightly growth adds ≤ T range-sorted
-    * files, merged by compaction. */
-  private def writeLshBuckets(
-      banded: DataFrame, nStripes: Long, dir: String,
-      mode: org.apache.spark.sql.SaveMode): Unit =
-    IndexFiles.placed(banded, col("bucket"), nStripes)
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.mode(mode).parquet(dir)
-
   /** Durable form of the hyperplane-LSH index ([[Lsh]]): the corpus is
     * banded here through [[bucketize]] with the nBits the meta table pins,
     * so the pinned scheme and the banding cannot disagree. */
@@ -905,7 +874,7 @@ object Similarity {
     * Hamming ball is enumerated driver-side (the query's own bucket is
     * one bounded collect — the scalar-subquery class) and applied as a
     * static `bucket IN (…)` filter: over a [[loadLshIndex]] scan —
-    * flat files sorted by bucket ([[writeLshBuckets]]) — the predicate
+    * flat files sorted by bucket ([[PathIndex]]'s writer) — the predicate
     * pushes down to the parquet row-group statistics, so only the
     * ball's row groups are READ (plan-gated in `IndexLifecycleSpec`).
     * Identical result set by construction — `bucket ∈
@@ -952,7 +921,7 @@ object Similarity {
     * batch is bit-equal to the per-query form), the union of probed
     * list ids is collected (≤ nLists rows — the bounded driver-side
     * class) and applied as a STATIC `list IN (…)` filter so a durable
-    * [[loadIvfIndex]] scan partition-prunes to the probed stripes, and
+    * [[loadIvfIndex]] scan prunes to the probed stripes' files, and
     * candidates come from one broadcast equi-join on `list` (the
     * parameter-sized query batch broadcasts; a corpus row joins once
     * per query probing its list, never more — each row lives in
@@ -1006,9 +975,9 @@ object Similarity {
   }
 
   /** Fold new vectors into a durable IVF index, assigned against its
-    * frozen centroids ([[ivfAssign]]): the nightly-growth path. Appends
-    * add files to the touched `list=` stripes; existing posting lists
-    * are never rewritten ([[PathIndex.append]]). */
+    * frozen centroids ([[ivfAssign]]): the nightly-growth path. An append
+    * lands as at most T new list-range files; existing posting lists are
+    * never rewritten ([[PathIndex.append]]). */
   def appendToIvfIndex(
       newVecs: DataFrame, id: Column, vec: Column, path: String): Unit =
     PathIndex.append(Ivf, newVecs, id, vec, path)
@@ -1043,8 +1012,8 @@ object Similarity {
     * plain-IVF probe reads FULL-DIMENSION float vectors of every row in
     * the probed stripes, so at 100 TB × d ≥ 768 the probed-stripe BYTES
     * are the cost even though the pruning is right. Here the
-    * list-partitioned stripes store (id, codes) — ONE long per row, the
-    * 32× PQ compression — so a probe is: partition-pruned stripe scan
+    * list-sorted stripes store (id, codes) — ONE long per row, the
+    * 32× PQ compression — so a probe is: statistics-pruned stripe scan
     * of codes → ADC-score the probed rows against the driver-built LUT
     * ([[adcApproxCol]], the one decode definition) → exact rerank of
     * the rerankN survivors against full vectors fetched BY ID from the
@@ -1055,8 +1024,8 @@ object Similarity {
     * (q196's oracle contract); finite settings trade recall for the
     * pruned + compressed scan.
     *
-    * Artifacts under `path`: `lists/` — (id, codes) PARTITIONED by
-    * `list`, clustered one file per stripe; `centroids/` — the frozen
+    * Artifacts under `path`: `lists/` — (id, codes, list) in flat files
+    * sorted by (list, id), each a contiguous list range; `centroids/` — the frozen
     * IVF centroids ([[writeIvfIndex]]'s table); `codebooks/` — the
     * frozen PQ codebooks ([[writePqIndex]]'s table); `tombstones/` —
     * the logical-delete relation every load filters by. Growth encodes
@@ -1301,8 +1270,8 @@ object Similarity {
     * cap) — these wrappers turn the measurement into policy: a report
     * frame an operator can chart, and a guard a nightly job calls
     * after its append instead of scheduling compactions by folklore.
-    * Both are driver-side FILESYSTEM METADATA only — no Spark job, so
-    * they are safe to call at any frequency. */
+    * Both read driver-side FILESYSTEM METADATA and parquet footers only —
+    * no Spark job, so they are safe to call at any frequency. */
 
   /** `path` names a durable CORPUS index (table-prefix layout,
     * [[graft.operators.Dedup.writeCorpusIndex]]) rather than a
@@ -1318,7 +1287,10 @@ object Similarity {
   /** One-row health report for ANY durable index — the four path-based
     * ANN families: (kind, n_stripes, n_data_files,
     * max_files_per_stripe, n_tombstone_files, tombstone_bytes,
-    * tombstone_broadcast_ok, needs_compaction) — or, when `path` is a
+    * tombstone_broadcast_ok, needs_compaction) — `n_stripes` is the
+    * family's stripe count (a bigint: an LSH index has 2^nBits), and
+    * `max_files_per_stripe` the most files a one-stripe probe opens,
+    * from the files' stripe intervals ([[PathIndex.health]]) — or, when `path` is a
     * corpus-index table prefix, [[graft.operators.Dedup
     * .corpusIndexHealth]]'s frame (same knee thresholds, the bucketed-
     * table column names). `needs_compaction` applies the measured-knee
@@ -1397,7 +1369,7 @@ object Similarity {
     * whole anchor batch probes in ONE plan (per-query probe lists
     * picked declaratively by [[batchProbe]], [[ivfTopKBatch]]'s centroid
     * arithmetic; the bounded union of probed list ids applied as a
-    * static filter, so a [[loadIvfPqIndex]] scan partition-prunes to
+    * static filter, so a [[loadIvfPqIndex]] scan prunes to
     * the probed stripes AND reads one long per row — the two scale
     * levers composed), each (query, code) pair is ADC-scored by an
     * EXPRESSION whose float association mirrors [[adcApproxCol]]'s
@@ -1500,7 +1472,7 @@ object Similarity {
   /** [[hardNegatives]] mined through the COMPOSED durable index — the
     * minimum-bytes form of [[hardNegativesAnn]]'s 100 TB shape: the
     * whole anchor batch's shortlist comes from ONE
-    * [[ivfPqShortlistBatch]] plan (partition-pruned CODE stripes — one
+    * [[ivfPqShortlistBatch]] plan (statistics-pruned CODE stripes — one
     * long per probed row instead of d floats — bounded heaps), then
     * the SHARED label-filtered exact rerank tail ([[rerankShortlist]],
     * the q186/q195 definition) runs on the parameter-sized shortlist.

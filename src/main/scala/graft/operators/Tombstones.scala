@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.FileStatus
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.{MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,7 +82,7 @@ private[operators] final class Tombstones private (
           case Some(b) => shard.filter(!isLive(b))
           case None => shard.join(frame, Seq("id"), "left_semi")
         }
-        hit.limit(5).collect().map(_.getLong(0))
+        PathIndex.firstIds(hit, 5)
       }
     require(clash.isEmpty,
       s"append would re-ingest tombstoned id(s) ${clash.mkString(", ")} " +
@@ -105,19 +110,35 @@ private[operators] object Tombstones {
 
   private val Schema = StructType(Seq(StructField("id", LongType)))
 
-  /** One delete batch: the distinct ids, appended as one file. */
+  /** One delete batch: the distinct ids, appended as one file. The
+    * distinct runs in the one task `coalesce(1)` leaves, whose single
+    * partition already satisfies the aggregate's distribution: no
+    * exchange, one job. */
   def append(ids: DataFrame, id: Column, dir: String): Unit =
-    write(ids.select(id.cast(LongType).as("id")).distinct(), dir, SaveMode.Append)
+    ids.select(id.cast(LongType).as("id")).coalesce(1).distinct()
+      .write.mode(SaveMode.Append).parquet(dir)
 
   /** An empty batch (one schema-only file), so the relation exists and is
     * readable with nothing deleted. `Overwrite` also resets stale
     * tombstones (an index write); `Append` keeps a delete racing the
-    * caller (a compaction's re-seed). */
-  def seed(spark: SparkSession, dir: String, mode: SaveMode): Unit =
-    write(spark.range(0).select(col("id")), dir, mode)
-
-  private def write(ids: DataFrame, dir: String, mode: SaveMode): Unit =
-    ids.coalesce(1).write.mode(mode).parquet(dir)
+    * caller (a compaction's re-seed). Written on the driver with no Spark
+    * job: the file is written under a `_` name, which no reader lists
+    * ([[IndexFiles.dataFiles]], Spark's file index), and renamed into
+    * place, so a crash mid-seed leaves nothing readable. */
+  def seed(spark: SparkSession, dir: String, mode: SaveMode): Unit = {
+    val d = new Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = d.getFileSystem(conf)
+    if (mode == SaveMode.Overwrite) fs.delete(d, true)
+    fs.mkdirs(d)
+    val name = s"part-00000-${UUID.randomUUID()}-seed.parquet"
+    val tmp = new Path(d, s"_$name")
+    ExampleParquetWriter.builder(tmp).withConf(conf)
+      .withType(new MessageType("spark_schema",
+        Types.optional(PrimitiveTypeName.INT64).named("id")))
+      .build().close()
+    require(fs.rename(tmp, new Path(d, name)), s"rename $tmp -> $name failed")
+  }
 
   /** Snapshot the tombstones under `dir` (`None`: the index has none). */
   def at(spark: SparkSession, dir: Option[String]): Tombstones = {

@@ -914,10 +914,10 @@ object PipelineQueries {
 
   /** q196 — composed IVF+PQ durable index (FAISS IVFADC's layout), the
     * FIFTH durable family through the full write(4/5) → APPEND(1/5) →
-    * fresh-reload discipline of q191: the list-partitioned stripes
+    * fresh-reload discipline of q191: the list-sorted stripes
     * store ONE packed long per vector ([[Similarity.ivfPqEncode]]
     * against centroids AND codebooks both fit on the BUILD corpus and
-    * frozen), so a probe partition-prunes to the probed stripes, reads
+    * frozen), so a probe prunes to the probed stripes' files, reads
     * codes — never the float vectors (plan-gated in
     * `IndexLifecycleSpec`) — ADC-scores them, and exactly reranks the
     * shortlist against full vectors fetched by id. Contract (q78's
@@ -983,7 +983,7 @@ object PipelineQueries {
   /** q197 — batch probe over the composed IVF+PQ index: q192's
     * many-queries lifecycle through the code stripes. The whole anchor
     * batch probes in ONE [[Similarity.ivfPqTopKBatch]] plan — static
-    * `list IN (…)` partition pruning over a [[Similarity
+    * `list IN (…)` stripe pruning over a [[Similarity
     * .loadIvfPqIndex]] scan that reads ONE long per row (never the
     * float vectors; plan-gated in `IndexLifecycleSpec`), per-(query,
     * code) ADC expression bit-mirroring the single-query LUT, bounded
@@ -1020,7 +1020,7 @@ object PipelineQueries {
   /** q198 — hard-negative mining through the COMPOSED IVF+PQ index
     * ([[Similarity.hardNegativesAnnPq]]): q195's durable-index mining
     * at minimum probe bytes — the anchor batch's shortlist from ONE
-    * partition-pruned CODE-stripe plan (one long per probed row), the
+    * stripe-pruned CODE plan (one long per probed row), the
     * shared label-filtered exact rerank on the parameter-sized
     * shortlist. Full probe + corpus-sized shortlist must reproduce
     * exhaustive [[Similarity.hardNegatives]] IDENTICALLY (the composed
@@ -1402,13 +1402,13 @@ object PipelineQueries {
     * million anchors) needs the whole batch in ONE plan —
     * [[Similarity.ivfTopKBatch]]: per-query probe lists picked
     * declaratively, a static `list IN (…)` filter so the reloaded scan
-    * partition-prunes to the probed stripes, one broadcast equi-join,
+    * prunes to the probed stripes' files, one broadcast equi-join,
     * per-query top-k through the custom GroupTopK heaps. Probing every
     * list scores every (query, corpus) pair exactly once, so the
     * full-probe batch must equal exhaustive [[q65BatchKnn]] row for
     * row — q65's oracle SQL verbatim, through build → durable write →
     * `newSession()` reload (the lifecycle-invisibility convention).
-    * The partial-probe recall floor and the partition-pruned plan are
+    * The partial-probe recall floor and the pushed `list` filter are
     * gated in `IndexLifecycleSpec`. */
   def q192IvfBatchProbe(spark: SparkSession, dir: String): DataFrame =
     withScratchDir("q192_ivf") { path =>

@@ -12,9 +12,9 @@ import graft.operators.Similarity
   * embeddings → neighbor probe). Each micro-batch goes through
   * [[graft.operators.Similarity.ivfTopKBatch]] — ONE plan for the whole
   * batch: per-query probe lists picked declaratively, the bounded union
-  * of probed list ids applied as a static partition filter (over a
-  * [[graft.operators.Similarity.loadIvfIndex]] scan the probe opens
-  * only the probed stripes), one broadcast equi-join, per-query top-k
+  * of probed list ids applied as a static `list` filter (over a
+  * [[graft.operators.Similarity.loadIvfIndex]] scan the probe reads
+  * only the probed stripes' files), one broadcast equi-join, per-query top-k
   * through the GroupTopK bounded heaps — and the (query_id, id, sim,
   * rank) rows are APPENDED to a parquet sink.
   *
@@ -104,7 +104,7 @@ object StreamingAnn {
     * [[Similarity.loadIvfPqIndex]] handle (centroids + codebooks are
     * parameter-sized collects; the code-stripe file set refreshes at
     * the scan's listing) and probes through ONE
-    * [[Similarity.ivfPqTopKBatch]] plan — partition-pruned stripes of
+    * [[Similarity.ivfPqTopKBatch]] plan — stripe-pruned files of
     * (id, codes), the batch ADC expression, a rerankN-row exact rerank
     * against the corpus by id. Appends AND deletes land at the next
     * batch boundary without restart ([[startRefreshing]]'s contract;

@@ -27,10 +27,11 @@ import graft.sources.Tables
   *     straddling pairs (probe × old corpus AND probe × appended
   *     shard) both present — growth without the corpus-sized rebuild.
   *   - IVF ANN index: [[Similarity.writeIvfIndex]] lands posting lists
-  *     PARTITIONED by list id; a reloaded [[Similarity.ivfTopK]] probe
-  *     must be bit-equal to the same-session probe and its scan must
-  *     carry the `list IN (…)` PARTITION filter (pruning, not
-  *     filtering: unprobed lists are never opened).
+  *     in flat files sorted by list id, one contiguous list range per
+  *     file; a reloaded [[Similarity.ivfTopK]] probe must be bit-equal to
+  *     the same-session probe, its scan must push the `list IN (…)`
+  *     filter down, and only the files whose list interval covers a
+  *     probed list may return rows (pruning, not filtering).
   *
   * "Fresh session" is `spark.newSession()` — separate session state
   * (separate temp views, confs, cached plans) over the shared
@@ -53,6 +54,51 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
 
   private def scansOf(p: SparkPlan): Seq[FileSourceScanExec] =
     p.collect { case f: FileSourceScanExec => f }
+
+  /** Each data file directly under `dir` as ([min, max] of the integral
+    * `column` over its row groups, row count), read from the footers,
+    * sorted by min. A file without rows has the empty interval
+    * (Long.MaxValue, Long.MinValue). */
+  private def fileIntervals(dir: String, column: String): Seq[(Long, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    d.getFileSystem(conf).listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
+      .toSeq.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+        val blocks = try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+        val stats = blocks.map(_.getColumns.asScala
+          .find(_.getPath.toDotString == column).get.getStatistics)
+        (stats.map(_.genericGetMin.asInstanceOf[Number].longValue).foldLeft(Long.MaxValue)(_ min _),
+          stats.map(_.genericGetMax.asInstanceOf[Number].longValue).foldLeft(Long.MinValue)(_ max _),
+          blocks.map(_.getRowCount).sum)
+      }.sortBy(_._1)
+  }
+
+  /** For each of `stripes`, the number of files under `dir` whose
+    * `column` interval covers it: the files a one-stripe probe opens. */
+  private def filesPerStripe(dir: String, column: String, stripes: Seq[Long]): Map[Long, Int] = {
+    val files = fileIntervals(dir, column)
+    stripes.map(s => s -> files.count { case (lo, hi, _) => lo <= s && s <= hi }).toMap
+  }
+
+  /** The files of one write cover disjoint stripe intervals. */
+  private def assertDisjoint(files: Seq[(Long, Long, Long)], column: String): Unit =
+    files.sliding(2).foreach {
+      case Seq(a, b) => assert(a._2 < b._1, s"$column intervals overlap: $files")
+      case _ =>
+    }
+
+  /** The scan pushes a comparison on `column` (`In`, `EqualTo`) down to
+    * the parquet reader, where footer and row-group statistics answer it. */
+  private def pushesFilterOn(scan: FileSourceScanExec, column: String): Boolean =
+    scan.metadata.get("PushedFilters").exists(_.contains(s"($column,"))
+
+  /** The distinct values of `list` in the posting lists under `dir`. */
+  private def listsIn(dir: String): Seq[Long] =
+    spark.read.parquet(dir).select(col("list").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSeq
 
   /** The MAXIMAL subtree whose only data source is `table` — i.e. the
     * whole join side fed by that table's scan, up to (but not
@@ -232,13 +278,15 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val probe = Similarity.ivfTopK(cents2, indexed2, qv, k = 10, nProbe = 3)
     assert(probe.collect().toSeq === same,
       "reloaded probe must be bit-equal to the build probe")
-    // Partition pruning: the posting-list scan must carry the probe's
-    // `list IN (…)` as a PARTITION filter (unprobed lists never open).
+    // Stripe pruning: the write's files cover disjoint list intervals,
+    // and the posting-list scan pushes the probe's `list IN (…)` down to
+    // their statistics (unprobed lists' files return no rows).
+    assertDisjoint(fileIntervals(s"$path/lists", "list"), "list")
     val scan = scansOf(probe.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(_.toString.contains(s"graft_ivf_lc_$runId")))
     assert(scan.isDefined, "posting-list scan not found")
-    assert(scan.get.partitionFilters.exists(_.references.exists(_.name == "list")),
-      s"probe filter did not reach the partition layer:\n${scan.get}")
+    assert(pushesFilterOn(scan.get, "list"),
+      s"probe filter was not pushed to the scan:\n${scan.get}")
   }
 
   test("IVF build is partition-invariant: different shuffle-partition counts and input layouts produce bit-identical centroids and assignments") {
@@ -390,16 +438,15 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(partialAppended === partialBulk,
       "partial probe over appended lists must equal the frozen-centroid bulk assignment's")
     // The layout guarantee survives the append: the probe scan still
-    // carries the `list IN (…)` partition filter over the (now
-    // multi-file-per-stripe) posting directories.
+    // pushes the `list IN (…)` filter over the (now two-files-per-stripe)
+    // posting lists.
     val probe = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3)
     val scan = scansOf(probe.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(
         _.toString.contains(s"graft_ivf_append_$runId")))
     assert(scan.isDefined, "posting-list scan not found")
-    assert(scan.get.partitionFilters.exists(
-      _.references.exists(_.name == "list")),
-      s"probe filter did not reach the partition layer:\n${scan.get}")
+    assert(pushesFilterOn(scan.get, "list"),
+      s"probe filter was not pushed to the scan:\n${scan.get}")
   }
 
   test("PQ append: reload probe ≡ frozen-codebook encode of the union, bit-equal") {
@@ -485,17 +532,16 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     }
     assert(batch5 === singly,
       "a 5-query batch must equal the 5 one-query batches run separately")
-    // The static probed-lists filter must reach the partition layer of
-    // the reloaded scan — the batch probe opens only probed stripes.
+    // The static probed-lists filter must be pushed into the reloaded
+    // scan — the batch probe reads only the probed stripes' files.
     val probe = Similarity.ivfTopKBatch(cents, lists,
       q0, col("vec_id"), col("embedding"), k = 10, nProbe = 3)
     val scan = scansOf(probe.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(
         _.toString.contains(s"graft_ivf_batch_$runId")))
     assert(scan.isDefined, "posting-list scan not found")
-    assert(scan.get.partitionFilters.exists(
-      _.references.exists(_.name == "list")),
-      s"probed-lists filter did not reach the partition layer:\n${scan.get}")
+    assert(pushesFilterOn(scan.get, "list"),
+      s"probed-lists filter was not pushed to the scan:\n${scan.get}")
   }
 
   test("corpus-index delete: probe ≡ rebuilt-on-survivors; bucketed side still exchange-free through the tombstone anti-join; compaction erases physically, probe unchanged") {
@@ -761,22 +807,17 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
 
     // Compaction: probe bit-equal, tombstones gone, deleted ids
     // physically out of the files, one file per surviving stripe.
-    def stripeFiles(): Map[String, Int] = {
-      val base = new java.io.File(s"$path/lists")
-      base.listFiles().filter(_.isDirectory).map { d =>
-        d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
-      }.toMap
-    }
-    val filesBefore = stripeFiles()
+    val filesBefore = fileIntervals(s"$path/lists", "list").size
     Similarity.compactIvfIndex(fresh, path)
     // Compaction re-seeds an EMPTY tombstone relation (always present,
     // so loads anti-join unconditionally; nothing left to hide).
     assert(fresh.read.parquet(s"$path/tombstones").isEmpty,
       "compaction must leave an empty tombstone relation")
-    val filesAfter = stripeFiles()
+    val filesAfter = filesPerStripe(s"$path/lists", "list", listsIn(s"$path/lists"))
     assert(filesAfter.values.forall(_ == 1),
       s"each surviving stripe must come back as ONE file, got $filesAfter")
-    assert(filesBefore.values.sum > filesAfter.values.sum,
+    assertDisjoint(fileIntervals(s"$path/lists", "list"), "list")
+    assert(filesBefore > fileIntervals(s"$path/lists", "list").size,
       "compaction must reduce the total file count")
     val fresh4 = spark.newSession()
     val (cents4, lists4) = Similarity.loadIvfIndex(fresh4, path)
@@ -964,29 +1005,80 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(ranges >= tasks, s"fixture populates $ranges of $tasks ranges")
     val path = tmpDir("lsh_files")
     Similarity.writeLshIndex(emb, col("vec_id"), col("embedding"), nBits, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/buckets")
-    val conf = spark.sessionState.newHadoopConf()
-    val files = dir.getFileSystem(conf).listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-    assert(files.size === tasks, s"expected one file per write task ($tasks), got ${files.size}")
-    val intervals = files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-      try {
-        val stats = r.getFooter.getBlocks.toArray.toSeq.map { b =>
-          val c = b.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData]
-            .getColumns.toArray.toSeq
-            .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
-            .find(_.getPath.toDotString == "bucket").get.getStatistics
-          (c.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-            c.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-        }
-        (stats.map(_._1).min, stats.map(_._2).max)
-      } finally r.close()
-    }.sortBy(_._1)
-    intervals.sliding(2).foreach { case Seq(a, b) =>
-      assert(a._2 < b._1, s"bucket intervals overlap: $intervals")
+    val intervals = fileIntervals(s"$path/buckets", "bucket")
+    assert(intervals.size === tasks, s"expected one file per write task ($tasks), got ${intervals.size}")
+    assertDisjoint(intervals, "bucket")
+  }
+
+  test("IVF flat layout: a probe of 1 list and of nProbe lists reads rows only from the files whose list interval covers them") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb, col("vec_id"), col("embedding"), nLists = 8)
+    val path = tmpDir("ivf_prune")
+    Similarity.writeIvfIndex(centroids, indexed, path)
+    val files = fileIntervals(s"$path/lists", "list")
+    assertDisjoint(files, "list")
+    val present = listsIn(s"$path/lists").sorted
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.adaptive.enabled", "false")
+    val (_, lists) = Similarity.loadIvfIndex(fresh, path)
+    val total = files.map(_._3).sum
+    for (probed <- Seq(Seq(present(present.size / 2)),
+        Seq(present.head, present(present.size / 2), present.last))) {
+      val probe = lists.filter(col("list").isin(probed.map(_.toInt): _*))
+      val rows = probe.collect()
+      assert(rows.map(_.getAs[Int]("list").toLong).toSet === probed.toSet)
+      val scan = scansOf(probe.queryExecution.executedPlan).head
+      assert(pushesFilterOn(scan, "list"), s"probe filter was not pushed:\n$scan")
+      val covering = files.filter { case (lo, hi, _) => probed.exists(p => lo <= p && p <= hi) }
+      val read = scan.metrics("numOutputRows").value
+      assert(read === covering.map(_._3).sum,
+        s"a probe of lists $probed read $read rows; the ${covering.size} of " +
+          s"${files.size} files covering them hold ${covering.map(_._3).sum}")
+      assert(read < total, s"a probe of lists $probed read every row ($total)")
+      info(s"lists $probed: ${covering.size} of ${files.size} files, $read of $total rows read")
     }
+  }
+
+  test("the live-id guard names up to 5 clashing ids, and ends with \", …\" at 5") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
+    val (centroids, indexed) = Similarity.ivfIndex(
+      emb, col("vec_id"), col("embedding"), nLists = 4)
+    val path = tmpDir("ivf_clash")
+    Similarity.writeIvfIndex(centroids, indexed, path)
+    val live = "LIVE id\\(s\\) ([0-9, ]+?)(, …)? already in".r
+    def named(shard: DataFrame): (Seq[Long], Boolean) = {
+      val e = intercept[IllegalArgumentException](
+        Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), path))
+      val m = live.findFirstMatchIn(e.getMessage).getOrElse(fail(e.getMessage))
+      (m.group(1).split(", ").map(_.toLong).toSeq, m.group(2) != null)
+    }
+    val (few, fewEllipsis) = named(emb.filter(col("vec_id") <= 3))
+    assert(few.sorted === Seq(1L, 2L, 3L) && !fewEllipsis,
+      s"3 clashing ids must all be named, without an ellipsis: $few")
+    val (many, manyEllipsis) = named(emb.filter(col("vec_id") <= 40))
+    assert(many.size === 5 && many.distinct.size === 5 && manyEllipsis,
+      s"40 clashing ids must be cut to 5 named ids and an ellipsis: $many")
+    assert(many.forall(id => id >= 1 && id <= 40))
+  }
+
+  test("compactCorpusIndex leaves the meta table's files untouched") {
+    val prefix = s"graft_idx_meta_$runId"
+    val docs = Tables.documents(spark, sf)
+    val built = Dedup.corpusIndex(docs, col("doc_id"), col("text"))
+    Dedup.writeCorpusIndex(built, prefix, buckets = 4)
+    built.unpersist()
+    Dedup.deleteFromCorpusIndex(docs.limit(3).select(col("doc_id")), col("doc_id"), prefix)
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_meta")).location
+    def metaFiles(): Map[String, Long] =
+      new java.io.File(loc).listFiles().map(f => f.getName -> f.lastModified).toMap
+    val before = metaFiles()
+    assert(before.keys.exists(_.endsWith(".parquet")), s"no meta data file: $before")
+    Dedup.compactCorpusIndex(spark, prefix)
+    assert(metaFiles() === before, "compaction must not rewrite the meta table")
+    val loaded = Dedup.loadCorpusIndex(spark.newSession(), prefix)
+    assert((loaded.n, loaded.k, loaded.bands) === (built.n, built.k, built.bands))
   }
 
   test("verb budgets: IVF and MinHash write/append/delete/compact job counts; write + append leaves 2 files per IVF stripe and at most 2 per MinHash bucket") {
@@ -1001,12 +1093,11 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     jobs("ivf.write") = JobCount(spark)(Similarity.writeIvfIndex(centroids, indexed, path))._2
     jobs("ivf.append") = JobCount(spark)(
       Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), path))._2
-    // Every stripe the append touched holds the write's file and the
-    // append's; the others only the write's.
+    // Every stripe the append touched is covered by the write's file and
+    // the append's; the others only by the write's.
     val touched = Similarity.ivfAssign(shard, col("vec_id"), col("embedding"), centroids)
-      .select(col("list")).distinct().collect().map(r => s"list=${r.getInt(0)}").toSet
-    val stripes = new java.io.File(s"$path/lists").listFiles().filter(_.isDirectory)
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      .select(col("list")).distinct().collect().map(_.getInt(0).toLong).toSeq
+    val stripes = filesPerStripe(s"$path/lists", "list", 0L until 4L)
     assert(touched.size === 4, s"the shard must touch every list, touched $touched")
     assert(stripes.values.forall(_ == 2),
       s"write + append must leave 2 files per IVF stripe, got $stripes")
@@ -1039,11 +1130,14 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       docShard.limit(3).select(col("doc_id")), col("doc_id"), prefix))._2
     jobs("minhash.compact") = JobCount(spark)(Dedup.compactCorpusIndex(spark, prefix))._2
     // Budgets at the measured counts (4 cores); a parameter table is
-    // read on the driver, so no verb spends a job on one.
+    // read on the driver and the tombstone seed is written there, so no
+    // verb spends a job on either. The MinHash delete's second job is
+    // its input's own `limit` exchange.
     val budget = Map(
-      "ivf.write" -> 5, "ivf.append" -> 9, "ivf.delete" -> 2, "ivf.compact" -> 4,
-      "minhash.write" -> 6, "minhash.append" -> 10, "minhash.delete" -> 2,
-      "minhash.compact" -> 7)
+      "ivf.write" -> 4, "ivf.append" -> 7, "ivf.delete" -> 1, "ivf.compact" -> 3,
+      "minhash.write" -> 5, "minhash.append" -> 8, "minhash.delete" -> 2,
+      "minhash.compact" -> 6)
+    info(s"measured $jobs")
     assert(budget.forall { case (verb, n) => jobs(verb) <= n },
       s"job budget exceeded: measured $jobs, budget $budget")
   }
@@ -1091,9 +1185,10 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       Similarity.compactIvfPqIndex(spark, ivfPqPath))
     // Budgets at the measured counts (4 cores).
     val budget = Map(
-      "lsh.write" -> 5, "lsh.append" -> 9, "lsh.delete" -> 2, "lsh.compact" -> 4,
-      "pq.write" -> 4, "pq.append" -> 5, "pq.delete" -> 2, "pq.compact" -> 4,
-      "ivfpq.write" -> 7, "ivfpq.append" -> 9, "ivfpq.delete" -> 2, "ivfpq.compact" -> 4)
+      "lsh.write" -> 4, "lsh.append" -> 7, "lsh.delete" -> 1, "lsh.compact" -> 3,
+      "pq.write" -> 3, "pq.append" -> 4, "pq.delete" -> 1, "pq.compact" -> 3,
+      "ivfpq.write" -> 6, "ivfpq.append" -> 7, "ivfpq.delete" -> 1, "ivfpq.compact" -> 3)
+    info(s"measured $jobs")
     assert(budget.forall { case (verb, n) => jobs(verb) <= n },
       s"job budget exceeded: measured $jobs, budget $budget")
   }
@@ -1199,7 +1294,7 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       "all-lists + corpus-rerank composed probe must equal brute force")
     // The bytes-per-probe gate: the pruned stripe scan reads (id,
     // codes) ONLY — never a float vector column — and the probe filter
-    // reaches the partition layer. Asserted on the JOIN-form probe
+    // is pushed to the scan. Asserted on the JOIN-form probe
     // (rerankN past RerankIsinMax keeps the shortlist subtree in the
     // final plan); the parameter-sized form collects the shortlist
     // eagerly, so its code scan runs as its own bounded job and the
@@ -1211,10 +1306,11 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       .find(_.relation.location.rootPaths.exists(
         _.toString.contains(s"graft_ivfpq_lc_$runId")))
     assert(scan.isDefined, "composed code scan not found")
-    assert(scan.get.partitionFilters.exists(
-      _.references.exists(_.name == "list")),
-      s"probe filter did not reach the partition layer:\n${scan.get}")
-    assert(scan.get.requiredSchema.fieldNames.toSet === Set("id", "codes"),
+    assert(pushesFilterOn(scan.get, "list"),
+      s"probe filter was not pushed to the scan:\n${scan.get}")
+    // `list` is a data column of the flat layout (the pushed filter's
+    // column); no float vector column is read.
+    assert(scan.get.requiredSchema.fieldNames.toSet === Set("id", "codes", "list"),
       s"the pruned scan must read codes, not vectors — got " +
         s"${scan.get.requiredSchema.fieldNames.mkString(", ")}")
     // The parameter-sized rerank fetches by a PUSHED id filter — and
@@ -1274,12 +1370,10 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       .collect().map(_.getLong(0)).toSet
     assert(fileIds.intersect(delIds).isEmpty,
       "compaction must physically remove the deleted codes")
-    val stripeFiles = new java.io.File(s"$path/lists").listFiles()
-      .filter(_.isDirectory).map(d =>
-        d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-      .toMap
+    val stripeFiles = filesPerStripe(s"$path/lists", "list", listsIn(s"$path/lists"))
     assert(stripeFiles.values.forall(_ == 1),
       s"each surviving stripe must come back as ONE file, got $stripeFiles")
+    assertDisjoint(fileIntervals(s"$path/lists", "list"), "list")
   }
 
   test("IVF+PQ batch probe: full probe + corpus rerank ≡ exhaustive batch KNN; 1-query finite-rerank batch ≡ single-query probe; pruned scan reads codes") {
@@ -1334,17 +1428,16 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(one === single,
       "1-query batch at finite rerank must equal the single-query probe")
-    // The scale levers: probe filter at the partition layer, scan
-    // schema is (id, codes) — one long per probed row.
+    // The scale levers: probe filter pushed to the scan, scan schema is
+    // (id, codes) — one long per probed row.
     val scan = scansOf(batch.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(
         _.toString.contains(s"graft_ivfpq_batch_$runId")))
     assert(scan.isDefined, "composed code scan not found")
-    assert(scan.get.partitionFilters.exists(
-      _.references.exists(_.name == "list")),
-      s"batch probe filter did not reach the partition layer:\n${scan.get}")
-    assert(scan.get.requiredSchema.fieldNames.toSet === Set("id", "codes"),
-      "the batch probe must read codes, not vectors")
+    assert(pushesFilterOn(scan.get, "list"),
+      s"batch probe filter was not pushed to the scan:\n${scan.get}")
+    assert(scan.get.requiredSchema.fieldNames.toSet === Set("id", "codes", "list"),
+      "the batch probe must read codes (and the list column it prunes by), not vectors")
   }
 
   test("re-ingesting a tombstoned id fails readably on every append path; compaction makes it legal and the rows visible again") {
@@ -1454,13 +1547,13 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(!h.getAs[Boolean]("needs_compaction"),
       "2 files/stripe is far below the measured 64-file knee")
     // Below the knee: a no-op — returns false, layout untouched.
-    val filesBefore = new java.io.File(s"$path/lists").listFiles()
-      .filter(_.isDirectory)
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    val filesBefore = fileIntervals(s"$path/lists", "list")
+    assert(h.getAs[Int]("n_data_files") === filesBefore.size)
+    assert(h.getAs[Int]("max_files_per_stripe") ===
+      filesPerStripe(s"$path/lists", "list", 0L until 8L).values.max,
+      "max_files_per_stripe must count the files one stripe's probe opens")
     assert(!Similarity.compactIfNeeded(spark, path))
-    val filesAfterNoop = new java.io.File(s"$path/lists").listFiles()
-      .filter(_.isDirectory)
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    val filesAfterNoop = fileIntervals(s"$path/lists", "list")
     assert(filesAfterNoop === filesBefore, "below-knee call must not rewrite")
     // Past the knee (knob tightened to the accreted state): fires the
     // IVF compact, resets to one file per stripe, and the health row

@@ -134,23 +134,25 @@ class SubwordSpec extends SparkSpec {
       .orderBy("doc_id").collect().toSeq
     val path = java.nio.file.Files.createTempDirectory("graft_vocab_lc")
       .toString
-    Subword.writeVocab(v, maxPieceLen = 4, path)
+    try {
+      Subword.writeVocab(v, maxPieceLen = 4, path)
 
-    val fresh = spark.newSession()
-    val (v2, cap) = Subword.loadVocab(fresh, path)
-    assert(cap === 4, "maxPieceLen must round-trip with the artifact")
-    val reloaded = Subword.encodeWithVocabJoin(
-        graft.sources.Tables.documents(fresh, sf)
-          .select(col("doc_id"), col("text")),
-        col("doc_id"), col("text"),
-        v2.select(col("piece"), col("vid")), cap)
-      .orderBy("doc_id").collect().toSeq
-    assert(built.nonEmpty)
-    assert(reloaded === built,
-      "reloaded-vocabulary encode must be bit-equal to the build encode")
-    val bad = intercept[IllegalArgumentException] {
-      Subword.loadVocab(fresh, s"$path/definitely_missing")
-    }
-    assert(bad.getMessage.contains("definitely_missing"))
+      val fresh = spark.newSession()
+      val (v2, cap) = Subword.loadVocab(fresh, path)
+      assert(cap === 4, "maxPieceLen must round-trip with the artifact")
+      val reloaded = Subword.encodeWithVocabJoin(
+          graft.sources.Tables.documents(fresh, sf)
+            .select(col("doc_id"), col("text")),
+          col("doc_id"), col("text"),
+          v2.select(col("piece"), col("vid")), cap)
+        .orderBy("doc_id").collect().toSeq
+      assert(built.nonEmpty)
+      assert(reloaded === built,
+        "reloaded-vocabulary encode must be bit-equal to the build encode")
+      val bad = intercept[IllegalArgumentException] {
+        Subword.loadVocab(fresh, s"$path/definitely_missing")
+      }
+      assert(bad.getMessage.contains("definitely_missing"))
+    } finally graft.SpecScratch.deleteTree(new java.io.File(path))
   }
 }

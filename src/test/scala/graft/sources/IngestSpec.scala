@@ -83,35 +83,28 @@ class IngestSpec extends SparkSpec {
   test("bucketed tables join without a shuffle exchange") {
     val o = graft.sources.Tables.orders(spark, sf)
     val c = graft.sources.Tables.customer(spark, sf)
-    // clean both catalog entries and stale warehouse dirs (a previous JVM
-    // may have left the location without the metastore entry)
-    for (t <- Seq("orders_b", "customer_b")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
-    Ingest.landBucketed(o, "orders_b", "o_custkey", 4)
-    Ingest.landBucketed(
-      c.withColumnRenamed("c_custkey", "o_custkey"), "customer_b", "o_custkey", 4)
-    val joined = spark.table("orders_b")
-      .join(spark.table("customer_b"), "o_custkey")
-    // With matching bucket counts on the join key, no ShuffleExchange is
-    // needed on either side (AQE may still add a broadcast — disable to
-    // observe the bucket-join shape).
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // Per-run table names, dropped (with their managed locations)
+    // afterwards: nothing shared between runs is keyed by a fixed name.
+    val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+    val (orders, customer) = (s"graft_orders_b_$runId", s"graft_customer_b_$runId")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"unexpected shuffle in bucketed join:\n$plan")
-      assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      Ingest.landBucketed(o, orders, "o_custkey", 4)
+      Ingest.landBucketed(
+        c.withColumnRenamed("c_custkey", "o_custkey"), customer, "o_custkey", 4)
+      val joined = spark.table(orders)
+        .join(spark.table(customer), "o_custkey")
+      // With matching bucket counts on the join key, no ShuffleExchange is
+      // needed on either side (AQE may still add a broadcast — disable to
+      // observe the bucket-join shape).
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"unexpected shuffle in bucketed join:\n$plan")
+        assert(joined.count() > 0)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally graft.SpecScratch.clean(spark, runId)
   }
 
   test("typed facade: Dataset[TrafficRecord] round-trips fields") {
