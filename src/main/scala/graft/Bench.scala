@@ -364,8 +364,7 @@ object Bench {
             .toDF("doc_id", "text")
           (p189, minOf3(Dedup.nearDupAgainstIndex(
             one, col("doc_id"), col("text"), loadedIdx, threshold = 0.8).collect()))
-        } finally Seq("banded", "rel", "meta", "tombstones").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS ${idxPrefix}_$t"))
+        } finally Dedup.dropCorpusIndex(spark, idxPrefix)
         val ivfDir = java.nio.file.Files
           .createTempDirectory("graft-bench-ivf-").toString
         Similarity.writeIvfIndex(centroids, idx0, ivfDir)

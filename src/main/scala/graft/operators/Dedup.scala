@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.expressions.SimHash64.simhash64
 import graft.functions.TextFunctions
@@ -1030,128 +1030,117 @@ object Dedup {
     CorpusIndex(rel, banded, n, k, bands)
   }
 
-  /** Durable form of the corpus index — "build once, probe for weeks".
-    * Writes both index relations as BUCKETED parquet tables
-    * (`<prefix>_banded` bucketed+sorted by `bh` — the probe join key —
-    * and `<prefix>_rel` bucketed+sorted by `id`, the verify join key)
-    * plus a 1-row `<prefix>_meta` table pinning the shingle/signature
-    * scheme, so a FRESH session can [[loadCorpusIndex]] and band new
-    * docs identically. The bucketed layout is the point: the per-shard
-    * probe join reads bucket-aligned files with NO exchange on the
-    * corpus side (gated in `IndexLifecycleSpec`) — at 100 TB the index
-    * is written once, GROWN nightly ([[appendToCorpusIndex]]) and the
-    * nightly shard pays only ITS OWN shuffle, never a re-shuffle of the
-    * corpus.
+  /** ===== The durable corpus index =====
     *
-    * DESTRUCTIVE on collision: writing to `tablePrefix` drops and
-    * re-creates `<prefix>_banded`/`<prefix>_rel`/`<prefix>_meta`,
-    * including any unrelated pre-existing tables of those names and
-    * their storage. The prefix is validated as a plain SQL identifier
-    * (it is interpolated into DDL) — pick a dedicated namespace-style
-    * prefix (e.g. `graft_idx_<corpus>`). */
+    * "Build once, probe for weeks": the MinHash corpus index is a
+    * [[PathFamily]] ([[Corpus]]), and every lifecycle verb below is one
+    * call into [[PathIndex]], the lifecycle core every durable index
+    * shares (write with completion marker, tombstone-filtered load,
+    * guarded append, logical delete, snapshot-scoped compaction, health).
+    *
+    * '''Layout.''' The index at prefix `p` lives under one root
+    * directory, `<warehouse>/p` ([[corpusIndexRoot]]):
+    *   - `meta/`: one row (n, k, bands, buckets), the shingle/signature
+    *     scheme and the bucket count, read on the driver with no job;
+    *   - `rel/`: the verification relation (id, hs, sig, n_sh),
+    *     bucketed and sorted by `id`, the verify join key;
+    *   - `banded/`: the band rows (id, n_sh, band, bh), bucketed and
+    *     sorted by `bh`, the probe join key;
+    *   - `tombstones/` and the completion marker.
+    *
+    * Only `p_rel` and `p_banded` are in the catalog, as external
+    * bucketed tables over `rel/` and `banded/`. The catalog's bucket spec
+    * is what makes the reloaded probe join exchange-free on the index
+    * side: a `spark.table` scan carries the hash distribution, a plain
+    * directory scan does not (gated in `IndexLifecycleSpec`). At 100 TB
+    * the index is written once, grown nightly ([[appendToCorpusIndex]])
+    * and the nightly shard pays only its own shuffle, never a re-shuffle
+    * of the corpus.
+    *
+    * '''Crash states''' are [[PathIndex]]'s: an interrupted write (no
+    * marker) and a compaction stopped between one relation's renames
+    * fail every later verb with a message naming the state; a dead
+    * delete or append batch (`_temporary`, committed tasks included) is
+    * never read and is removed by the next write into its directory; a
+    * compaction stopped before a rename leaves a stray `<rel>__compact`
+    * the next compaction replaces.
+    *
+    * '''Collisions.''' The root is the default location of a managed
+    * table named `p`, and the two tables are named `p_rel` and
+    * `p_banded`: [[writeCorpusIndex]] drops those tables and overwrites
+    * the root's subdirectories, whatever they held. The prefix is
+    * validated as a plain SQL identifier (it is interpolated into DDL) —
+    * pick a dedicated namespace-style prefix (e.g. `graft_idx_<corpus>`).
+    * An index in an earlier layout (`p_meta` and `p_tombstones` tables)
+    * reads as no index and must be rebuilt. */
+  private[operators] final case class CorpusMeta(n: Int, k: Int, bands: Int, buckets: Int)
+
+  private val CorpusMetaSchema = StructType(Seq(
+    StructField("n", IntegerType), StructField("k", IntegerType),
+    StructField("bands", IntegerType), StructField("buckets", IntegerType)))
+
+  private val Hashes = ArrayType(LongType, containsNull = false)
+
+  /** The MinHash corpus index as a [[PathFamily]]: the scheme row as its
+    * parameters, [[shingleRel]] as its encode step, and two bucketed
+    * relations — `rel` is the encoded frame itself, `banded` its
+    * [[bandedRows]]. */
+  private[operators] val Corpus: PathFamily[CorpusMeta] = PathFamily[CorpusMeta](
+    "Corpus", Seq("meta"),
+    Seq(
+      DataRelation("rel", StructType(Seq(StructField("id", LongType),
+        StructField("hs", Hashes), StructField("sig", Hashes),
+        StructField("n_sh", IntegerType))), Bucketed("id", _.buckets)),
+      DataRelation("banded", StructType(Seq(StructField("id", LongType),
+        StructField("n_sh", IntegerType), StructField("band", IntegerType),
+        StructField("bh", LongType))), Bucketed("bh", _.buckets),
+        (rel, m) => bandedRows(rel, m.k, m.bands, carry = Seq("n_sh")))),
+    (spark, path) => {
+      val r = Similarity.loadMeta(spark, path, CorpusMetaSchema, "Corpus")
+      CorpusMeta(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
+    },
+    (spark, m, path) => Seq(() =>
+      spark.createDataFrame(java.util.List.of(Row(m.n, m.k, m.bands, m.buckets)),
+        CorpusMetaSchema).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/meta")),
+    (shard, id, text, m) => shingleRel(shard, id, text, m.n, m.k))
+
+  /** The index root of `tablePrefix`: `<warehouse>/<prefix>`, the default
+    * location of a managed table of that name. The prefix must be a plain
+    * SQL identifier: it names the index's tables and is interpolated into
+    * DDL, so anything that could smuggle SQL or collide by accident via
+    * quoting tricks is refused. */
+  private[graft] def corpusIndexRoot(
+      spark: org.apache.spark.sql.SparkSession, tablePrefix: String): String = {
+    require(tablePrefix.matches("[A-Za-z_][A-Za-z0-9_]*"),
+      s"corpus-index table prefix must be a plain SQL identifier " +
+        s"([A-Za-z_][A-Za-z0-9_]*), got: '$tablePrefix'")
+    spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(tablePrefix)).toString
+  }
+
+  /** Remove the corpus index at `tablePrefix`: drop its two tables (their
+    * files stay: they are external) and delete its root. */
+  private[graft] def dropCorpusIndex(
+      spark: org.apache.spark.sql.SparkSession, tablePrefix: String): Unit =
+    PathIndex.drop(Corpus, spark, corpusIndexRoot(spark, tablePrefix))
+
+  /** Durable form of the corpus index: both relations land bucketed
+    * into `buckets` buckets, whole buckets placed on each write task so
+    * that a task writes one file per bucket it holds (without it every
+    * task opens a file per bucket it touches: measured ~2000 files per
+    * table at sf0.1, IndexCompactionSweep), and the scheme row pins the
+    * shingle/signature scheme so a FRESH session can [[loadCorpusIndex]]
+    * and band new docs identically. The two relations are persisted in a
+    * [[corpusIndex]], so the concurrent writes read the cache.
+    *
+    * DESTRUCTIVE on collision: see the layout note above. */
   def writeCorpusIndex(
       index: CorpusIndex, tablePrefix: String, buckets: Int = 32): Unit = {
-    requireIndexPrefix(tablePrefix)
-    writeCorpusTables(index, tablePrefix, buckets, withMeta = true)
     val spark = index.rel.sparkSession
-    // A fresh index has no deletions: stale tombstones from a previous
-    // index under the same prefix (same-JVM or orphaned-location) would
-    // silently hide rows of the NEW index — and their location blocks
-    // creating the table in a later JVM. The
-    // write SEEDS an empty tombstones table so the table always exists:
-    // delete visibility can never depend on whether a first delete
-    // happened to precede the load. Seeded AFTER the data
-    // writes succeed: a crash mid-rebuild leaves the OLD tombstones
-    // over broken data tables (which indexMeta surfaces loudly) rather
-    // than cleared tombstones silently resurrecting deleted rows.
-    resetCorpusTable(spark, tombstonesTable(tablePrefix))
-    seedTombstones(spark, tablePrefix)
+    PathIndex.write(Corpus, CorpusMeta(index.n, index.k, index.bands, buckets),
+      Seq(index.rel, index.banded), corpusIndexRoot(spark, tablePrefix))
   }
-
-  /** Create `<prefix>_tombstones` in the catalog and seed it with an
-    * empty batch ([[Tombstones.seed]]); returns its location. */
-  private def seedTombstones(
-      spark: org.apache.spark.sql.SparkSession, tablePrefix: String): String = {
-    spark.sql(s"CREATE TABLE ${tombstonesTable(tablePrefix)} (id BIGINT) USING parquet")
-    val dir = tombstoneDir(spark, tablePrefix).get
-    Tombstones.seed(spark, dir, org.apache.spark.sql.SaveMode.Overwrite)
-    spark.catalog.refreshTable(tombstonesTable(tablePrefix))
-    dir
-  }
-
-  /** Drop a managed table AND its surviving default location — Overwrite
-    * must mean overwrite even when the catalog has forgotten the table
-    * but its managed location survived (an in-memory catalog over
-    * persistent storage — exactly the fresh-session case this index
-    * exists for); the Hadoop FS API so any warehouse filesystem works. */
-  private def resetCorpusTable(
-      spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(name))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
-
-  /** The DATA half of [[writeCorpusIndex]] — banded/rel, and meta when
-    * `withMeta`; tombstones untouched. [[compactCorpusIndex]] routes here
-    * so its tombstone handling can be the snapshot-scoped erase (a
-    * blanket reset would discard a delete raced in while the survivor
-    * rewrite ran — the lost-delete hazard the ANN compactions guard too),
-    * without `withMeta`: the scheme row does not change, and a crash
-    * mid-compaction must not leave the index without it. */
-  private def writeCorpusTables(
-      index: CorpusIndex, tablePrefix: String, buckets: Int,
-      withMeta: Boolean): Unit = {
-    val spark = index.rel.sparkSession
-    def reset(name: String): Unit = resetCorpusTable(spark, name)
-    import spark.implicits._
-    // Place whole buckets on the write tasks BEFORE the bucketed write
-    // ([[bucketPlaced]]): each task then writes ONE file per bucket it
-    // holds. Without it every task opens a file per bucket it touches
-    // (partitions × buckets small files: measured ~2000/table at sf0.1,
-    // IndexCompactionSweep). One extra exchange at write time is the
-    // write-once/probe-for-weeks trade; the probe plan never sees it
-    // (the scan's distribution comes from the catalog bucket spec, not
-    // the file layout).
-    // The tables are independent artifacts — reset+write each on its own
-    // thread (Similarity.inParallel: back to back they paid a job floor
-    // each; the banded/rel relations are both persisted, so the
-    // concurrent writes read the cache, not recompute).
-    val meta = () => {
-      reset(s"${tablePrefix}_meta")
-      Seq((index.n, index.k, index.bands)).toDF("n", "k", "bands")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(s"${tablePrefix}_meta")
-    }
-    Similarity.inParallel(Seq(
-      () => {
-        reset(s"${tablePrefix}_banded")
-        bucketPlaced(index.banded, buckets, Seq("bh"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .bucketBy(buckets, "bh").sortBy("bh")
-          .format("parquet").saveAsTable(s"${tablePrefix}_banded")
-      },
-      () => {
-        reset(s"${tablePrefix}_rel")
-        bucketPlaced(index.rel, buckets, Seq("id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .bucketBy(buckets, "id").sortBy("id")
-          .format("parquet").saveAsTable(s"${tablePrefix}_rel")
-      }) ++ (if (withMeta) Seq(meta) else Nil): _*)
-  }
-
-  /** `df` placed for a `bucketBy(numBuckets, cols)` write: the stripe is
-    * the bucket id the bucketed writer itself computes —
-    * `pmod(murmur3(cols, seed 42), numBuckets)`, `HashPartitioning`'s
-    * expression, which `hash` is — so whole buckets land on
-    * [[IndexFiles.placed]]'s tasks. */
-  private def bucketPlaced(
-      df: DataFrame, numBuckets: Int, cols: Seq[String]): DataFrame =
-    IndexFiles.placed(df,
-      pmod(hash(cols.map(col): _*), lit(numBuckets)), numBuckets)
 
   /** Reload a [[writeCorpusIndex]]-persisted index in (possibly) a fresh
     * session. The returned relations are the bucketed table scans
@@ -1164,313 +1153,93 @@ object Dedup {
     * q189).
     *
     * Tombstone-aware: a [[deleteFromCorpusIndex]]-ed id is invisible to
-    * every probe through this ONE load definition. The load reads the
-    * tombstone ids once ([[Tombstones]], the read path shared with
-    * [[Similarity]]'s indexes) and both relations filter them out with a
-    * predicate over one broadcast variable — no join and no job per
-    * probe, and a filter keeps the bucketed scans' distribution, so the
-    * exchange-free probe plan survives (gated in IndexLifecycleSpec).
-    * Delete VISIBILITY matches append visibility: a load performed after
-    * the delete sees it; a handle held from before keeps the tombstones
-    * read when it was loaded. */
+    * every probe. Both relations filter the tombstone ids read at load
+    * ([[Tombstones]]) with a predicate over one broadcast variable — no
+    * join and no job per probe, and a filter keeps the bucketed scans'
+    * distribution, so the exchange-free probe plan survives. A handle
+    * keeps the tombstones read when it was loaded. */
   def loadCorpusIndex(
       spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): CorpusIndex = {
-    val m = indexMeta(spark, tablePrefix)
-    corpusTables(spark, tablePrefix, m, corpusTombstones(spark, tablePrefix))
+    val (m, Seq(rel, banded)) = PathIndex.load(Corpus, spark, corpusIndexRoot(spark, tablePrefix))
+    CorpusIndex(rel, banded, m.n, m.k, m.bands)
   }
 
-  private def corpusTables(
-      spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
-      m: Row, tombs: Tombstones): CorpusIndex =
-    CorpusIndex(
-      tombs.live(spark.table(s"${tablePrefix}_rel")),
-      tombs.live(spark.table(s"${tablePrefix}_banded")),
-      m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
-
-  private def tombstonesTable(tablePrefix: String): String =
-    s"${tablePrefix}_tombstones"
-
-  /** The tombstone table's location; `None` only for an index written
-    * before tombstone seeding (current [[writeCorpusIndex]] always
-    * seeds; a delete seeds such an index first). */
-  private def tombstoneDir(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Option[String] = {
-    val name = tombstonesTable(tablePrefix)
-    if (!spark.catalog.tableExists(name)) None
-    else Some(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name)).location.toString)
-  }
-
-  private def corpusTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Tombstones =
-    Tombstones.at(spark, tombstoneDir(spark, tablePrefix))
-
-  private case class CorpusHealthInfo(
-      numBuckets: Int, nBandedFiles: Int, nRelFiles: Int,
-      maxFilesPerBucket: Int, nTombstoneFiles: Int, tombstoneBytes: Long)
-
-  private def corpusHealthInfo(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): CorpusHealthInfo = {
-    indexMeta(spark, tablePrefix) // readable failure on a wrong prefix
-    def files(table: String): Seq[org.apache.hadoop.fs.FileStatus] =
-      IndexFiles.dataFiles(spark, Some(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location.toString))
-    val banded = files(s"${tablePrefix}_banded")
-    val rel = files(s"${tablePrefix}_rel")
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          s"${tablePrefix}_banded"))
-      .bucketSpec.map(_.numBuckets).getOrElse(1)
-    // Bucketed file names carry their bucket id (part-NNNNN-<uuid>_BBBBB
-    // .c000...): the per-bucket max is the probe's worst open fan-out.
-    val bucketRe = "_(\\d{5})\\.".r
-    def maxPerBucket(fs: Seq[org.apache.hadoop.fs.FileStatus]): Int = {
-      val ids = fs.flatMap(s =>
-        bucketRe.findFirstMatchIn(s.getPath.getName).map(_.group(1)))
-      if (ids.isEmpty) fs.size
-      else ids.groupBy(identity).values.map(_.size).max
-    }
-    val tombs = IndexFiles.dataFiles(spark, tombstoneDir(spark, tablePrefix))
-    CorpusHealthInfo(buckets, banded.size, rel.size,
-      math.max(maxPerBucket(banded), maxPerBucket(rel)),
-      tombs.size, tombs.map(_.getLen).sum)
-  }
-
-  /** One-row health report for a durable corpus index — the
-    * [[graft.operators.Similarity.indexHealth]] contract over the
-    * bucketed-table layout: (n_buckets, n_banded_files, n_rel_files,
-    * max_files_per_bucket, n_tombstone_files, tombstone_bytes,
-    * tombstone_broadcast_ok, needs_compaction). Driver-side filesystem
-    * metadata only — no Spark job. */
+  /** One-row health report for a durable corpus index
+    * ([[PathIndex.report]] in the bucketed tables' terms): (n_buckets,
+    * n_rel_files, n_banded_files, max_files_per_bucket,
+    * n_tombstone_files, tombstone_bytes, tombstone_broadcast_ok,
+    * needs_compaction). Driver-side filesystem metadata only — no Spark
+    * job. */
   def corpusIndexHealth(
       spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
       maxFilesPerBucket: Int = Similarity.DefaultMaxFilesPerStripe,
       maxTombstoneBytes: Long = Similarity.DefaultMaxTombstoneBytes)
-      : DataFrame = {
-    val h = corpusHealthInfo(spark, tablePrefix)
-    import spark.implicits._
-    Seq((h.numBuckets, h.nBandedFiles, h.nRelFiles, h.maxFilesPerBucket,
-        h.nTombstoneFiles, h.tombstoneBytes,
-        h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
-        Similarity.needsCompaction(h.maxFilesPerBucket, h.nTombstoneFiles,
-          h.tombstoneBytes, maxFilesPerBucket, maxTombstoneBytes)))
-      .toDF("n_buckets", "n_banded_files", "n_rel_files",
-        "max_files_per_bucket", "n_tombstone_files", "tombstone_bytes",
-        "tombstone_broadcast_ok", "needs_compaction")
-  }
+      : DataFrame =
+    PathIndex.report(spark, corpusIndexRoot(spark, tablePrefix), Seq(Corpus),
+      maxFilesPerBucket, maxTombstoneBytes)
 
-  /** [[compactCorpusIndex]] iff the health is past the knee — the
-    * measured-defaults policy wrapper ([[graft.operators.Similarity
-    * .compactIfNeeded]]'s contract for the corpus family). Returns
+  /** [[compactCorpusIndex]] iff the health is past the knee (the
+    * [[graft.operators.Similarity.compactIfNeeded]] contract). Returns
     * true iff a compaction ran. */
   def compactCorpusIndexIfNeeded(
       spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
       maxFilesPerBucket: Int = Similarity.DefaultMaxFilesPerStripe,
       maxTombstoneBytes: Long = Similarity.DefaultMaxTombstoneBytes)
-      : Boolean = {
-    val h = corpusHealthInfo(spark, tablePrefix)
-    val due = Similarity.needsCompaction(h.maxFilesPerBucket,
-      h.nTombstoneFiles, h.tombstoneBytes, maxFilesPerBucket, maxTombstoneBytes)
-    if (due) compactCorpusIndex(spark, tablePrefix)
-    due
-  }
+      : Boolean =
+    PathIndex.compactIfNeeded(spark, corpusIndexRoot(spark, tablePrefix), Seq(Corpus),
+      maxFilesPerBucket, maxTombstoneBytes)
 
   /** Logical delete from a durable corpus index — RTBF reaching the
     * ARTIFACT, not just the corpus ([[deletionCascade]] handles the
     * corpus side; without this, a probe against a months-old index
     * keeps returning the deleted doc, and its content-derived rows —
-    * shingle sets, signatures — stay on disk). Ids append to
-    * `<prefix>_tombstones`; every [[loadCorpusIndex]] filters by it, so
-    * one request-sized write makes the delete visible to every probe
-    * form on the next load (handles held from before the delete are
-    * snapshots — they see it on their next re-resolve, exactly like
-    * appends). Physical erasure (and the reset of the tombstone set) is
-    * [[compactCorpusIndex]] — the two-phase discipline shared with
-    * [[graft.operators.Similarity]]'s ANN index deletes. A tombstoned
-    * id stays deleted until compaction clears the tombstones;
-    * re-appending one fails readably ([[appendToCorpusIndex]]'s guard)
-    * until [[compactCorpusIndex]] runs. Deletes racing a compaction are
-    * preserved (the compaction erases only its start-time snapshot of
-    * tombstone files). */
+    * shingle sets, signatures — stay on disk). The ids land as one
+    * tombstone batch; every later [[loadCorpusIndex]] filters them out.
+    * Physical erasure is [[compactCorpusIndex]]. A tombstoned id stays
+    * deleted until compaction clears the tombstones; re-appending one
+    * fails readably ([[appendToCorpusIndex]]'s guard) until then. */
   def deleteFromCorpusIndex(
-      ids: DataFrame, id: Column, tablePrefix: String): Unit = {
-    val spark = ids.sparkSession
-    indexMeta(spark, tablePrefix) // readable failure on a wrong prefix
-    Tombstones.append(ids, id, tombstoneDir(spark, tablePrefix)
-      .getOrElse(seedTombstones(spark, tablePrefix)))
-    // Written behind the catalog's back — drop its cached listing.
-    spark.catalog.refreshTable(tombstonesTable(tablePrefix))
-  }
+      ids: DataFrame, id: Column, tablePrefix: String): Unit =
+    PathIndex.delete(Corpus, ids, id, corpusIndexRoot(ids.sparkSession, tablePrefix))
 
-  /** Physical erasure + layout reset for a durable corpus index:
-    * rewrite both bucketed tables WITHOUT the tombstoned rows (and
-    * without the append-accreted file-per-night accretion — the bucket
-    * spec is re-laid by [[writeCorpusIndex]]'s writer), then drop the
-    * tombstones. The surviving relations are pinned
-    * ([[Materialize.pin]] — lineage truncated) BEFORE the rewrite
-    * drops the tables they derive from; under
-    * `graft.checkpoint.reliable=true` the pin is a reliable checkpoint,
-    * the right setting when compacting a big index on a real cluster.
-    * Probe ≡ rebuilt-on-survivors, bit-equal (gated). */
+  /** Physical erasure + layout reset for a durable corpus index: both
+    * bucketed relations are rewritten without the tombstoned rows (and
+    * without the file-per-append accretion) into scratch directories,
+    * swapped in by rename, and the tables refreshed; then the tombstones
+    * the rewrite applied are erased. The rewrite reads the original files
+    * until the swap, so nothing corpus-sized is pinned; the bucket count
+    * is the index's own (its scheme row). Deletes racing a compaction are
+    * preserved. Probe ≡ rebuilt-on-survivors, bit-equal (gated). */
   def compactCorpusIndex(
       spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Unit = {
-    // Snapshot the tombstones before anything reads the tables: the
-    // survivors view applies exactly this snapshot and the erase below
-    // deletes exactly its files, so a deleteFromCorpusIndex raced in
-    // while the survivor rewrite runs lands as a file outside the
-    // snapshot and SURVIVES the compaction (the Similarity compaction
-    // discipline — a blanket reset would silently discard the late
-    // delete and resurrect its rows in every later probe).
-    val m = indexMeta(spark, tablePrefix)
-    val tombs = corpusTombstones(spark, tablePrefix)
-    val idx = corpusTables(spark, tablePrefix, m, tombs) // survivors view
-    // The bucket count is a property of the EXISTING index, read from
-    // the catalog (appendToCorpusIndex's discipline) — a parameter here
-    // would silently re-lay a non-default index on the default.
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          s"${tablePrefix}_banded"))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
-    val rel = Materialize.pin(idx.rel)
-    val banded = Materialize.pin(idx.banded)
-    writeCorpusTables(
-      CorpusIndex(rel, banded, idx.n, idx.k, idx.bands),
-      tablePrefix, buckets, withMeta = false)
-    // Erase only the snapshotted files; the table itself stays (its
-    // schema lives in the catalog, so an all-files-erased table reads
-    // as empty and later deletes still Append into it).
-    tombs.erase()
-    // The files changed behind the catalog's back — drop the cached
-    // listing so the next read doesn't chase deleted part files.
-    spark.catalog.refreshTable(tombstonesTable(tablePrefix))
-  }
-
-  /** Tables are `<prefix>_banded|_rel|_meta` and the prefix is
-    * interpolated into DDL ([[writeCorpusIndex]]'s reset), so it must be
-    * a plain identifier — reject anything that could smuggle SQL or
-    * collide by accident via quoting tricks. */
-  private def requireIndexPrefix(tablePrefix: String): Unit =
-    require(tablePrefix.matches("[A-Za-z_][A-Za-z0-9_]*"),
-      s"corpus-index table prefix must be a plain SQL identifier " +
-        s"([A-Za-z_][A-Za-z0-9_]*), got: '$tablePrefix'")
-
-  /** The pinned scheme row, with a readable failure when the prefix
-    * points at nothing (a wrong prefix in a fresh session otherwise
-    * surfaces as a bare catalog/analysis error). */
-  private def indexMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Row = {
-    requireIndexPrefix(tablePrefix)
-    val missing = Seq("meta", "banded", "rel")
-      .map(s => s"${tablePrefix}_$s")
-      .filterNot(spark.catalog.tableExists)
-    require(missing.isEmpty,
-      s"no corpus index at prefix '$tablePrefix': missing table(s) " +
-        s"${missing.mkString(", ")} — was writeCorpusIndex run against " +
-        s"this metastore?")
-    // Parameter-sized: read on the driver, no Spark job.
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${tablePrefix}_meta"))
-    val rows = IndexFiles.readRows(spark, meta.location.toString, meta.schema)
-    require(rows.nonEmpty,
-      s"corpus index at prefix '$tablePrefix' has an EMPTY meta table — " +
-        s"the index write was interrupted; rebuild with writeCorpusIndex")
-    rows(0)
-  }
+      tablePrefix: String): Unit =
+    PathIndex.compact(Corpus, spark, corpusIndexRoot(spark, tablePrefix))
 
   /** Fold a new shard INTO a durable corpus index — the growth half of
     * "build once, probe for weeks": nightly ingest appends yesterday's
     * docs so today's probes see them, paying only the SHARD's shingle +
-    * band + write cost, never a corpus-sized rebuild (the rebuild is
-    * exactly the 100 TB scale-killer [[writeCorpusIndex]]'s layout
-    * exists to avoid).
+    * band + write cost, never a corpus-sized rebuild.
     *
-    * The shard is shingled/banded with the META-PINNED scheme (same
-    * [[shingleRel]]/[[bandedRows]] code path as the original build, so
-    * its rows are byte-identical to what a from-scratch rebuild on the
-    * unioned corpus would produce) and inserted via
-    * `DataFrameWriter.insertInto`, which writes THROUGH the catalog
-    * table's bucket spec: new files land with bucket ids assigned by
-    * the same hash on the same columns, so the bucketed-scan
-    * distribution guarantee — and with it the exchange-free probe plan
-    * — survives the append (buckets simply gain a file per append;
-    * only the per-bucket SORT guarantee is file-local, which the probe
-    * join never relied on). Gated in `IndexLifecycleSpec`:
-    * append→reload→probe ≡ from-scratch-rebuild probe bit-equal,
-    * exchange-free plan still green on the appended tables, and
-    * straddling pairs (probe × old corpus AND probe × new shard) found.
+    * The shard is shingled and banded under the pinned scheme (the same
+    * [[shingleRel]]/[[bandedRows]] code path as the build, so its rows
+    * are byte-identical to what a rebuild on the unioned corpus would
+    * produce) and inserted with `insertInto`, which writes THROUGH the
+    * catalog table's bucket spec: new files land with bucket ids
+    * assigned by the same hash on the same columns, so the bucketed scan
+    * — and with it the exchange-free probe plan — survives the append
+    * (buckets gain a file per append; only the per-bucket SORT is
+    * file-local, which the probe join never relied on). Gated in
+    * `IndexLifecycleSpec`: append→reload→probe ≡ rebuild probe
+    * bit-equal, exchange-free plan on the appended tables, and
+    * straddling pairs found.
     *
-    * Shard ids must be NEW — ENFORCED, not just documented: an id
-    * already live in the index would duplicate its rows into every
-    * later probe (the realistic trigger is a RETRIED partially-failed
-    * append — the two-table append is not atomic), so the guard
-    * semi-joins the shard's ids against the bucketed `_rel` table's id
-    * column (bucket-pruned, column-pruned) and fails readably, naming
-    * the recovery: append only the missing rows, or delete + compact
-    * to replace. */
+    * Shard ids must be NEW, and must not be tombstoned — both ENFORCED
+    * ([[PathIndex]]'s append guards), with errors naming the recovery. */
   def appendToCorpusIndex(
       shard: DataFrame, id: Column, text: Column,
-      tablePrefix: String): Unit = {
-    val spark = shard.sparkSession
-    val m = indexMeta(spark, tablePrefix)
-    // Guard the re-ingest-of-a-tombstoned-id edge (the Similarity
-    // append discipline, one shared [[Tombstones.requireNoneOf]]): the
-    // appended rows would land in the tables but every load filters the
-    // tombstones out, so the id would stay invisible to every probe
-    // until a compaction — silent data loss under a
-    // delete-by-mistake-then-re-add churn. The error names the fix.
-    // Both guards are independent bounded jobs — run concurrently
-    // (Similarity.inParallel; the lowest-index error wins, so the
-    // tombstone guard keeps its documented precedence over the
-    // live-id one).
-    Similarity.inParallel(
-      () => corpusTombstones(spark, tablePrefix).requireNoneOf(
-        shard.select(id.cast("long").as("id")),
-        s"into corpus index '$tablePrefix'", "compactCorpusIndex"),
-      // Live-duplicate guard, shared with the path indexes: any clash
-      // here is an id whose rows are LIVE — a retry would land them
-      // twice.
-      () => PathIndex.requireNewIds(
-        spark.table(s"${tablePrefix}_rel").select(col("id")),
-        shard.select(id.cast("long").as("id")), "appendToCorpusIndex",
-        s"corpus index '$tablePrefix'"))
-    val (k, bands) = (m.getAs[Int]("k"), m.getAs[Int]("bands"))
-    val rel = shingleRel(shard, id, text, m.getAs[Int]("n"), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The two inserts below share the persisted shingle relation; the
-      // block manager computes each cached partition once and the other
-      // insert waits for it, so no count() materializes it first.
-      // insertInto matches columns BY POSITION — select in table order.
-      // Place by the table's own bucket spec first (the
-      // writeCorpusIndex discipline): without it a shard written by T
-      // tasks opens up to T files per touched bucket, and nightly
-      // appends compound exactly the accretion compactCorpusIndex
-      // exists to undo — with it each night adds ≤ numBuckets files.
-      def insert(df: DataFrame, table: String): Unit = {
-        val spec = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
-        val ordered = df.select(
-          spark.table(table).columns.map(col).toIndexedSeq: _*)
-        val clustered = spec.fold(ordered)(s =>
-          bucketPlaced(ordered, s.numBuckets, s.bucketColumnNames))
-        clustered.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .insertInto(table)
-      }
-      // The two table appends are independent (different tables, both
-      // reading the materialized cache) — concurrent like the build's
-      // writes.
-      Similarity.inParallel(
-        () => insert(bandedRows(rel, k, bands, carry = Seq("n_sh")),
-          s"${tablePrefix}_banded"),
-        () => insert(rel, s"${tablePrefix}_rel"))
-    } finally rel.unpersist(false)
-  }
+      tablePrefix: String): Unit =
+    PathIndex.append(Corpus, shard, id, text, corpusIndexRoot(shard.sparkSession, tablePrefix))
 
   /** Near-dup pairs between NEW docs and an indexed reference corpus —
     * the incremental half of corpus dedup: band the new docs with the

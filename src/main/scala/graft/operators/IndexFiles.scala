@@ -14,14 +14,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** The file side every durable index shares — both stacks, every family:
-  * where a write's rows go ([[placed]]), how the small artifacts are
-  * read back ([[dataFiles]], [[readRows]]) and the stripe interval each
-  * data file covers ([[intervals]]).
+/** The file side every durable index shares — every [[PathIndex]]
+  * family: where a write's rows go ([[placed]]), what a dead job left in a
+  * directory ([[clearUncommitted]]), how the small artifacts are read
+  * back ([[dataFiles]], [[readRows]]) and the stripe interval each data
+  * file covers ([[intervals]]).
   *
   * '''Placement.''' Every index writer lands its rows in stripes: an IVF
-  * or IVF+PQ posting list and an LSH bucket (the flat sorted layout,
-  * [[PathIndex]]'s one writer), a MinHash table bucket (`bucketBy`). A write
+  * or IVF+PQ posting list and an LSH bucket (the flat sorted layout), a
+  * MinHash table bucket (`bucketBy`), all through [[PathIndex]]'s one
+  * writer. A write
   * task that holds a whole stripe writes it as ONE file, so every writer
   * clusters its rows by stripe first. [[placed]] is that clustering for
   * all of them: it gives each of `T` write tasks a contiguous range of
@@ -75,18 +77,28 @@ private[operators] object IndexFiles {
       stripe.cast(LongType) * lit(t.toLong), lit(nStripes)).cast(IntegerType))
   }
 
-  /** The data files directly under `dir` (none when `dir` is `None` or
-    * does not exist): no `_SUCCESS` marker, no hidden checksum files.
-    * Driver-side listing, no job. */
-  def dataFiles(spark: SparkSession, dir: Option[String]): Seq[FileStatus] =
-    dir.toSeq.flatMap { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")).toSeq
-    }
+  /** The data files directly under `dir` (none when it does not exist):
+    * no `_SUCCESS` marker, no hidden checksum files. Driver-side listing,
+    * no job. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).filter(s => s.isFile &&
+      !s.getPath.getName.startsWith("_") &&
+      !s.getPath.getName.startsWith(".")).toSeq
+  }
+
+  /** Remove `<dir>/_temporary`, where the file committer stages a job's
+    * task files. A job that died after some of its tasks committed leaves
+    * them under `_temporary/0/task_*`, and the next append-mode job into
+    * `dir` would commit them together with its own. Only safe while no
+    * other job writes `dir`: [[PathIndex]]'s single-writer contract. */
+  def clearUncommitted(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir, "_temporary")
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    ()
+  }
 
   /** Each parquet file's [min, max] of the integral `column`, from its
     * footer's row-group statistics, read on the driver (no Spark job). A
@@ -134,7 +146,7 @@ private[operators] object IndexFiles {
     * (Spark's three-level list layout), each read as written. */
   def readRows(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
     val out = Seq.newBuilder[Row]
-    foreachRecord(spark, dataFiles(spark, Some(dir))) { g =>
+    foreachRecord(spark, dataFiles(spark, dir)) { g =>
       out += new GenericRowWithSchema(
         schema.fields.map(f => field(g, f.name, f.dataType)), schema)
     }

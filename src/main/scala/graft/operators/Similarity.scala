@@ -567,7 +567,7 @@ object Similarity {
   def writeIvfIndex(
       centroids: Array[Array[Float]], indexed: DataFrame,
       path: String): Unit =
-    PathIndex.write(Ivf, centroids, indexed, path)
+    PathIndex.write(Ivf, centroids, Seq(indexed), path)
 
   /** Reload a [[writeIvfIndex]]-persisted index in (possibly) a fresh
     * session: (centroids ordered by list id, posting-list scan). The
@@ -578,7 +578,7 @@ object Similarity {
   def loadIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Float]], DataFrame) =
-    PathIndex.load(Ivf, spark, path)
+    loadOne(Ivf, spark, path)
 
   /** ===== Deletion + compaction for the durable ANN indexes =====
     *
@@ -692,21 +692,23 @@ object Similarity {
     * | Pq     | codebooks                     | codes     | none                  | as it comes |
     *
     * The encode steps are [[ivfAssign]], [[ivfPqEncode]], [[bucketize]]
-    * and [[pqEncode]]. Every family lands in a flat data directory through
+    * and [[pqEncode]]; the fifth family, the MinHash corpus index, is
+    * [[Dedup.Corpus]]. Every family here lands in a flat data directory through
     * [[PathIndex]]'s one writer; a striped landing places whole stripes on
     * each write task ([[IndexFiles.placed]]) and sorts them by
     * (stripe, id), one file per task whose stripe intervals do not
     * overlap, and the stripe is a data column every probe filter pushes
     * down to the footer and row-group statistics. */
   private val Ivf = PathFamily[Array[Array[Float]]](
-    "Ivf", Seq("centroids"), "lists", ArtifactSchemas.ivfLists,
-    Some(("list", c => c.length.toLong)), loadIvfCentroids,
+    "Ivf", Seq("centroids"),
+    Seq(DataRelation("lists", ArtifactSchemas.ivfLists, Striped("list", _.length.toLong))),
+    loadIvfCentroids,
     (spark, c, path) => Seq(() => writeCentroids(spark, c, path)),
     ivfAssign)
 
   private val IvfPq = PathFamily[(Array[Array[Float]], IvfPqCodebooks)](
-    "IvfPq", Seq("centroids", "codebooks", "meta"), "lists", ArtifactSchemas.ivfPqLists,
-    Some(("list", p => p._1.length.toLong)),
+    "IvfPq", Seq("centroids", "codebooks", "meta"),
+    Seq(DataRelation("lists", ArtifactSchemas.ivfPqLists, Striped("list", _._1.length.toLong))),
     (spark, path) => (loadIvfCentroids(spark, path),
       IvfPqCodebooks(loadMeta(spark, path, ArtifactSchemas.ivfPqMeta, "IvfPq").getString(0),
         loadPqCodebooks(spark, path))),
@@ -718,20 +720,28 @@ object Similarity {
     (vecs, id, vec, p) => ivfPqEncode(vecs, id, vec, p._1, p._2))
 
   private val Lsh = PathFamily[Int](
-    "Lsh", Seq("meta"), "buckets", ArtifactSchemas.lshBuckets,
-    Some(("bucket", nBits => 1L << nBits)),
+    "Lsh", Seq("meta"),
+    Seq(DataRelation("buckets", ArtifactSchemas.lshBuckets, Striped("bucket", 1L << _))),
     loadMeta(_, _, ArtifactSchemas.lshMeta, "Lsh").getInt(0),
     (spark, nBits, path) => Seq(() => writeParam(
       spark.createDataFrame(Seq(Tuple1(nBits))).toDF("n_bits"), s"$path/meta")),
     bucketize)
 
   private val Pq = PathFamily[Seq[(Int, Int, Array[Double])]](
-    "Pq", Seq("codebooks"), "codes", ArtifactSchemas.pqCodes, None, loadPqCodebooks,
+    "Pq", Seq("codebooks"), Seq(DataRelation("codes", ArtifactSchemas.pqCodes, AsItComes())),
+    loadPqCodebooks,
     (spark, cbs, path) => Seq(() => writeCodebooks(spark, cbs, path)),
     pqEncode)
 
-  /** Health detection's table. */
-  private val PathFamilies: Seq[PathFamily[_]] = Seq(IvfPq, Ivf, Lsh, Pq)
+  /** Health detection's table: every durable family. */
+  private val PathFamilies: Seq[PathFamily[_]] = Seq(IvfPq, Ivf, Lsh, Pq, Dedup.Corpus)
+
+  /** [[PathIndex.load]] of a family with one data relation. */
+  private def loadOne[P](f: PathFamily[P], spark: org.apache.spark.sql.SparkSession,
+      path: String): (P, DataFrame) = {
+    val (p, data) = PathIndex.load(f, spark, path)
+    (p, data.head)
+  }
 
   private def writeParam(df: DataFrame, dir: String): Unit =
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
@@ -767,11 +777,12 @@ object Similarity {
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .sortBy(p => (p._1, p._2))
 
-  /** The one-row `meta` table (LSH `n_bits`, IVF+PQ `encoding`). An empty
+  /** The one-row `meta` table (LSH `n_bits`, IVF+PQ `encoding`, the
+    * corpus index's scheme). An empty
     * one — an interrupted write, or an index from before the pinned
     * format — fails toward a rebuild: guessing would mis-decode every
     * row. */
-  private def loadMeta(
+  private[operators] def loadMeta(
       spark: org.apache.spark.sql.SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType, family: String): Row = {
     val rows = IndexFiles.readRows(spark, s"$path/meta", schema)
@@ -823,7 +834,7 @@ object Similarity {
     // would pin a meta nBits every probe/append then throws on.
     require(nBits >= 1 && nBits <= 32,
       s"nBits must be in [1, 32] (HyperplaneBucket64's domain), got $nBits")
-    PathIndex.write(Lsh, nBits, bucketize(vecs, id, vec, nBits), path)
+    PathIndex.write(Lsh, nBits, Seq(bucketize(vecs, id, vec, nBits)), path)
   }
 
   /** Reload a [[writeLshIndex]]-persisted index: (nBits, bucketed scan).
@@ -832,7 +843,7 @@ object Similarity {
   def loadLshIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, DataFrame) =
-    PathIndex.load(Lsh, spark, path)
+    loadOne(Lsh, spark, path)
 
   /** Fold new vectors into a durable LSH index, banded with the
     * meta-pinned nBits through the build's [[bucketize]]; the shard lands
@@ -996,14 +1007,14 @@ object Similarity {
   def writePqIndex(
       codebooks: Seq[(Int, Int, Array[Double])], encoded: DataFrame,
       path: String): Unit =
-    PathIndex.write(Pq, codebooks, encoded, path)
+    PathIndex.write(Pq, codebooks, Seq(encoded), path)
 
   /** Reload a [[writePqIndex]]-persisted index: (codebooks in (j, cl)
     * order, tombstone-filtered codes scan). */
   def loadPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[(Int, Int, Array[Double])], DataFrame) =
-    PathIndex.load(Pq, spark, path)
+    loadOne(Pq, spark, path)
 
   /** ===== Composed IVF+PQ durable index (the FAISS IVFADC layout —
     * Jégou et al. 2011, public literature) =====
@@ -1192,7 +1203,7 @@ object Similarity {
       centroids: Array[Array[Float]],
       cbs: IvfPqCodebooks,
       encoded: DataFrame, path: String): Unit =
-    PathIndex.write(IvfPq, (centroids, cbs), encoded, path)
+    PathIndex.write(IvfPq, (centroids, cbs), Seq(encoded), path)
 
   /** Reload a [[writeIvfPqIndex]]-persisted index: (centroids by list id,
     * the [[IvfPqCodebooks]] artifact with its meta-pinned encoding, the
@@ -1201,7 +1212,7 @@ object Similarity {
   def loadIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String):
       (Array[Array[Float]], IvfPqCodebooks, DataFrame) = {
-    val ((centroids, cbs), codes) = PathIndex.load(IvfPq, spark, path)
+    val ((centroids, cbs), codes) = loadOne(IvfPq, spark, path)
     (centroids, cbs, codes)
   }
 
@@ -1273,49 +1284,39 @@ object Similarity {
     * Both read driver-side FILESYSTEM METADATA and parquet footers only —
     * no Spark job, so they are safe to call at any frequency. */
 
-  /** `path` names a durable CORPUS index (table-prefix layout,
-    * [[graft.operators.Dedup.writeCorpusIndex]]) rather than a
-    * path-based ANN index: a plain SQL identifier whose `_meta` table
-    * exists in the catalog. The dispatch test for the ONE-verb policy
-    * surface — a nightly job calls [[indexHealth]]/[[compactIfNeeded]]
+  /** The index directory `path` names: a corpus index's root when `path`
+    * is a plain SQL identifier with a root in the warehouse
+    * ([[graft.operators.Dedup.writeCorpusIndex]]'s table prefix), else
+    * `path` itself. A nightly job calls [[indexHealth]]/[[compactIfNeeded]]
     * on whatever it appended to, vector stripes or text buckets. */
-  private def isCorpusIndexPrefix(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    path.matches("[A-Za-z_][A-Za-z0-9_]*") &&
-      spark.catalog.tableExists(s"${path}_meta")
+  private def indexRoot(spark: org.apache.spark.sql.SparkSession, path: String): String =
+    if (!path.matches("[A-Za-z_][A-Za-z0-9_]*")) path
+    else {
+      val root = Dedup.corpusIndexRoot(spark, path)
+      val p = new org.apache.hadoop.fs.Path(root)
+      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) root else path
+    }
 
-  /** One-row health report for ANY durable index — the four path-based
-    * ANN families: (kind, n_stripes, n_data_files,
-    * max_files_per_stripe, n_tombstone_files, tombstone_bytes,
-    * tombstone_broadcast_ok, needs_compaction) — `n_stripes` is the
-    * family's stripe count (a bigint: an LSH index has 2^nBits), and
-    * `max_files_per_stripe` the most files a one-stripe probe opens,
-    * from the files' stripe intervals ([[PathIndex.health]]) — or, when `path` is a
-    * corpus-index table prefix, [[graft.operators.Dedup
-    * .corpusIndexHealth]]'s frame (same knee thresholds, the bucketed-
-    * table column names). `needs_compaction` applies the measured-knee
-    * thresholds [[compactIfNeeded]] enforces; `tombstone_broadcast_ok`
-    * is the [[Tombstones.BroadcastCapBytes]] headroom — false means
-    * loads have already degraded from the broadcast id set to a
-    * shuffled anti-join. */
+  /** One-row health report for ANY durable index — a path of the four
+    * ANN families or a corpus-index table prefix, the family detected
+    * from the layout ([[PathIndex.report]]): (kind, n_stripes,
+    * n_data_files, max_files_per_stripe, …) for an ANN index —
+    * `n_stripes` is the family's stripe count (a bigint: an LSH index has
+    * 2^nBits), and `max_files_per_stripe` the most files a one-stripe
+    * probe opens, from the files' stripe intervals — and
+    * [[graft.operators.Dedup.corpusIndexHealth]]'s bucketed-table columns
+    * for a corpus index; then n_tombstone_files, tombstone_bytes,
+    * tombstone_broadcast_ok, needs_compaction. `needs_compaction` applies
+    * the measured-knee thresholds [[compactIfNeeded]] enforces;
+    * `tombstone_broadcast_ok` is the [[Tombstones.BroadcastCapBytes]]
+    * headroom — false means loads have already degraded from the
+    * broadcast id set to a shuffled anti-join. */
   def indexHealth(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerStripe: Int = DefaultMaxFilesPerStripe,
-      maxTombstoneBytes: Long = DefaultMaxTombstoneBytes): DataFrame = {
-    if (isCorpusIndexPrefix(spark, path))
-      return Dedup.corpusIndexHealth(
-        spark, path, maxFilesPerStripe, maxTombstoneBytes)
-    val h = PathIndex.health(spark, path, PathFamilies)
-    import spark.implicits._
-    Seq((h.family.kind, h.nStripes, h.nDataFiles, h.maxFilesPerStripe,
-        h.nTombstoneFiles, h.tombstoneBytes,
-        h.tombstoneBytes <= Tombstones.BroadcastCapBytes,
-        needsCompaction(h.maxFilesPerStripe, h.nTombstoneFiles, h.tombstoneBytes,
-          maxFilesPerStripe, maxTombstoneBytes)))
-      .toDF("kind", "n_stripes", "n_data_files", "max_files_per_stripe",
-        "n_tombstone_files", "tombstone_bytes", "tombstone_broadcast_ok",
-        "needs_compaction")
-  }
+      maxTombstoneBytes: Long = DefaultMaxTombstoneBytes): DataFrame =
+    PathIndex.report(spark, indexRoot(spark, path), PathFamilies, maxFilesPerStripe,
+      maxTombstoneBytes)
 
   /** Default knee: 64 files/stripe ≈ two months of nightly clustered
     * appends — past the ~16-files measurable-penalty point, an order
@@ -1330,39 +1331,20 @@ object Similarity {
     * before [[Tombstones.BroadcastCapBytes]] degrades the probe plans. */
   val DefaultMaxTombstoneBytes: Long = Tombstones.BroadcastCapBytes / 4
 
-  /** The knee, for both stacks: a stripe (or bucket) past
-    * `maxFilesPerStripe` files, as many tombstone files, or tombstones
-    * past `maxTombstoneBytes`. */
-  private[operators] def needsCompaction(
-      filesPerStripe: Int, nTombstoneFiles: Int, tombstoneBytes: Long,
-      maxFilesPerStripe: Int, maxTombstoneBytes: Long): Boolean =
-    filesPerStripe > maxFilesPerStripe ||
-      nTombstoneFiles > maxFilesPerStripe ||
-      tombstoneBytes > maxTombstoneBytes
-
-  /** Compact `path` iff its health is past the knee, dispatching to
-    * the family's compact verb — ANY family: the four path-based ANN
-    * layouts, or a corpus-index table prefix (routed to
-    * [[graft.operators.Dedup.compactCorpusIndexIfNeeded]] under the
-    * same knee constants), so a nightly job has ONE verb regardless of
-    * what it appended to. Returns true iff a compaction ran — the
-    * nightly-append job's post-step (`appendTo*Index(...);
-    * compactIfNeeded(...)`) that keeps the layout inside the measured
-    * regime without scheduling corpus-sized rewrites that buy
-    * nothing. */
+  /** Compact `path` iff its health is past the knee, with the detected
+    * family's compaction — ANY family: the four path-based ANN layouts,
+    * or a corpus-index table prefix, under the same knee constants, so a
+    * nightly job has ONE verb regardless of what it appended to. Returns
+    * true iff a compaction ran — the nightly-append job's post-step
+    * (`appendTo*Index(...); compactIfNeeded(...)`) that keeps the layout
+    * inside the measured regime without scheduling corpus-sized rewrites
+    * that buy nothing. */
   def compactIfNeeded(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerStripe: Int = DefaultMaxFilesPerStripe,
-      maxTombstoneBytes: Long = DefaultMaxTombstoneBytes): Boolean = {
-    if (isCorpusIndexPrefix(spark, path))
-      return Dedup.compactCorpusIndexIfNeeded(
-        spark, path, maxFilesPerStripe, maxTombstoneBytes)
-    val h = PathIndex.health(spark, path, PathFamilies)
-    val due = needsCompaction(h.maxFilesPerStripe, h.nTombstoneFiles,
-      h.tombstoneBytes, maxFilesPerStripe, maxTombstoneBytes)
-    if (due) PathIndex.compact(h.family, spark, path)
-    due
-  }
+      maxTombstoneBytes: Long = DefaultMaxTombstoneBytes): Boolean =
+    PathIndex.compactIfNeeded(spark, indexRoot(spark, path), PathFamilies,
+      maxFilesPerStripe, maxTombstoneBytes)
 
   /** Batch probe over the composed index — [[ivfTopKBatch]]'s
     * many-queries shape reading CODES instead of float vectors: the

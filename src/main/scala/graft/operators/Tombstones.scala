@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** One snapshot of a durable index's tombstones — THE tombstone read
-  * path of both index stacks: [[Similarity]]'s `<path>/tombstones`
-  * directories and [[Dedup]]'s `<prefix>_tombstones` tables are both a
-  * directory of parquet `id` files, appended one file per delete batch
-  * ([[Tombstones.append]], the one writer, with [[Tombstones.seed]]).
+  * path of every [[PathIndex]] family, the MinHash corpus index included:
+  * `<path>/tombstones` is a directory of parquet `id` files, appended one
+  * file per delete batch ([[Tombstones.append]], the one writer, with
+  * [[Tombstones.seed]]).
   *
   * [[Tombstones.at]] lists the directory's data files ONCE, and while
   * their bytes stay within [[Tombstones.BroadcastCapBytes]] it also reads
@@ -113,10 +113,15 @@ private[operators] object Tombstones {
   /** One delete batch: the distinct ids, appended as one file. The
     * distinct runs in the one task `coalesce(1)` leaves, whose single
     * partition already satisfies the aggregate's distribution: no
-    * exchange, one job. */
-  def append(ids: DataFrame, id: Column, dir: String): Unit =
+    * exchange, one job. A dead earlier batch's `_temporary` is removed
+    * first ([[IndexFiles.clearUncommitted]], under [[PathIndex]]'s
+    * single-writer contract), so none of its tasks is committed with
+    * this one. */
+  def append(ids: DataFrame, id: Column, dir: String): Unit = {
+    IndexFiles.clearUncommitted(ids.sparkSession, dir)
     ids.select(id.cast(LongType).as("id")).coalesce(1).distinct()
       .write.mode(SaveMode.Append).parquet(dir)
+  }
 
   /** An empty batch (one schema-only file), so the relation exists and is
     * readable with nothing deleted. `Overwrite` also resets stale
@@ -140,8 +145,8 @@ private[operators] object Tombstones {
     require(fs.rename(tmp, new Path(d, name)), s"rename $tmp -> $name failed")
   }
 
-  /** Snapshot the tombstones under `dir` (`None`: the index has none). */
-  def at(spark: SparkSession, dir: Option[String]): Tombstones = {
+  /** Snapshot the tombstones under `dir`. */
+  def at(spark: SparkSession, dir: String): Tombstones = {
     val files = IndexFiles.dataFiles(spark, dir)
     val ids =
       if (files.map(_.getLen).sum > BroadcastCapBytes) None

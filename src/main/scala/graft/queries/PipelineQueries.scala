@@ -48,15 +48,14 @@ object PipelineQueries {
       _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
   }
 
-  /** [[withScratchDir]] for a corpus index in the catalog: a table prefix
-    * of this run's own, its four tables dropped when `body` returns or
-    * fails. */
+  /** [[withScratchDir]] for a corpus index: a table prefix of this run's
+    * own, the index removed ([[Dedup.dropCorpusIndex]]) when `body`
+    * returns or fails. */
   private def withScratchIndex(spark: SparkSession, name: String)(
       body: String => DataFrame): DataFrame = {
     val prefix = s"graft_${name}_" + UUID.randomUUID.toString.replace("-", "").take(12)
     try body(prefix)
-    finally Seq("banded", "rel", "meta", "tombstones").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+    finally Dedup.dropCorpusIndex(spark, prefix)
   }
 
   /** Pin several INDEPENDENT legs concurrently (guide §2.6 — each pin

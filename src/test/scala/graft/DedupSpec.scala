@@ -4,13 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
-class DedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class DedupSpec extends SparkSpec {
   import spark.implicits._
-
-  private val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-
-  override def afterAll(): Unit =
-    try SpecScratch.clean(spark, runId) finally super.afterAll()
 
   // Planted corpus: 0/1 exact dups, 2 near-dup of them (one word changed),
   // 3/4 shuffled-word dups, 5 unrelated.

@@ -41,13 +41,7 @@ import graft.sources.Tables
   * by whichever test runs first — a `-z` single-test run still works)
   * and lands under per-run names/paths, so concurrent suite runs never
   * collide on a shared warehouse or /tmp. */
-class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
-
-  private val runId =
-    java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-
-  override def afterAll(): Unit =
-    try SpecScratch.clean(spark, runId) finally super.afterAll()
+class IndexLifecycleSpec extends SparkSpec {
 
   private def tmpDir(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${name}_$runId"
@@ -586,18 +580,22 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       col("doc_id"), col("text"), Dedup.loadCorpusIndex(fresh2, prefix),
       threshold = 0.8, persistNewRel = false)
     val plan = probe.queryExecution.executedPlan
+    val tombstoneDir = new org.apache.hadoop.fs.Path(
+      s"${Dedup.corpusIndexRoot(spark, prefix)}/tombstones").toUri.getPath
     for (t <- Seq(s"${prefix}_banded", s"${prefix}_rel")) {
       // Offending = an exchange whose ONLY sources are the bucketed
       // table and its tombstones — i.e. the bucketed side shuffled
       // BEFORE merging with the shard (exchanges above that merge
       // belong to the shard side and are expected, the
-      // subtreeWithTable discipline).
-      val ok = Set(t, s"${prefix}_tombstones")
+      // subtreeWithTable discipline). The tombstones are a directory
+      // scan with no table name: matched by location.
+      def ok(scan: FileSourceScanExec): Boolean =
+        scan.tableIdentifier.exists(_.table == t) ||
+          scan.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(tombstoneDir))
       val offending = plan.collect {
         case e: ShuffleExchangeExec if {
           val scans = scansOf(e)
-          scans.exists(_.tableIdentifier.exists(_.table == t)) &&
-            scans.forall(_.tableIdentifier.exists(i => ok(i.table)))
+          scans.exists(_.tableIdentifier.exists(_.table == t)) && scans.forall(ok)
         } => e
       }
       assert(offending.isEmpty,
@@ -613,10 +611,10 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       .bucketSpec
     assert(spec.map(_.numBuckets) === Some(4),
       s"compaction must preserve the existing bucket count, got $spec")
-    // Compaction re-seeds an EMPTY tombstones table (loads always
+    // Compaction re-seeds an EMPTY tombstones relation (loads always
     // anti-join; nothing left to hide).
-    assert(spark.table(s"${prefix}_tombstones").isEmpty,
-      "compaction must leave an empty tombstones table")
+    assert(spark.read.parquet(s"${Dedup.corpusIndexRoot(spark, prefix)}/tombstones").isEmpty,
+      "compaction must leave an empty tombstones relation")
     val fresh3 = spark.newSession()
     val got2 = probePairs(fresh3, Dedup.loadCorpusIndex(fresh3, prefix))
     assert(got2 === want, "compacted probe must equal the tombstoned probe")
@@ -1069,8 +1067,7 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     Dedup.writeCorpusIndex(built, prefix, buckets = 4)
     built.unpersist()
     Dedup.deleteFromCorpusIndex(docs.limit(3).select(col("doc_id")), col("doc_id"), prefix)
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_meta")).location
+    val loc = new java.net.URI(s"${Dedup.corpusIndexRoot(spark, prefix)}/meta")
     def metaFiles(): Map[String, Long] =
       new java.io.File(loc).listFiles().map(f => f.getName -> f.lastModified).toMap
     val before = metaFiles()
@@ -1132,11 +1129,12 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     // Budgets at the measured counts (4 cores); a parameter table is
     // read on the driver and the tombstone seed is written there, so no
     // verb spends a job on either. The MinHash delete's second job is
-    // its input's own `limit` exchange.
+    // its input's own `limit` exchange; its compaction pins nothing (it
+    // reads the original files until the swap).
     val budget = Map(
       "ivf.write" -> 4, "ivf.append" -> 7, "ivf.delete" -> 1, "ivf.compact" -> 3,
       "minhash.write" -> 5, "minhash.append" -> 8, "minhash.delete" -> 2,
-      "minhash.compact" -> 6)
+      "minhash.compact" -> 5)
     info(s"measured $jobs")
     assert(budget.forall { case (verb, n) => jobs(verb) <= n },
       s"job budget exceeded: measured $jobs, budget $budget")
@@ -1212,7 +1210,10 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val (loaded, corpusJobs) = JobCount(spark)(Dedup.loadCorpusIndex(spark, prefix))
     assert(corpusJobs === 0, s"a corpus-index load ran $corpusJobs jobs")
     assert((loaded.n, loaded.k, loaded.bands) === (built.n, built.k, built.bands))
-    spark.sql(s"TRUNCATE TABLE ${prefix}_meta")
+    spark.createDataFrame(java.util.List.of[Row](), spark.read.parquet(
+        s"${Dedup.corpusIndexRoot(spark, prefix)}/meta").schema)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"${Dedup.corpusIndexRoot(spark, prefix)}/meta")
     val e = intercept[IllegalArgumentException](Dedup.loadCorpusIndex(spark, prefix))
     assert(e.getMessage.contains("EMPTY meta table"), e.getMessage)
 
@@ -1768,66 +1769,109 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       old, col("vec_id"), col("embedding"), m = 16, ksub = 16, iters = 1)
     val icbs = Similarity.ivfPqFitCodebooks(
       old, col("vec_id"), col("embedding"), centroids, m = 16, ksub = 16, iters = 1)
-    // (family, data directory, write, load, append, delete, compact)
-    case class Family(name: String, data: String, write: String => Unit,
+    val docs = Tables.documents(spark, sf)
+    val corpus = Dedup.corpusIndex(
+      docs.filter(col("source") =!= "src8"), col("doc_id"), col("text"))
+    def copyTree(from: java.io.File, to: java.io.File): Unit =
+      org.apache.commons.io.FileUtils.copyDirectory(from, to)
+    // (family, index name, its directory, data directories, write, a
+    // copy of the written index under a new name, load, append, delete,
+    // compact); a path family's index name is its directory and a copy
+    // is a copy of the tree, the corpus index's name is its table
+    // prefix and a copy is a second write (its tables are in the catalog).
+    case class Family(name: String, base: String, dir: String => String, data: Seq[String],
+        write: String => Unit, copy: String => Unit, load: String => DataFrame,
+        append: String => Unit, delete: String => Unit, compact: String => Unit)
+    def pathFamily(name: String, data: String, write: String => Unit,
         load: String => DataFrame, append: String => Unit,
-        delete: String => Unit, compact: String => Unit)
+        delete: String => Unit, compact: String => Unit): Family = {
+      val base = tmpDir(s"crash_$name")
+      Family(name, base, identity, Seq(data), write,
+        p => copyTree(new java.io.File(base), new java.io.File(p)), load, append, delete,
+        compact)
+    }
     val families = Seq(
-      Family("ivf", "lists", Similarity.writeIvfIndex(centroids, indexed, _),
+      pathFamily("ivf", "lists", Similarity.writeIvfIndex(centroids, indexed, _),
         p => Similarity.loadIvfIndex(spark, p)._2,
         Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), _),
         Similarity.deleteFromIvfIndex(deleted, col("vec_id"), _),
         Similarity.compactIvfIndex(spark, _)),
-      Family("lsh", "buckets",
+      pathFamily("lsh", "buckets",
         Similarity.writeLshIndex(old, col("vec_id"), col("embedding"), 8, _),
         p => Similarity.loadLshIndex(spark, p)._2,
         Similarity.appendToLshIndex(shard, col("vec_id"), col("embedding"), _),
         Similarity.deleteFromLshIndex(deleted, col("vec_id"), _),
         Similarity.compactLshIndex(spark, _)),
-      Family("pq", "codes", Similarity.writePqIndex(pqCbs, pqCodes, _),
+      pathFamily("pq", "codes", Similarity.writePqIndex(pqCbs, pqCodes, _),
         p => Similarity.loadPqIndex(spark, p)._2,
         Similarity.appendToPqIndex(shard, col("vec_id"), col("embedding"), _),
         Similarity.deleteFromPqIndex(deleted, col("vec_id"), _),
         Similarity.compactPqIndex(spark, _)),
-      Family("ivfpq", "lists", Similarity.writeIvfPqIndex(centroids, icbs,
+      pathFamily("ivfpq", "lists", Similarity.writeIvfPqIndex(centroids, icbs,
           Similarity.ivfPqEncode(old, col("vec_id"), col("embedding"), centroids, icbs), _),
         p => Similarity.loadIvfPqIndex(spark, p)._3,
         Similarity.appendToIvfPqIndex(shard, col("vec_id"), col("embedding"), _),
         Similarity.deleteFromIvfPqIndex(deleted, col("vec_id"), _),
-        Similarity.compactIvfPqIndex(spark, _)))
+        Similarity.compactIvfPqIndex(spark, _)),
+      // Both relations in one frame: each verification row with its
+      // sorted band hashes.
+      Family("corpus", s"graft_crash_corpus_$runId",
+        p => new java.net.URI(Dedup.corpusIndexRoot(spark, p)).getPath, Seq("rel", "banded"),
+        Dedup.writeCorpusIndex(corpus, _, buckets = 4),
+        Dedup.writeCorpusIndex(corpus, _, buckets = 4),
+        p => {
+          val idx = Dedup.loadCorpusIndex(spark, p)
+          idx.rel.join(idx.banded.groupBy(col("id"))
+            .agg(sort_array(collect_list(col("bh"))).as("bhs")), Seq("id"), "left")
+        },
+        Dedup.appendToCorpusIndex(docs.filter(col("source") === "src8"),
+          col("doc_id"), col("text"), _),
+        Dedup.deleteFromCorpusIndex(docs.filter(col("source") =!= "src8" &&
+          pmod(col("doc_id"), lit(7)) === 1).select(col("doc_id")), col("doc_id"), _),
+        Dedup.compactCorpusIndex(spark, _)))
 
-    // A half-written delete batch: a task attempt's file of ids under
-    // the committer's `_temporary`, the job never committed. The ids are
-    // live ones, so applying them would move every probe.
-    val pending = tmpDir("crash_pending")
-    old.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id").cast("long").as("id"))
-      .coalesce(1).write.parquet(pending)
-    val pendingFile = new java.io.File(pending).listFiles().find(_.getName.endsWith(".parquet")).get
-    def copyTree(from: java.io.File, to: java.io.File): Unit =
-      org.apache.commons.io.FileUtils.copyDirectory(from, to)
+    def parquetIn(dir: String): java.io.File =
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    // A file a task of a dead job left under the committer's `_temporary`
+    // in `dir`: an attempt's file (the task did not commit) or a
+    // committed task's, which the next append-mode job would commit too.
+    // The uuid in the name is a new one, the bucket id (if any) kept.
+    def pendingTask(from: java.io.File, dir: String, committed: Boolean): Unit = {
+      val task = if (committed) "0/task_202610190000_0001_m_000000"
+        else "0/_temporary/attempt_202610190000_0001_m_000000_0"
+      val name = from.getName.replaceFirst(
+        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+        java.util.UUID.randomUUID.toString)
+      org.apache.commons.io.FileUtils.copyFile(from,
+        new java.io.File(s"$dir/_temporary/$task/$name"))
+    }
     // Each state as the interrupted verb leaves it, made with file
-    // operations only; `None` when the next verbs must run as on a clean
-    // index, else the words their error must contain.
-    val states: Seq[(String, (String, Family) => Unit, Option[Seq[String]])] = Seq(
+    // operations only (`pending`: a parquet file of live ids); `None`
+    // when the next verbs must run as on a clean index, else the words
+    // their error must contain.
+    type State = (String, String => Unit, Option[Seq[String]])
+    def states(f: Family, pending: java.io.File): Seq[State] = Seq[State](
       ("write without its completion marker",
-        (p, _) => assert(new java.io.File(s"$p/_GRAFT_INDEX_COMPLETE").delete()),
+        (p: String) => assert(new java.io.File(s"$p/_GRAFT_INDEX_COMPLETE").delete()),
         Some(Seq("INCOMPLETE", "rebuild"))),
       ("a half-written tombstone batch",
-        (p, _) => org.apache.commons.io.FileUtils.copyFile(pendingFile, new java.io.File(
-          s"$p/tombstones/_temporary/0/_temporary/attempt_202610190000_0001_m_000000_0/part-00000.snappy.parquet")),
-        None),
-      ("a compaction stopped before its first rename",
-        (p, f) => copyTree(new java.io.File(s"$p/${f.data}"), new java.io.File(s"$p/${f.data}__compact")),
-        None),
-      ("a compaction stopped between its two renames",
-        (p, f) => assert(new java.io.File(s"$p/${f.data}")
-          .renameTo(new java.io.File(s"$p/${f.data}__pre_compact"))),
-        Some(Seq("interrupted", "__pre_compact"))))
+        (p: String) => pendingTask(pending, s"$p/tombstones", committed = false), None),
+      ("a delete whose task committed but whose job did not",
+        (p: String) => pendingTask(pending, s"$p/tombstones", committed = true), None),
+      ("an append whose task committed but whose job did not",
+        (p: String) => f.data.foreach(d =>
+          pendingTask(parquetIn(s"$p/$d"), s"$p/$d", committed = true)), None)) ++
+      f.data.flatMap(d => Seq[State](
+        (s"a compaction stopped before its first rename of $d",
+          (p: String) => copyTree(new java.io.File(s"$p/$d"), new java.io.File(s"$p/${d}__compact")),
+          None),
+        (s"a compaction stopped between its two renames of $d",
+          (p: String) => assert(new java.io.File(s"$p/$d")
+            .renameTo(new java.io.File(s"$p/${d}__pre_compact"))),
+          Some(Seq("interrupted", "__pre_compact")))))
 
     def rows(df: DataFrame): Seq[Row] = df.orderBy(col("id")).collect().toSeq
     for (f <- families) {
-      val base = tmpDir(s"crash_${f.name}")
-      f.write(base)
       // The clean twin's rows after each verb: load, delete, append, compact.
       val steps: Seq[(String, String => Unit)] = Seq(
         "load" -> (_ => ()), "delete" -> f.delete, "append" -> f.append, "compact" -> f.compact)
@@ -1835,14 +1879,18 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
         try { verb(p); Right(rows(f.load(p))) }
         catch { case e: IllegalArgumentException => Left(e.getMessage) }
       }
-      val twin = s"${base}_twin"
-      copyTree(new java.io.File(base), new java.io.File(twin))
-      val want = run(twin)
+      f.write(f.base)
+      // Live ids, a third of them: applying them would move every load.
+      val pending = tmpDir(s"crash_pending_${f.name}")
+      f.load(f.base).select(col("id")).filter(pmod(col("id"), lit(3)) === 0)
+        .coalesce(1).write.parquet(pending)
+      f.copy(s"${f.base}_twin")
+      val want = run(s"${f.base}_twin")
       assert(want.forall(_.isRight), s"${f.name}: the clean twin must run every verb: $want")
-      for (((state, make, fails), i) <- states.zipWithIndex) {
-        val p = s"${base}_state$i"
-        copyTree(new java.io.File(base), new java.io.File(p))
-        make(p, f)
+      for (((state, make, fails), i) <- states(f, parquetIn(pending)).zipWithIndex) {
+        val p = s"${f.base}_state$i"
+        f.copy(p)
+        make(f.dir(p))
         run(p).zip(steps).zip(want).foreach { case ((got, (verb, _)), clean) =>
           fails match {
             case Some(words) =>
@@ -1855,6 +1903,7 @@ class IndexLifecycleSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
         }
       }
     }
+    corpus.unpersist()
   }
 
   test("ONE policy verb for every family: indexHealth + compactIfNeeded dispatch on a corpus-index table prefix") {

@@ -69,8 +69,7 @@ class ScalableWindowSpec extends SparkSpec {
       .runningTotal(df, col("id"), col("v"), "cum", 6)
       .select("id", "cum").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft-reliable-ckpt-").toString
+    val ckptDir = tempDir("reliable_ckpt")
     spark.conf.set("graft.checkpoint.reliable", "true")
     try {
       // Without a checkpoint dir the switch must fail loudly, not fall

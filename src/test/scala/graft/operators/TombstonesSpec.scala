@@ -4,16 +4,10 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
-import graft.{JobCount, SparkSpec, SpecScratch}
+import graft.{JobCount, SparkSpec}
 
 /** The tombstone seed: an empty batch written on the driver. */
-class TombstonesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
-
-  private val runId =
-    java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-
-  override def afterAll(): Unit =
-    try SpecScratch.clean(spark, runId) finally super.afterAll()
+class TombstonesSpec extends SparkSpec {
 
   private def names(dir: String): Seq[String] =
     Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
@@ -25,7 +19,7 @@ class TombstonesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     Seq(1L, 2L).toDF("id").write.parquet(dir)
     val (_, overwriteJobs) = JobCount(spark)(Tombstones.seed(spark, dir, SaveMode.Overwrite))
     assert(overwriteJobs === 0, s"an Overwrite seed ran $overwriteJobs jobs")
-    val seeded = Tombstones.at(spark, Some(dir))
+    val seeded = Tombstones.at(spark, dir)
     assert(seeded.files.size === 1, s"one schema-only file, got ${names(dir)}")
     assert(!names(dir).exists(_.startsWith("_")),
       s"the seed must be renamed out of its `_` name, got ${names(dir)}")
@@ -46,6 +40,6 @@ class TombstonesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(tableJobs === 0, s"seeding a catalog table ran $tableJobs jobs")
     spark.catalog.refreshTable(table)
     assert(spark.table(table).isEmpty, "a seeded catalog table must read as empty")
-    assert(Tombstones.at(spark, Some(loc)).files.size === 1)
+    assert(Tombstones.at(spark, loc).files.size === 1)
   }
 }

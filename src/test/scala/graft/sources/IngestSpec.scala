@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -20,7 +18,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("land writes year-partitioned parquet and predicates prune partitions") {
-    val dir = Files.createTempDirectory("landing").toString
+    val dir = tempDir("landing")
     val norm = Normalize(TrafficFixture.raw(spark, 300))
     Ingest.land(norm, dir, targetFileParallelism = 2)
     val back = spark.read.parquet(dir)

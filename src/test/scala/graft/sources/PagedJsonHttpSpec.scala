@@ -213,7 +213,7 @@ class PagedJsonHttpSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("HTTP and file endpoints agree row-for-row on the same data") {
-    val p = java.nio.file.Files.createTempFile("pagedjson-http", ".jsonl")
+    val p = tempFile("pagedjson_http", ".jsonl")
     val lines = rows.map(r =>
       r.map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ", ", "}"))
     java.nio.file.Files.write(p, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))

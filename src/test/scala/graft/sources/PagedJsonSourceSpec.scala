@@ -11,7 +11,7 @@ class PagedJsonSourceSpec extends SparkSpec {
 
   /** 2500-line JSONL standing in for the remote paginated dataset. */
   private lazy val dataPath: String = {
-    val p = Files.createTempFile("pagedjson", ".jsonl")
+    val p = tempFile("pagedjson", ".jsonl")
     val lines = (0 until 2500).map { i =>
       val boro = Seq("Queens", "Brooklyn", "Bronx")(i % 3)
       s"""{"requestid": "$i", "boro": "$boro", "yr": "${2020 + i % 5}", "vol": "${i % 300}"}"""
@@ -73,7 +73,7 @@ class PagedJsonSourceSpec extends SparkSpec {
     // no trailing newline, over 7-line pages: a page read from a wrong
     // byte offset, or a line split differently from readLine's, shows as
     // a missing, duplicated or garbled row.
-    val p = Files.createTempFile("pagedjson-multi", ".jsonl")
+    val p = tempFile("pagedjson_multi", ".jsonl")
     p.toFile.deleteOnExit()
     val ends = Seq("\n", "\r\n", "\r")
     val text = (0 until 100).map { i =>

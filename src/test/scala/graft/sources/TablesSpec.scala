@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -29,7 +27,7 @@ class TablesSpec extends SparkSpec {
     (2L, 1700000123456789L))
 
   private def writeDir(): String =
-    Files.createTempDirectory("tables-spec").toString
+    tempDir("tables_spec")
 
   test("events loader normalizes all three ts encodings to identical TimestampType instants") {
     // nanos-as-long fixture: Long nanos column named ts

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ class EventStreamSpec extends SparkSpec {
     Event(4, Timestamp.valueOf("2024-01-01 01:20:00"), 1, "click", 8.0))
 
   test("tumbling windowed aggregation equals batch windows (streaming)") {
-    val dir = Files.createTempDirectory("evstream").toString + "/data"
+    val dir = tempDir("evstream") + "/data"
     mkEvents.toDF().write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = EventStream.startWindowed(spark, dir, schema, "ev_windows")
@@ -38,7 +37,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("sliding windows count events in overlapping windows") {
-    val dir = Files.createTempDirectory("evslide").toString + "/data"
+    val dir = tempDir("evslide") + "/data"
     mkEvents.toDF().write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = EventStream.slidingCounts(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,7 +14,7 @@ class SnapshotRefreshSpec extends SparkSpec {
     .toDF("borough", "volume", "snapshot_id")
 
   test("complete-mode stream aggregate equals batch aggregate (H69)") {
-    val dir = Files.createTempDirectory("snapstream").toString
+    val dir = tempDir("snapstream")
     snapshot(1, 1).drop("snapshot_id")
       .write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -37,7 +35,7 @@ class SnapshotRefreshSpec extends SparkSpec {
   }
 
   test("latest-snapshot query publishes only the newest snapshot (H69-H71)") {
-    val dir = Files.createTempDirectory("snapswap").toString
+    val dir = tempDir("snapswap")
     snapshot(1, 1).write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val store = new SnapshotRefresh.SnapshotStore
@@ -77,7 +75,7 @@ class SnapshotRefreshSpec extends SparkSpec {
     // them — and assert the published state ends COMPLETE. (A mid-point
     // publish of the half snapshot is allowed — the contract is that the
     // store heals, not that a torn listing is unobservable.)
-    val dir = Files.createTempDirectory("snapstraddle").toString
+    val dir = tempDir("snapstraddle")
     snapshot(1, 1).write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val store = new SnapshotRefresh.SnapshotStore

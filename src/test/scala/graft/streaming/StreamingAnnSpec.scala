@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class StreamingAnnSpec extends SparkSpec {
     val corpus = emb.filter(col("vec_id") >= 10)
     val (centroids, indexed) = Similarity.ivfIndex(
       corpus, col("vec_id"), col("embedding"), nLists = 8)
-    val root = Files.createTempDirectory("streamann").toString
+    val root = tempDir("streamann")
     Similarity.writeIvfIndex(centroids, indexed, s"$root/idx")
 
     val fresh = spark.newSession()
@@ -75,7 +73,7 @@ class StreamingAnnSpec extends SparkSpec {
       pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(col("vec_id") >= 10 &&
       pmod(col("vec_id"), lit(5)) === 3)
-    val root = Files.createTempDirectory("streamann_refresh").toString
+    val root = tempDir("streamann_refresh")
     val (centroids, indexed) = Similarity.ivfIndex(
       old, col("vec_id"), col("embedding"), nLists = 8)
     Similarity.writeIvfIndex(centroids, indexed, s"$root/idx")
@@ -137,7 +135,7 @@ class StreamingAnnSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 10)
     val doomed = corpus.filter(pmod(col("vec_id"), lit(5)) === 3)
-    val root = Files.createTempDirectory("streamann_delete").toString
+    val root = tempDir("streamann_delete")
     val (centroids, indexed) = Similarity.ivfIndex(
       corpus, col("vec_id"), col("embedding"), nLists = 8)
     Similarity.writeIvfIndex(centroids, indexed, s"$root/idx")
@@ -202,7 +200,7 @@ class StreamingAnnSpec extends SparkSpec {
     val old = corpus.filter(pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = corpus.filter(pmod(col("vec_id"), lit(5)) === 3)
     val doomed = old.filter(pmod(col("vec_id"), lit(7)) === 2)
-    val root = Files.createTempDirectory("streamann_pq").toString
+    val root = tempDir("streamann_pq")
     val (centroids, _) = Similarity.ivfIndex(
       old, col("vec_id"), col("embedding"), nLists = 8)
     val cbs = Similarity.ivfPqFitCodebooks(
@@ -286,7 +284,7 @@ class StreamingAnnSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 10)
     val doomed = corpus.filter(pmod(col("vec_id"), lit(5)) === 3)
-    val root = Files.createTempDirectory("streamann_compact").toString
+    val root = tempDir("streamann_compact")
     val (centroids, _) = Similarity.ivfIndex(
       corpus, col("vec_id"), col("embedding"), nLists = 8)
     val cbs = Similarity.ivfPqFitCodebooks(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,7 +21,7 @@ class StreamingDecontamSpec extends SparkSpec {
         (3L, "another clean training document with entirely fresh words")))
 
   test("streaming Bloom screen equals the batch operator, keeps no state, never misses") {
-    val root = Files.createTempDirectory("streamdecon").toString
+    val root = tempDir("streamdecon")
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"

@@ -1,19 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Dedup
 
-class StreamingDedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
-
-  private val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-
-  override def afterAll(): Unit =
-    try graft.SpecScratch.clean(spark, runId) finally super.afterAll()
 
   // Reference corpus (ids 100+) and three "arriving" shards (ids 0-5):
   // 0 exact-dups corpus 100, 1 near-dups it (last word changed,
@@ -35,7 +28,7 @@ class StreamingDedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
         (5L, "another novel document with fresh words only")))
 
   test("streaming shard-vs-corpus near-dup equals the batch operator, with zero streaming state") {
-    val root = Files.createTempDirectory(s"graft_sd_$runId").toString
+    val root = tempDir("sd")
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"
@@ -92,7 +85,7 @@ class StreamingDedupSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
 
     val fresh = spark.newSession()
     val loaded = Dedup.loadCorpusIndex(fresh, prefix)
-    val root = Files.createTempDirectory(s"graft_sd_reload_$runId").toString
+    val root = tempDir("sd_reload")
     val inDir = s"$root/in"
     shardRows.flatten.toDF("doc_id", "text").write.parquet(inDir)
     val schema = fresh.read.parquet(inDir).schema

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -22,7 +21,7 @@ class StreamingDriftWatchSpec extends SparkSpec {
   private val shard2 = day(5, 30)
 
   test("streaming EWMA screen equals the batch screen; the jump day flags") {
-    val root = Files.createTempDirectory("streamdrift").toString
+    val root = tempDir("streamdrift")
     val inDir = s"$root/in"
     shard1.toDF("k", "ts").write.parquet(inDir)
     val schema = spark.read.parquet(inDir).schema

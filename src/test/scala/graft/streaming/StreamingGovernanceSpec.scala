@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -47,7 +45,7 @@ class StreamingGovernanceSpec extends SparkSpec {
 
   test("single drain admits exactly the batch cap operator's kept set " +
     "under the two-level blocklist") {
-    val root = Files.createTempDirectory("streamgov").toString
+    val root = tempDir("streamgov")
     val (inDir, outDir, ckDir) = (s"$root/in", s"$root/out", s"$root/ck")
     (shard1 ++ shard2).toDF("doc_id", "url").write.parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
@@ -71,7 +69,7 @@ class StreamingGovernanceSpec extends SparkSpec {
 
   test("cumulative cap across batches: earlier arrivals hold their " +
     "slots, fresh domains still admit") {
-    val root = Files.createTempDirectory("streamgov2").toString
+    val root = tempDir("streamgov2")
     val (inDir, outDir, ckDir) = (s"$root/in", s"$root/out", s"$root/ck")
     shard1.toDF("doc_id", "url").write.parquet(inDir)
     val schema = spark.read.parquet(inDir).schema

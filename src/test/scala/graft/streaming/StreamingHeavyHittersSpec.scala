@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
@@ -27,7 +25,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
 
   test("bucket-sharded MG screen: candidates contain every true heavy " +
       "hitter across restarts, state stays <= capacity per bucket") {
-    val root = Files.createTempDirectory("streamhh").toString
+    val root = tempDir("streamhh")
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class StreamingKAnonymitySpec extends SparkSpec {
   private val shard2 = Seq.fill(3)(("a", 1)) ++ Seq(("b", 1), ("b", 2))
 
   test("streaming under-k audit equals the batch audit; risky combos heal") {
-    val root = Files.createTempDirectory("streamkanon").toString
+    val root = tempDir("streamkanon")
     val inDir = s"$root/in"
     shard1.toDF("grp", "sub").write.parquet(inDir)
     val schema = spark.read.parquet(inDir).schema

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class StreamingRedactSpec extends SparkSpec {
         (3L, "bob.smith+x@mail.co wrote from 172.16.0.9 at 555.000.1111")))
 
   test("streaming redaction screen equals the batch projection, keeps no state") {
-    val root = Files.createTempDirectory("streamredact").toString
+    val root = tempDir("streamredact")
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,7 +13,7 @@ class StreamingScoreSpec extends SparkSpec {
     Seq((2L, null.asInstanceOf[String]), (3L, "dog dog dog dog")))
 
   test("streaming quality screen equals the batch scorer, keeps no state") {
-    val root = Files.createTempDirectory("streamscore").toString
+    val root = tempDir("streamscore")
     val inDir = s"$root/in"
     val outDir = s"$root/out"
     val ckDir = s"$root/ck"

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,7 +50,7 @@ class StreamingVocabCoverageSpec extends SparkSpec {
   }
 
   test("stream ≡ batch on q188's coverage arithmetic, across two drains") {
-    val root = Files.createTempDirectory("streamvocab").toString
+    val root = tempDir("streamvocab")
     val inDir = s"$root/in"
     shard1.toDF("doc_id", "lang", "text").write.parquet(inDir)
     drain(inDir, "vocab_cov_t1")

@@ -13,7 +13,7 @@ class TrafficPipelineSpec extends SparkSpec {
   /** Render the raw fixture as a paged-JSON landing file. */
   private lazy val landing: String = {
     val rows = TrafficFixture.raw(spark, 300).toJSON.collect()
-    val p = Files.createTempFile("landing", ".jsonl")
+    val p = tempFile("landing", ".jsonl")
     Files.write(p, rows.mkString("\n").getBytes(StandardCharsets.UTF_8))
     p.toString
   }
