@@ -53,7 +53,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * clusters → survivors) — there is nothing to amortize. q66's time
   * INCLUDES the one-time corpus-index build that the operator exists to
   * amortize across many shard lookups: measured split at sf0.1
-  * (tools/Q66Split, same warmup+cold-cache methodology) is ~1.3 s build
+  * (Q66Split, retired: BASELINE.md "Retired reproducers"; same
+  * warmup+cold-cache methodology) is ~1.3 s build
   * + ~1.0 s per warm probe, so steady-state incremental cost is the
   * probe number, not the benched cold number. The bench keeps the
   * composed time because the oracle-gated query is the composition.

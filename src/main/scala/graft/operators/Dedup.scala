@@ -28,20 +28,20 @@ object Dedup {
     * single-file parquet scan arrives as ONE partition locally — without
     * this, the expensive projection runs as one task.
     *
-    * Gated on `graft.spread.enabled` rather than probing
+    * Keyed on the deployment mode rather than probing
     * `df.rdd.getNumPartitions`: the probe forced plan conversion and cut
-    * AQE out of the frame's lineage. The default is the deployment mode:
-    * local[(n)] runs spread (single-file scans arrive as one partition),
-    * cluster runs are an exact no-op (scans already arrive wide; an
-    * unconditional repartition there would shuffle the full corpus and
-    * could DOWN-partition it to defaultParallelism). Set the conf to
-    * override either way.
+    * AQE out of the frame's lineage. local[(n)] runs spread (single-file
+    * scans arrive as one partition); cluster runs are an exact no-op
+    * (scans already arrive wide; an unconditional repartition there
+    * would shuffle the full corpus and could DOWN-partition it to
+    * defaultParallelism).
     *
     * CALL-SITE DISCIPLINE (round 21, measured): the spread exchange
     * costs a flat ~0.2–0.5 s per local query (one extra stage of
     * defaultParallelism tasks), so it stays ONLY where the map-side
     * per-row work is heavy enough to repay it — a full-surface
-    * same-JVM A/B (R21SpreadAB, sf0.1) kept it at the sites whose
+    * same-JVM A/B (R21SpreadAB, sf0.1; retired, see BASELINE.md
+    * "Retired reproducers") kept it at the sites whose
     * queries regress without it (rollingHash +2.8 s, embedding-vector
     * math +2.6 s, PassJoin/levenshtein self-pairs +2.5 s, subword
     * greedy walks +1.7 s, MinHash signatures, repeated-span windows,
@@ -50,12 +50,8 @@ object Dedup {
     * AFTER a shuffle anyway (−0.2 to −2.7 s each, no result change).
     * OPTIMIZATION_r21.md carries the per-site table. */
   def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val enabled = spark.conf.getOption("graft.spread.enabled")
-      .map(_.toBoolean)
-      .getOrElse(spark.sparkContext.isLocal)
-    if (enabled) df.repartition(spark.sparkContext.defaultParallelism)
-    else df
+    val sc = df.sparkSession.sparkContext
+    if (sc.isLocal) df.repartition(sc.defaultParallelism) else df
   }
 
   /** Exact dedup: one survivor (min id) per duplicate group of `key`.
@@ -132,22 +128,6 @@ object Dedup {
       materialize = materialize)
   }
 
-  /** MinHash signature: k min-hashes of the shingle set via the native
-    * [[graft.expressions.MinHashSig]] expression (each shingle hashed
-    * once, k affine mixes in a tight loop — the HOF formulation
-    * re-hashed every string k times interpreted and dominated the first
-    * benchmark run). */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    graft.expressions.MinHashSig.minhashSig(shingleCol, k)
-
-  /** Pair outputs are duplicate-sized (orders of magnitude smaller than
-    * the corpus), so the shared [[Materialize]] discipline applies: the
-    * output is checkpointed eagerly and every operator-internal persist
-    * is released before returning. */
-  private def materializeAndRelease(
-      result: DataFrame, interned: DataFrame*): DataFrame =
-    Materialize.andRelease(result, interned: _*)
-
   /** One row per (doc, band) with the band's hash — the SHARED banding
     * formula for both LSH pair paths (estimate-only and verified); any
     * change to the band-hash scheme lands in exactly one place.
@@ -222,7 +202,7 @@ object Dedup {
           .cast("double") / k)
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    if (materialize) materializeAndRelease(result, sig) else result
+    if (materialize) Materialize.andRelease(result, sig) else result
   }
 
   /** MinHash+LSH near-dup pairs WITH exact verification — the full
@@ -301,7 +281,7 @@ object Dedup {
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    if (materialize) materializeAndRelease(result, base) else result
+    if (materialize) Materialize.andRelease(result, base) else result
   }
 
   /** Shared (id, hs, n_sh) hashed-shingle relation of the containment
@@ -454,7 +434,7 @@ object Dedup {
       .select(least(col("sid"), col("lid")).as("id_a"),
         greatest(col("sid"), col("lid")).as("id_b"))
     val verified = verifyPairs(cand, sh, score, scoreName, threshold)
-    if (materialize) materializeAndRelease(verified, sh) else verified
+    if (materialize) Materialize.andRelease(verified, sh) else verified
   }
 
   /** Exact verification shared by every probe-window candidate
@@ -1344,7 +1324,7 @@ object Dedup {
     // persistNewRel = false callers (per-micro-batch) stay fully lazy —
     // nothing to release, and an eager checkpoint per batch would defeat
     // the stream-static join shape.
-    if (persistNewRel) materializeAndRelease(verified, rel) else verified
+    if (persistNewRel) Materialize.andRelease(verified, rel) else verified
   }
 
   /** [[nearDupAgainstIndex]] for a driver-resident shard: the join's
@@ -1575,7 +1555,7 @@ object Dedup {
       .withColumn("dist", levenshtein(col("ta"), col("tb"), d))
       .filter(col("dist") >= 0)
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-    materializeAndRelease(pairs, base)
+    Materialize.andRelease(pairs, base)
   }
 
   /** Cross-corpus edit-distance lookup: every (new doc, reference doc)
@@ -1619,7 +1599,7 @@ object Dedup {
       .filter(col("dist") >= 0)
       .select(col("new_id"), col("ref_id"),
         col("dist").cast("long").as("dist"))
-    materializeAndRelease(pairs, n, r)
+    Materialize.andRelease(pairs, n, r)
   }
 
   /** Shared PassJoin candidate core: segment the `segSide` docs, probe

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -100,26 +101,36 @@ private[operators] object IndexFiles {
     ()
   }
 
-  /** Each parquet file's [min, max] of the integral `column`, from its
-    * footer's row-group statistics, read on the driver (no Spark job). A
-    * file with no rows has no interval; a row group without statistics
-    * makes its file's interval unbounded, since any probe may have to
-    * open it. */
-  def intervals(spark: SparkSession, files: Seq[FileStatus], column: String): Seq[(Long, Long)] = {
+  /** Each parquet file's row groups, from its footer, read on the
+    * driver (no Spark job). */
+  private def footerBlocks(spark: SparkSession, files: Seq[FileStatus]): Seq[Seq[BlockMetaData]] = {
     val conf = spark.sessionState.newHadoopConf()
-    files.flatMap { s =>
+    files.map { s =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-      val bounds = try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+      try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    }
+  }
+
+  /** Each parquet file's [min, max] of the integral `column`, from its
+    * footer's row-group statistics (no Spark job). A file with no rows
+    * has no interval; a row group without statistics makes its file's
+    * interval unbounded, since any probe may have to open it. */
+  def intervals(spark: SparkSession, files: Seq[FileStatus], column: String): Seq[(Long, Long)] =
+    footerBlocks(spark, files).flatMap { blocks =>
+      val bounds = blocks.map { b =>
         val stats = b.getColumns.asScala.find(_.getPath.toDotString == column)
           .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue)
         stats.fold((Long.MinValue, Long.MaxValue)) { st =>
           (st.genericGetMin.asInstanceOf[Number].longValue,
             st.genericGetMax.asInstanceOf[Number].longValue)
         }
-      } finally reader.close()
+      }
       if (bounds.isEmpty) None else Some((bounds.map(_._1).min, bounds.map(_._2).max))
     }
-  }
+
+  /** The rows of the parquet `files`, from their footers (no Spark job). */
+  def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long =
+    footerBlocks(spark, files).flatten.map(_.getRowCount).sum
 
   /** Each record of the parquet `files`, read on the driver (parquet
     * pages, no Spark job). For parameter-sized artifacts and the

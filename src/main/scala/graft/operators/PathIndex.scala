@@ -142,7 +142,8 @@ private[operators] final case class PathFamily[P](
   * ([[swapInPlace]]) and erases exactly the snapshot's tombstone files,
   * so a delete racing the rewrite survives it. The rewrite reads the
   * original files until their rename, so no copy of the index is pinned.
-  * An all-deleted index is refused before any mutation: an empty layout
+  * An all-deleted index is refused before the first rename, from the
+  * copies' footer row counts, and its copies are removed: an empty layout
   * would be unreadable.
   *
   * '''Single writer per index.''' At most one write, append or compaction
@@ -305,14 +306,13 @@ private[operators] object PathIndex {
     requireIndexDir(f, spark, path)
     val tombs = Tombstones.at(spark, tombstones(path))
     val survivors = f.data.map(r => tombs.live(scan(r, spark, path)))
-    require(!survivors.head.isEmpty,
-      s"compaction would EMPTY the index at '$path' — every row is " +
-        "tombstoned. An all-deleted index has nothing left to probe: delete the index " +
-        "directory (or rebuild on a non-empty corpus) instead")
     val p = f.readParams(spark, path)
     // Survivors come back at the core count; a placed landing's own
     // placement replaces that repartition (Spark collapses the two).
-    swapInPlace(spark, f.data.map(r => s"$path/${r.dir}"))(
+    swapInPlace(spark, f.data.map(r => s"$path/${r.dir}"),
+      s"compaction would EMPTY the index at '$path' — every row is " +
+        "tombstoned. An all-deleted index has nothing left to probe: delete the index " +
+        "directory (or rebuild on a non-empty corpus) instead")(
       f.data.zip(survivors).map { case (r, df) => (tmp: String) =>
         land(r, Dedup.spread(df), p, tmp, SaveMode.Overwrite)
         // The scratch table only carried the bucket spec to the files.
@@ -369,8 +369,11 @@ private[operators] object PathIndex {
     * first rename — originals intact, stray `<dir>__compact` cleaned on
     * retry; between a directory's renames — its original preserved at
     * `<dir>__pre_compact` ([[requireIndexDir]] names it); after — only
-    * the stale copy remained and is deleted. */
-  private def swapInPlace(spark: SparkSession, dirs: Seq[String])(
+    * the stale copy remained and is deleted. A first copy with no rows
+    * (its footers' row counts, read on the driver with no job) is
+    * refused with `ifEmpty` before the first rename, its copies removed:
+    * an empty layout would be unreadable. */
+  private def swapInPlace(spark: SparkSession, dirs: Seq[String], ifEmpty: String)(
       writeTmp: Seq[String => Unit]): Unit = {
     val fileSystem = fs(spark, dirs.head)
     def tmp(dir: String) = new Path(dir + "__compact")
@@ -383,6 +386,10 @@ private[operators] object PathIndex {
     }
     Similarity.inParallel(dirs.zip(writeTmp).map { case (dir, w) =>
       () => w(tmp(dir).toString) }: _*)
+    if (IndexFiles.rowCount(spark, IndexFiles.dataFiles(spark, tmp(dirs.head).toString)) == 0) {
+      dirs.foreach(dir => fileSystem.delete(tmp(dir), true))
+      throw new IllegalArgumentException(ifEmpty)
+    }
     dirs.foreach { dir =>
       val cur = new Path(dir)
       require(fileSystem.rename(cur, old(dir)), s"rename $cur -> ${old(dir)} failed")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -54,7 +56,6 @@ class IndexLifecycleSpec extends SparkSpec {
     * sorted by min. A file without rows has the empty interval
     * (Long.MaxValue, Long.MinValue). */
   private def fileIntervals(dir: String, column: String): Seq[(Long, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
     val d = new org.apache.hadoop.fs.Path(dir)
     val conf = spark.sessionState.newHadoopConf()
     d.getFileSystem(conf).listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
@@ -892,29 +893,6 @@ class IndexLifecycleSpec extends SparkSpec {
       "PQ compaction must physically remove the deleted vectors")
   }
 
-  test("compacting an all-tombstoned index refuses loudly and mutates nothing") {
-    // An empty survivor set would commit a data dir with no parquet
-    // files (empty dynamic-partition writes emit nothing) and brick
-    // the index with the backup gone — the guard must fire BEFORE any
-    // mutation, and the refused index must stay loadable.
-    val emb = Tables.embeddings(spark, sf)
-    val corpus = emb.filter(col("vec_id") =!= 0)
-    val (centroids, indexed) = Similarity.ivfIndex(
-      corpus, col("vec_id"), col("embedding"), nLists = 8)
-    val path = tmpDir("ivf_all_del")
-    Similarity.writeIvfIndex(centroids, indexed, path)
-    Similarity.deleteFromIvfIndex(
-      corpus.select(col("vec_id")), col("vec_id"), path)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.compactIvfIndex(spark, path)
-    }
-    assert(e.getMessage.contains("EMPTY the index"))
-    val (cents, lists) = Similarity.loadIvfIndex(spark, path)
-    assert(cents.nonEmpty, "refused compaction must leave centroids intact")
-    assert(lists.isEmpty,
-      "all rows are tombstoned — logically empty, physically intact")
-  }
-
   test("LSH index: write → append → reload; pruned Hamming-ball probe ≡ filter form, ball pushes down to the sorted flat scan") {
     val nBits = 8
     val emb = Tables.embeddings(spark, sf)
@@ -1130,11 +1108,12 @@ class IndexLifecycleSpec extends SparkSpec {
     // read on the driver and the tombstone seed is written there, so no
     // verb spends a job on either. The MinHash delete's second job is
     // its input's own `limit` exchange; its compaction pins nothing (it
-    // reads the original files until the swap).
+    // reads the original files until the swap), and no compaction spends
+    // a job on its all-deleted refusal (footer row counts of the copies).
     val budget = Map(
-      "ivf.write" -> 4, "ivf.append" -> 7, "ivf.delete" -> 1, "ivf.compact" -> 3,
+      "ivf.write" -> 4, "ivf.append" -> 7, "ivf.delete" -> 1, "ivf.compact" -> 2,
       "minhash.write" -> 5, "minhash.append" -> 8, "minhash.delete" -> 2,
-      "minhash.compact" -> 5)
+      "minhash.compact" -> 4)
     info(s"measured $jobs")
     assert(budget.forall { case (verb, n) => jobs(verb) <= n },
       s"job budget exceeded: measured $jobs, budget $budget")
@@ -1183,9 +1162,9 @@ class IndexLifecycleSpec extends SparkSpec {
       Similarity.compactIvfPqIndex(spark, ivfPqPath))
     // Budgets at the measured counts (4 cores).
     val budget = Map(
-      "lsh.write" -> 4, "lsh.append" -> 7, "lsh.delete" -> 1, "lsh.compact" -> 3,
-      "pq.write" -> 3, "pq.append" -> 4, "pq.delete" -> 1, "pq.compact" -> 3,
-      "ivfpq.write" -> 6, "ivfpq.append" -> 7, "ivfpq.delete" -> 1, "ivfpq.compact" -> 3)
+      "lsh.write" -> 4, "lsh.append" -> 7, "lsh.delete" -> 1, "lsh.compact" -> 2,
+      "pq.write" -> 3, "pq.append" -> 4, "pq.delete" -> 1, "pq.compact" -> 2,
+      "ivfpq.write" -> 6, "ivfpq.append" -> 7, "ivfpq.delete" -> 1, "ivfpq.compact" -> 2)
     info(s"measured $jobs")
     assert(budget.forall { case (verb, n) => jobs(verb) <= n },
       s"job budget exceeded: measured $jobs, budget $budget")
@@ -1758,11 +1737,23 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(lists.count() > 0)
   }
 
-  test("crash states: every interrupted verb's leftovers make the next load, delete, append and compact fail naming the state or match a clean twin bit for bit, on all four path families") {
+  // Every durable-index family as one table, for the tests that run one
+  // scenario on each: (family, its index name for a tag, that index's
+  // directory, its data directories, write, copy an index to a new
+  // name, load, append, delete the ids of a frame's `id` column,
+  // compact). A path family's index name is its directory and a copy is
+  // a copy of the tree; the corpus index's name is its table prefix and
+  // a copy is a second write (its tables are in the catalog). Fitted on
+  // first use.
+  private case class Family(name: String, index: String => String, dir: String => String,
+      data: Seq[String], write: String => Unit, copy: (String, String) => Unit,
+      load: String => DataFrame, append: String => Unit,
+      delete: (DataFrame, String) => Unit, compact: String => Unit)
+
+  private lazy val families: Seq[Family] = {
     val emb = Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
     val old = emb.filter(pmod(col("vec_id"), lit(5)) =!= 3)
     val shard = emb.filter(pmod(col("vec_id"), lit(5)) === 3)
-    val deleted = old.filter(pmod(col("vec_id"), lit(7)) === 1).select(col("vec_id"))
     val (centroids, indexed) = Similarity.ivfIndex(
       old, col("vec_id"), col("embedding"), nLists = 4)
     val (pqCbs, pqCodes) = Similarity.pqIndex(
@@ -1772,53 +1763,41 @@ class IndexLifecycleSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = Dedup.corpusIndex(
       docs.filter(col("source") =!= "src8"), col("doc_id"), col("text"))
-    def copyTree(from: java.io.File, to: java.io.File): Unit =
-      org.apache.commons.io.FileUtils.copyDirectory(from, to)
-    // (family, index name, its directory, data directories, write, a
-    // copy of the written index under a new name, load, append, delete,
-    // compact); a path family's index name is its directory and a copy
-    // is a copy of the tree, the corpus index's name is its table
-    // prefix and a copy is a second write (its tables are in the catalog).
-    case class Family(name: String, base: String, dir: String => String, data: Seq[String],
-        write: String => Unit, copy: String => Unit, load: String => DataFrame,
-        append: String => Unit, delete: String => Unit, compact: String => Unit)
     def pathFamily(name: String, data: String, write: String => Unit,
         load: String => DataFrame, append: String => Unit,
-        delete: String => Unit, compact: String => Unit): Family = {
-      val base = tmpDir(s"crash_$name")
-      Family(name, base, identity, Seq(data), write,
-        p => copyTree(new java.io.File(base), new java.io.File(p)), load, append, delete,
-        compact)
-    }
-    val families = Seq(
+        delete: (DataFrame, String) => Unit, compact: String => Unit): Family =
+      Family(name, tag => tmpDir(s"${tag}_$name"), identity, Seq(data), write,
+        (from, to) => copyTree(new java.io.File(from), new java.io.File(to)), load, append,
+        delete, compact)
+    Seq(
       pathFamily("ivf", "lists", Similarity.writeIvfIndex(centroids, indexed, _),
         p => Similarity.loadIvfIndex(spark, p)._2,
         Similarity.appendToIvfIndex(shard, col("vec_id"), col("embedding"), _),
-        Similarity.deleteFromIvfIndex(deleted, col("vec_id"), _),
+        Similarity.deleteFromIvfIndex(_, col("id"), _),
         Similarity.compactIvfIndex(spark, _)),
       pathFamily("lsh", "buckets",
         Similarity.writeLshIndex(old, col("vec_id"), col("embedding"), 8, _),
         p => Similarity.loadLshIndex(spark, p)._2,
         Similarity.appendToLshIndex(shard, col("vec_id"), col("embedding"), _),
-        Similarity.deleteFromLshIndex(deleted, col("vec_id"), _),
+        Similarity.deleteFromLshIndex(_, col("id"), _),
         Similarity.compactLshIndex(spark, _)),
       pathFamily("pq", "codes", Similarity.writePqIndex(pqCbs, pqCodes, _),
         p => Similarity.loadPqIndex(spark, p)._2,
         Similarity.appendToPqIndex(shard, col("vec_id"), col("embedding"), _),
-        Similarity.deleteFromPqIndex(deleted, col("vec_id"), _),
+        Similarity.deleteFromPqIndex(_, col("id"), _),
         Similarity.compactPqIndex(spark, _)),
       pathFamily("ivfpq", "lists", Similarity.writeIvfPqIndex(centroids, icbs,
           Similarity.ivfPqEncode(old, col("vec_id"), col("embedding"), centroids, icbs), _),
         p => Similarity.loadIvfPqIndex(spark, p)._3,
         Similarity.appendToIvfPqIndex(shard, col("vec_id"), col("embedding"), _),
-        Similarity.deleteFromIvfPqIndex(deleted, col("vec_id"), _),
+        Similarity.deleteFromIvfPqIndex(_, col("id"), _),
         Similarity.compactIvfPqIndex(spark, _)),
       // Both relations in one frame: each verification row with its
       // sorted band hashes.
-      Family("corpus", s"graft_crash_corpus_$runId",
+      Family("corpus", tag => s"graft_${tag}_corpus_$runId",
         p => new java.net.URI(Dedup.corpusIndexRoot(spark, p)).getPath, Seq("rel", "banded"),
         Dedup.writeCorpusIndex(corpus, _, buckets = 4),
-        Dedup.writeCorpusIndex(corpus, _, buckets = 4),
+        (_, to) => Dedup.writeCorpusIndex(corpus, to, buckets = 4),
         p => {
           val idx = Dedup.loadCorpusIndex(spark, p)
           idx.rel.join(idx.banded.groupBy(col("id"))
@@ -1826,10 +1805,14 @@ class IndexLifecycleSpec extends SparkSpec {
         },
         Dedup.appendToCorpusIndex(docs.filter(col("source") === "src8"),
           col("doc_id"), col("text"), _),
-        Dedup.deleteFromCorpusIndex(docs.filter(col("source") =!= "src8" &&
-          pmod(col("doc_id"), lit(7)) === 1).select(col("doc_id")), col("doc_id"), _),
+        Dedup.deleteFromCorpusIndex(_, col("id"), _),
         Dedup.compactCorpusIndex(spark, _)))
+  }
 
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    org.apache.commons.io.FileUtils.copyDirectory(from, to)
+
+  test("crash states: every interrupted verb's leftovers make the next load, delete, append and compact fail naming the state or match a clean twin bit for bit, on all four path families") {
     def parquetIn(dir: String): java.io.File =
       new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
     // A file a task of a dead job left under the committer's `_temporary`
@@ -1872,24 +1855,26 @@ class IndexLifecycleSpec extends SparkSpec {
 
     def rows(df: DataFrame): Seq[Row] = df.orderBy(col("id")).collect().toSeq
     for (f <- families) {
+      val base = f.index("crash")
+      f.write(base)
+      val deleted = f.load(base).select(col("id")).filter(pmod(col("id"), lit(7)) === 1)
       // The clean twin's rows after each verb: load, delete, append, compact.
-      val steps: Seq[(String, String => Unit)] = Seq(
-        "load" -> (_ => ()), "delete" -> f.delete, "append" -> f.append, "compact" -> f.compact)
+      val steps: Seq[(String, String => Unit)] = Seq("load" -> (_ => ()),
+        "delete" -> (f.delete(deleted, _)), "append" -> f.append, "compact" -> f.compact)
       def run(p: String): Seq[Either[String, Seq[Row]]] = steps.map { case (_, verb) =>
         try { verb(p); Right(rows(f.load(p))) }
         catch { case e: IllegalArgumentException => Left(e.getMessage) }
       }
-      f.write(f.base)
       // Live ids, a third of them: applying them would move every load.
       val pending = tmpDir(s"crash_pending_${f.name}")
-      f.load(f.base).select(col("id")).filter(pmod(col("id"), lit(3)) === 0)
+      f.load(base).select(col("id")).filter(pmod(col("id"), lit(3)) === 0)
         .coalesce(1).write.parquet(pending)
-      f.copy(s"${f.base}_twin")
-      val want = run(s"${f.base}_twin")
+      f.copy(base, s"${base}_twin")
+      val want = run(s"${base}_twin")
       assert(want.forall(_.isRight), s"${f.name}: the clean twin must run every verb: $want")
       for (((state, make, fails), i) <- states(f, parquetIn(pending)).zipWithIndex) {
-        val p = s"${f.base}_state$i"
-        f.copy(p)
+        val p = s"${base}_state$i"
+        f.copy(base, p)
         make(f.dir(p))
         run(p).zip(steps).zip(want).foreach { case ((got, (verb, _)), clean) =>
           fails match {
@@ -1903,8 +1888,33 @@ class IndexLifecycleSpec extends SparkSpec {
         }
       }
     }
-    corpus.unpersist()
   }
+
+  for (name <- Seq("ivf", "ivfpq", "lsh", "pq", "corpus"))
+    test(s"compacting an all-tombstoned index refuses loudly and mutates nothing: $name") {
+      // An empty survivor set would swap in a data directory with no rows
+      // and brick the index once its original is gone: the refusal must
+      // come before the first rename, leave every file of the index as it
+      // was (the refused index stays loadable) and no `<data>__compact`
+      // copy behind.
+      val f = families.find(_.name == name).get
+      val p = f.index("all_del")
+      f.write(p)
+      val ids = f.load(p).select(col("id")).collect().map(_.getLong(0)).toSeq
+      f.delete(spark.createDataFrame(ids.map(Tuple1(_))).toDF("id"), p)
+      def files(): Map[String, Long] = {
+        val root = new java.io.File(f.dir(p))
+        org.apache.commons.io.FileUtils.listFiles(root, null, true).asScala
+          .map(x => root.toPath.relativize(x.toPath).toString -> x.length).toMap
+      }
+      val before = files()
+      val e = intercept[IllegalArgumentException](f.compact(p))
+      assert(e.getMessage.contains("EMPTY the index"), e.getMessage)
+      assert(files() === before, "a refused compaction must leave every file as it was")
+      assert(f.data.forall(d => !new java.io.File(s"${f.dir(p)}/${d}__compact").exists),
+        "a refused compaction must remove its copies")
+      assert(f.load(p).isEmpty, "all rows are tombstoned: logically empty, physically intact")
+    }
 
   test("ONE policy verb for every family: indexHealth + compactIfNeeded dispatch on a corpus-index table prefix") {
     // A nightly job appends to whatever index it owns — vector stripes

@@ -9,8 +9,9 @@ import graft.{GraftSession, SparkEntry}
 import graft.sources.Tables
 
 /** Standing scale fixture + sweep (round-12 verdict stretch #9): the
-  * per-family K-replication harnesses (FunnelSweep, Q87Sweep, R12*Sweep)
-  * generalized into ONE tool that
+  * per-family K-replication harnesses (FunnelSweep, Q87Sweep, R12*Sweep;
+  * retired, see BASELINE.md "Retired reproducers") generalized into ONE
+  * tool that
   *
   *   1. materializes a deterministic K× replica of the sf0.1
   *      documents/embeddings/events tables ONCE per (K, fixture
