@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * that replaced it left the driver per-query-blind — PERF_r20
   * `n_common: 0`, null geomean, empty scaling block). The same record
   * is also written to `bench_full.json` (and incrementally to
-  * `bench_partial.json`) so a SIGKILL still leaves the evidence.
+  * `bench_partial.json`) so a SIGKILL still leaves the evidence; a run
+  * narrowed to named queries writes neither file.
   *
   * Methodology (round 10): one warmup execution per query (JVM/codegen +
   * OS page cache), then TWO timed cold-cache executions; the reported
@@ -126,12 +127,16 @@ object Bench {
     }
 
     // Optional args narrow the run to the named queries (local iteration
-    // aid; the driver invokes with no args = full surface). `--probes`
-    // runs ONLY the warm-probe block (queries map empty) — the artifact
-    // repair path when a full run's probe block failed. Unknown names
-    // fail fast — otherwise a typo would masquerade as a crashed query.
+    // aid; the driver invokes with no args = full surface). A narrowed
+    // run's one stdout line is its whole result: it skips the probes and
+    // writes neither `bench_full.json` nor `bench_partial.json`, so it
+    // never overwrites a full run's artifacts. `--probes` runs ONLY the
+    // warm-probe block (queries map empty) — the artifact repair path
+    // when a full run's probe block failed. Unknown names fail fast —
+    // otherwise a typo would masquerade as a crashed query.
     val probesOnly = args.toSeq == Seq("--probes")
     val qArgs = if (probesOnly) Seq.empty else args.toSeq
+    val narrowed = qArgs.nonEmpty
     val unknown = qArgs.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val names =
@@ -270,9 +275,10 @@ object Bench {
       // making a contended entry discountable without a paired re-run.
       load :+= (n -> load1())
       spark.catalog.clearCache()    // no cross-query cache accumulation
-      Files.write(partialPath, (resultsJson(done, failed, flaky, load) + "\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
+      if (!narrowed)
+        Files.write(partialPath, (resultsJson(done, failed, flaky, load) + "\n").getBytes,
+          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
+          StandardOpenOption.WRITE)
     }
     // Steady-state ANN probe rows (round-12 item): the benched
     // q78/q79/q89 entries time whole recall CONTRACTS — exact baseline
@@ -285,7 +291,7 @@ object Bench {
     // "probes" — deliberately NOT in "queries": they pair with no
     // oracle and must not enter the total or the regression diff.
     val probeTimes: Vector[(String, Double)] =
-      if (args.nonEmpty && !probesOnly) Vector.empty // narrowed runs skip the probes
+      if (narrowed) Vector.empty
       else try {
         import org.apache.spark.sql.functions._
         import graft.operators.Similarity
@@ -366,39 +372,42 @@ object Bench {
           (p189, minOf3(Dedup.nearDupAgainstIndex(
             one, col("doc_id"), col("text"), loadedIdx, threshold = 0.8).collect()))
         } finally Dedup.dropCorpusIndex(spark, idxPrefix)
-        val ivfDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-ivf-").toString
-        Similarity.writeIvfIndex(centroids, idx0, ivfDir)
-        val (rcents, rlists) = Similarity.loadIvfIndex(spark, ivfDir)
-        val p78r = minOf3(noop(Similarity.ivfTopK(
-          rcents, rlists, qv, k = 10, nProbe = 3)))
-        // q192's steady state (round-16): the MANY-queries batch probe
-        // against the already-landed IVF index — one equi-join plan for
-        // the whole batch; the composed q192 entry carries the one-time
-        // build + write + reload.
-        val p192 = minOf3(noop(Similarity.ivfTopKBatch(rcents, rlists,
-          graft.sources.Tables.embeddings(spark, sfDir)
-            .filter(col("vec_id") < 5),
-          col("vec_id"), col("embedding"), k = 5, nProbe = 3)))
+        // The landed IVF and IVF+PQ indexes live in temp directories of
+        // this run's own, removed when their probes finish or fail.
+        val (p78r, p192) = graft.queries.PipelineQueries.withScratchDir("bench_ivf") {
+          ivfDir =>
+            Similarity.writeIvfIndex(centroids, idx0, ivfDir)
+            val (rcents, rlists) = Similarity.loadIvfIndex(spark, ivfDir)
+            val p78r = minOf3(noop(Similarity.ivfTopK(
+              rcents, rlists, qv, k = 10, nProbe = 3)))
+            // q192's steady state (round-16): the MANY-queries batch probe
+            // against the already-landed IVF index — one equi-join plan for
+            // the whole batch; the composed q192 entry carries the one-time
+            // build + write + reload.
+            (p78r, minOf3(noop(Similarity.ivfTopKBatch(rcents, rlists,
+              graft.sources.Tables.embeddings(spark, sfDir)
+                .filter(col("vec_id") < 5),
+              col("vec_id"), col("embedding"), k = 5, nProbe = 3))))
+        }
         // q196's steady state (round-18): the composed IVF+PQ probe
         // against the already-landed index — a partition-pruned scan
         // of (id, codes) + ADC + a 100-row exact rerank by id; the
         // composed q196 entry carries both fits + write + append +
         // the exact side.
-        val ivfPqDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-ivfpq-").toString
-        val ivfPqCbs = Similarity.ivfPqFitCodebooks(
-          corpus, col("vec_id"), col("embedding"), centroids,
-          m = 16, ksub = 16, iters = 2)
-        Similarity.writeIvfPqIndex(centroids, ivfPqCbs,
-          Similarity.ivfPqEncode(
-            corpus, col("vec_id"), col("embedding"), centroids, ivfPqCbs),
-          ivfPqDir)
-        val (pqcents, pqcbs, pqcodes) = Similarity.loadIvfPqIndex(
-          spark, ivfPqDir)
-        val p196 = minOf3(noop(Similarity.ivfPqTopK(pqcents, pqcbs,
-          pqcodes, corpus, col("vec_id"), col("embedding"), qv,
-          k = 10, nProbe = 3, rerankN = 100)))
+        val p196 = graft.queries.PipelineQueries.withScratchDir("bench_ivfpq") { ivfPqDir =>
+          val ivfPqCbs = Similarity.ivfPqFitCodebooks(
+            corpus, col("vec_id"), col("embedding"), centroids,
+            m = 16, ksub = 16, iters = 2)
+          Similarity.writeIvfPqIndex(centroids, ivfPqCbs,
+            Similarity.ivfPqEncode(
+              corpus, col("vec_id"), col("embedding"), centroids, ivfPqCbs),
+            ivfPqDir)
+          val (pqcents, pqcbs, pqcodes) = Similarity.loadIvfPqIndex(
+            spark, ivfPqDir)
+          minOf3(noop(Similarity.ivfPqTopK(pqcents, pqcbs,
+            pqcodes, corpus, col("vec_id"), col("embedding"), qv,
+            k = 10, nProbe = 3, rerankN = 100)))
+        }
         Vector("q78_probe" -> p78, "q79_probe" -> p79, "q89_probe" -> p89,
           "q128_probe" -> p128,
           "q189_reload_probe" -> p189, "q189_point_probe" -> p189point,
@@ -426,9 +435,10 @@ object Bench {
     // bench_full.json (and incrementally in bench_partial.json) as the
     // crash-surviving artifact.
     val full = resultsJson(done, failed, flaky, load, probeTimes)
-    Files.write(Paths.get("bench_full.json"), (full + "\n").getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    if (!narrowed)
+      Files.write(Paths.get("bench_full.json"), (full + "\n").getBytes,
+        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
+        StandardOpenOption.WRITE)
     println(full)
     spark.stop()
   }

@@ -115,15 +115,12 @@ object Cluster {
     // Persist across the fit's per-iteration scans + the final
     // assignment (init + iters + 1 consumers — round 21, guide §5:
     // the corpus was re-scanned per iteration), release via the
-    // standing [[Materialize.andRelease]] discipline (the output is
-    // the narrow (id, cluster) frame — the pin-sized class).
-    val v = Dedup.spread(emb).select(id.cast("long").as("id"), vec.as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = fitCentroids(v, k, iters)
-    Materialize.andRelease(
-      v.withColumn("cluster", assignExpr(cents))
-        .select(col("id"), col("cluster").cast("int").as("cluster")),
-      v)
+    // standing [[Materialize.over]] discipline (the output is the
+    // narrow (id, cluster) frame — the pin-sized class).
+    Materialize.over(Dedup.spread(emb).select(id.cast("long").as("id"), vec.as("v"))) { v =>
+      v.withColumn("cluster", assignExpr(fitCentroids(v, k, iters)))
+        .select(col("id"), col("cluster").cast("int").as("cluster"))
+    }
   }
 
   /** Per-cell fine centroids for the two-level path. Input: (id, v,
@@ -230,12 +227,9 @@ object Cluster {
     // Persist across the fit iterations AND the dedup tail's self-join
     // (init + iters + 2 join sides + the survivor join — round 21,
     // guide §5); the released output is one narrow row per vector.
-    val v = Dedup.spread(emb).select(id.cast("long").as("id"), vec.as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = fitCentroids(v, k, iters)
-    Materialize.andRelease(
-      dedupWithin(v.withColumn("cluster", assignExpr(cents)), threshold),
-      v)
+    Materialize.over(Dedup.spread(emb).select(id.cast("long").as("id"), vec.as("v"))) { v =>
+      dedupWithin(v.withColumn("cluster", assignExpr(fitCentroids(v, k, iters))), threshold)
+    }
   }
 
   /** [[semanticDedup]] over the two-level clustering — the same pair /

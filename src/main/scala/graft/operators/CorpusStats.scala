@@ -393,51 +393,48 @@ object CorpusStats {
     * cross. Expects (id, lang, source, nChars, text) columns. */
   def dataCard(
       df: DataFrame, id: Column, lang: Column, source: Column,
-      nChars: Column, text: Column): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val base = df.select(id.as("__id"), lang.as("__lang"),
+      nChars: Column, text: Column): DataFrame =
+    Materialize.over(df.select(id.as("__id"), lang.as("__lang"),
         source.as("__source"), nChars.as("__nc"),
         size(graft.functions.TextFunctions.tokens(text)).as("__ntok"),
-        md5(text).as("__h"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val totals = base.agg(count(lit(1)).as("nd"),
-      sum(col("__ntok")).as("nt"), sum(col("__nc")).as("nc"))
-    val corpusRows = totals.selectExpr(
-      """stack(4,
-        | 'n_docs', cast(nd as double),
-        | 'n_tokens', cast(nt as double),
-        | 'n_chars', cast(nc as double),
-        | 'mean_tokens', round(cast(nt as double) / cast(nd as double), 4)
-        |) as (key, value)""".stripMargin)
-      .select(lit("corpus").as("section"), col("key"), col("value"))
-    def composition(section: String, c: Column) = base.groupBy(c.as("key"))
-      .agg(count(lit(1)).cast("double").as("value"))
-      .select(lit(section).as("section"), col("key"), col("value"))
-    val shareRows = base.groupBy(col("__lang").as("key"))
-      .agg(sum(col("__ntok")).as("lt"))
-      .crossJoin(broadcast(totals.select(col("nt"))))
-      .select(lit("lang_token_share").as("section"), col("key"),
-        round(col("lt").cast("double") / col("nt").cast("double"), 6)
-          .as("value"))
-    val dupGroups = base.groupBy(col("__h"))
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") > 1)
-    val dupRows = dupGroups
-      .agg(coalesce(count(lit(1)), lit(0L)).as("g"),
-        coalesce(sum(col("cnt") - 1), lit(0L)).as("d"))
-      .selectExpr(
-        """stack(2,
-          | 'exact_dup_groups', cast(g as double),
-          | 'exact_dup_docs', cast(d as double)
+        md5(text).as("__h"))) { base =>
+      val totals = base.agg(count(lit(1)).as("nd"),
+        sum(col("__ntok")).as("nt"), sum(col("__nc")).as("nc"))
+      val corpusRows = totals.selectExpr(
+        """stack(4,
+          | 'n_docs', cast(nd as double),
+          | 'n_tokens', cast(nt as double),
+          | 'n_chars', cast(nc as double),
+          | 'mean_tokens', round(cast(nt as double) / cast(nd as double), 4)
           |) as (key, value)""".stripMargin)
-      .select(lit("dup").as("section"), col("key"), col("value"))
-    val report = corpusRows
-      .unionAll(composition("lang", col("__lang")))
-      .unionAll(composition("source", col("__source")))
-      .unionAll(shareRows)
-      .unionAll(dupRows)
-      .orderBy(asc_nulls_first("section"), asc_nulls_first("key"))
-    Materialize.andRelease(report, base)
-  }
+        .select(lit("corpus").as("section"), col("key"), col("value"))
+      def composition(section: String, c: Column) = base.groupBy(c.as("key"))
+        .agg(count(lit(1)).cast("double").as("value"))
+        .select(lit(section).as("section"), col("key"), col("value"))
+      val shareRows = base.groupBy(col("__lang").as("key"))
+        .agg(sum(col("__ntok")).as("lt"))
+        .crossJoin(broadcast(totals.select(col("nt"))))
+        .select(lit("lang_token_share").as("section"), col("key"),
+          round(col("lt").cast("double") / col("nt").cast("double"), 6)
+            .as("value"))
+      val dupGroups = base.groupBy(col("__h"))
+        .agg(count(lit(1)).as("cnt")).filter(col("cnt") > 1)
+      val dupRows = dupGroups
+        .agg(coalesce(count(lit(1)), lit(0L)).as("g"),
+          coalesce(sum(col("cnt") - 1), lit(0L)).as("d"))
+        .selectExpr(
+          """stack(2,
+            | 'exact_dup_groups', cast(g as double),
+            | 'exact_dup_docs', cast(d as double)
+            |) as (key, value)""".stripMargin)
+        .select(lit("dup").as("section"), col("key"), col("value"))
+      corpusRows
+        .unionAll(composition("lang", col("__lang")))
+        .unionAll(composition("source", col("__source")))
+        .unionAll(shareRows)
+        .unionAll(dupRows)
+        .orderBy(asc_nulls_first("section"), asc_nulls_first("key"))
+    }
 
   /** k-anonymity audit: every quasi-identifier combination observed in
     * fewer than `k` rows — the re-identification screen a pipeline
@@ -501,35 +498,34 @@ object CorpusStats {
     require(accuracy >= 10, "accuracy must be >= 10")
     val eps = 1.0 / accuracy
     val psLit = typedLit(ps)
-    val base = df
+    Materialize.over(df
       .select(group.as("g"), value.cast("double").as("v"))
-      .filter(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val agg = base.groupBy(col("g")).agg(
-      count(lit(1)).as("n"),
-      percentile(col("v"), psLit).as("__ex"),
-      percentile_approx(col("v"), psLit, lit(accuracy)).as("__ap"))
-    val perP = agg
-      .select(col("g"), col("n"),
-        posexplode(arrays_zip(col("__ex"), col("__ap"))).as(Seq("i", "z")))
-      .select(col("g"), col("n"),
-        element_at(psLit, col("i") + 1).as("p"),
-        col("z.__ex").as("exact_raw"), col("z.__ap").as("a"))
-    val ranks = base
-      .join(broadcast(perP.select(col("g"), col("p"), col("a"))), Seq("g"))
-      .groupBy(col("g"), col("p"), col("a"))
-      .agg(
-        sum(when(col("v") < col("a"), 1L).otherwise(0L)).as("rank_lo"),
-        sum(when(col("v") <= col("a"), 1L).otherwise(0L)).as("rank_hi"))
-    val result = perP.join(ranks, Seq("g", "p", "a"))
-      .select(col("g").as("group"), col("p"), col("n"),
-        round(col("exact_raw"), 4).as("exact_value"),
-        (col("rank_hi").cast("double") >=
-            (col("p") - eps) * col("n").cast("double") - 1.0 &&
-          col("rank_lo").cast("double") <=
-            (col("p") + eps) * col("n").cast("double") + 1.0)
-          .as("approx_ok"))
-    Materialize.andRelease(result, base)
+      .filter(col("v").isNotNull)) { base =>
+      val agg = base.groupBy(col("g")).agg(
+        count(lit(1)).as("n"),
+        percentile(col("v"), psLit).as("__ex"),
+        percentile_approx(col("v"), psLit, lit(accuracy)).as("__ap"))
+      val perP = agg
+        .select(col("g"), col("n"),
+          posexplode(arrays_zip(col("__ex"), col("__ap"))).as(Seq("i", "z")))
+        .select(col("g"), col("n"),
+          element_at(psLit, col("i") + 1).as("p"),
+          col("z.__ex").as("exact_raw"), col("z.__ap").as("a"))
+      val ranks = base
+        .join(broadcast(perP.select(col("g"), col("p"), col("a"))), Seq("g"))
+        .groupBy(col("g"), col("p"), col("a"))
+        .agg(
+          sum(when(col("v") < col("a"), 1L).otherwise(0L)).as("rank_lo"),
+          sum(when(col("v") <= col("a"), 1L).otherwise(0L)).as("rank_hi"))
+      perP.join(ranks, Seq("g", "p", "a"))
+        .select(col("g").as("group"), col("p"), col("n"),
+          round(col("exact_raw"), 4).as("exact_value"),
+          (col("rank_hi").cast("double") >=
+              (col("p") - eps) * col("n").cast("double") - 1.0 &&
+            col("rank_lo").cast("double") <=
+              (col("p") + eps) * col("n").cast("double") + 1.0)
+            .as("approx_ok"))
+    }
   }
 
   /** Per-stratum PII density report: how much detectable PII each

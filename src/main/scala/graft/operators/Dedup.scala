@@ -88,8 +88,7 @@ object Dedup {
   def ngramJaccardPairs(
       docs: DataFrame, id: Column, text: Column,
       n: Int, threshold: Double,
-      maxShingleFreq: Option[Int] = None,
-      materialize: Boolean = true): DataFrame = {
+      maxShingleFreq: Option[Int] = None): DataFrame = {
     // Shingles are hashed to 64-bit longs up front: every downstream
     // shuffle/compare/intersect runs on fixed-width longs instead of
     // strings (collision probability over the corpus is ~|shingles|²/2⁶⁴,
@@ -111,7 +110,7 @@ object Dedup {
     // (|A|−⌈τ|A|⌉+1): probing against the larger doc's FULL set
     // tightens the pigeonhole to the (1−τ)/(1+τ) fraction.
     pairsByProbeWindow(
-      shingleRelation(docs, id, text, n, materialize),
+      shingleRelation(docs, id, text, n),
       nsh => {
         val p = (nsh - ceil(nsh * (2 * threshold / (1 + threshold))) + 1).cast("int")
         least(p * 2 - 1, nsh).cast("int")
@@ -121,12 +120,16 @@ object Dedup {
       // Size pruning: |A| and |B| must be within a factor τ of each
       // other ("s" is the smaller side by the join's total order).
       sizeCond = (sn, ln) => sn >= ceil(ln * threshold),
-      score = (inter, na, nb) =>
-        inter.cast("double") / (na + nb - inter),
+      score = jaccardScore,
       scoreName = "jaccard",
-      threshold = threshold, maxShingleFreq = maxShingleFreq,
-      materialize = materialize)
+      threshold = threshold, maxShingleFreq = maxShingleFreq)
   }
+
+  /** The exact n-gram Jaccard of two shingle sets from their
+    * intersection and set sizes: a small-integer division, bit-identical
+    * across engines. */
+  private def jaccardScore(inter: Column, na: Column, nb: Column): Column =
+    inter.cast("double") / (na + nb - inter)
 
   /** One row per (doc, band) with the band's hash — the SHARED banding
     * formula for both LSH pair paths (estimate-only and verified); any
@@ -162,8 +165,7 @@ object Dedup {
   def minhashLshPairs(
       docs: DataFrame, id: Column, text: Column,
       n: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7,
-      materialize: Boolean = true): DataFrame = {
+      threshold: Double = 0.7): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     // One-pass native shingle hashing feeds the signature mixes directly
     // (no shingle strings ever materialize). Persisted: it feeds the
@@ -172,37 +174,34 @@ object Dedup {
       id.cast("long").as("id"),
       graft.expressions.MinHashSig.minhashSigFromHashes(
         graft.expressions.HashedShingles.shingles(text, n), k).as("sig"))
-    val sig =
-      if (materialize)
-        sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sig0
-    // The band self-join carries ONLY (id, band, bh): a banded row with
-    // the k-long signature attached would push ~k·8 bytes per row — on
-    // BOTH sides — through the join shuffle and duplicate two signatures
-    // onto every pre-dedup collision row (a pair colliding in c bands
-    // pays c times). Signatures are joined back per DISTINCT pair
-    // instead, mirroring the verified path's shape (measured 41 s → on
-    // par with the verified path at the K=32 stress).
-    val banded = bandedRows(sig, k, bands, carry = Seq.empty)
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // Codegen'd signature agreement (graft.expressions.SigAgree): the HOF
-    // formulation (size(filter(zip_with(...)))) is CodegenFallback and
-    // allocates per pair — measured ~3.5x slower on the candidate set.
-    val result = cand
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard",
-        graft.expressions.SigAgree.agree(col("sig_a"), col("sig_b"))
-          .cast("double") / k)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    if (materialize) Materialize.andRelease(result, sig) else result
+    Materialize.over(sig0) { sig =>
+      // The band self-join carries ONLY (id, band, bh): a banded row with
+      // the k-long signature attached would push ~k·8 bytes per row — on
+      // BOTH sides — through the join shuffle and duplicate two signatures
+      // onto every pre-dedup collision row (a pair colliding in c bands
+      // pays c times). Signatures are joined back per DISTINCT pair
+      // instead, mirroring the verified path's shape (measured 41 s → on
+      // par with the verified path at the K=32 stress).
+      val banded = bandedRows(sig, k, bands, carry = Seq.empty)
+      val a = banded.as("a")
+      val b = banded.as("b")
+      val cand = a.join(b,
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .dropDuplicates("id_a", "id_b")
+      // Codegen'd signature agreement (graft.expressions.SigAgree): the HOF
+      // formulation (size(filter(zip_with(...)))) is CodegenFallback and
+      // allocates per pair — measured ~3.5x slower on the candidate set.
+      cand
+        .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
+        .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+        .withColumn("est_jaccard",
+          graft.expressions.SigAgree.agree(col("sig_a"), col("sig_b"))
+            .cast("double") / k)
+        .filter(col("est_jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("est_jaccard"))
+    }
   }
 
   /** MinHash+LSH near-dup pairs WITH exact verification — the full
@@ -235,8 +234,7 @@ object Dedup {
   def minhashLshVerifiedPairs(
       docs: DataFrame, id: Column, text: Column,
       n: Int = 3, threshold: Double = 0.8,
-      k: Int = 60, bands: Int = 20, bandSalts: Int = 1,
-      materialize: Boolean = true): DataFrame = {
+      k: Int = 60, bands: Int = 20, bandSalts: Int = 1): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     require(bandSalts >= 1, "bandSalts must be >= 1")
     // One pass computes the hashed shingle set (exact verification), and
@@ -244,78 +242,41 @@ object Dedup {
     // generation) — each shingle string is hashed exactly once, and no
     // shingle strings survive past the projection; persisted because it
     // feeds the band explode AND both sides of the verify join.
-    val base0 = spread(docs).select(
-      id.cast("long").as("id"),
-      graft.expressions.HashedShingles.shingles(text, n).as("hs"))
-      .select(col("id"), col("hs"),
-        graft.expressions.MinHashSig.minhashSigFromHashes(col("hs"), k).as("sig"))
-      .withColumn("n_sh", size(col("hs")))
-    val base =
-      if (materialize)
-        base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
-    val banded = bandedRows(base, k, bands, carry = Seq("n_sh"))
-    val (a, b, saltCond) =
-      if (bandSalts <= 1) (banded.as("a"), banded.as("b"), lit(true))
-      else (
-        banded.withColumn("__salt", pmod(hash(col("id")), lit(bandSalts))).as("a"),
-        banded.withColumn("__salt",
-          explode(sequence(lit(0), lit(bandSalts - 1)))).as("b"),
-        col("a.__salt") === col("b.__salt"))
-    // Size pruning mirrors ngramJaccardPairs: |A|,|B| within a factor τ.
-    val cand = a.join(b,
-        saltCond &&
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.id") < col("b.id") &&
-          col("a.n_sh") >= ceil(col("b.n_sh") * threshold) &&
-          col("b.n_sh") >= ceil(col("a.n_sh") * threshold))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val result = cand
-      .join(base.select(col("id").as("id_a"), col("hs").as("hs_a"),
-        col("n_sh").as("n_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("hs").as("hs_b"),
-        col("n_sh").as("n_b")), "id_b")
-      .withColumn("n_inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    if (materialize) Materialize.andRelease(result, base) else result
+    Materialize.over(shingleRel(spread(docs), id, text, n, k)) { base =>
+      val banded = bandedRows(base, k, bands, carry = Seq("n_sh"))
+      val (a, b, saltCond) =
+        if (bandSalts <= 1) (banded.as("a"), banded.as("b"), lit(true))
+        else (
+          banded.withColumn("__salt", pmod(hash(col("id")), lit(bandSalts))).as("a"),
+          banded.withColumn("__salt",
+            explode(sequence(lit(0), lit(bandSalts - 1)))).as("b"),
+          col("a.__salt") === col("b.__salt"))
+      // Size pruning mirrors ngramJaccardPairs: |A|,|B| within a factor τ.
+      val cand = a.join(b,
+          saltCond &&
+            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.id") < col("b.id") &&
+            candidatePair(col("a.id"), col("a.n_sh"), col("b.id"), col("b.n_sh"),
+              threshold))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .dropDuplicates("id_a", "id_b")
+      verifyPairs(cand, base, jaccardScore, "jaccard", threshold)
+    }
   }
 
-  /** Shared (id, hs, n_sh) hashed-shingle relation of the containment
-    * family, persisted because it feeds the probe explode, the full-side
-    * explode, and both sides of the verification join. `hs` is sorted
-    * ascending by hash — prefixes under this order are what the
-    * pigeonhole/bottom-k arguments below rely on. */
+  /** Shared (id, hs, n_sh) hashed-shingle relation of the probe-window
+    * family, persisted by [[pairsByProbeWindow]] because it feeds the
+    * probe explode, the full-side explode, and both sides of the
+    * verification join. `hs` is sorted ascending by hash — prefixes
+    * under this order are what the pigeonhole/bottom-k arguments below
+    * rely on. */
   private def shingleRelation(
-      docs: DataFrame, id: Column, text: Column, n: Int,
-      materialize: Boolean = true): DataFrame = {
-    val rel = docs.select(
+      docs: DataFrame, id: Column, text: Column, n: Int): DataFrame =
+    docs.select(
       id.cast("long").as("id"),
       graft.expressions.HashedShingles.shingles(text, n).as("hs"))
       .withColumn("n_sh", size(col("hs")))
-    if (materialize)
-      rel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else rel
-  }
 
-  /** Probe/full pruning shared by the containment candidate generators:
-    * both sides are semi-joined against ONE shared `allowed` hash set —
-    * the DISTINCT probe hashes, minus shingles whose doc frequency
-    * exceeds `maxShingleFreq` (the stop-shingle cap — candidate
-    * generation only; verification always computes exact containment).
-    * Only hashes that occur in some smaller-doc probe can seed a
-    * candidate, so the dominant shuffle (the full explode is
-    * |corpus shingles| rows; probes are a small fraction) carries only
-    * joinable shingles. `allowed` is one subtree feeding both semi joins
-    * — the hot-frequency aggregation runs once and the broadcast
-    * exchange is reused; it is a runtime-sized aggregate, so AQE
-    * broadcasts it when small and the pruning applies MAP-SIDE before
-    * any full-side shuffle, and when it is too large to broadcast the
-    * semi join shares its hash partitioning with the candidate join that
-    * follows (no extra full-side shuffle). */
   /** Shared candidate-then-verify core of the set-similarity family
     * (containment AND Jaccard — the measures differ only in three
     * expressions, injected below). Variants differ in:
@@ -371,71 +332,70 @@ object Dedup {
     *  4. Exact verification (`array_intersect` on the complete sets)
     *     runs on the ~true-pair-sized survivor set only. */
   private def pairsByProbeWindow(
-      sh: DataFrame, windowLen: Column => Column,
+      rel: DataFrame, windowLen: Column => Column,
       slack: (Column, Column) => Column,
       sizeCond: (Column, Column) => Column,
       score: (Column, Column, Column) => Column, scoreName: String,
       threshold: Double, maxShingleFreq: Option[Int],
-      sampledBound: Boolean = false,
-      materialize: Boolean = true): DataFrame = {
-    val window = slice(col("hs"), lit(1), windowLen(col("n_sh")))
-    val probe0 = sh.select(col("id"), col("n_sh"), window.as("w"))
-    val probedHashes = probe0.select(explode(col("w")).as("h")).distinct()
-    val fullPruned = sh.select(col("id"), col("n_sh"), explode(col("hs")).as("h"))
-      .join(probedHashes, Seq("h"), "left_semi")
-    val (probe, full) = maxShingleFreq match {
-      case Some(cap) =>
-        val hotArr = fullPruned.groupBy("h").agg(count(lit(1)).as("f"))
-          .filter(col("f") > cap)
-          .agg(collect_list(col("h")).as("hot"))
-        val p = probe0.crossJoin(broadcast(hotArr))
-          .select(col("id"), col("n_sh"),
-            array_except(col("w"), col("hot")).as("w"))
-        // Hot rows on the full side can no longer match once the probe
-        // dropped them; filtering keeps them out of the join build.
-        val f = fullPruned.crossJoin(broadcast(hotArr))
-          .filter(!array_contains(col("hot"), col("h")))
-          .select(col("id"), col("n_sh"), col("h"))
-        (p, f)
-      case None => (probe0, fullPruned)
+      sampledBound: Boolean = false): DataFrame =
+    Materialize.over(rel) { sh =>
+      val window = slice(col("hs"), lit(1), windowLen(col("n_sh")))
+      val probe0 = sh.select(col("id"), col("n_sh"), window.as("w"))
+      val probedHashes = probe0.select(explode(col("w")).as("h")).distinct()
+      val fullPruned = sh.select(col("id"), col("n_sh"), explode(col("hs")).as("h"))
+        .join(probedHashes, Seq("h"), "left_semi")
+      val (probe, full) = maxShingleFreq match {
+        case Some(cap) =>
+          val hotArr = fullPruned.groupBy("h").agg(count(lit(1)).as("f"))
+            .filter(col("f") > cap)
+            .agg(collect_list(col("h")).as("hot"))
+          val p = probe0.crossJoin(broadcast(hotArr))
+            .select(col("id"), col("n_sh"),
+              array_except(col("w"), col("hot")).as("w"))
+          // Hot rows on the full side can no longer match once the probe
+          // dropped them; filtering keeps them out of the join build.
+          val f = fullPruned.crossJoin(broadcast(hotArr))
+            .filter(!array_contains(col("hot"), col("h")))
+            .select(col("id"), col("n_sh"), col("h"))
+          (p, f)
+        case None => (probe0, fullPruned)
+      }
+      val probeEx = probe.select(col("id"), col("n_sh"),
+        size(col("w")).as("jq"), explode(col("w")).as("h"))
+      val sn = col("s_n")
+      val ln = col("l_n")
+      val cand = probeEx.as("s").join(full.as("l"),
+          col("s.h") === col("l.h") &&
+            (col("s.n_sh") < col("l.n_sh") ||
+              (col("s.n_sh") === col("l.n_sh") && col("s.id") < col("l.id"))) &&
+            sizeCond(col("s.n_sh"), col("l.n_sh")))
+        .groupBy(col("s.id").as("sid"), col("l.id").as("lid"),
+          col("s.n_sh").as("s_n"), col("l.n_sh").as("l_n"),
+          col("s.jq").as("jq"))
+        .agg(count(lit(1)).as("m"))
+        // Deterministic pigeonhole bound: for a qualifying pair, at most
+        // `slack(sn, ln)` of the smaller doc's shingles — hence of ANY
+        // probe window drawn from them — can miss the larger doc, so its
+        // match count m is ≥ J′ − slack. The banded variant additionally
+        // applies a concentration bound (`sampledBound`): its probe is a
+        // uniform J′-sample of the doc's shingles, so a qualifying pair's
+        // match count concentrates at ≥ τ·J′ (hypergeometric); 5σ below
+        // that the miss probability is ~3e-7 per pair — the q24-vs-q21
+        // recall class. The exact paths must NOT use it: for wide windows
+        // the concentration term can exceed the pigeonhole guarantee and
+        // would trade away the deterministic completeness the oracle
+        // check relies on.
+        .filter(col("m") >= greatest(
+          col("jq") - slack(sn, ln),
+          if (sampledBound)
+            floor(lit(threshold) * col("jq") -
+              lit(5.0) * sqrt(col("jq") * lit(threshold * (1 - threshold))))
+          else lit(1),
+          lit(1)))
+        .select(least(col("sid"), col("lid")).as("id_a"),
+          greatest(col("sid"), col("lid")).as("id_b"))
+      verifyPairs(cand, sh, score, scoreName, threshold)
     }
-    val probeEx = probe.select(col("id"), col("n_sh"),
-      size(col("w")).as("jq"), explode(col("w")).as("h"))
-    val sn = col("s_n")
-    val ln = col("l_n")
-    val cand = probeEx.as("s").join(full.as("l"),
-        col("s.h") === col("l.h") &&
-          (col("s.n_sh") < col("l.n_sh") ||
-            (col("s.n_sh") === col("l.n_sh") && col("s.id") < col("l.id"))) &&
-          sizeCond(col("s.n_sh"), col("l.n_sh")))
-      .groupBy(col("s.id").as("sid"), col("l.id").as("lid"),
-        col("s.n_sh").as("s_n"), col("l.n_sh").as("l_n"),
-        col("s.jq").as("jq"))
-      .agg(count(lit(1)).as("m"))
-      // Deterministic pigeonhole bound: for a qualifying pair, at most
-      // `slack(sn, ln)` of the smaller doc's shingles — hence of ANY
-      // probe window drawn from them — can miss the larger doc, so its
-      // match count m is ≥ J′ − slack. The banded variant additionally
-      // applies a concentration bound (`sampledBound`): its probe is a
-      // uniform J′-sample of the doc's shingles, so a qualifying pair's
-      // match count concentrates at ≥ τ·J′ (hypergeometric); 5σ below
-      // that the miss probability is ~3e-7 per pair — the q24-vs-q21
-      // recall class. The exact paths must NOT use it: for wide windows
-      // the concentration term can exceed the pigeonhole guarantee and
-      // would trade away the deterministic completeness the oracle
-      // check relies on.
-      .filter(col("m") >= greatest(
-        col("jq") - slack(sn, ln),
-        if (sampledBound)
-          floor(lit(threshold) * col("jq") -
-            lit(5.0) * sqrt(col("jq") * lit(threshold * (1 - threshold))))
-        else lit(1),
-        lit(1)))
-      .select(least(col("sid"), col("lid")).as("id_a"),
-        greatest(col("sid"), col("lid")).as("id_b"))
-    val verified = verifyPairs(cand, sh, score, scoreName, threshold)
-    if (materialize) Materialize.andRelease(verified, sh) else verified
-  }
 
   /** Exact verification shared by every probe-window candidate
     * generator: join candidates back to the complete shingle sets and
@@ -471,7 +431,7 @@ object Dedup {
     * smaller-doc BOTTOM-J shingles (J = min(2p−1, n)) ⋈ larger-doc FULL
     * shingle sets — a τ-complement fraction of the old full×full
     * self-join, with the full side semi-join-pruned to joinable shingles
-    * only (see [[prunedProbeAndFull]]).
+    * only (see [[pairsByProbeWindow]]).
     *
     * The probe window is 2p−1 wide (not the minimal p) to buy a COUNT
     * filter: among the smaller doc's bottom J′ surviving probe shingles
@@ -509,10 +469,9 @@ object Dedup {
   def containmentPairs(
       docs: DataFrame, id: Column, text: Column,
       n: Int, threshold: Double,
-      maxShingleFreq: Option[Int] = None,
-      materialize: Boolean = true): DataFrame =
+      maxShingleFreq: Option[Int] = None): DataFrame =
     pairsByProbeWindow(
-      shingleRelation(docs, id, text, n, materialize),
+      shingleRelation(docs, id, text, n),
       nsh => {
         val p = (nsh - ceil(nsh * threshold) + 1).cast("int")
         least(p * 2 - 1, nsh).cast("int")
@@ -521,8 +480,7 @@ object Dedup {
       sizeCond = (_, _) => lit(true),
       score = (inter, na, nb) => inter.cast("double") / least(na, nb),
       scoreName = "containment",
-      threshold = threshold, maxShingleFreq = maxShingleFreq,
-      materialize = materialize)
+      threshold = threshold, maxShingleFreq = maxShingleFreq)
 
   /** Banded approximate containment — the mass-duplication scale path for
     * [[containmentPairs]], mirroring the q24-vs-q21 pattern of the
@@ -559,19 +517,17 @@ object Dedup {
   def containmentPairsLsh(
       docs: DataFrame, id: Column, text: Column,
       n: Int, threshold: Double, sampleK: Int = 8,
-      maxShingleFreq: Option[Int] = None,
-      materialize: Boolean = true): DataFrame = {
+      maxShingleFreq: Option[Int] = None): DataFrame = {
     require(sampleK >= 1, "sampleK must be >= 1")
     pairsByProbeWindow(
-      shingleRelation(docs, id, text, n, materialize),
+      shingleRelation(docs, id, text, n),
       nsh => least(lit(sampleK), nsh).cast("int"),
       slack = (sn, _) => (sn - ceil(sn * threshold)).cast("int"),
       sizeCond = (_, _) => lit(true),
       score = (inter, na, nb) => inter.cast("double") / least(na, nb),
       scoreName = "containment",
       threshold = threshold, maxShingleFreq = maxShingleFreq,
-      sampledBound = true,
-      materialize = materialize)
+      sampledBound = true)
   }
 
   /** SimHash near-dup pairs within Hamming distance `maxHamming` (≤ 3 with
@@ -717,8 +673,8 @@ object Dedup {
     * The trade is one-sided error: `overlap` can only be INFLATED (per
     * probed shingle, by at most fpp in expectation), never deflated —
     * a contamination SCREEN, with the exact path as the confirmation
-    * pass on the flagged slice. `expectedItems` sizes the filter
-    * (default: one HLL pass over the reference grams); the filter must
+    * pass on the flagged slice. One HLL pass over the reference grams
+    * sizes the filter ([[referenceBloom]]); the filter must
     * fit the driver and the plan broadcast — at fpp 1% that is ~120 MB
     * per 1e8 distinct shingles, the practical ceiling of this variant.
     * Output: (id, n_sh, n_hit, overlap) — same shape as the exact path.
@@ -726,10 +682,9 @@ object Dedup {
   def crossCorpusOverlapBloom(
       probe: DataFrame, probeId: Column, probeText: Column,
       corpus: DataFrame, corpusText: Column, n: Int,
-      fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): DataFrame =
+      fpp: Double = 0.01): DataFrame =
     crossCorpusOverlapWithBloom(probe, probeId, probeText,
-      referenceBloom(corpus, corpusText, n, fpp, expectedItems), n)
+      referenceBloom(corpus, corpusText, n, fpp), n)
 
   /** Build-once half of the Bloom screen: fold the reference corpus's
     * shingles into serialized filter bytes. Exposed so long-lived
@@ -741,30 +696,20 @@ object Dedup {
     * insertion order. */
   def referenceBloom(
       corpus: DataFrame, corpusText: Column, n: Int,
-      fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): Array[Byte] = {
-    val corpusGrams = corpus
-      .select(explode(graft.expressions.HashedShingles.shingles(corpusText, n)).as("g"))
-    // The default path needs TWO actions over the reference grams (the
-    // HLL sizing pass, then the filter-build pass): persist across them
-    // so the scan+tokenization runs once, and release immediately — the
-    // filter bytes are what outlives this call, not the frame. An
-    // explicit `expectedItems` skips the sizing action entirely.
-    expectedItems match {
-      case Some(exp) =>
+      fpp: Double = 0.01): Array[Byte] =
+    // TWO actions read the reference grams (the HLL sizing pass, then
+    // the filter-build pass): persist across them so the
+    // scan+tokenization runs once, and release immediately — the filter
+    // bytes are what outlives this call, not the frame.
+    Materialize.persisting(corpus
+      .select(explode(graft.expressions.HashedShingles.shingles(corpusText, n)).as("g"))) {
+      corpusGrams =>
+        val expected = math.max(1L,
+          corpusGrams.select(approx_count_distinct(col("g")))
+            .collect().head.getLong(0))
         graft.expressions.BloomMightContain.serialize(
-          corpusGrams.stat.bloomFilter("g", math.max(1L, exp), fpp))
-      case None =>
-        corpusGrams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val expected = math.max(1L,
-            corpusGrams.select(approx_count_distinct(col("g")))
-              .collect().head.getLong(0))
-          graft.expressions.BloomMightContain.serialize(
-            corpusGrams.stat.bloomFilter("g", expected, fpp))
-        } finally corpusGrams.unpersist(blocking = false)
+          corpusGrams.stat.bloomFilter("g", expected, fpp))
     }
-  }
 
   /** Probe half of the Bloom screen against pre-built filter bytes:
     * (id, n_sh, n_hit, overlap) per probe doc — one map-side codegen'd
@@ -1286,8 +1231,7 @@ object Dedup {
   private def jaccardVerified(pairs: DataFrame, threshold: Double): DataFrame =
     pairs
       .withColumn("n_inter", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
+      .withColumn("jaccard", jaccardScore(col("n_inter"), col("n_a"), col("n_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
 
@@ -1295,36 +1239,34 @@ object Dedup {
       newDocs: DataFrame, id: Column, text: Column,
       index: CorpusIndex, threshold: Double,
       persistNewRel: Boolean): DataFrame = {
-    val rel0 = shingleRel(newDocs, id, text, index.n, index.k)
-    val rel =
-      if (persistNewRel)
-        rel0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rel0
-    val banded = bandedRows(rel, index.k, index.bands, carry = Seq("n_sh"))
-    // Equi-key on bh ALONE: the band hash already mixes the band number
-    // in (bandedRows hashes (b, slice)), so a cross-band bh collision is
-    // the same ~2⁻⁶⁴ class as an in-band one — and either way candidates
-    // only ADD verification work, never results (exact Jaccard follows).
-    // The single-key join is what lets a [[writeCorpusIndex]]-bucketed
-    // corpus side satisfy the join's distribution outright: bucketed by
-    // bh = ALL the cluster keys, so the reloaded probe reads the index
-    // with zero exchange (a (band, bh) key pair would need subset
-    // co-partitioning, which the planner requires all keys for).
-    val cand = banded.as("a").join(index.banded.as("b"),
-        col("a.bh") === col("b.bh") &&
-          candidatePair(col("a.id"), col("a.n_sh"), col("b.id"), col("b.n_sh"),
-            threshold))
-      .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id")
-    val verified = jaccardVerified(cand
-      .join(rel.select(col("id").as("new_id"), col("hs").as("hs_a"),
-        col("n_sh").as("n_a")), "new_id")
-      .join(index.rel.select(col("id").as("corpus_id"), col("hs").as("hs_b"),
-        col("n_sh").as("n_b")), "corpus_id"), threshold)
+    def pairs(rel: DataFrame): DataFrame = {
+      val banded = bandedRows(rel, index.k, index.bands, carry = Seq("n_sh"))
+      // Equi-key on bh ALONE: the band hash already mixes the band number
+      // in (bandedRows hashes (b, slice)), so a cross-band bh collision is
+      // the same ~2⁻⁶⁴ class as an in-band one — and either way candidates
+      // only ADD verification work, never results (exact Jaccard follows).
+      // The single-key join is what lets a [[writeCorpusIndex]]-bucketed
+      // corpus side satisfy the join's distribution outright: bucketed by
+      // bh = ALL the cluster keys, so the reloaded probe reads the index
+      // with zero exchange (a (band, bh) key pair would need subset
+      // co-partitioning, which the planner requires all keys for).
+      val cand = banded.as("a").join(index.banded.as("b"),
+          col("a.bh") === col("b.bh") &&
+            candidatePair(col("a.id"), col("a.n_sh"), col("b.id"), col("b.n_sh"),
+              threshold))
+        .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
+        .dropDuplicates("new_id", "corpus_id")
+      jaccardVerified(cand
+        .join(rel.select(col("id").as("new_id"), col("hs").as("hs_a"),
+          col("n_sh").as("n_a")), "new_id")
+        .join(index.rel.select(col("id").as("corpus_id"), col("hs").as("hs_b"),
+          col("n_sh").as("n_b")), "corpus_id"), threshold)
+    }
+    val rel = shingleRel(newDocs, id, text, index.n, index.k)
     // persistNewRel = false callers (per-micro-batch) stay fully lazy —
     // nothing to release, and an eager checkpoint per batch would defeat
     // the stream-static join shape.
-    if (persistNewRel) Materialize.andRelease(verified, rel) else verified
+    if (persistNewRel) Materialize.over(rel)(pairs) else pairs(rel)
   }
 
   /** [[nearDupAgainstIndex]] for a driver-resident shard: the join's
@@ -1391,8 +1333,7 @@ object Dedup {
   def resolveClusters(
       pairs: DataFrame, maxIters: Int = 20,
       driverThreshold: Long = 1000000L): DataFrame = {
-    val p = pairs.select(col("id_a"), col("id_b")).persist()
-    try {
+    Materialize.persisting(pairs.select(col("id_a"), col("id_b"))) { p =>
       // ONE bounded probe decides the path AND, on the driver path,
       // already holds the edges (round 21, guide §1.2): the former
       // count-then-collect paid two full actions where a
@@ -1408,7 +1349,7 @@ object Dedup {
         resolveClustersDriver(p.sparkSession,
           head.map(r => (r.getLong(0), r.getLong(1))))
       else resolveClustersDistributed(p, maxIters)
-    } finally p.unpersist(false)
+    }
   }
 
   /** Near-dup edge sets are orders of magnitude smaller than the corpus
@@ -1537,25 +1478,24 @@ object Dedup {
       docs: DataFrame, id: Column, text: Column, maxDist: Int): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
     val d = maxDist
-    val base = spread(docs).filter(text.isNotNull)
-      .select(id.cast("long").as("id"), text.as("t"))
-      .withColumn("len", length(col("t")).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Self-join orientation: segment side shorter or equal; equal-length
-    // pairs are generated from both directions and collapse in the
-    // distinct(); self-pairs are dropped before it.
-    val cand = edCandidates(base, base, d, strictShorter = false)
-      .filter(col("sid") =!= col("pid"))
-      .select(least(col("sid"), col("pid")).as("id_a"),
-        greatest(col("sid"), col("pid")).as("id_b"))
-      .distinct()
-    val pairs = cand
-      .join(base.select(col("id").as("id_a"), col("t").as("ta")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("t").as("tb")), "id_b")
-      .withColumn("dist", levenshtein(col("ta"), col("tb"), d))
-      .filter(col("dist") >= 0)
-      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-    Materialize.andRelease(pairs, base)
+    Materialize.over(spread(docs).filter(text.isNotNull)
+        .select(id.cast("long").as("id"), text.as("t"))
+        .withColumn("len", length(col("t")).cast("int"))) { base =>
+      // Self-join orientation: segment side shorter or equal; equal-length
+      // pairs are generated from both directions and collapse in the
+      // distinct(); self-pairs are dropped before it.
+      val cand = edCandidates(base, base, d, strictShorter = false)
+        .filter(col("sid") =!= col("pid"))
+        .select(least(col("sid"), col("pid")).as("id_a"),
+          greatest(col("sid"), col("pid")).as("id_b"))
+        .distinct()
+      cand
+        .join(base.select(col("id").as("id_a"), col("t").as("ta")), "id_a")
+        .join(base.select(col("id").as("id_b"), col("t").as("tb")), "id_b")
+        .withColumn("dist", levenshtein(col("ta"), col("tb"), d))
+        .filter(col("dist") >= 0)
+        .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
+    }
   }
 
   /** Cross-corpus edit-distance lookup: every (new doc, reference doc)
@@ -1582,24 +1522,24 @@ object Dedup {
       df.filter(t.isNotNull)
         .select(i.cast("long").as("id"), t.as("t"))
         .withColumn("len", length(col("t")).cast("int"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = prep(newDocs, id, text)
-    val r = prep(ref, refId, refText)
-    val cand =
-      edCandidates(r, n, d, strictShorter = false)
-        .select(col("pid").as("new_id"), col("sid").as("ref_id"))
-      .unionByName(
-        edCandidates(n, r, d, strictShorter = true)
-          .select(col("sid").as("new_id"), col("pid").as("ref_id")))
-      .distinct()
-    val pairs = cand
-      .join(n.select(col("id").as("new_id"), col("t").as("ta")), "new_id")
-      .join(r.select(col("id").as("ref_id"), col("t").as("tb")), "ref_id")
-      .withColumn("dist", levenshtein(col("ta"), col("tb"), d))
-      .filter(col("dist") >= 0)
-      .select(col("new_id"), col("ref_id"),
-        col("dist").cast("long").as("dist"))
-    Materialize.andRelease(pairs, n, r)
+    Materialize.persisting(prep(newDocs, id, text)) { n =>
+    Materialize.over(prep(ref, refId, refText)) { r =>
+      val cand =
+        edCandidates(r, n, d, strictShorter = false)
+          .select(col("pid").as("new_id"), col("sid").as("ref_id"))
+        .unionByName(
+          edCandidates(n, r, d, strictShorter = true)
+            .select(col("sid").as("new_id"), col("pid").as("ref_id")))
+        .distinct()
+      cand
+        .join(n.select(col("id").as("new_id"), col("t").as("ta")), "new_id")
+        .join(r.select(col("id").as("ref_id"), col("t").as("tb")), "ref_id")
+        .withColumn("dist", levenshtein(col("ta"), col("tb"), d))
+        .filter(col("dist") >= 0)
+        .select(col("new_id"), col("ref_id"),
+          col("dist").cast("long").as("dist"))
+    }
+    }
   }
 
   /** Shared PassJoin candidate core: segment the `segSide` docs, probe

@@ -31,31 +31,28 @@ object Funnel {
     * shuffles; the final |steps|-row union crosses the 1-row step-1
     * count. No windows over raw events, no per-user state, and the
     * step count bounds the join chain, not the data. Each ≤|users|-row
-    * step frame is pinned ([[Materialize.pin]], default on) before the
+    * step frame is pinned ([[Materialize.pin]]) before the
     * next step derives from it — without that, step i's plan re-derives
     * every earlier step from scratch (an O(steps²) re-scan of the event
     * table: measured 7 scans for 3 steps), and the frames are orders of
     * magnitude smaller than the events they summarize. */
   def conversionFunnel(
       events: DataFrame, user: Column, ts: Column, eventType: Column,
-      steps: Seq[String], materialize: Boolean = true,
-      maxGapMicros: Option[Long] = None): DataFrame = {
+      steps: Seq[String], maxGapMicros: Option[Long] = None): DataFrame = {
     require(steps.nonEmpty, "steps must be non-empty")
     require(maxGapMicros.forall(_ > 0), "maxGapMicros must be positive")
     val ev = events.select(user.as("__u"), ts.as("__ts"),
       eventType.as("__et"))
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) Materialize.pin(df) else df
     def withinGap: Column = maxGapMicros match {
       case Some(g) =>
         unix_micros(col("__ts")) <= unix_micros(col("__prev")) + lit(g)
       case None => lit(true)
     }
     val stepFrames = steps.tail.scanLeft(
-      pin(ev.filter(col("__et") === steps.head)
+      Materialize.pin(ev.filter(col("__et") === steps.head)
         .groupBy(col("__u")).agg(min(col("__ts")).as("__t")))) {
       (prev, s) =>
-        pin(ev.filter(col("__et") === s)
+        Materialize.pin(ev.filter(col("__et") === s)
           .join(prev.select(col("__u"), col("__t").as("__prev")), Seq("__u"))
           .filter(col("__ts") >= col("__prev") && withinGap)
           .groupBy(col("__u")).agg(min(col("__ts")).as("__t")))
@@ -104,16 +101,14 @@ object Funnel {
   def anyTouchFunnel(
       events: DataFrame, user: Column, ts: Column, eventType: Column,
       tieBreak: Column, steps: Seq[String], gapMicros: Long,
-      maxEventsPerUserType: Int, materialize: Boolean = true): DataFrame = {
+      maxEventsPerUserType: Int): DataFrame = {
     require(steps.nonEmpty, "steps must be non-empty")
     require(gapMicros > 0, "gapMicros must be positive")
     require(maxEventsPerUserType > 0, "maxEventsPerUserType must be positive")
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) Materialize.pin(df) else df
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__u"), col("__et"))
       .orderBy(col("__ts").asc, col("__tb").asc)
-    val capped = pin(events
+    val capped = Materialize.pin(events
       .select(user.as("__u"), ts.as("__ts"), eventType.as("__et"),
         tieBreak.as("__tb"))
       .filter(col("__et").isin(steps: _*))
@@ -121,7 +116,7 @@ object Funnel {
       .filter(col("__rn") <= maxEventsPerUserType)
       .select(col("__u"), col("__ts"), col("__et")))
     val g = gapMicros
-    val r1 = pin(capped.filter(col("__et") === steps.head)
+    val r1 = Materialize.pin(capped.filter(col("__et") === steps.head)
       .select(col("__u"), col("__ts")).distinct())
     val frames = steps.tail.scanLeft(r1) { (prev, s) =>
       // [r, r+g] with bucket width g spans exactly the two buckets
@@ -134,7 +129,7 @@ object Funnel {
       val pts = capped.filter(col("__et") === s)
         .select(col("__u"), col("__ts"))
         .withColumn("__b", floor(unix_micros(col("__ts")) / g))
-      pin(pts.join(iv,
+      Materialize.pin(pts.join(iv,
           col("__u") === col("__ru") && col("__b") === col("__rb") &&
             unix_micros(col("__ts")) >= col("__rt") &&
             unix_micros(col("__ts")) <= col("__rt") + g,

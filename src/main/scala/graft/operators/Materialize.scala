@@ -1,16 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Cache discipline shared by every persist-using operator in the
-  * library: eagerly materialize the operator's output via a checkpoint
-  * ([[pin]]), then release the operator-internal persisted frames in a
-  * finally — so composing operators in a long-lived session never
-  * accumulates dead cache entries, and re-running an operator never
-  * trips the cache manager's "already cached" double-persist warning.
-  * Checkpoint blocks live OUTSIDE the SQL cache manager and are
-  * reclaimed by the ContextCleaner once the frame is unreferenced, so
-  * no unpersist obligation transfers to the caller.
+  * library, written once as [[over]]: persist the relation the operator
+  * reads several times, build the output from it, eagerly materialize
+  * the output via a checkpoint ([[pin]]), then release the persist in a
+  * finally that also covers the build's own eager jobs — so composing
+  * operators in a long-lived session never accumulates dead cache
+  * entries, a failing build leaves none behind, and re-running an
+  * operator never trips the cache manager's "already cached"
+  * double-persist warning. Checkpoint blocks live OUTSIDE the SQL cache
+  * manager and are reclaimed by the ContextCleaner once the frame is
+  * unreferenced, so no unpersist obligation transfers to the caller.
+  * Sites whose persisted frame feeds driver-side results rather than a
+  * pinned output (a Bloom filter's bytes, a training loop's weights, an
+  * index landing, a micro-batch's sink write) use the release half
+  * alone, [[persisting]].
   *
   * The outputs this is applied to are orders of magnitude smaller than
   * the corpus they derive from (duplicate-pair sets, per-doc score rows,
@@ -61,7 +68,16 @@ private[graft] object Materialize {
       df.checkpoint()
     } else df.localCheckpoint()
 
-  def andRelease(result: DataFrame, interned: DataFrame*): DataFrame =
-    try pin(result)
-    finally interned.foreach(_.unpersist(false))
+  /** Run `body` over `frame` persisted at `MEMORY_AND_DISK`, and release
+    * the persist when `body` returns or throws. */
+  def persisting[T](frame: DataFrame)(body: DataFrame => T): T = {
+    val f = frame.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(f) finally f.unpersist(false)
+  }
+
+  /** The operator discipline: `build` the output from the persisted
+    * `frame`, [[pin]] it, and release `frame` — also when `build` or the
+    * pin throws. */
+  def over(frame: DataFrame)(build: DataFrame => DataFrame): DataFrame =
+    persisting(frame)(f => pin(build(f)))
 }

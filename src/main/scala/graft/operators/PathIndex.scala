@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** How one data relation of a [[PathFamily]] lands and is scanned. */
 private[operators] sealed trait Layout[P]
@@ -275,16 +274,11 @@ private[operators] object PathIndex {
     def landEncoded(encoded: DataFrame, p: P): Unit =
       Similarity.inParallel(landAll(f, f.data.map(_.derive(encoded, p)), p, path,
         SaveMode.Append): _*)
-    def cached(encoded: DataFrame)(body: DataFrame => Unit): Unit = {
-      encoded.persist(StorageLevel.MEMORY_AND_DISK)
-      try body(encoded) finally encoded.unpersist()
-      ()
-    }
     f.data.head.layout match {
       case Striped(stripe, _) =>
         notTombstoned()
         val p = f.readParams(spark, path)
-        cached(f.encode(newRows, id, value, p)) { encoded =>
+        Materialize.persisting(f.encode(newRows, id, value, p)) { encoded =>
           // Prune while the touched set stays IN-literal-sized.
           val touched = touchedStripes(encoded.select(col(stripe)))
           newIds(if (touched.size > LiveGuardMaxStripes) None
@@ -298,7 +292,7 @@ private[operators] object PathIndex {
         val p = f.readParams(spark, path)
         val encoded = f.encode(newRows, id, value, p)
         if (f.data.size == 1) landEncoded(encoded, p)
-        else cached(encoded)(landEncoded(_, p))
+        else Materialize.persisting(encoded)(landEncoded(_, p))
     }
   }
 

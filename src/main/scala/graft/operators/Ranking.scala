@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions.tokens
 
@@ -26,14 +25,14 @@ import graft.functions.TextFunctions.tokens
   * the score join), and Catalyst's exchange reuse only dedupes the
   * consumers that share an identical exchange — measured 3–7 separate
   * corpus scans per query before this round, i.e. the corpus was
-  * re-tokenized per consumer, the dominant avoidable cost at scale. By
-  * default (`materialize = true`) each operator therefore persists its
-  * count frame, eagerly materializes its (per-doc / per-group, orders
-  * of magnitude smaller than the corpus) output, and releases the
-  * persist before returning — the [[Materialize]] discipline, no cache
-  * entry outlives the call. Pass `materialize = false` for a fully lazy
-  * composable plan that leaves caching to the caller (and re-tokenizes
-  * per consumer if the caller does nothing).
+  * re-tokenized per consumer, the dominant avoidable cost at scale. Each
+  * operator therefore persists its count frame, eagerly materializes its
+  * (per-doc / per-group, orders of magnitude smaller than the corpus)
+  * output, and releases the persist before returning —
+  * [[Materialize.over]], so no cache entry outlives the call. The one
+  * exception is [[hashedLinearScore]]'s `materialize = false`, the lazy
+  * form a per-micro-batch caller
+  * ([[graft.streaming.StreamingScore]]) consumes once.
   *
   * Float discipline (see CoreQueries scaladoc): every division and
   * multiplication is IEEE-exact given equal inputs; `ln` is the one
@@ -48,18 +47,6 @@ object Ranking {
       .groupBy(col("__id"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  /** Build `result` from a count frame, under the tokenize-once
-    * discipline: persisted + output-materialized + released when
-    * `materialize` is set, fully lazy otherwise. */
-  private def withCounts(
-      counts: DataFrame, materialize: Boolean)(
-      build: DataFrame => DataFrame): DataFrame =
-    if (!materialize) build(counts)
-    else {
-      val c = counts.persist(StorageLevel.MEMORY_AND_DISK)
-      Materialize.andRelease(build(c), c)
-    }
-
   /** Top-`k` TF-IDF terms per document (smoothed sklearn-style idf:
     * `ln((N+1)/(df+1)) + 1`). Output: (id, rank, term, score), score
     * rounded to 4 dp, rank by (score desc, term asc).
@@ -70,9 +57,8 @@ object Ranking {
     * but column-pruned to nothing (a parquet metadata count) — no
     * second tokenize. */
   def tfIdfTopTerms(
-      df: DataFrame, id: Column, text: Column, k: Int,
-      materialize: Boolean = true): DataFrame =
-    withCounts(termFreqs(df, id, text), materialize) { tf =>
+      df: DataFrame, id: Column, text: Column, k: Int): DataFrame =
+    Materialize.over(termFreqs(df, id, text)) { tf =>
       // df(term) counts (doc, term) pairs — tf is already distinct on the pair.
       val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val n = df.agg(count(lit(1)).as("n_docs"))
@@ -108,13 +94,12 @@ object Ranking {
     * call site (asserted in PlanDisciplineSpec). */
   def bm25(
       df: DataFrame, id: Column, text: Column, terms: Seq[String],
-      topN: Int, k1: Double = 1.2, b: Double = 0.75,
-      materialize: Boolean = true): DataFrame = {
+      topN: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     val perDoc = df.select(id.as("__id"), tokens(text).as("toks"))
       .select(col("__id"), size(col("toks")).as("dl"),
         filter(col("toks"), t => t.isin(terms: _*)).as("qtoks"))
-    val scored = withCounts(perDoc, materialize) { pd =>
+    val scored = Materialize.over(perDoc) { pd =>
       val lens = pd.select(col("__id"), col("dl"))
       // avgdl as sum/count of exact integers; N alongside — one tiny broadcast.
       val corpus = lens.agg(
@@ -160,9 +145,8 @@ object Ranking {
     * a doc's terms is engine-dependent (same last-ulp class as the BM25
     * sum — rounded away at 4 dp). */
   def unigramLogProb(
-      df: DataFrame, id: Column, text: Column,
-      materialize: Boolean = true): DataFrame =
-    withCounts(termFreqs(df, id, text), materialize) { tf =>
+      df: DataFrame, id: Column, text: Column): DataFrame =
+    Materialize.over(termFreqs(df, id, text)) { tf =>
       val corpus = corpusFreqs(tf)
       val total = corpus.agg(sum(col("ctf")).as("total_tokens"))
       tf.join(corpus, "term")
@@ -208,8 +192,7 @@ object Ranking {
     * as a 1-row broadcast. */
   def bigramLogProb(
       df: DataFrame, id: Column, text: Column,
-      lambdaJm: Double = 0.75,
-      materialize: Boolean = true): DataFrame = {
+      lambdaJm: Double = 0.75): DataFrame = {
     val toks = tokens(text)
     // ONE explicit (w1, w2) exchange serves the whole chain (q62's
     // trick): HashPartitioning(w1, w2) satisfies the (id, w1, w2)
@@ -235,7 +218,7 @@ object Ranking {
         col("w1"), col("w2"))
       .groupBy(col("__id"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("tf"))
-    withCounts(docBg, materialize) { tf =>
+    Materialize.over(docBg) { tf =>
       val pairCnt = tf.groupBy(col("w1"), col("w2")).agg(sum(col("tf")).as("cb"))
       // Marginals as whole-partition WINDOWS over the bigram-TYPE
       // frame, not sub-aggregate + join-back: the join shape costs two
@@ -284,10 +267,9 @@ object Ranking {
     * joined back on the term. Posting-list assembly is a row-local
     * sort_array over ≤ maxPostings structs. */
   def invertedIndex(
-      df: DataFrame, id: Column, text: Column, maxPostings: Int,
-      materialize: Boolean = true): DataFrame = {
+      df: DataFrame, id: Column, text: Column, maxPostings: Int): DataFrame = {
     require(maxPostings >= 1, "maxPostings must be >= 1")
-    withCounts(termFreqs(df, id, text), materialize) { tf =>
+    Materialize.over(termFreqs(df, id, text)) { tf =>
       val dfCnt = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val capped = graft.plans.GroupTopK.topK(
         tf, Seq(col("term")), Seq(col("tf").desc, col("__id").asc),
@@ -374,12 +356,11 @@ object Ranking {
     * row-locally — no window, order restored by `array_sort` inside
     * the row. */
   def vocabEncode(
-      df: DataFrame, id: Column, text: Column, vocabSize: Int,
-      materialize: Boolean = true): DataFrame = {
+      df: DataFrame, id: Column, text: Column, vocabSize: Int): DataFrame = {
     import graft.functions.TextFunctions
     val tokenized = df.select(id.as("__id"),
       TextFunctions.tokens(text).as("toks"))
-    def build(tk: DataFrame): DataFrame = {
+    Materialize.over(tokenized) { tk =>
       val withPos = tk.select(col("__id"),
         posexplode(col("toks")).as(Seq("pos", "term")))
       // Corpus term frequency directly (summing per-doc tfs and
@@ -400,11 +381,6 @@ object Ranking {
               array_sort(collect_list(struct(col("pos"), col("__vid")))),
               s => s.getField("__vid").cast("string")), ">").as("ids"))
     }
-    if (!materialize) build(tokenized)
-    else {
-      val c = tokenized.persist(StorageLevel.MEMORY_AND_DISK)
-      Materialize.andRelease(build(c), c)
-    }
   }
 
   /** Out-of-vocabulary token rate per document against the corpus's own
@@ -417,9 +393,8 @@ object Ranking {
     * global sort — and broadcast back; in-vocab token mass is an exact
     * integer sum, so the rate is a single IEEE division. */
   def oovRate(
-      df: DataFrame, id: Column, text: Column, vocabSize: Int,
-      materialize: Boolean = true): DataFrame =
-    withCounts(termFreqs(df, id, text), materialize) { tf =>
+      df: DataFrame, id: Column, text: Column, vocabSize: Int): DataFrame =
+    Materialize.over(termFreqs(df, id, text)) { tf =>
       val vocab = corpusFreqs(tf)
         .orderBy(col("ctf").desc, col("term").asc)
         .limit(vocabSize)
@@ -446,13 +421,11 @@ object Ranking {
     * vocabulary-sized join for the corpus counts, and two broadcast
     * scalars — no shuffle wider than the (group, term) count frame. */
   def klDivergence(
-      df: DataFrame, group: Column, text: Column,
-      materialize: Boolean = true): DataFrame =
-    withCounts(
+      df: DataFrame, group: Column, text: Column): DataFrame =
+    Materialize.over(
       df.select(group.as("group"), explode(tokens(text)).as("term"))
         .groupBy(col("group"), col("term"))
-        .agg(count(lit(1)).as("gtf")),
-      materialize) { gf =>
+        .agg(count(lit(1)).as("gtf"))) { gf =>
       val corpus = gf.groupBy(col("term")).agg(sum(col("gtf")).as("ctf"))
       val total = corpus.agg(sum(col("ctf")).as("total_tokens"))
       val groupTotals = gf.groupBy(col("group")).agg(sum(col("gtf")).as("gtot"))
@@ -507,6 +480,9 @@ object Ranking {
     * (keep iff threshold <= 0.5) rather than through the generic
     * z >= zThreshold·n_tokens comparison, which degenerates to
     * 0 >= 0 = true for any threshold when n_tokens = 0.
+    * `materialize = false` returns the lazy plan, with no persist and no
+    * pin, for a caller that reads each input once
+    * ([[graft.streaming.StreamingScore]]'s micro-batches).
     * Output: (id, n_tokens, z, keep). */
   def hashedLinearScore(
       df: DataFrame, id: Column, text: Column,
@@ -522,7 +498,7 @@ object Ranking {
       round((Split.hashFraction(concat(lit(seed + "_"), col("id")))
         - lit(0.5)) * lit(2.0), 6).as("__w"))
     val base = df.select(id.as("__id"))
-    withCounts(termFreqs(df, id, text), materialize) { tf =>
+    def score(tf: DataFrame): DataFrame = {
       val z = tf
         .withColumn("__b",
           pmod(conv(substring(md5(col("term")), 1, 8), 16, 10).cast("long"),
@@ -547,6 +523,8 @@ object Ranking {
             .otherwise(col("z") >= round(lit(zThreshold) *
               col("n_tokens").cast("double"), 6)))
     }
+    val tf = termFreqs(df, id, text)
+    if (materialize) Materialize.over(tf)(score) else score(tf)
   }
 
   /** In-engine training of the hashed-feature logistic-regression
@@ -584,9 +562,8 @@ object Ranking {
       nBuckets: Int, iters: Int, lr: Double,
       withLoss: Boolean = true): (DataFrame, Seq[Double]) = {
     val spark = df.sparkSession
-    val (w, losses, docFeats, _) = trainHashedLogRegImpl(
-      df, id, text, label, nBuckets, iters, lr, withLoss)
-    docFeats.unpersist(false)
+    val (w, losses) = trainHashedLogRegImpl(
+      df, id, text, label, nBuckets, iters, lr, withLoss)((w, losses, _) => (w, losses))
     val weights = spark.range(nBuckets.toLong)
       .select(col("id").cast("int").as("bucket"),
         element_at(typedLit(w.toSeq), (col("id") + 1).cast("int")).as("w"))
@@ -605,21 +582,22 @@ object Ranking {
         element_at(wLit, (f.getField("__b") + 1).cast("int"))
           .cast("decimal(12,6)"))
 
-  /** [[trainHashedLogReg]]'s engine: returns (weights array, losses,
-    * the STILL-PERSISTED per-doc feature frame, N) so callers that
-    * need the train-slice features again ([[evalHashedLogReg]]'s
+  /** [[trainHashedLogReg]]'s engine: hands `use` the weights array, the
+    * losses and the STILL-PERSISTED per-doc feature frame, so callers
+    * that need the train-slice features again ([[evalHashedLogReg]]'s
     * calibration cutoff) reuse the cached frame instead of paying a
-    * second full tokenize; the caller owns the unpersist. `withLoss`
+    * second full tokenize. The frame is released when `use` returns,
+    * and also when training or `use` throws. `withLoss`
     * = false skips the diagnostic mean-cross-entropy pass — the loop
     * is then exactly ONE Spark job per iteration (the gradient
     * aggregate; round-21 VERDICT item 4), with no intermediate
     * persist. Loss is NOT part of any gated output; the weight
     * trajectory is bit-identical either way (same expressions, same
     * decimal grid). */
-  private def trainHashedLogRegImpl(
+  private def trainHashedLogRegImpl[T](
       df: DataFrame, id: Column, text: Column, label: Column,
-      nBuckets: Int, iters: Int, lr: Double, withLoss: Boolean)
-      : (Array[Double], Seq[Double], DataFrame, Long) = {
+      nBuckets: Int, iters: Int, lr: Double, withLoss: Boolean)(
+      use: (Array[Double], Seq[Double], DataFrame) => T): T = {
     require(nBuckets >= 1, "nBuckets must be positive")
     require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
     val feats = termFreqs(df, id, text)
@@ -643,74 +621,73 @@ object Ranking {
     // exchange per iteration on frames this loop never changes.
     // sort_array is for plan determinism only — z and ∇ accumulate in
     // exact DECIMAL, so no summation order can change a value.
-    val docFeats = feats
+    Materialize.persisting(feats
       .groupBy(col("__id"))
       .agg(sort_array(collect_list(struct(col("__b"), col("tf"))))
         .as("__fs"))
-      .join(labels, Seq("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // N = docs with token events (zero-token docs carry no gradient and
-    // no loss); the count also materializes the cached frame.
-    val n = docFeats.count()
-    require(n > 0, "no documents with token events to train on")
-    val w = Array.fill(nBuckets)(0.0d)
-    var losses = Vector.empty[Double]
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    (1 to iters).foreach { _ =>
-      val wLit = typedLit(w.toSeq)
-      // z and ∇ accumulate in DECIMAL, not double: every term is an
-      // integer tf times a 6-dp-grid value, exactly representable, so
-      // the decimal sum is ORDER-INDEPENDENT — a double sum's
-      // association noise crossed the 6-dp round boundary on real data
-      // (one bucket in 64 at sf0.01) and flipped the last digit
-      // between engines. One cast back to double after the exact sum.
-      // The HOF's decimal(38,6) accumulator is the same type a groupBy
-      // sum of the decimal(33,6) products promotes to.
-      val pFrame = docFeats
-        .select(col("__fs"), col("__y"),
-          round(zAggExpr(wLit).cast("double"), 6).as("__z"))
-        .select(col("__fs"), col("__y"),
-          round(lit(1.0d) / (lit(1.0d) + exp(-col("__z"))), 6).as("__p"))
-      // ∇ rounds to 5 dp, one digit COARSER than the 6-dp weight grid:
-      // lr·∇ is then an exact multiple of 1e-6 (lr = 0.5 halves a 1e-5
-      // grid onto 5e-6), so the weight update never lands ON the 5e-7
-      // half-grid — where Spark's exact-BigDecimal round and DuckDB's
-      // multiply-then-round disagree about the same double (observed:
-      // one bucket in 64 flipped its last digit).
-      def gradOf(p: DataFrame) = p
-        .select(col("__p"), col("__y"), explode(col("__fs")).as("__f"))
-        .groupBy(col("__f.__b").as("__b"))
-        .agg(round(sum(col("__f.tf").cast("decimal(20,0)") *
-          (col("__p").cast("decimal(12,6)") -
-            col("__y").cast("decimal(12,6)"))).cast("double") /
-          lit(n.toDouble), 5).as("__g"))
-        .collect()
-      val gradRows =
-        if (!withLoss) gradOf(pFrame) // ONE job: p inline above the agg
-        else {
-          // Loss requested: p feeds two actions — persist across them.
-          val p = pFrame.persist(StorageLevel.MEMORY_AND_DISK)
-          val rows = gradOf(p)
-          // Clamp only the DIAGNOSTIC loss away from ln 0 (a 6-dp-
-          // rounded p can land exactly on 0 or 1); the gradient uses
-          // raw p.
-          val pc = least(greatest(col("__p"), lit(1e-9d)),
-            lit(1.0d - 1e-9d))
-          val loss = p.agg(
-            (-avg(col("__y") * log(pc) +
-              (lit(1.0d) - col("__y")) * log(lit(1.0d) - pc)))
-              .as("loss")).collect()(0).getDouble(0)
-          p.unpersist(false)
-          losses :+= loss
-          rows
+      .join(labels, Seq("__id"))) { docFeats =>
+      // N = docs with token events (zero-token docs carry no gradient and
+      // no loss); the count also materializes the cached frame.
+      val n = docFeats.count()
+      require(n > 0, "no documents with token events to train on")
+      val w = Array.fill(nBuckets)(0.0d)
+      var losses = Vector.empty[Double]
+      def round6(x: Double): Double =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (1 to iters).foreach { _ =>
+        val wLit = typedLit(w.toSeq)
+        // z and ∇ accumulate in DECIMAL, not double: every term is an
+        // integer tf times a 6-dp-grid value, exactly representable, so
+        // the decimal sum is ORDER-INDEPENDENT — a double sum's
+        // association noise crossed the 6-dp round boundary on real data
+        // (one bucket in 64 at sf0.01) and flipped the last digit
+        // between engines. One cast back to double after the exact sum.
+        // The HOF's decimal(38,6) accumulator is the same type a groupBy
+        // sum of the decimal(33,6) products promotes to.
+        val pFrame = docFeats
+          .select(col("__fs"), col("__y"),
+            round(zAggExpr(wLit).cast("double"), 6).as("__z"))
+          .select(col("__fs"), col("__y"),
+            round(lit(1.0d) / (lit(1.0d) + exp(-col("__z"))), 6).as("__p"))
+        // ∇ rounds to 5 dp, one digit COARSER than the 6-dp weight grid:
+        // lr·∇ is then an exact multiple of 1e-6 (lr = 0.5 halves a 1e-5
+        // grid onto 5e-6), so the weight update never lands ON the 5e-7
+        // half-grid — where Spark's exact-BigDecimal round and DuckDB's
+        // multiply-then-round disagree about the same double (observed:
+        // one bucket in 64 flipped its last digit).
+        def gradOf(p: DataFrame) = p
+          .select(col("__p"), col("__y"), explode(col("__fs")).as("__f"))
+          .groupBy(col("__f.__b").as("__b"))
+          .agg(round(sum(col("__f.tf").cast("decimal(20,0)") *
+            (col("__p").cast("decimal(12,6)") -
+              col("__y").cast("decimal(12,6)"))).cast("double") /
+            lit(n.toDouble), 5).as("__g"))
+          .collect()
+        val gradRows =
+          if (!withLoss) gradOf(pFrame) // ONE job: p inline above the agg
+          else {
+            // Loss requested: p feeds two actions — persist across them.
+            Materialize.persisting(pFrame) { p =>
+              val rows = gradOf(p)
+              // Clamp only the DIAGNOSTIC loss away from ln 0 (a 6-dp-
+              // rounded p can land exactly on 0 or 1); the gradient uses
+              // raw p.
+              val pc = least(greatest(col("__p"), lit(1e-9d)),
+                lit(1.0d - 1e-9d))
+              losses :+= p.agg(
+                (-avg(col("__y") * log(pc) +
+                  (lit(1.0d) - col("__y")) * log(lit(1.0d) - pc)))
+                  .as("loss")).collect()(0).getDouble(0)
+              rows
+            }
+          }
+        gradRows.foreach { r =>
+          val b = r.getLong(0).toInt
+          w(b) = round6(w(b) - lr * r.getDouble(1))
         }
-      gradRows.foreach { r =>
-        val b = r.getLong(0).toInt
-        w(b) = round6(w(b) - lr * r.getDouble(1))
       }
+      use(w, losses, docFeats)
     }
-    (w, losses, docFeats, n)
   }
 
   /** Held-out evaluation of the in-engine hashed-LR quality classifier
@@ -765,10 +742,6 @@ object Ranking {
     // output) and the train slice's per-doc feature frame reused for
     // the calibration cutoff below, instead of a SECOND full tokenize
     // of 80% of the corpus (round-21 VERDICT item 4).
-    val (wArr, _, trainFeats, _) = trainHashedLogRegImpl(
-      train, id, text, label, nBuckets, iters, lr, withLoss = false)
-    val w = wArr.toSeq
-    val wLit = typedLit(w)
     // Train-mean operating point from the CACHED feature frame: the
     // per-doc z via the same exact-decimal fold as the training loop
     // ([[zAggExpr]] — per-bucket tf·w products are exact decimals, so
@@ -776,12 +749,15 @@ object Ranking {
     // identical decimal(20,6) sum / one double division as before.
     // Collected eagerly (1-row, parameter-sized) so the scored plan
     // compares against a LITERAL — same double, same comparisons.
-    val cutoffRow = trainFeats.agg(
-      (sum(round(zAggExpr(wLit).cast("double"), 6).cast("decimal(20,6)"))
-        .cast("double") / count(lit(1)).cast("double")).as("__c"))
-      .collect()(0)
-    trainFeats.unpersist(false)
-    val cutoffVal = cutoffRow.getDouble(0)
+    val (wLit, cutoffVal) = trainHashedLogRegImpl(
+        train, id, text, label, nBuckets, iters, lr, withLoss = false) {
+      (w, _, trainFeats) =>
+        val wLit = typedLit(w.toSeq)
+        (wLit, trainFeats.agg(
+          (sum(round(zAggExpr(wLit).cast("double"), 6).cast("decimal(20,6)"))
+            .cast("double") / count(lit(1)).cast("double")).as("__c"))
+          .collect()(0).getDouble(0))
+    }
     def scoreZ(slice: DataFrame): DataFrame =
       termFreqs(slice, id, text)
         .withColumn("__b",
@@ -871,10 +847,9 @@ object Ranking {
     * Output: (id, lang, n_bigrams, logprob, bucket). */
   def perplexityBuckets(
       df: DataFrame, id: Column, text: Column, lang: Column,
-      nBuckets: Int = 3, lambdaJm: Double = 0.75,
-      materialize: Boolean = true): DataFrame = {
+      nBuckets: Int = 3, lambdaJm: Double = 0.75): DataFrame = {
     require(nBuckets >= 1, "nBuckets must be positive")
-    val scored = bigramLogProb(df, id, text, lambdaJm, materialize)
+    val scored = bigramLogProb(df, id, text, lambdaJm)
     val base = df.select(id.as("__id"), lang.as("lang"))
     // ONE left join carries every doc; the scored-ness flag splits the
     // band window's PARTITION key, so the unscored (degenerate) docs
@@ -944,36 +919,6 @@ object Ranking {
       .orderBy(col("n").desc, col("term").asc)
   }
 
-  /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023),
-    * unigram form: score every RAW document by how much more likely its
-    * tokens are under the TARGET distribution than under the raw pool —
-    * the estimated log importance weight
-    *
-    *   z(d) = Σ_t tf_{d,t} · [ln p̂_tgt(t) − ln p̂_all(t)]
-    *
-    * with both LMs add-one smoothed over the SHARED corpus vocabulary
-    * (p̂(t) = (c(t)+1)/(T+V)), so every raw-side term has a finite
-    * weight even when the target never saw it. The top-`topN` raw
-    * documents by z are the ones importance resampling would pull
-    * toward the target domain. `isTarget` marks the target slice;
-    * scored rows are the NON-target documents only (selecting from the
-    * raw pool is the operator's purpose; target docs scoring themselves
-    * would trivially dominate).
-    *
-    * Float discipline (the q130 lesson, adapted for libm): per-TERM
-    * weights are ln() ratios — rounded to 4 dp (q72's accepted ln
-    * grid), so per-doc sums are integer combinations of 1e-4-grid
-    * values and the final 4-dp round of z is grid-stable across
-    * engines; ranking compares the rounded z with a doc-id tie-break.
-    *
-    * Scale shape: one tokenize (the flag rides the per-doc group key,
-    * so target/raw counts come out of the SAME (doc, term) aggregate),
-    * one vocabulary-sized conditional-sum aggregate, a 1-row smoothing
-    * scalar broadcast, the per-term weight frame joined back on the
-    * term key (vocabulary-sized — AQE broadcasts when it fits), one
-    * per-doc aggregate, TakeOrderedAndProject for the top-N. The raw
-    * token stream shuffles exactly once. Output: (id, n_tokens, z),
-    * z DESC, id ASC, top `topN`. */
   /** Term-level vocabulary drift between two snapshots: for every term
     * in the UNION vocabulary, its count in each snapshot and the
     * add-one-smoothed log-ratio of its frequency shares —
@@ -1023,9 +968,39 @@ object Ranking {
       .limit(topN)
   }
 
+  /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023),
+    * unigram form: score every RAW document by how much more likely its
+    * tokens are under the TARGET distribution than under the raw pool —
+    * the estimated log importance weight
+    *
+    *   z(d) = Σ_t tf_{d,t} · [ln p̂_tgt(t) − ln p̂_all(t)]
+    *
+    * with both LMs add-one smoothed over the SHARED corpus vocabulary
+    * (p̂(t) = (c(t)+1)/(T+V)), so every raw-side term has a finite
+    * weight even when the target never saw it. The top-`topN` raw
+    * documents by z are the ones importance resampling would pull
+    * toward the target domain. `isTarget` marks the target slice;
+    * scored rows are the NON-target documents only (selecting from the
+    * raw pool is the operator's purpose; target docs scoring themselves
+    * would trivially dominate).
+    *
+    * Float discipline (the q130 lesson, adapted for libm): per-TERM
+    * weights are ln() ratios — rounded to 4 dp (q72's accepted ln
+    * grid), so per-doc sums are integer combinations of 1e-4-grid
+    * values and the final 4-dp round of z is grid-stable across
+    * engines; ranking compares the rounded z with a doc-id tie-break.
+    *
+    * Scale shape: one tokenize (the flag rides the per-doc group key,
+    * so target/raw counts come out of the SAME (doc, term) aggregate),
+    * one vocabulary-sized conditional-sum aggregate, a 1-row smoothing
+    * scalar broadcast, the per-term weight frame joined back on the
+    * term key (vocabulary-sized — AQE broadcasts when it fits), one
+    * per-doc aggregate, TakeOrderedAndProject for the top-N. The raw
+    * token stream shuffles exactly once. Output: (id, n_tokens, z),
+    * z DESC, id ASC, top `topN`. */
   def dsirWeights(
       df: DataFrame, id: Column, text: Column, isTarget: Column,
-      topN: Int, materialize: Boolean = true): DataFrame = {
+      topN: Int): DataFrame = {
     require(topN >= 1, "topN must be positive")
     val tf = df
       .select(id.cast("long").as("__id"),
@@ -1033,7 +1008,7 @@ object Ranking {
         explode(tokens(text)).as("term"))
       .groupBy(col("__id"), col("__t"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    withCounts(tf, materialize) { tfc =>
+    Materialize.over(tf) { tfc =>
       val vocab = tfc.groupBy(col("term")).agg(
         sum(when(col("__t"), col("tf")).otherwise(0L)).as("tt"),
         sum(col("tf")).as("tc"))

@@ -41,7 +41,7 @@ object PipelineQueries {
     * fails: two runs never share or inherit an index. `body`'s result
     * must no longer read the index (a pinned leg, or a frame over
     * pinned legs). */
-  private def withScratchDir[T](name: String)(body: String => T): T = {
+  private[graft] def withScratchDir[T](name: String)(body: String => T): T = {
     val root = Files.createTempDirectory(s"graft_${name}_")
     try body(root.resolve("index").toString)
     finally Using.resource(Files.walk(root))(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSes
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Similarity
+import graft.operators.{Materialize, Similarity}
 
 /** Streaming ANN screen — top-k nearest corpus vectors for every
   * arriving query embedding, probed against a durable IVF index: the
@@ -148,11 +148,6 @@ object StreamingAnn {
       // probe-list projection collected driver-side and the broadcast
       // join side), and caching inside the operator would leak one
       // cache entry per micro-batch.
-      batch.persist()
-      try probe(batch)
-      finally {
-        batch.unpersist()
-        ()
-      }
+      Materialize.persisting(batch)(probe)
     }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** Incremental near-dup flagging of a document stream against a static
   * reference corpus — the streaming form of the dedup family: every
@@ -46,11 +46,10 @@ object StreamingDedup {
       // Cache the batch rows once; the operator's shingle relation is
       // computed from them twice (banded + verify side) and caching
       // INSIDE the operator would leak one cache entry per micro-batch.
-      batch.persist()
-      try {
+      Materialize.persisting(batch) { rows =>
         Dedup.nearDupAgainstIndex(
-            batch, idCol, textCol, index, threshold, persistNewRel = false)
+            rows, idCol, textCol, index, threshold, persistNewRel = false)
           .write.mode(SaveMode.Append).parquet(outDir)
-      } finally batch.unpersist()
+      }
     }
 }

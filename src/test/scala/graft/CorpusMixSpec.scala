@@ -585,24 +585,17 @@ class CorpusMixSpec extends SparkSpec {
     }
   }
 
-  test("materialize=false yields identical results to the default path") {
-    // The lazy form is the same plan minus the persist/checkpoint
-    // discipline — outputs must be row-for-row identical for every
-    // operator that offers the flag.
-    val df = randomDocs.toDF("id", "text", "lang")
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(_.toSeq).toSet
-    assert(rows(Ranking.tfIdfTopTerms(df, col("id"), col("text"), 2)) ==
-      rows(Ranking.tfIdfTopTerms(df, col("id"), col("text"), 2, materialize = false)))
-    assert(rows(Ranking.bm25(df, col("id"), col("text"), Seq("cat", "dog"), 5)) ==
-      rows(Ranking.bm25(df, col("id"), col("text"), Seq("cat", "dog"), 5,
-        materialize = false)))
-    assert(rows(Ranking.unigramLogProb(df, col("id"), col("text"))) ==
-      rows(Ranking.unigramLogProb(df, col("id"), col("text"), materialize = false)))
-    assert(rows(Ranking.oovRate(df, col("id"), col("text"), 3)) ==
-      rows(Ranking.oovRate(df, col("id"), col("text"), 3, materialize = false)))
-    assert(rows(Ranking.klDivergence(df, col("lang"), col("text"))) ==
-      rows(Ranking.klDivergence(df, col("lang"), col("text"), materialize = false)))
+  test("trainHashedLogReg over all-null text throws and leaves no cache entry") {
+    // No document has a token event: training refuses, and the per-doc
+    // feature frame it persisted is released on the way out.
+    spark.sharedState.cacheManager.clearCache()
+    val df = Seq((1L, null: String, true), (2L, null: String, false))
+      .toDF("id", "text", "label")
+    val e = intercept[IllegalArgumentException](Ranking.trainHashedLogReg(
+      df, col("id"), col("text"), col("label"), nBuckets = 4, iters = 2, lr = 0.5))
+    assert(e.getMessage.contains("no documents with token events"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed training run left its feature frame cached")
   }
 
   // ---- bigram LM ----

@@ -468,6 +468,8 @@ class DedupSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")).count()
     Dedup.dedupCorpus(docs, col("id"), col("text"), 3, 0.5).count()
     Dedup.editDistancePairs(docs, col("id"), col("text"), maxDist = 4).count()
+    Dedup.editDistanceAgainstReference(docs.filter(col("id") > 2), col("id"), col("text"),
+      docs.filter(col("id") <= 2), col("id"), col("text"), maxDist = 4).count()
     val index = Dedup.corpusIndex(docs.filter(col("id") <= 2), col("id"), col("text"))
     Dedup.nearDupAgainstIndex(
       docs.filter(col("id") > 2), col("id"), col("text"), index, 0.5).count()
@@ -505,23 +507,26 @@ class DedupSpec extends SparkSpec {
     assert(bloom(101L)._2 <= 0.2, s"novel doc saturated: ${bloom(101L)}")
   }
 
-  test("dedup pair operators: materialize=false yields identical pairs") {
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox jumps over the lazy dog tonight"),
-      (3L, "a completely different document about spark caching"),
-      (4L, "a completely different document about spark caching discipline"))
-      .toDF("id", "text")
-    def pairs(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
-    assert(pairs(Dedup.ngramJaccardPairs(docs, col("id"), col("text"), 3, 0.5)) ==
-      pairs(Dedup.ngramJaccardPairs(docs, col("id"), col("text"), 3, 0.5,
-        materialize = false)))
-    assert(pairs(Dedup.minhashLshVerifiedPairs(docs, col("id"), col("text"), 3, 0.5)) ==
-      pairs(Dedup.minhashLshVerifiedPairs(docs, col("id"), col("text"), 3, 0.5,
-        materialize = false)))
-    assert(pairs(Dedup.containmentPairs(docs, col("id"), col("text"), 3, 0.5)) ==
-      pairs(Dedup.containmentPairs(docs, col("id"), col("text"), 3, 0.5,
-        materialize = false)))
+  test("Materialize.over returns build's rows, releases its frame, also when build throws") {
+    import graft.operators.Materialize
+    spark.sharedState.cacheManager.clearCache()
+    val frame = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+    var seen = org.apache.spark.storage.StorageLevel.NONE
+    val out = Materialize.over(frame) { f =>
+      seen = f.storageLevel
+      f.filter(col("id") >= 2)
+    }
+    assert(seen == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      "build must read the frame persisted at MEMORY_AND_DISK")
+    assert(out.collect().map(_.toSeq).toSet == Set(Seq(2L, "b"), Seq(3L, "c")))
+    assert(spark.sharedState.cacheManager.isEmpty, "over left its frame cached")
+    // A build that fails in its own eager job still releases the frame.
+    val boom = intercept[IllegalStateException](Materialize.over(frame) { f =>
+      f.count()
+      throw new IllegalStateException("build failed")
+    })
+    assert(boom.getMessage == "build failed")
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed build left its frame cached")
   }
 
   test("ranking operators release every internal persist (no session cache leak)") {
@@ -536,8 +541,37 @@ class DedupSpec extends SparkSpec {
     graft.operators.Ranking.unigramLogProb(docs, col("id"), col("text")).count()
     graft.operators.Ranking.oovRate(docs, col("id"), col("text"), 2).count()
     graft.operators.Ranking.klDivergence(docs, col("id") % 2, col("text")).count()
+    graft.operators.Ranking.invertedIndex(docs, col("id"), col("text"), 2).count()
+    graft.operators.Ranking.vocabEncode(docs, col("id"), col("text"), 3).count()
+    graft.operators.Ranking.bigramLogProb(docs, col("id"), col("text")).count()
+    graft.operators.Ranking.perplexityBuckets(
+      docs, col("id"), col("text"), lit("en")).count()
+    graft.operators.Ranking.dsirWeights(
+      docs, col("id"), col("text"), col("id") === 1, 2).count()
+    graft.operators.Ranking.hashedLinearScore(docs, col("id"), col("text"),
+      nBuckets = 8, seed = "s", bias = 0.0, threshold = 0.5).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "ranking operators leaked SQL cache entries into the session")
+  }
+
+  test("cluster and corpus-stats operators release every internal persist") {
+    import graft.operators.{Cluster, CorpusStats}
+    spark.sharedState.cacheManager.clearCache()
+    val emb = Seq((1L, Seq(0.0f, 1.0f)), (2L, Seq(0.0f, 0.9f)),
+        (3L, Seq(1.0f, 0.0f)), (4L, Seq(0.9f, 0.1f)))
+      .toDF("id", "v")
+    Cluster.lloydKMeans(emb, col("id"), col("v"), k = 2, iters = 2).count()
+    Cluster.semanticDedup(emb, col("id"), col("v"), k = 2, iters = 2,
+      threshold = 0.9).count()
+    val docs = Seq((1L, "en", "web", "spark hash join"),
+        (2L, "de", "books", "spark hash join"), (3L, "en", "web", "a b c d"))
+      .toDF("id", "lang", "source", "text")
+    CorpusStats.dataCard(docs, col("id"), col("lang"), col("source"),
+      length(col("text")), col("text")).count()
+    CorpusStats.approxPercentileContract(docs, col("lang"), col("id"),
+      Seq(0.5), accuracy = 100).count()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "cluster / corpus-stats operators leaked SQL cache entries into the session")
   }
 
   test("repeatedSpans: cross-doc shared run becomes one maximal span; intra-doc repeats don't flag") {

@@ -17,6 +17,16 @@ class PlanDisciplineSpec extends SparkSpec {
   private def planOf(name: String): String = planCache.getOrElseUpdate(name,
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString)
 
+  /** The plans `op` executes while it is built and collected. The
+    * curation operators pin their output ([[graft.operators.Materialize]]),
+    * so a returned frame's own plan ends in an RDD scan; the pin's
+    * captured execution is the plan the operator ran. */
+  private def executedPlans(op: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    val (_, plans) = ExecutedPlans(spark)(op.collect())
+    assert(plans.nonEmpty, "no executed plan captured")
+    plans
+  }
+
   /** The only queries allowed a BroadcastNestedLoopJoin, each with a
     * one-row (or documented-baseline) broadcast side:
     *   - q9/q10/q32/q33: broadcast-SCALAR stats frames (1-row aggregate
@@ -193,13 +203,12 @@ class PlanDisciplineSpec extends SparkSpec {
   }
 
   test("q111 inverted-index posting cap runs through GroupTopK") {
-    // The materialized query ends in an RDD scan; assert the LAZY form.
-    val lazyPlan = graft.operators.Ranking.invertedIndex(
-        graft.sources.Tables.documents(spark, sf),
-        col("doc_id"), col("text"), maxPostings = 10, materialize = false)
-      .queryExecution.executedPlan.toString
-    assert(lazyPlan.contains("TopKPerGroupPartial"), lazyPlan)
-    assert(lazyPlan.contains("TopKPerGroupFinal"), lazyPlan)
+    val plans = executedPlans(graft.operators.Ranking.invertedIndex(
+      graft.sources.Tables.documents(spark, sf),
+      col("doc_id"), col("text"), maxPostings = 10))
+    assert(plans.exists(p =>
+      p.contains("TopKPerGroupPartial") && p.contains("TopKPerGroupFinal")),
+      plans.mkString("\n"))
   }
 
   test("q140 hard negatives runs through GroupTopK; q139's rerank joins " +
@@ -250,59 +259,60 @@ class PlanDisciplineSpec extends SparkSpec {
   }
 
   test("q73 vocab selection is a top-V, not a global sort of the vocabulary") {
-    // The materialized query ends in an RDD scan (tokenize-once
-    // discipline checkpoints the output), so assert on the LAZY form —
-    // the identical plan the materialization executes.
-    val lazyPlan = graft.operators.Ranking.oovRate(
-        graft.sources.Tables.documents(spark, sf),
-        col("doc_id"), col("text"), vocabSize = 20, materialize = false)
-      .queryExecution.executedPlan.toString
-    assert(lazyPlan.contains("TakeOrderedAndProject"), lazyPlan)
+    val plans = executedPlans(graft.operators.Ranking.oovRate(
+      graft.sources.Tables.documents(spark, sf),
+      col("doc_id"), col("text"), vocabSize = 20))
+    assert(plans.exists(_.contains("TakeOrderedAndProject")), plans.mkString("\n"))
   }
 
   test("operator-internal plans (lazy forms) stay cartesian-free") {
-    // The materialize-by-default discipline (round 9) ends the PUBLIC
-    // plans of the dedup/ranking operators in an RDD scan, which would
-    // blind the whole-surface cartesian tripwire to their internals.
-    // The lazy forms are the identical plans the materialization
-    // executes — assert the discipline on those. (The capped
-    // containment path's broadcast(hotArr) crossJoin is a deliberate
-    // 1-row scalar broadcast, BroadcastNestedLoopJoin — not a
+    // The pin discipline (round 9) ends the PUBLIC plans of
+    // the dedup/ranking operators in an RDD scan, which would blind the
+    // whole-surface cartesian tripwire to their internals. Assert the
+    // discipline on the plans each operator executes instead. (The
+    // capped containment path's broadcast(hotArr) crossJoin is a
+    // deliberate 1-row scalar broadcast, BroadcastNestedLoopJoin — not a
     // CartesianProduct — so the assertion below still holds for it.)
     import graft.operators.{Dedup, Ranking}
     import graft.sources.Tables
     val docs = Tables.documents(spark, sf)
-    val lazyPlans = Seq(
-      "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(
-        docs, col("doc_id"), col("text"), 3, 0.8, materialize = false),
-      "ngramJaccardPairs capped" -> Dedup.ngramJaccardPairs(
-        docs, col("doc_id"), col("text"), 3, 0.8,
-        maxShingleFreq = Some(500), materialize = false),
-      "minhashLshPairs" -> Dedup.minhashLshPairs(
-        docs, col("doc_id"), col("text"), materialize = false),
-      "minhashLshVerifiedPairs" -> Dedup.minhashLshVerifiedPairs(
-        docs, col("doc_id"), col("text"), materialize = false),
-      "containmentPairs" -> Dedup.containmentPairs(
-        docs, col("doc_id"), col("text"), 3, 0.9, materialize = false),
-      "containmentPairsLsh" -> Dedup.containmentPairsLsh(
-        docs, col("doc_id"), col("text"), 3, 0.9, materialize = false),
-      "tfIdfTopTerms" -> Ranking.tfIdfTopTerms(
-        docs, col("doc_id"), col("text"), 3, materialize = false),
-      "bm25" -> Ranking.bm25(
-        docs, col("doc_id"), col("text"), Seq("spark"), 10, materialize = false),
-      "unigramLogProb" -> Ranking.unigramLogProb(
-        docs, col("doc_id"), col("text"), materialize = false),
-      "oovRate" -> Ranking.oovRate(
-        docs, col("doc_id"), col("text"), 20, materialize = false),
-      "klDivergence" -> Ranking.klDivergence(
-        docs, col("source"), col("text"), materialize = false),
-      "hashedLinearScore" -> Ranking.hashedLinearScore(
+    val operators = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(
+        docs, col("doc_id"), col("text"), 3, 0.8)),
+      "ngramJaccardPairs capped" -> (() => Dedup.ngramJaccardPairs(
+        docs, col("doc_id"), col("text"), 3, 0.8, maxShingleFreq = Some(500))),
+      "minhashLshPairs" -> (() => Dedup.minhashLshPairs(
+        docs, col("doc_id"), col("text"))),
+      "minhashLshVerifiedPairs" -> (() => Dedup.minhashLshVerifiedPairs(
+        docs, col("doc_id"), col("text"))),
+      "containmentPairs" -> (() => Dedup.containmentPairs(
+        docs, col("doc_id"), col("text"), 3, 0.9)),
+      "containmentPairsLsh" -> (() => Dedup.containmentPairsLsh(
+        docs, col("doc_id"), col("text"), 3, 0.9)),
+      "tfIdfTopTerms" -> (() => Ranking.tfIdfTopTerms(
+        docs, col("doc_id"), col("text"), 3)),
+      "bm25" -> (() => Ranking.bm25(
+        docs, col("doc_id"), col("text"), Seq("spark"), 10)),
+      "unigramLogProb" -> (() => Ranking.unigramLogProb(
+        docs, col("doc_id"), col("text"))),
+      "oovRate" -> (() => Ranking.oovRate(
+        docs, col("doc_id"), col("text"), 20)),
+      "klDivergence" -> (() => Ranking.klDivergence(
+        docs, col("source"), col("text"))),
+      "hashedLinearScore" -> (() => Ranking.hashedLinearScore(
         docs, col("doc_id"), col("text"), nBuckets = 8, seed = "s",
-        bias = 0.0, threshold = 0.5, materialize = false))
-    for ((name, df) <- lazyPlans) {
-      val plan = df.queryExecution.executedPlan.toString
+        bias = 0.0, threshold = 0.5)))
+    for ((name, op) <- operators; plan <- executedPlans(op()))
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian:\n$plan")
-    }
+  }
+
+  test("executed-plan capture sees a non-broadcast cross join as a CartesianProduct") {
+    // The operator-plan checks above stand on the capture: `executedPlans`
+    // fails a call that yields no plan, and a cartesian the operators
+    // must not plan has to read as the string the tripwire looks for.
+    val cross = executedPlans(spark.range(3).hint("shuffle_replicate_nl")
+      .crossJoin(spark.range(3).withColumnRenamed("id", "id2")))
+    assert(cross.exists(_.contains("CartesianProduct")), cross.mkString("\n"))
   }
 
   test("q74 joins centroids back by broadcast — the corpus is not shuffled") {
@@ -339,8 +349,8 @@ class PlanDisciplineSpec extends SparkSpec {
 
   test("q130 classifier scores through a broadcast weight join — the " +
     "feature frame is not sort-merged against the model") {
-    // The public q130 plan ends in the materialization's RDD scan;
-    // assert on the identical lazy form.
+    // The public q130 plan ends in the pin's RDD scan; assert on the
+    // lazy form, the plan StreamingScore runs per micro-batch.
     val plan = graft.operators.Ranking.hashedLinearScore(
         graft.sources.Tables.documents(spark, sf), col("doc_id"),
         col("text"), nBuckets = 8, seed = "s", bias = 0.0,
