@@ -1,13 +1,115 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Event-sequence analytics: ordered conversion funnels and retention
   * cohorts — the product-analytics counterpart of the corpus-side
   * reporting operators.
+  *
+  * Every operator is a composition of a few private steps, each written
+  * once:
+  *   - the daily-count series [[dailyCounts]] `(key, day, n)` of the
+  *     drift, trend and seasonality screens;
+  *   - the trailing-window join [[rollingDays]] of both rolling-actives
+  *     forms;
+  *   - the funnel report [[funnelReport]] (per-step count, union, rate
+  *     against step 1), with the per-step count passed in;
+  *   - the first-touch anchor [[firstTouch]] with its at-or-after filter;
+  *   - the integer power sums [[powerSums]] and co-moments [[coMoments]]
+  *     of the least-squares and correlation reports, over [[dbl]];
+  *   - the seconds summary [[secondsSummary]] (n, mean, p50, p90) of a
+  *     microsecond lag;
+  *   - the per-user event order [[userOrdered]] / [[ByUserTs]] of the
+  *     path and transition reports;
+  *   - the session key [[sessionKey]] over [[sessionize]]'s sequence.
   */
 object Funnel {
+
+  /** A count column as a double: the operand of every rate and moment. */
+  private def dbl(c: String): Column = col(c).cast("double")
+
+  /** The daily-count series `(keyName, day, n)`: events per key and
+    * calendar day. `day` maps the timestamp to its date (`to_date` and
+    * `cast("date")` agree on timestamps; each report keeps its own). */
+  private def dailyCounts(
+      events: DataFrame, key: Column, ts: Column, keyName: String = "key",
+      day: Column => Column = _.cast("date")): DataFrame =
+    events.select(key.as(keyName), day(ts).as("day"))
+      .groupBy(col(keyName), col("day")).agg(count(lit(1)).as("n"))
+
+  /** The funnel report over per-step frames (`frames(i)` holds step i's
+    * converted rows): (step, event_type, n_users, rate), n_users =
+    * `nUsers` over the frame, rate = n_users / step-1 n_users at 4 dp
+    * (null when step 1 is empty). */
+  private def funnelReport(
+      frames: Seq[DataFrame], steps: Seq[String], nUsers: Column): DataFrame = {
+    val counts = frames.zip(steps).zipWithIndex.map { case ((f, name), i) =>
+      f.agg(nUsers.as("n_users"))
+        .select(lit(i + 1).as("step"), lit(name).as("event_type"),
+          col("n_users"))
+    }.reduce(_ unionByName _)
+    val base = frames.head.agg(nUsers.as("__n1"))
+    counts.crossJoin(broadcast(base))
+      .select(col("step"), col("event_type"), col("n_users"),
+        when(col("__n1") > 0, round(dbl("n_users") / dbl("__n1"), 4))
+          .as("rate"))
+  }
+
+  /** The first-touch anchor of a two-step funnel over `ev` (`keys`,
+    * `__ts`, `__et`): per key, the earliest `fromType` event as `__t1`,
+    * and the `toType` events at or after it, with `__t1` beside them. */
+  private def firstTouch(
+      ev: DataFrame, keys: Seq[String], fromType: String,
+      toType: String): (DataFrame, DataFrame) = {
+    val anchors = ev.filter(col("__et") === fromType)
+      .groupBy(keys.map(col): _*).agg(min(col("__ts")).as("__t1"))
+    (anchors, ev.filter(col("__et") === toType).join(anchors, keys)
+      .filter(col("__ts") >= col("__t1")))
+  }
+
+  /** Exact integer power sums of (x, y) as aggregates: the pair count
+    * named `n`, then sx, sy, sxx, syy, sxy. */
+  private def powerSums(n: String, x: Column, y: Column): Seq[Column] =
+    Seq(count(lit(1)).as(n), sum(x).as("sx"), sum(y).as("sy"),
+      sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
+
+  /** Over [[powerSums]] columns, the one double formula both engines
+    * evaluate: (n·sxy − sx·sy, n·sxx − sx², n·syy − sy²). */
+  private def coMoments(n: String): (Column, Column, Column) =
+    (dbl(n) * dbl("sxy") - dbl("sx") * dbl("sy"),
+      dbl(n) * dbl("sxx") - dbl("sx") * dbl("sx"),
+      dbl(n) * dbl("syy") - dbl("sy") * dbl("sy"))
+
+  /** A microsecond lag column summarized in SECONDS at 4 dp: the count
+    * named `n`, then `mean_<name>_s` (the exact integer-micros sum
+    * divided once) and the interpolated `p50_<name>_s`, `p90_<name>_s`
+    * (at second scale the 4 dp grid is ~10⁶ ulps wide). */
+  private def secondsSummary(us: Column, n: String, name: String): Seq[Column] = {
+    val s = us / lit(1000000.0d)
+    Seq(count(lit(1)).as(n),
+      round(sum(us).cast("double") / count(lit(1)) / lit(1000000.0d), 4)
+        .as(s"mean_${name}_s"),
+      round(percentile(s, lit(0.5)), 4).as(s"p50_${name}_s"),
+      round(percentile(s, lit(0.9)), 4).as(s"p90_${name}_s"))
+  }
+
+  /** Events as (`__u`, `__ts`, `__tb`, `typeCol`), to be walked in
+    * per-user [[ByUserTs]] order. */
+  private def userOrdered(
+      events: DataFrame, user: Column, ts: Column, tieBreak: Column,
+      eventType: Column, typeCol: String = "__et"): DataFrame =
+    events.select(user.as("__u"), ts.as("__ts"), tieBreak.as("__tb"),
+      eventType.as(typeCol))
+
+  /** Per-user (ts, tie-break) order over [[userOrdered]] rows. */
+  private val ByUserTs: WindowSpec =
+    Window.partitionBy(col("__u")).orderBy(col("__ts").asc, col("__tb").asc)
+
+  /** The session key `user#seq` of a [[sessionize]]d event. */
+  private[graft] def sessionKey(user: Column, seq: Column): Column =
+    concat_ws("#", user, seq)
 
   /** Ordered conversion funnel over an arbitrary step sequence: a user
     * advances to step i only with an event AT OR AFTER their first
@@ -57,18 +159,7 @@ object Funnel {
           .filter(col("__ts") >= col("__prev") && withinGap)
           .groupBy(col("__u")).agg(min(col("__ts")).as("__t")))
     }
-    val counts = stepFrames.zip(steps).zipWithIndex.map {
-      case ((f, name), i) =>
-        f.agg(count(lit(1)).as("n_users"))
-          .select(lit(i + 1).as("step"), lit(name).as("event_type"),
-            col("n_users"))
-    }.reduce(_ unionByName _)
-    val base = stepFrames.head.agg(count(lit(1)).as("__n1"))
-    counts.crossJoin(broadcast(base))
-      .select(col("step"), col("event_type"), col("n_users"),
-        when(col("__n1") > 0,
-          round(col("n_users").cast("double") / col("__n1").cast("double"), 4))
-          .as("rate"))
+    funnelReport(stepFrames, steps, count(lit(1)))
   }
 
   /** ANY-TOUCH windowed funnel — the heavier operator
@@ -105,8 +196,7 @@ object Funnel {
     require(steps.nonEmpty, "steps must be non-empty")
     require(gapMicros > 0, "gapMicros must be positive")
     require(maxEventsPerUserType > 0, "maxEventsPerUserType must be positive")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__u"), col("__et"))
+    val w = Window.partitionBy(col("__u"), col("__et"))
       .orderBy(col("__ts").asc, col("__tb").asc)
     val capped = Materialize.pin(events
       .select(user.as("__u"), ts.as("__ts"), eventType.as("__et"),
@@ -136,17 +226,7 @@ object Funnel {
           "left_semi")
         .select(col("__u"), col("__ts")).distinct())
     }
-    val counts = frames.zip(steps).zipWithIndex.map { case ((f, name), i) =>
-      f.agg(countDistinct(col("__u")).as("n_users"))
-        .select(lit(i + 1).as("step"), lit(name).as("event_type"),
-          col("n_users"))
-    }.reduce(_ unionByName _)
-    val base = frames.head.agg(countDistinct(col("__u")).as("__n1"))
-    counts.crossJoin(broadcast(base))
-      .select(col("step"), col("event_type"), col("n_users"),
-        when(col("__n1") > 0,
-          round(col("n_users").cast("double") / col("__n1").cast("double"),
-            4)).as("rate"))
+    funnelReport(frames, steps, countDistinct(col("__u")))
   }
 
   /** Gap-based sessionization: append a per-user 1-based session
@@ -169,8 +249,7 @@ object Funnel {
       events: DataFrame, user: Column, ts: Column, gapMicros: Long,
       seqCol: String = "session_seq"): DataFrame = {
     require(gapMicros > 0, "gapMicros must be positive")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(user).orderBy(ts.asc)
+    val w = Window.partitionBy(user).orderBy(ts.asc)
     events
       .withColumn("__prev_ts", lag(ts, 1).over(w))
       .withColumn("__boundary",
@@ -178,9 +257,7 @@ object Funnel {
           unix_micros(ts) - unix_micros(col("__prev_ts")) > gapMicros,
           1).otherwise(0))
       .withColumn(seqCol, sum(col("__boundary")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, org.apache.spark.sql.expressions.Window
-          .currentRow)))
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("__prev_ts", "__boundary")
   }
 
@@ -201,13 +278,10 @@ object Funnel {
       eventType: Column, n: Int, k: Int): DataFrame = {
     require(n >= 2, "n must be >= 2")
     require(k >= 1, "k must be >= 1")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__u")).orderBy(col("__ts").asc, col("__tb").asc)
     val leadCols = (1 until n).map(i => s"__lead$i")
     val withLeads = (1 until n).foldLeft(
-      events.select(user.as("__u"), ts.as("__ts"), tieBreak.as("__tb"),
-        eventType.as("__et"))) {
-      (df, i) => df.withColumn(s"__lead$i", lead(col("__et"), i).over(w))
+      userOrdered(events, user, ts, tieBreak, eventType)) {
+      (df, i) => df.withColumn(s"__lead$i", lead(col("__et"), i).over(ByUserTs))
     }
     withLeads
       .filter(leadCols.map(col(_).isNotNull).reduce(_ && _))
@@ -230,11 +304,8 @@ object Funnel {
   def transitionMatrix(
       events: DataFrame, user: Column, ts: Column, tieBreak: Column,
       eventType: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__u")).orderBy(col("__ts").asc, col("__tb").asc)
-    val pairs = events.select(user.as("__u"), ts.as("__ts"),
-        tieBreak.as("__tb"), eventType.as("__et"))
-      .withColumn("__to", lead(col("__et"), 1).over(w))
+    val pairs = userOrdered(events, user, ts, tieBreak, eventType)
+      .withColumn("__to", lead(col("__et"), 1).over(ByUserTs))
       .filter(col("__to").isNotNull)
       .groupBy(col("__et").as("from_type"), col("__to").as("to_type"))
       .agg(count(lit(1)).as("n"))
@@ -242,8 +313,7 @@ object Funnel {
       .agg(sum(col("n")).as("__row_n"))
     pairs.join(broadcast(margins), Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
-        round(col("n").cast("double") / col("__row_n").cast("double"), 4)
-          .as("p"))
+        round(dbl("n") / dbl("__row_n"), 4).as("p"))
   }
 
   /** RFM profile: per user, recency (days from their last event to the
@@ -279,10 +349,7 @@ object Funnel {
     * emit rows. */
   def dailyAnomalies(events: DataFrame, ts: Column, eventType: Column,
       sigma: Double): DataFrame = {
-    val daily = events
-      .select(eventType.as("event_type"), to_date(ts).as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"))
+    val daily = dailyCounts(events, eventType, ts, "event_type", to_date(_))
     val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("__days"),
         round(sum(col("n")).cast("double") / count(lit(1)), 4).as("mean_n"),
@@ -339,7 +406,16 @@ object Funnel {
     * contract. Output: (end_day, active_users). */
   def rollingActives(
       events: DataFrame, user: Column, ts: Column,
-      windowDays: Int = 7): DataFrame = {
+      windowDays: Int = 7): DataFrame =
+    rollingDays(events, user, ts, windowDays)
+      .agg(countDistinct(col("__u")).as("active_users"))
+
+  /** The (day, user) dedup joined to every `windowDays` window ending on
+    * an observed day that covers it, grouped by `end_day`: the shared
+    * body of [[rollingActives]] and [[rollingActivesApprox]]. */
+  private def rollingDays(
+      events: DataFrame, user: Column, ts: Column,
+      windowDays: Int): RelationalGroupedDataset = {
     require(windowDays >= 1, "windowDays must be >= 1")
     val epoch = lit("1970-01-01")
     val du = events.select(to_date(ts).as("__day"), user.as("__u"))
@@ -353,7 +429,6 @@ object Funnel {
     RangeJoin.pointInInterval(du, col("__dn"), ends,
         col("__lo"), col("__hi"), bucketWidth = windowDays.toDouble)
       .groupBy(col("end_day"))
-      .agg(countDistinct(col("__u")).as("active_users"))
   }
 
   /** [[rollingActives]] with the HLL++ swap SHIPPED as a contract (the
@@ -377,21 +452,9 @@ object Funnel {
       events: DataFrame, user: Column, ts: Column,
       windowDays: Int = 7, rsd: Double = 0.05,
       sigmas: Double = 4.0, absSlack: Long = 8L): DataFrame = {
-    require(windowDays >= 1, "windowDays must be >= 1")
+    val byEnd = rollingDays(events, user, ts, windowDays)
     require(rsd > 0.0 && rsd < 0.4, "rsd must be in (0, 0.4)")
-    val epoch = lit("1970-01-01")
-    val du = events.select(to_date(ts).as("__day"), user.as("__u"))
-      .distinct()
-      .withColumn("__dn", datediff(col("__day"), epoch).cast("double"))
-    val ends = du.select(col("__day").as("end_day")).distinct()
-      .withColumn("__lo",
-        (datediff(col("end_day"), epoch) - (windowDays - 1)).cast("double"))
-      .withColumn("__hi",
-        (datediff(col("end_day"), epoch) + 1).cast("double"))
-    RangeJoin.pointInInterval(du, col("__dn"), ends,
-        col("__lo"), col("__hi"), bucketWidth = windowDays.toDouble)
-      .groupBy(col("end_day"))
-      .agg(countDistinct(col("__u")).as("active_users"),
+    byEnd.agg(countDistinct(col("__u")).as("active_users"),
         approx_count_distinct(col("__u"), rsd).as("__approx"))
       .select(col("end_day"), col("active_users"),
         (abs(col("__approx") - col("active_users")) <=
@@ -441,9 +504,7 @@ object Funnel {
   def cusumDrift(
       events: DataFrame, key: Column, ts: Column,
       kSigma: Double = 0.5, hSigma: Double = 3.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = events.select(key.as("key"), ts.cast("date").as("day"))
-      .groupBy(col("key"), col("day")).agg(count(lit(1)).as("n"))
+    val daily = dailyCounts(events, key, ts)
     val stats = daily.groupBy(col("key")).agg(
         round(sum(col("n")).cast("double") / count(lit(1)), 4).as("mu"),
         round(stddev_samp(col("n").cast("double")), 2).as("sigma"))
@@ -532,7 +593,7 @@ object Funnel {
     // sessionize window.
     val st = Materialize.pin(
       sessionize(events, user, ts, gapMicros, seqCol = "__seq")
-        .select(concat_ws("#", user, col("__seq")).as("__skey"),
+        .select(sessionKey(user, col("__seq")).as("__skey"),
           eventType.as("t"))
         .distinct())
     val totals = st.agg(countDistinct(col("__skey")).as("s_total"))
@@ -580,7 +641,6 @@ object Funnel {
   def changeIntervals(
       events: DataFrame, key: Column, ts: Column, value: Column,
       tieBreak: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val daily = events
       .select(key.as("key"), ts.cast("date").as("day"),
         struct(ts.as("ts"), tieBreak.as("tb")).as("__ord"),
@@ -624,10 +684,7 @@ object Funnel {
   def ewmaScreen(
       events: DataFrame, key: Column, ts: Column,
       decay: Double = 0.7, span: Int = 14, hSigma: Double = 3.0): DataFrame =
-    ewmaScreenDaily(
-      events.select(key.as("key"), ts.cast("date").as("day"))
-        .groupBy(col("key"), col("day")).agg(count(lit(1)).as("n")),
-      decay, span, hSigma)
+    ewmaScreenDaily(dailyCounts(events, key, ts), decay, span, hSigma)
 
   /** [[ewmaScreen]] on a PRE-AGGREGATED daily frame (key, day, n) —
     * the entry point the streaming drift watch shares with the batch
@@ -638,7 +695,6 @@ object Funnel {
       decay: Double = 0.7, span: Int = 14, hSigma: Double = 3.0): DataFrame = {
     require(decay > 0.0 && decay < 1.0, "decay must be in (0,1)")
     require(span >= 1, "span must be positive")
-    import org.apache.spark.sql.expressions.Window
     // __skey, not key: same renamed-self-join discipline as `hist`
     // below (a shared-view source defeats dataset-alias dedup).
     val stats = daily.groupBy(col("key").as("__skey"))
@@ -688,27 +744,18 @@ object Funnel {
     * partial), one row_number window and one final aggregate on the
     * |keys|·|days| daily frame. Nothing rescans events. */
   def dailyTrend(events: DataFrame, key: Column, ts: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = events.select(key.as("key"), ts.cast("date").as("day"))
-      .groupBy(col("key"), col("day")).agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("key")).orderBy(col("day").asc)
-    val s = daily
+    val sums = powerSums("n_days", col("x"), col("n")) ++
+      Seq(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
+    val s = dailyCounts(events, key, ts)
       .withColumn("x", row_number().over(w).cast("long"))
       .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("n")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("n") * col("n")).as("syy"),
-        sum(col("x") * col("n")).as("sxy"),
-        min(col("day")).as("first_day"), max(col("day")).as("last_day"))
+      .agg(sums.head, sums.tail: _*)
       .filter(col("n_days") >= 2)
-    def d(c: String): Column = col(c).cast("double")
-    val num  = d("n_days") * d("sxy") - d("sx") * d("sy")
-    val den  = d("n_days") * d("sxx") - d("sx") * d("sx")
-    val deny = d("n_days") * d("syy") - d("sy") * d("sy")
+    val (num, den, deny) = coMoments("n_days")
     s.select(col("key"), col("n_days"), col("first_day"), col("last_day"),
       round(num / den, 4).as("slope"),
-      round((d("sy") - (num / den) * d("sx")) / d("n_days"), 4)
+      round((dbl("sy") - (num / den) * dbl("sx")) / dbl("n_days"), 4)
         .as("intercept"),
       when(deny > 0, round(num * num / (den * deny), 4)).as("r2"))
   }
@@ -732,22 +779,15 @@ object Funnel {
       events: DataFrame, key: Column, ts: Column,
       lagDays: Int = 7): DataFrame = {
     require(lagDays >= 1, "lagDays must be positive")
-    val daily = events.select(key.as("key"), ts.cast("date").as("day"))
-      .groupBy(col("key"), col("day")).agg(count(lit(1)).as("n"))
+    val daily = dailyCounts(events, key, ts)
     val prev = daily.select(col("key"),
       date_add(col("day"), lagDays).as("day"), col("n").as("n_prev"))
+    val sums = powerSums("n_pairs", col("n"), col("n_prev"))
     val s = daily.join(prev, Seq("key", "day"))
       .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("n")).as("sx"), sum(col("n_prev")).as("sy"),
-        sum(col("n") * col("n")).as("sxx"),
-        sum(col("n_prev") * col("n_prev")).as("syy"),
-        sum(col("n") * col("n_prev")).as("sxy"))
+      .agg(sums.head, sums.tail: _*)
       .filter(col("n_pairs") >= 2)
-    def d(c: String): Column = col(c).cast("double")
-    val num  = d("n_pairs") * d("sxy") - d("sx") * d("sy")
-    val varx = d("n_pairs") * d("sxx") - d("sx") * d("sx")
-    val vary = d("n_pairs") * d("syy") - d("sy") * d("sy")
+    val (num, varx, vary) = coMoments("n_pairs")
     s.select(col("key"), col("n_pairs"),
       when(varx > 0 && vary > 0,
         round(num / sqrt(varx * vary), 4)).as("acf"))
@@ -772,23 +812,15 @@ object Funnel {
   def conversionLag(
       events: DataFrame, user: Column, ts: Column, eventType: Column,
       fromType: String, toType: String): DataFrame = {
-    val firstTouch = events.filter(eventType === fromType)
-      .groupBy(user.as("user_id")).agg(min(ts).as("t1"))
-    val conv = events.filter(eventType === toType)
-      .select(user.as("user_id"), ts.as("t2"))
-    val lagged = conv.join(firstTouch, Seq("user_id"))
-      .filter(col("t2") >= col("t1"))
-      .groupBy(col("user_id"))
-      .agg(min(col("t1")).as("t1"), min(col("t2")).as("t2"))
+    val (_, conv) = firstTouch(
+      events.select(user.as("__u"), ts.as("__ts"), eventType.as("__et")),
+      Seq("__u"), fromType, toType)
+    val lagged = conv.groupBy(col("__u"))
+      .agg(min(col("__t1")).as("t1"), min(col("__ts")).as("t2"))
       .select(col("t1").cast("date").as("day"),
         (unix_micros(col("t2")) - unix_micros(col("t1"))).as("lag_us"))
-    val lagS = col("lag_us") / lit(1000000.0d)
-    lagged.groupBy(col("day"))
-      .agg(count(lit(1)).as("n_users"),
-        round(sum(col("lag_us")).cast("double") / count(lit(1))
-          / lit(1000000.0d), 4).as("mean_lag_s"),
-        round(percentile(lagS, lit(0.5)), 4).as("p50_lag_s"),
-        round(percentile(lagS, lit(0.9)), 4).as("p90_lag_s"))
+    val summary = secondsSummary(col("lag_us"), "n_users", "lag")
+    lagged.groupBy(col("day")).agg(summary.head, summary.tail: _*)
   }
   /** Peak concurrent sessions — the sweep-line read on q45's sessions:
     * each session contributes a +1 boundary at its start and a −1 at
@@ -814,7 +846,7 @@ object Funnel {
     val sess = sessionize(events, user, ts, gapMicros, seqCol = "__seq")
       .groupBy(user.as("__u"), col("__seq"))
       .agg(min(ts).as("start_ts"), max(ts).as("end_ts"))
-      .withColumn("__skey", concat_ws("#", col("__u"), col("__seq")))
+      .withColumn("__skey", sessionKey(col("__u"), col("__seq")))
     val bounds = sess
       .select(col("start_ts").as("ts"), lit(1L).as("delta"), col("__skey"))
       .unionByName(sess.select(col("end_ts").as("ts"),
@@ -851,23 +883,18 @@ object Funnel {
       fromType: String, toType: String, zCrit: Double = 1.96): DataFrame = {
     val base = events.select(user.as("__u"), ts.as("__ts"),
       eventType.as("__et"), cohort.as("__c"))
-    val exposed = base.filter(col("__et") === fromType)
-      .groupBy(col("__c"), col("__u")).agg(min(col("__ts")).as("__t1"))
-    val converted = base.filter(col("__et") === toType)
-      .join(exposed, Seq("__c", "__u"))
-      .filter(col("__ts") >= col("__t1"))
-      .select(col("__c"), col("__u")).distinct()
+    val (exposed, atOrAfter) = firstTouch(base, Seq("__c", "__u"), fromType, toType)
+    val converted = atOrAfter.select(col("__c"), col("__u")).distinct()
     def one(df: DataFrame, c: String, as: String): DataFrame =
       df.filter(col("__c") === c).agg(count(lit(1)).as(as))
     val counts = one(exposed.select(col("__c")), cohortA, "n_a")
       .crossJoin(broadcast(one(converted, cohortA, "x_a")))
       .crossJoin(broadcast(one(exposed.select(col("__c")), cohortB, "n_b")))
       .crossJoin(broadcast(one(converted, cohortB, "x_b")))
-    def d(c: String): Column = col(c).cast("double")
-    val pa = d("x_a") / d("n_a")
-    val pb = d("x_b") / d("n_b")
-    val pp = (d("x_a") + d("x_b")) / (d("n_a") + d("n_b"))
-    val se = sqrt(pp * (lit(1.0d) - pp) * (lit(1.0d) / d("n_a") + lit(1.0d) / d("n_b")))
+    val pa = dbl("x_a") / dbl("n_a")
+    val pb = dbl("x_b") / dbl("n_b")
+    val pp = (dbl("x_a") + dbl("x_b")) / (dbl("n_a") + dbl("n_b"))
+    val se = sqrt(pp * (lit(1.0d) - pp) * (lit(1.0d) / dbl("n_a") + lit(1.0d) / dbl("n_b")))
     val z = round((pa - pb) / se, 4)
     counts.select(col("n_a"), col("x_a"),
       when(col("n_a") > 0, round(pa, 4)).as("rate_a"),
@@ -924,25 +951,16 @@ object Funnel {
   def transitionDwell(
       events: DataFrame, user: Column, ts: Column, eventType: Column,
       tieBreak: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("__u"))
-      .orderBy(col("__ts").asc, col("__tb").asc)
-    val paired = events
-      .select(user.as("__u"), ts.as("__ts"), tieBreak.as("__tb"),
-        eventType.as("next_type"))
-      .withColumn("prev_type", lag(col("next_type"), 1).over(w))
-      .withColumn("__prev_ts", lag(col("__ts"), 1).over(w))
+    val paired = userOrdered(events, user, ts, tieBreak, eventType, "next_type")
+      .withColumn("prev_type", lag(col("next_type"), 1).over(ByUserTs))
+      .withColumn("__prev_ts", lag(col("__ts"), 1).over(ByUserTs))
       .filter(col("prev_type").isNotNull)
       .select(col("prev_type"), col("next_type"),
         (unix_micros(col("__ts")) - unix_micros(col("__prev_ts")))
           .as("__dwell_us"))
-    val dwellS = col("__dwell_us") / lit(1000000.0d)
+    val summary = secondsSummary(col("__dwell_us"), "n", "dwell")
     paired.groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("__dwell_us")).cast("double") / count(lit(1))
-          / lit(1000000.0d), 4).as("mean_dwell_s"),
-        round(percentile(dwellS, lit(0.5)), 4).as("p50_dwell_s"),
-        round(percentile(dwellS, lit(0.9)), 4).as("p90_dwell_s"))
+      .agg(summary.head, summary.tail: _*)
   }
 
   /** Cohort-aligned LTV curve: cumulative conversion value per
@@ -963,7 +981,6 @@ object Funnel {
       events: DataFrame, user: Column, ts: Column, eventType: Column,
       value: Column, convType: String, maxDays: Int): DataFrame = {
     require(maxDays >= 0, "maxDays must be non-negative")
-    import org.apache.spark.sql.expressions.Window
     val first = events.groupBy(user.as("__u"))
       .agg(min(ts.cast("date")).as("__d0"))
     val nUsers = first.agg(count(lit(1)).as("__n_users"))
@@ -1139,13 +1156,10 @@ object Funnel {
       events: DataFrame, user: Column, ts: Column, eventType: Column,
       fromType: String, toType: String,
       segmentOfAnchor: Column => Column): DataFrame = {
-    val anchors = events.filter(eventType === fromType)
-      .groupBy(user.as("__u")).agg(min(ts).as("__t1"))
-    val converted = events.filter(eventType === toType)
-      .select(user.as("__u"), ts.as("__ts"))
-      .join(anchors, Seq("__u"))
-      .filter(col("__ts") >= col("__t1"))
-      .select(col("__u")).distinct()
+    val (anchors, atOrAfter) = firstTouch(
+      events.select(user.as("__u"), ts.as("__ts"), eventType.as("__et")),
+      Seq("__u"), fromType, toType)
+    val converted = atOrAfter.select(col("__u")).distinct()
       .withColumn("__conv", lit(1L))
     anchors
       .join(converted, Seq("__u"), "left")
@@ -1154,8 +1168,7 @@ object Funnel {
         coalesce(sum(col("__conv")), lit(0L)).as("n_converted"))
       .select(col("segment"), col("n_exposed"), col("n_converted"),
         when(col("n_exposed") > 0,
-          round(col("n_converted").cast("double")
-            / col("n_exposed").cast("double"), 4)).as("rate"))
+          round(dbl("n_converted") / dbl("n_exposed"), 4)).as("rate"))
   }
 
   /** Per-user behavioral-diversity histogram: each user's Shannon

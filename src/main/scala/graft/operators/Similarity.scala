@@ -523,11 +523,13 @@ object Similarity {
     * description live in an InheritableThreadLocal, so threads created
     * HERE inherit the caller's group (Bench's watchdog can still
     * cancel these jobs) where a pool's pre-created threads would not.
-    * First failure rethrown after all tasks settle — the completion-
+    * Results come back in task order; the first failure is rethrown
+    * after all tasks settle — the completion-
     * marker discipline already treats ANY interruption between
     * clear-marker and write-marker as a must-rebuild, so concurrent
     * data writes do not widen a crash window. */
-  private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
+  private[graft] def inParallel[T](tasks: (() => T)*): Seq[T] = {
+    val results = new Array[Any](tasks.size)
     val errs = new Array[Throwable](tasks.size)
     // The active session is a ThreadLocal some analysis-time conf
     // lookups read — propagate the caller's into each worker thread.
@@ -535,7 +537,7 @@ object Similarity {
     val threads = tasks.zipWithIndex.map { case (t, i) =>
       new Thread(() => try {
         active.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
-        t()
+        results(i) = t()
       } catch { case e: Throwable => errs(i) = e })
     }
     threads.foreach(_.start())
@@ -551,6 +553,7 @@ object Similarity {
       errs.foreach(o => if (o != null && !(o eq e)) e.addSuppressed(o))
       throw e
     }
+    results.toSeq.asInstanceOf[Seq[T]]
   }
 
   /** Durable form of the IVF index ([[Ivf]]) — write once, probe across
@@ -838,8 +841,9 @@ object Similarity {
   }
 
   /** Reload a [[writeLshIndex]]-persisted index: (nBits, bucketed scan).
-    * A [[lshTopKPruned]] probe's ball filter pushes down to the sorted
-    * flat layout's row-group stats. */
+    * An [[lshTopK]] probe whose Hamming ball is enumerable pushes its
+    * `bucket IN (ball)` filter down to the sorted flat layout's
+    * row-group stats. */
   def loadLshIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, DataFrame) =
@@ -854,10 +858,9 @@ object Similarity {
     PathIndex.append(Lsh, newVecs, id, vec, path)
 
   /** |ball(·, radius)| over nBits bits = Σ_{h≤radius} C(nBits, h),
-    * computed arithmetically (capped at `cap`) so [[lshTopKPruned]]'s
-    * guard fires BEFORE any enumeration — C(64, 8) is ~4.4 billion
-    * ids; materializing first would be the driver OOM the guard
-    * exists to prevent. */
+    * computed arithmetically (stopping once past `cap`) so [[lshTopK]]
+    * chooses its path BEFORE any enumeration — C(64, 8) is ~4.4
+    * billion ids. */
   private def hammingBallSize(nBits: Int, radius: Int, cap: Long): Long = {
     var total = 0L
     var c = 1L // C(nBits, 0)
@@ -878,48 +881,6 @@ object Similarity {
       (0 until nBits).combinations(h).map(
         _.foldLeft(center)((b, p) => b ^ (1L << p)))
     }
-
-  /** Multi-probe LSH top-k as PUSHED-DOWN PRUNING: [[lshTopK]]'s
-    * `bit_count(bucket ⊕ qbucket) ≤ h` filter cannot prune any scan
-    * (no storage layer evaluates bit_count over statistics), so the
-    * Hamming ball is enumerated driver-side (the query's own bucket is
-    * one bounded collect — the scalar-subquery class) and applied as a
-    * static `bucket IN (…)` filter: over a [[loadLshIndex]] scan —
-    * flat files sorted by bucket ([[PathIndex]]'s writer) — the predicate
-    * pushes down to the parquet row-group statistics, so only the
-    * ball's row groups are READ (plan-gated in `IndexLifecycleSpec`).
-    * Identical result set by construction — `bucket ∈
-    * ball(qbucket, h)` ⇔ `hamming(bucket, qbucket) ≤ h` — gated
-    * bit-equal against the filter form in `IndexLifecycleSpec`.
-    * `maxProbeBuckets` bounds the enumeration (ball size grows
-    * combinatorially with h); past it, use [[lshTopK]]'s scan+filter
-    * form — at that radius most row groups are probed anyway. */
-  def lshTopKPruned(
-      bucketed: DataFrame, query: DataFrame, k: Int, nBits: Int,
-      probeHamming: Int, maxProbeBuckets: Int = 4096): DataFrame = {
-    val qb = query.withColumn("qbucket",
-      VectorFunctions.hyperplaneBucket(col("qv"), nBits))
-    // Single-query contract, like [[lshTopK]] (whose un-keyed top-k is
-    // only meaningful for one query) — enforced here because the ball
-    // is enumerated from ONE collected bucket; a silent .head on a
-    // multi-row frame would prune to the first row's ball and drop the
-    // others' candidates.
-    val qbuckets = qb.select(col("qbucket")).collect()
-    require(qbuckets.length == 1,
-      s"lshTopKPruned probes ONE query vector (got ${qbuckets.length} " +
-        "rows) — loop per query or use ivfTopKBatch-style batching")
-    val center = qbuckets.head.getLong(0)
-    // Size-check ARITHMETICALLY before enumerating: the guard must be
-    // able to reject a ball it could never afford to materialize.
-    val ballSize = hammingBallSize(nBits, probeHamming, maxProbeBuckets.toLong)
-    require(ballSize <= maxProbeBuckets,
-      s"Hamming ball has >= $ballSize buckets > maxProbeBuckets " +
-        s"$maxProbeBuckets — use lshTopK's scan+filter form at this radius")
-    val ball = hammingBall(center, nBits, probeHamming)
-    topKBySim(bucketed.filter(col("bucket").isin(ball: _*))
-      .crossJoin(broadcast(qb))
-      .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4)), k)
-  }
 
   /** Batch IVF ANN top-k — the MANY-queries probe path. [[ivfTopK]]
     * scores centroids on the driver and runs one job per query vector;
@@ -1524,16 +1485,42 @@ object Similarity {
       .withColumn("sim", cosine4(qv = qv, qnrm = norm(qv))), k)
   }
 
-  /** ANN top-k via hyperplane LSH with multi-probe: scan only corpus rows
-    * whose bucket is within `probeHamming` bits of the query's bucket.
-    * Approximate — recall < 1; the scale path when the corpus is huge and
-    * queries are many. Output: (id, sim). */
+  /** The largest Hamming ball [[lshTopK]] enumerates into a pushed-down
+    * `bucket IN (…)` filter; past it the probe scans. */
+  private val MaxBallBuckets = 4096L
+
+  /** ANN top-k via hyperplane LSH with multi-probe: only corpus rows
+    * whose bucket is within `probeHamming` bits of the query's bucket
+    * are scored. Approximate — recall < 1; the scale path when the
+    * corpus is huge and queries are many. Output: (id, sim).
+    *
+    * The path is chosen from the parameters alone. When the Hamming
+    * ball holds at most 4096 buckets ([[hammingBallSize]] of `nBits`
+    * and `probeHamming`), the query's bucket is collected (one bounded
+    * collect — the scalar-subquery class), the ball is enumerated on the
+    * driver and applied as a static `bucket IN (…)` filter: over a
+    * [[loadLshIndex]] scan — flat files sorted by bucket
+    * ([[PathIndex]]'s writer) — it pushes down to the parquet row-group
+    * statistics, so only the ball's row groups are read. Past that size
+    * the probe is the scan alone, with no collect: at that radius most
+    * row groups are probed anyway. Both paths keep the
+    * `bit_count(bucket ⊕ qbucket) ≤ h` filter, so they return the same
+    * rows by construction (`bucket ∈ ball(qbucket, h)` ⇔
+    * `hamming(bucket, qbucket) ≤ h`), for any number of query rows —
+    * gated bit-equal against an inline filter on each side of the cap
+    * in `IndexLifecycleSpec`. */
   def lshTopK(
       bucketed: DataFrame, query: DataFrame, k: Int,
       nBits: Int, probeHamming: Int = 1): DataFrame = {
     val qb = query.withColumn("qbucket",
       VectorFunctions.hyperplaneBucket(col("qv"), nBits))
-    topKBySim(bucketed.crossJoin(broadcast(qb))
+    val cands =
+      if (hammingBallSize(nBits, probeHamming, MaxBallBuckets) > MaxBallBuckets) bucketed
+      else bucketed.filter(col("bucket").isin(
+        qb.select(col("qbucket")).where(col("qbucket").isNotNull).collect()
+          .map(_.getLong(0)).distinct
+          .flatMap(hammingBall(_, nBits, probeHamming)).distinct.toSeq: _*))
+    topKBySim(cands.crossJoin(broadcast(qb))
       .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming)
       .withColumn("sim", round(VectorFunctions.cosine(col("v"), col("qv")), 4)), k)
   }

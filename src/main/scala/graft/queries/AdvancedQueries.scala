@@ -355,7 +355,7 @@ object AdvancedQueries {
         Tables.events(spark, dir), col("user_id"), col("ts"),
         gapMicros = 30L * 60L * 1000000L, seqCol = "__seq")
       .withColumn("__skey",
-        concat_ws("#", col("user_id"), col("__seq")))
+        graft.operators.Funnel.sessionKey(col("user_id"), col("__seq")))
     graft.operators.Funnel.conversionFunnel(tagged, col("__skey"),
         col("ts"), col("event_type"), Seq("view", "click", "purchase"))
       .withColumnRenamed("n_users", "n_sessions")

@@ -65,13 +65,8 @@ object PipelineQueries {
     * unchanged — the threads only overlap the jobs
     * ([[Similarity.inParallel]] keeps the caller's job group, so the
     * bench watchdog still cancels these). */
-  private def pinLegs(dfs: DataFrame*): Seq[DataFrame] = {
-    val out = new Array[DataFrame](dfs.size)
-    Similarity.inParallel(dfs.zipWithIndex.map { case (df, i) =>
-      () => out(i) = Materialize.pin(df)
-    }: _*)
-    out.toSeq
-  }
+  private def pinLegs(dfs: DataFrame*): Seq[DataFrame] =
+    Similarity.inParallel(dfs.map(df => () => Materialize.pin(df)): _*)
 
   /** The recall verdict of the ANN queries: `n_exact`, whether the full
     * leg reproduces the exact one on `fullOn` (column `fullExact`), and
@@ -111,13 +106,9 @@ object PipelineQueries {
       build: String => Unit, exact: DataFrame, side: => A)(
       probes: (String, A) => (DataFrame, DataFrame)): (DataFrame, DataFrame, DataFrame) =
     withScratchDir(name) { path =>
-      var exactP: DataFrame = null
-      var a: Option[A] = None
-      Similarity.inParallel(() => build(path), () => {
-        a = Some(side)
-        exactP = pinLeg(exact)
-      })
-      val (full, partial) = probes(path, a.get)
+      val (a, exactP) = Similarity.inParallel(
+        () => { build(path); None }, () => Some((side, pinLeg(exact)))).flatten.head
+      val (full, partial) = probes(path, a)
       val Seq(fullP, partialP) = pinLegs(full, partial)
       (exactP, fullP, partialP)
     }
@@ -1437,9 +1428,9 @@ object PipelineQueries {
     * contract: probing the FULL Hamming ball must reproduce exact
     * brute-force top-10 over the union (every vector is in some
     * bucket — the append is provably complete), and a Hamming-2
-    * multi-probe through [[Similarity.lshTopKPruned]] — the pruned
-    * form: its 37-bucket ball (of 256) pushes down to the files'
-    * row-group statistics on `bucket` — must keep recall ≥ 0.3
+    * multi-probe through [[Similarity.lshTopK]] — its 37-bucket ball
+    * (of 256) is small enough to enumerate, so it pushes down to the
+    * files' row-group statistics on `bucket` — must keep recall ≥ 0.3
     * (q79's floor at the mid-recall regime: testdata neighbors sit at
     * ~2.7 expected bit flips of 8, so Hamming-2 is the honest
     * mid-recall ball, not the recall≈1 regime). */
@@ -1453,7 +1444,7 @@ object PipelineQueries {
       }, _ => ()) { (fresh, path, _, q, _) =>
       val (nb, loaded) = Similarity.loadLshIndex(fresh, path)
       (Similarity.lshTopK(loaded, q, k = 10, nBits = nb, probeHamming = nb),
-        Similarity.lshTopKPruned(loaded, q, k = 10, nBits = nb, probeHamming = 2))
+        Similarity.lshTopK(loaded, q, k = 10, nBits = nb, probeHamming = 2))
     }
     recallVerdict(exactP, fullP, partialP, "full_probe_exact", floor = 0.3)
   }

@@ -32,61 +32,58 @@ object Ingest {
     * rewrites the flat parquet partitioned by `o_year` so year predicates
     * become partition PRUNING (directories never opened) instead of scans
     * — the layout a date-partitioned fact table has at cluster scale.
-    * Keyed by source dir so repeated query builds in one session (bench
-    * reruns, Verify) land exactly once; the landing is a derived copy, so
-    * same-JVM reuse cannot go stale against its own source read.
-    *
-    * The landing root defaults to the driver's temp dir — correct for
-    * local mode (this sandbox) only. On a cluster set `graft.landing.dir`
-    * to a SHARED filesystem path (HDFS/S3); a driver-local `file://` path
-    * there would scatter partitions across executor disks. Landings are
-    * not auto-deleted: they are the point (a reusable layout), and the
-    * per-JVM cache reuses rather than re-writes them. */
-  private val landings = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * Path and cache discipline: [[landed]]. */
   def ordersByYearLanding(spark: SparkSession, dir: String): String =
-    landings.computeIfAbsent(dir, _ => {
-      // The path carries a sanitized source-dir component: the cache is
-      // keyed per source dir, so the landing location must be too — a
-      // shared fixed path would let one dataset's landing silently serve
-      // (or clobber) another's.
-      val path = spark.conf.getOption("graft.landing.dir") match {
-        case Some(root) =>
-          val tag = dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-          s"${root.stripSuffix("/")}/orders_by_year_$tag"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft-orders-by-year-").toString
-      }
+    landed(spark, dir, "orders_by_year") { path =>
       Tables.orders(spark, dir)
         .withColumn("o_year", year(col("o_orderdate")))
         .repartition(col("o_year"))
         .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(path)
-      path
-    })
+    }
 
   /** Once-per-JVM source-partitioned landing of the `documents` corpus:
     * every real corpus query slices on `source` (held-out vs web-crawl,
     * per-source mixing rates), so at 100 TB the corpus lives partitioned
     * by it — a `source = 'src0'` probe opens ONE directory instead of
-    * scanning the corpus. Same cache/path discipline as
-    * [[ordersByYearLanding]] (keyed per source dir; landing root from
-    * `graft.landing.dir` on a cluster, driver temp dir in local mode).
-    * `source` has bounded cardinality by construction (it names corpora,
-    * not documents), so the layout cannot degenerate into per-row
-    * directories. */
+    * scanning the corpus. `source` has bounded cardinality by
+    * construction (it names corpora, not documents), so the layout cannot
+    * degenerate into per-row directories. Path and cache discipline:
+    * [[landed]]. */
   def documentsBySourceLanding(spark: SparkSession, dir: String): String =
-    landings.computeIfAbsent(s"documents#$dir", _ => {
-      val path = spark.conf.getOption("graft.landing.dir") match {
-        case Some(root) =>
-          val tag = dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-          s"${root.stripSuffix("/")}/documents_by_source_$tag"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft-documents-by-source-").toString
-      }
+    landed(spark, dir, "documents_by_source") { path =>
       Tables.documents(spark, dir)
         .repartition(col("source"))
         .write.mode(SaveMode.Overwrite).partitionBy("source").parquet(path)
-      path
-    })
+    }
+
+  /** The landing of source dir `dir` as `<root>/<kind>_<tag>`, `tag` the
+    * sanitized source dir (a shared fixed path would let one dataset's
+    * landing serve, or clobber, another's). `write` lands it once per
+    * JVM: later query builds (bench reruns, Verify) reuse it, and a
+    * derived copy cannot go stale against its own source read.
+    *
+    * The root is `graft.landing.dir` when set: on a cluster, a SHARED
+    * filesystem path (HDFS/S3) — a driver-local path there would scatter
+    * partitions across executor disks — and those landings are kept, as
+    * a reusable layout. Unset (local mode), the root is [[tempRoot]]:
+    * one directory per JVM, deleted when the JVM exits. */
+  private def landed(spark: SparkSession, dir: String, kind: String)(
+      write: String => Unit): String = {
+    val root = spark.conf.getOption("graft.landing.dir")
+      .fold(tempRoot)(_.stripSuffix("/"))
+    val tag = dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
+    landings.computeIfAbsent(s"$root/${kind}_$tag", path => { write(path); path })
+  }
+
+  private val landings = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The per-JVM root of the landings written without
+    * `graft.landing.dir`, removed by a shutdown hook. */
+  private[sources] lazy val tempRoot: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft-landings-").toFile
+    sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(root))
+    root.toString
+  }
 
   /** Bucketed layout for co-located joins (§4.3): both sides of a
     * frequently joined pair written bucketed+sorted on the join key join

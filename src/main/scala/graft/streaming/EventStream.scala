@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -14,8 +14,48 @@ import org.apache.spark.sql.types.StructType
   *
   * State is bounded by construction: watermarks age out window state;
   * session state carries one small struct per active key.
+  *
+  * The keyed-state operators share a few private steps, each written
+  * once:
+  *   - the per-user state wrapper [[perUser]] (`groupByKey(user_id)` +
+  *     `flatMapGroupsWithState`, Append, no timeout);
+  *   - the microsecond clock [[micros]] / [[toTs]] and the UTC day clock
+  *     [[epochDay]] / [[toDate]] ([[sessionize]] alone keeps
+  *     `getTime` milliseconds, its declared grain);
+  *   - the equal-timestamp anchor relaxation [[relaxAt]] and the funnel
+  *     depth [[depth]] over step anchors.
   */
 object EventStream {
+
+  /** Keyed custom state per user: `f` folds each user's micro-batch rows
+    * into their state and emits; Append output, no wall-clock timeouts
+    * (deterministic replay). */
+  private def perUser[S: Encoder, U: Encoder](events: Dataset[Event])(
+      f: (Long, Iterator[Event], GroupState[S]) => Iterator[U])(
+      implicit spark: SparkSession): Dataset[U] = {
+    import spark.implicits._
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState[S, U](OutputMode.Append, GroupStateTimeout.NoTimeout)(f)
+  }
+
+  /** Full microsecond precision: `getTime` is millis-truncated and the
+    * residual micros live in `getNanos`. */
+  private def micros(ts: Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+
+  /** The inverse of [[micros]]. */
+  private def toTs(us: Long): Timestamp = {
+    val t = new Timestamp(us / 1000000L * 1000L)
+    t.setNanos((us % 1000000L).toInt * 1000)
+    t
+  }
+
+  /** Epoch day (UTC, the session's batch `to_date` zone). */
+  private def epochDay(ts: Timestamp): Long = Math.floorDiv(ts.getTime, 86400000L)
+
+  /** The inverse of [[epochDay]]. */
+  private def toDate(day: Long): java.sql.Date =
+    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
 
   /** Watermarked tumbling-window aggregation per event type:
     * (window, event_type) → count + value sum. Late events beyond
@@ -51,30 +91,27 @@ object EventStream {
   def sessionize(events: Dataset[Event], gapMs: Long)
       (implicit spark: SparkSession): Dataset[UserSession] = {
     import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, UserSession](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          val evs = rows.toSeq.sortBy(_.ts.getTime)
-          var cur = state.getOption
-          val closed = Seq.newBuilder[UserSession]
-          evs.foreach { ev =>
-            val t = ev.ts.getTime
-            cur match {
-              case Some(s) if t - s.last > gapMs =>
-                closed += UserSession(userId, new Timestamp(s.start),
-                  new Timestamp(s.last), s.nEvents, s.total)
-                cur = Some(SessionState(t, t, 1L, ev.value))
-              case Some(s) =>
-                cur = Some(SessionState(s.start, math.max(s.last, t),
-                  s.nEvents + 1, s.total + ev.value))
-              case None =>
-                cur = Some(SessionState(t, t, 1L, ev.value))
-            }
-          }
-          cur.foreach(state.update)
-          closed.result().iterator
+    perUser[SessionState, UserSession](events) { (userId, rows, state) =>
+      val evs = rows.toSeq.sortBy(_.ts.getTime)
+      var cur = state.getOption
+      val closed = Seq.newBuilder[UserSession]
+      evs.foreach { ev =>
+        val t = ev.ts.getTime
+        cur match {
+          case Some(s) if t - s.last > gapMs =>
+            closed += UserSession(userId, new Timestamp(s.start),
+              new Timestamp(s.last), s.nEvents, s.total)
+            cur = Some(SessionState(t, t, 1L, ev.value))
+          case Some(s) =>
+            cur = Some(SessionState(s.start, math.max(s.last, t),
+              s.nEvents + 1, s.total + ev.value))
+          case None =>
+            cur = Some(SessionState(t, t, 1L, ev.value))
+        }
       }
+      cur.foreach(state.update)
+      closed.result().iterator
+    }
   }
 
   /** Per-user funnel progress: step anchors as epoch-micros, unreached
@@ -86,6 +123,32 @@ object EventStream {
   case class FunnelUpdate(user_id: Long, step_reached: Int,
       anchor_ts: Timestamp)
   private val FunnelUnset = Long.MaxValue
+
+  /** Relax step `anchors` at one instant `t` to fixpoint over the step
+    * indexes seen at `t`: step i anchors at `t` when step i−1 is
+    * anchored at or before it, so a same-instant chain lands whatever
+    * its arrival order. */
+  private def relaxAt(anchors: Array[Long], t: Long, stepsAtT: Iterable[Int]): Unit = {
+    var changed = true
+    while (changed) {
+      changed = false
+      stepsAtT.foreach { i =>
+        val qualifies = i == 0 ||
+          (anchors(i - 1) != FunnelUnset && t >= anchors(i - 1))
+        if (qualifies && t < anchors(i)) {
+          anchors(i) = t; changed = true
+        }
+      }
+    }
+  }
+
+  /** Steps reached: anchors are set as a contiguous prefix, so the
+    * first unset index. */
+  private def depth(anchors: Seq[Long]): Int =
+    anchors.indexWhere(_ == FunnelUnset) match {
+      case -1 => anchors.length
+      case i => i
+    }
 
   /** Streaming conversion funnel — [[graft.operators.Funnel
     * .conversionFunnel]]'s semantics carried across micro-batches with
@@ -112,53 +175,21 @@ object EventStream {
     require(steps.nonEmpty, "steps must be non-empty")
     val stepIdx = steps.zipWithIndex.toMap
     val k = steps.length
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          val anchors = state.getOption.map(_.anchors.toArray)
-            .getOrElse(Array.fill(k)(FunnelUnset))
-          val before = anchors.indexWhere(_ == FunnelUnset) match {
-            case -1 => k
-            case i => i
-          }
-          // full microsecond precision: getTime is millis-truncated and
-          // the residual micros live in getNanos
-          def micros(ts: Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          val relevant = rows.filter(e => stepIdx.contains(e.event_type))
-            .map(e => (micros(e.ts), stepIdx(e.event_type)))
-            .toSeq.sorted
-          // group equal timestamps and relax to fixpoint so a view and
-          // its same-instant click both land regardless of order
-          relevant.groupBy(_._1).toSeq.sortBy(_._1).foreach {
-            case (t, group) =>
-              var changed = true
-              while (changed) {
-                changed = false
-                group.foreach { case (_, i) =>
-                  val qualifies =
-                    i == 0 || (anchors(i - 1) != FunnelUnset &&
-                      t >= anchors(i - 1))
-                  if (qualifies && t < anchors(i)) {
-                    anchors(i) = t; changed = true
-                  }
-                }
-              }
-          }
-          state.update(FunnelState(anchors.toSeq))
-          val after = anchors.indexWhere(_ == FunnelUnset) match {
-            case -1 => k
-            case i => i
-          }
-          def toTs(us: Long): Timestamp = {
-            val t = new Timestamp(us / 1000000L * 1000L)
-            t.setNanos((us % 1000000L).toInt * 1000)
-            t
-          }
-          ((before + 1) to after).iterator.map(s =>
-            FunnelUpdate(userId, s, toTs(anchors(s - 1))))
+    perUser[FunnelState, FunnelUpdate](events) { (userId, rows, state) =>
+      val anchors = state.getOption.map(_.anchors.toArray)
+        .getOrElse(Array.fill(k)(FunnelUnset))
+      val before = depth(anchors.toSeq)
+      val relevant = rows.filter(e => stepIdx.contains(e.event_type))
+        .map(e => (micros(e.ts), stepIdx(e.event_type)))
+        .toSeq.sorted
+      relevant.groupBy(_._1).toSeq.sortBy(_._1).foreach {
+        case (t, group) => relaxAt(anchors, t, group.map(_._2))
       }
+      state.update(FunnelState(anchors.toSeq))
+      val after = depth(anchors.toSeq)
+      ((before + 1) to after).iterator.map(s =>
+        FunnelUpdate(userId, s, toTs(anchors(s - 1))))
+    }
   }
 
   /** Per-user retention state: the cohort day (epoch days, UTC — the
@@ -193,42 +224,34 @@ object EventStream {
     import spark.implicits._
     require(horizonDays > 0, "horizonDays must be positive")
     val words = (horizonDays + 63) / 64
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RetentionState, RetentionVisit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event],
-            state: GroupState[RetentionState]) =>
-          def epochDay(ts: Timestamp): Long =
-            Math.floorDiv(ts.getTime, 86400000L)
-          def toDate(day: Long): java.sql.Date =
-            java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
-          val days = rows.map(e => epochDay(e.ts)).toSeq.distinct.sorted
-          val out = Seq.newBuilder[RetentionVisit]
-          if (days.nonEmpty) {
-            var st = state.getOption.getOrElse {
-              RetentionState(days.head, Seq.fill(words)(0L))
+    perUser[RetentionState, RetentionVisit](events) { (userId, rows, state) =>
+      val days = rows.map(e => epochDay(e.ts)).toSeq.distinct.sorted
+      val out = Seq.newBuilder[RetentionVisit]
+      if (days.nonEmpty) {
+        var st = state.getOption.getOrElse {
+          RetentionState(days.head, Seq.fill(words)(0L))
+        }
+        val seen = st.seen.toArray
+        days.foreach { d =>
+          val off = d - st.cohortDay
+          if (off < 0) {
+            // late pre-cohort visit: visible negative offset,
+            // cohort stays anchored (documented contract)
+            out += RetentionVisit(userId, toDate(st.cohortDay), off.toInt)
+          } else if (off < horizonDays) {
+            val w = (off / 64).toInt
+            val bit = 1L << (off % 64)
+            if ((seen(w) & bit) == 0L) {
+              seen(w) |= bit
+              out += RetentionVisit(userId, toDate(st.cohortDay),
+                off.toInt)
             }
-            val seen = st.seen.toArray
-            days.foreach { d =>
-              val off = d - st.cohortDay
-              if (off < 0) {
-                // late pre-cohort visit: visible negative offset,
-                // cohort stays anchored (documented contract)
-                out += RetentionVisit(userId, toDate(st.cohortDay), off.toInt)
-              } else if (off < horizonDays) {
-                val w = (off / 64).toInt
-                val bit = 1L << (off % 64)
-                if ((seen(w) & bit) == 0L) {
-                  seen(w) |= bit
-                  out += RetentionVisit(userId, toDate(st.cohortDay),
-                    off.toInt)
-                }
-              } // off >= horizon: outside the report's declared scope
-            }
-            state.update(RetentionState(st.cohortDay, seen.toSeq))
-          }
-          out.result().iterator
+          } // off >= horizon: outside the report's declared scope
+        }
+        state.update(RetentionState(st.cohortDay, seen.toSeq))
       }
+      out.result().iterator
+    }
   }
 
   /** Per-user rolling-actives state: the user's active days within
@@ -262,35 +285,27 @@ object EventStream {
       (implicit spark: SparkSession): Dataset[ActiveDay] = {
     import spark.implicits._
     require(windowDays > 0, "windowDays must be positive")
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[ActiveDaysState, ActiveDay](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event],
-            state: GroupState[ActiveDaysState]) =>
-          def epochDay(ts: Timestamp): Long =
-            Math.floorDiv(ts.getTime, 86400000L)
-          def toDate(day: Long): java.sql.Date =
-            java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
-          val days = rows.map(e => epochDay(e.ts)).toSeq.distinct.sorted
-          val out = Seq.newBuilder[ActiveDay]
-          if (days.nonEmpty) {
-            var seen = state.getOption.map(_.days.toSet)
-              .getOrElse(Set.empty[Long])
-            var maxDay =
-              if (seen.isEmpty) Long.MinValue else seen.max
-            days.foreach { d =>
-              if (!seen.contains(d) &&
-                  (maxDay == Long.MinValue || d > maxDay - windowDays)) {
-                seen += d
-                if (d > maxDay) maxDay = d
-                out += ActiveDay(userId, toDate(d))
-              } // seen, or beyond the window behind maxDay: no emission
-            }
-            seen = seen.filter(_ > maxDay - windowDays)
-            state.update(ActiveDaysState(seen.toSeq.sorted))
-          }
-          out.result().iterator
+    perUser[ActiveDaysState, ActiveDay](events) { (userId, rows, state) =>
+      val days = rows.map(e => epochDay(e.ts)).toSeq.distinct.sorted
+      val out = Seq.newBuilder[ActiveDay]
+      if (days.nonEmpty) {
+        var seen = state.getOption.map(_.days.toSet)
+          .getOrElse(Set.empty[Long])
+        var maxDay =
+          if (seen.isEmpty) Long.MinValue else seen.max
+        days.foreach { d =>
+          if (!seen.contains(d) &&
+              (maxDay == Long.MinValue || d > maxDay - windowDays)) {
+            seen += d
+            if (d > maxDay) maxDay = d
+            out += ActiveDay(userId, toDate(d))
+          } // seen, or beyond the window behind maxDay: no emission
+        }
+        seen = seen.filter(_ > maxDay - windowDays)
+        state.update(ActiveDaysState(seen.toSeq.sorted))
       }
+      out.result().iterator
+    }
   }
 
   /** Per-user session-funnel state: the open session's bounds, event
@@ -337,63 +352,36 @@ object EventStream {
     require(steps.nonEmpty, "steps must be non-empty")
     val stepIdx = steps.zipWithIndex.toMap
     val k = steps.length
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionFunnelState, SessionFunnel](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event],
-            state: GroupState[SessionFunnelState]) =>
-          def micros(ts: Timestamp): Long =
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          def toTs(us: Long): Timestamp = {
-            val t = new Timestamp(us / 1000000L * 1000L)
-            t.setNanos((us % 1000000L).toInt * 1000)
-            t
-          }
-          val gapUs = gapMs * 1000L
-          val evs = rows.toSeq
-            .map(e => (micros(e.ts), e.event_id, e.event_type))
-            .sorted
-          val closed = Seq.newBuilder[SessionFunnel]
-          var cur = state.getOption
-          def close(s: SessionFunnelState): Unit = {
-            val depth = s.anchors.indexWhere(_ == FunnelUnset) match {
-              case -1 => k
-              case i => i
-            }
-            closed += SessionFunnel(userId, toTs(s.start), toTs(s.last),
-              s.nEvents, depth)
-          }
-          // fold runs of equal timestamps so a same-instant
-          // view→click→purchase chain lands regardless of intra-ts order
-          var i = 0
-          while (i < evs.length) {
-            var j = i
-            while (j < evs.length && evs(j)._1 == evs(i)._1) j += 1
-            val t = evs(i)._1
-            cur.foreach { s => if (t - s.last > gapUs) { close(s); cur = None } }
-            val s0 = cur.getOrElse(
-              SessionFunnelState(t, t, 0L, Seq.fill(k)(FunnelUnset)))
-            val anchors = s0.anchors.toArray
-            val types = evs.slice(i, j).iterator
-              .flatMap(e => stepIdx.get(e._3)).toSet
-            var changed = true
-            while (changed) {
-              changed = false
-              types.foreach { si =>
-                val qualifies = si == 0 ||
-                  (anchors(si - 1) != FunnelUnset && t >= anchors(si - 1))
-                if (qualifies && t < anchors(si)) {
-                  anchors(si) = t; changed = true
-                }
-              }
-            }
-            cur = Some(SessionFunnelState(s0.start, t,
-              s0.nEvents + (j - i), anchors.toSeq))
-            i = j
-          }
-          cur.foreach(state.update)
-          closed.result().iterator
+    perUser[SessionFunnelState, SessionFunnel](events) { (userId, rows, state) =>
+      val gapUs = gapMs * 1000L
+      val evs = rows.toSeq
+        .map(e => (micros(e.ts), e.event_id, e.event_type))
+        .sorted
+      val closed = Seq.newBuilder[SessionFunnel]
+      var cur = state.getOption
+      def close(s: SessionFunnelState): Unit =
+        closed += SessionFunnel(userId, toTs(s.start), toTs(s.last),
+          s.nEvents, depth(s.anchors))
+      // fold runs of equal timestamps so a same-instant
+      // view→click→purchase chain lands regardless of intra-ts order
+      var i = 0
+      while (i < evs.length) {
+        var j = i
+        while (j < evs.length && evs(j)._1 == evs(i)._1) j += 1
+        val t = evs(i)._1
+        cur.foreach { s => if (t - s.last > gapUs) { close(s); cur = None } }
+        val s0 = cur.getOrElse(
+          SessionFunnelState(t, t, 0L, Seq.fill(k)(FunnelUnset)))
+        val anchors = s0.anchors.toArray
+        relaxAt(anchors, t,
+          evs.slice(i, j).iterator.flatMap(e => stepIdx.get(e._3)).toSet)
+        cur = Some(SessionFunnelState(s0.start, t,
+          s0.nEvents + (j - i), anchors.toSeq))
+        i = j
       }
+      cur.foreach(state.update)
+      closed.result().iterator
+    }
   }
 
   /** Streaming deduplication: drop repeated `idCols` across micro-batches,

@@ -43,14 +43,11 @@ object Dashboard {
     * a caller's `collect()` runs no job. The first failing query's error
     * fails the call. */
   def figures(snapshot: DataFrame, selectedStreet: String): Seq[(String, DataFrame)] = {
-    var grouped: Seq[DataFrame] = Nil
-    var points: DataFrame = null
-    Similarity.inParallel(
-      () => grouped = TrafficAnalytics.fused(snapshot, Seq(
+    val Seq(series, top, latest, boroughs, points) = Similarity.inParallel(
+      () => TrafficAnalytics.fused(snapshot, Seq(
         TrafficAnalytics.series(selectedStreet), TrafficAnalytics.busiest(5),
         TrafficAnalytics.LatestDay, TrafficAnalytics.ByBorough)),
-      () => points = TrafficAnalytics.collected(TrafficAnalytics.mapPoints(snapshot)))
-    val Seq(series, top, latest, boroughs) = grouped
+      () => Seq(TrafficAnalytics.collected(TrafficAnalytics.mapPoints(snapshot)))).flatten
     Seq(
       "street_time_series" -> series,
       "top_streets" -> top,

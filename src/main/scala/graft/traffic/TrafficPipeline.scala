@@ -49,12 +49,10 @@ object TrafficPipeline {
       "peak_hours" -> TrafficAnalytics.ByHour,
       "directional_traffic" -> TrafficAnalytics.ByDirection,
       "borough_traffic" -> TrafficAnalytics.ByBorough)
-    var heatmap: DataFrame = null
-    var tables: Seq[DataFrame] = Nil
-    Similarity.inParallel(
-      () => heatmap = TrafficAnalytics.collected(TrafficAnalytics.correlationMatrix(norm,
-        Seq("volume", "hour", "day_of_week", "is_weekend"))),
-      () => tables = TrafficAnalytics.fused(norm, grouped.map(_._2)))
+    val heatmap +: tables = Similarity.inParallel(
+      () => Seq(TrafficAnalytics.collected(TrafficAnalytics.correlationMatrix(norm,
+        Seq("volume", "hour", "day_of_week", "is_weekend")))),
+      () => TrafficAnalytics.fused(norm, grouped.map(_._2))).flatten
     ("correlation_heatmap" -> heatmap) +: grouped.map(_._1).zip(tables)
   }
 

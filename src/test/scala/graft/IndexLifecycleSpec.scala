@@ -927,15 +927,22 @@ class IndexLifecycleSpec extends SparkSpec {
     val ids = loaded.select(col("id")).collect().map(_.getLong(0)).toSet
     assert(ids.exists(_ % 5 == 3) && ids.exists(_ % 5 != 3),
       "appended buckets must contain both the old corpus and the shard")
-    // The pruned (bucket IN ball) form is the SAME set as the
-    // bit_count filter form, so the probes must be bit-equal.
+    // lshTopK enumerates a ball of at most 4096 buckets into a pushed
+    // `bucket IN (ball)` filter and scans past that; either way it must
+    // be bit-equal to an inline Hamming filter with exact top-k.
     val q = Tables.embeddings(fresh, sf).filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
-    val pruned = Similarity.lshTopKPruned(
+    def inlineHamming(bucketed: DataFrame, bits: Int, h: Int): Seq[Row] =
+      bucketed.crossJoin(q.withColumn("qbucket",
+          graft.functions.VectorFunctions.hyperplaneBucket(col("qv"), bits)))
+        .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= h)
+        .withColumn("sim", round(
+          graft.functions.VectorFunctions.cosine(col("v"), col("qv")), 4))
+        .orderBy(desc("sim"), asc("id")).limit(10).select(col("id"), col("sim"))
+        .collect().toSeq
+    val pruned = Similarity.lshTopK(
       loaded, q, k = 10, nBits = nb, probeHamming = 2)
-    val filterForm = Similarity.lshTopK(
-      loaded, q, k = 10, nBits = nb, probeHamming = 2)
-    assert(pruned.collect().toSeq === filterForm.collect().toSeq,
+    assert(pruned.collect().toSeq === inlineHamming(loaded, nb, 2),
       "pruned Hamming-ball probe must equal the bit_count filter form")
     // And the ball must reach the SCAN as a pushed-down predicate —
     // the flat layout is sorted by bucket (writeLshBuckets), so the
@@ -951,13 +958,20 @@ class IndexLifecycleSpec extends SparkSpec {
       s"Hamming ball did not reach the scan's data filters:\n${scan.get}")
     assert(scan.get.metadata.get("PushedFilters").exists(_.contains("bucket")),
       s"Hamming ball was not pushed down to parquet:\n${scan.get}")
-    // A ball past the enumeration guard fails loudly toward the
-    // scan+filter form instead of silently exploding the plan.
-    val e = intercept[IllegalArgumentException] {
-      Similarity.lshTopKPruned(loaded, q, k = 10, nBits = nb,
-        probeHamming = 8, maxProbeBuckets = 10)
+    // Each side of the cap at 16 bits: a Hamming-4 ball (2,517 buckets)
+    // is pushed down, a Hamming-5 one (6,885) is not enumerated at all.
+    val path16 = tmpDir("lsh_lc16")
+    Similarity.writeLshIndex(
+      old, col("vec_id"), col("embedding"), nBits = 16, path16)
+    val (nb16, loaded16) = Similarity.loadLshIndex(fresh, path16)
+    for ((h, ball) <- Seq(4 -> true, 5 -> false)) {
+      val probe = Similarity.lshTopK(loaded16, q, k = 10, nBits = nb16, probeHamming = h)
+      assert(probe.collect().toSeq === inlineHamming(loaded16, nb16, h),
+        s"Hamming-$h probe must equal the bit_count filter form")
+      val pushed = scansOf(probe.queryExecution.executedPlan)
+        .exists(_.metadata.get("PushedFilters").exists(_.contains("In(bucket")))
+      assert(pushed === ball, s"Hamming-$h ball pushed down: $pushed")
     }
-    assert(e.getMessage.contains("maxProbeBuckets"))
     // A meta/banding divergence is now impossible by construction (the
     // writer bands the raw vectors itself with the nBits it pins); what
     // remains rejectable is an nBits outside HyperplaneBucket64's

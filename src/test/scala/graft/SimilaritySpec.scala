@@ -357,7 +357,7 @@ class SimilaritySpec extends SparkSpec {
           corpus, id, vec, queries, id, vec, k = 5, nProbe = 3, rerankN = 50)),
         "pqTopK" -> (() => Similarity.pqTopK(flatCbs2, flatCodes,
           corpus, id, vec, qv, k = 10, rerankN = 100)),
-        "lshTopKPruned" -> (() => Similarity.lshTopKPruned(buckets, q, k = 10,
+        "lshTopK" -> (() => Similarity.lshTopK(buckets, q, k = 10,
           nBits = nBits, probeHamming = 2)),
         "projectedTopKPrebuilt" -> (() => Similarity.projectedTopKPrebuilt(corpus, id, vec,
           projected, q, inDim = 64, outDim = 16, shortlist = 50, k = 10)))
@@ -368,7 +368,7 @@ class SimilaritySpec extends SparkSpec {
         "bruteForceTopK" -> 3, "bruteForceTopKBatch" -> 5, "hardNegatives" -> 5,
         "hardNegativesShortlist" -> 11, "hardNegativesAnn" -> 12,
         "hardNegativesAnnPq" -> 12, "ivfTopKBatch" -> 6, "ivfPqTopK" -> 3,
-        "ivfPqTopKBatch" -> 9, "pqTopK" -> 3, "lshTopKPruned" -> 3,
+        "ivfPqTopKBatch" -> 9, "pqTopK" -> 3, "lshTopK" -> 3,
         "projectedTopKPrebuilt" -> 6)
       assert(jobs.forall { case (probe, n) => n <= budget(probe) },
         s"job budget exceeded: measured $jobs, budget $budget")

@@ -31,6 +31,15 @@ class R21GuardSpec extends SparkSpec {
     assert(solo.getSuppressed.isEmpty)
   }
 
+  test("inParallel: results come back in task order") {
+    // Later tasks finish first: the order is the tasks', not completion's.
+    val got = Similarity.inParallel((0 until 6).map { i =>
+      () => { Thread.sleep((6 - i) * 20L); i * i }
+    }: _*)
+    assert(got == Seq(0, 1, 4, 9, 16, 25))
+    assert(Similarity.inParallel[Int]().isEmpty)
+  }
+
   test("fitSampleRows <= 0 refuses an over-cap whole-corpus collect") {
     val emb = Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") =!= 0)

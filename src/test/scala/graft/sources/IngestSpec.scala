@@ -32,6 +32,23 @@ class IngestSpec extends SparkSpec {
     assert(pruned == norm.filter(col("year") === 2024).count())
   }
 
+  test("without graft.landing.dir both landings resolve under one per-JVM temp root") {
+    val conf = spark.conf.getOption("graft.landing.dir")
+    spark.conf.unset("graft.landing.dir")
+    try {
+      val root = java.nio.file.Paths.get(Ingest.tempRoot)
+      val paths = Seq(Ingest.ordersByYearLanding(spark, sf),
+        Ingest.documentsBySourceLanding(spark, sf))
+      paths.foreach { p =>
+        assert(java.nio.file.Paths.get(p).getParent == root, s"$p not under $root")
+        assert(spark.read.parquet(p).count() > 0, s"$p holds no landing")
+      }
+      assert(paths.distinct.size == 2)
+      // Same source dir, same JVM: the landing is reused, not re-written.
+      assert(Ingest.ordersByYearLanding(spark, sf) == paths.head)
+    } finally conf.foreach(spark.conf.set("graft.landing.dir", _))
+  }
+
   test("q61 reads the year-partitioned landing with partition pruning") {
     val df = graft.queries.AdvancedQueries.q61PartitionPruned(spark, sf)
     val plan = df.queryExecution.executedPlan.toString

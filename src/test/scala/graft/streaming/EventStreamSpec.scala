@@ -264,6 +264,65 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("sub-millisecond gaps: sessionize compares milliseconds, " +
+    "sessionFunnelStream microseconds") {
+    implicit val s = spark
+    def ts(x: String) = Timestamp.valueOf(x)
+    val gapMs = 1000L
+    // Every gap is within 1 ms of gapMs. u1: 1000.5 ms, whole-ms
+    // difference 1000 (not over the gap) but 1000500 µs (over it).
+    // u2: 1000.2 ms crossing a millisecond edge, over the gap in both
+    // grains. u3: 999.5 ms, inside the gap in both grains.
+    val events = Seq(
+      Event(1, ts("2024-01-01 00:00:00"), 1, "view", 1.0),
+      Event(2, ts("2024-01-01 00:00:01.0005"), 1, "click", 2.0),
+      Event(3, ts("2024-01-01 00:00:00.0009"), 2, "view", 4.0),
+      Event(4, ts("2024-01-01 00:00:01.0011"), 2, "click", 8.0),
+      Event(5, ts("2024-01-01 00:00:00.0009"), 3, "view", 16.0),
+      Event(6, ts("2024-01-01 00:00:01.0004"), 3, "click", 32.0))
+    // One far-later event per user closes every open session.
+    val flush = Seq(1L, 2L, 3L).map(u =>
+      Event(100 + u, ts("2024-01-01 01:00:00"), u, "noop", 0.0))
+    val in1 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
+    val q1 = EventStream.sessionize(in1.toDS(), gapMs)
+      .writeStream.outputMode(OutputMode.Append).format("memory")
+      .queryName("ev_submilli_sessions").trigger(Trigger.ProcessingTime(0)).start()
+    val in2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)
+    val q2 = EventStream.sessionFunnelStream(in2.toDS(), gapMs, Seq("view", "click"))
+      .writeStream.outputMode(OutputMode.Append).format("memory")
+      .queryName("ev_submilli_funnel").trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      Seq(events, flush).foreach { b =>
+        in1.addData(b); in2.addData(b)
+        q1.processAllAvailable(); q2.processAllAvailable()
+      }
+      // sessionize: whole milliseconds in and out — u1 stays one session
+      // and its end is the millisecond-truncated last event.
+      val sessions = spark.table("ev_submilli_sessions").as[UserSession].collect()
+        .map(u => (u.user_id, u.startTs.toString, u.endTs.toString, u.n_events))
+        .sorted.toSeq
+      assert(sessions == Seq(
+        (1L, "2024-01-01 00:00:00.0", "2024-01-01 00:00:01.0", 2L),
+        (2L, "2024-01-01 00:00:00.0", "2024-01-01 00:00:00.0", 1L),
+        (2L, "2024-01-01 00:00:01.001", "2024-01-01 00:00:01.001", 1L),
+        (3L, "2024-01-01 00:00:00.0", "2024-01-01 00:00:01.0", 2L)),
+        sessions.mkString("\n"))
+      // sessionFunnelStream: microseconds in and out — u1's click opens a
+      // new session, so its view session completes one step only.
+      val funnels = spark.table("ev_submilli_funnel").as[SessionFunnel].collect()
+        .map(f => (f.user_id, f.start_ts.toString, f.end_ts.toString,
+          f.n_events, f.steps_completed))
+        .sorted.toSeq
+      assert(funnels == Seq(
+        (1L, "2024-01-01 00:00:00.0", "2024-01-01 00:00:00.0", 1L, 1),
+        (1L, "2024-01-01 00:00:01.0005", "2024-01-01 00:00:01.0005", 1L, 0),
+        (2L, "2024-01-01 00:00:00.0009", "2024-01-01 00:00:00.0009", 1L, 1),
+        (2L, "2024-01-01 00:00:01.0011", "2024-01-01 00:00:01.0011", 1L, 0),
+        (3L, "2024-01-01 00:00:00.0009", "2024-01-01 00:00:01.0004", 2L, 2)),
+        funnels.mkString("\n"))
+    } finally { q1.stop(); q2.stop() }
+  }
+
   test("streaming active-day feed reproduces the batch rolling actives") {
     implicit val s = spark
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark)

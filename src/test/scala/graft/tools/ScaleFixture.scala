@@ -1,11 +1,11 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, SpecScratch}
 import graft.sources.Tables
 
 /** Standing scale fixture + sweep (round-12 verdict stretch #9): the
@@ -13,13 +13,18 @@ import graft.sources.Tables
   * retired, see BASELINE.md "Retired reproducers") generalized into ONE
   * tool that
   *
-  *   1. materializes a deterministic K× replica of the sf0.1
-  *      documents/embeddings/events tables ONCE per (K, fixture
-  *      version) under /tmp/graft_scale/ (marker-file cached — reruns
-  *      in the same session or round reuse the parquet), and
+  *   1. materializes a deterministic K× replica of a base directory's
+  *      documents/embeddings/events tables (sf0.1 by default) ONCE per
+  *      (base dir, K, fixture version), cached at
+  *      `/tmp/graft_scale/v<version>_k<K>_<base dir tag>` ([[fixtureDir]];
+  *      later runs reuse the parquet; `rm -rf /tmp/graft_scale` frees
+  *      it). A run builds under a unique sibling and publishes it with
+  *      an atomic rename, so two runs of the same K never share a
+  *      half-written fixture, and
   *   2. runs the round's most expensive SparkEntry queries against it,
-  *      printing the BASELINE.md section verbatim (K=1 column measured
-  *      on the pristine sf0.1 directory through the same harness).
+  *      printing the BASELINE.md section verbatim (the base column
+  *      measured on the pristine base directory through the same
+  *      harness).
   *
   * Replication is honest per table:
   *   - documents: doc_id shifted per replica; ONE replica-distinct
@@ -39,11 +44,21 @@ import graft.sources.Tables
   * graft.Bench's methodology, so the K=1 column is comparable to the
   * committed bench pair.
   *
-  * Run: sbt "Test/runMain graft.tools.ScaleFixture [K] [query...]"
-  * (default K=16 over the ten most expensive replicable queries).
+  * Run: sbt "Test/runMain graft.tools.ScaleFixture [--base DIR] [K] [query...]"
+  * (default base the sf0.1 tables of TESTDATA.md, K=16 over the ten most expensive
+  * replicable queries).
   */
 object ScaleFixture {
   private val Version = 1 // bump to invalidate cached fixtures
+  private val DefaultBase = "/root/testdata/sf0.1"
+  private val ReadyMarker = "_GRAFT_FIXTURE_READY"
+
+  /** The cache directory of the K× replica of `baseDir`; the DuckDB half
+    * (`tools/duckdb_scale_sweep.py`) derives the same path. */
+  def fixtureDir(baseDir: String, k: Int): String = {
+    val tag = baseDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
+    s"/tmp/graft_scale/v${Version}_k${k}_$tag"
+  }
   private val DefaultQueries = Seq(
     "q120_curation_pipeline", "q129_curation_funnel", "q89_pq_recall",
     "q185_eval_quality_lr", "q121_subword_encode",
@@ -74,7 +89,11 @@ object ScaleFixture {
     "q196_ivfpq_reload_probe", "q197_ivfpq_batch_probe",
     "q198_hard_negatives_ann_pq")
 
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (baseDir, args) = argv.toSeq match {
+      case "--base" +: dir +: rest => (dir, rest)
+      case rest => (DefaultBase, rest)
+    }
     val k = args.headOption.map(_.toInt).getOrElse(16)
     require(k >= 1, "K must be >= 1")
     // The r13/r14 K=64 convention, made code: q79's contract includes a
@@ -92,44 +111,24 @@ object ScaleFixture {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = GraftSession.local()
-    val baseDir = "/root/testdata/sf0.1"
-    val dir = s"/tmp/graft_scale/v${Version}_k$k"
-    val marker = Paths.get(s"$dir/_GRAFT_FIXTURE_READY")
+    val dir = fixtureDir(baseDir, k)
 
-    if (!Files.exists(marker)) {
-      val docs = Tables.documents(spark, baseDir)
-      val emb = Tables.embeddings(spark, baseDir)
-      val ev = Tables.events(spark, baseDir)
-      val docShift = 10000000L
-      (0 until k).map { r =>
-        docs.select(
-          (col("doc_id") + lit(r * docShift)).as("doc_id"),
-          // one appended replica-distinct token defeats exact dedup
-          concat(coalesce(col("text"), lit("")), lit(s" grepl$r")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
-      (0 until k).map { r =>
-        emb.select(
-          (col("vec_id") + lit(r * docShift)).as("vec_id"),
-          (if (r == 0) col("embedding")
-           else transform(col("embedding"), (x, j) =>
-             (x + ((pmod(col("vec_id") * 31 + j * 7 + lit(r), lit(11)) - 5)
-               .cast("float") * lit(1e-4f))).cast("float")))
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionByName _)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/embeddings.parquet")
-      (0 until k).map { r =>
-        ev.select(
-          (col("event_id") + lit(r * docShift)).as("event_id"), col("ts"),
-          (col("user_id") + lit(r * docShift)).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionByName _)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/events.parquet")
-      Files.createFile(marker)
-      System.err.println(s"[scalefixture] materialized K=$k under $dir")
-    } else System.err.println(s"[scalefixture] reusing fixture $dir")
+    if (Files.exists(Paths.get(dir, ReadyMarker)))
+      System.err.println(s"[scalefixture] reusing fixture $dir")
+    else {
+      val building = s"$dir.building-${java.util.UUID.randomUUID}"
+      try {
+        materialize(spark, baseDir, k, building)
+        Files.createFile(Paths.get(building, ReadyMarker))
+        Files.move(Paths.get(building), Paths.get(dir), StandardCopyOption.ATOMIC_MOVE)
+        System.err.println(s"[scalefixture] materialized K=$k under $dir")
+      } catch {
+        // Another run published the same fixture first (renaming onto a
+        // non-empty directory fails as a plain FileSystemException): reuse it.
+        case _: FileSystemException if Files.exists(Paths.get(dir, ReadyMarker)) =>
+          System.err.println(s"[scalefixture] reusing fixture $dir")
+      } finally SpecScratch.deleteTree(new java.io.File(building))
+    }
 
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -142,7 +141,7 @@ object ScaleFixture {
       math.min(once(), once())
     }
 
-    println(s"| query | sf0.1 s | K=$k s | ratio |")
+    println(s"| query | ${Paths.get(baseDir).getFileName} s | K=$k s | ratio |")
     println("|---|---|---|---|")
     names.foreach { n =>
       val q = SparkEntry.queries(n)
@@ -153,5 +152,41 @@ object ScaleFixture {
     println(f"(K=$k ⇒ ${k}× docs/vectors/users; linear-in-volume ⇒ " +
       f"ratio ≈ $k, flat job floor pulls it below)")
     spark.stop()
+  }
+
+  /** Writes the K× replica of `baseDir`'s three tables under `dir`. */
+  private def materialize(
+      spark: org.apache.spark.sql.SparkSession, baseDir: String, k: Int,
+      dir: String): Unit = {
+    val docs = Tables.documents(spark, baseDir)
+    val emb = Tables.embeddings(spark, baseDir)
+    val ev = Tables.events(spark, baseDir)
+    val docShift = 10000000L
+    (0 until k).map { r =>
+      docs.select(
+        (col("doc_id") + lit(r * docShift)).as("doc_id"),
+        // one appended replica-distinct token defeats exact dedup
+        concat(coalesce(col("text"), lit("")), lit(s" grepl$r")).as("text"),
+        col("lang"), col("source"), col("n_chars"))
+    }.reduce(_ unionByName _)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
+    (0 until k).map { r =>
+      emb.select(
+        (col("vec_id") + lit(r * docShift)).as("vec_id"),
+        (if (r == 0) col("embedding")
+         else transform(col("embedding"), (x, j) =>
+           (x + ((pmod(col("vec_id") * 31 + j * 7 + lit(r), lit(11)) - 5)
+             .cast("float") * lit(1e-4f))).cast("float")))
+          .as("embedding"),
+        col("label"))
+    }.reduce(_ unionByName _)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/embeddings.parquet")
+    (0 until k).map { r =>
+      ev.select(
+        (col("event_id") + lit(r * docShift)).as("event_id"), col("ts"),
+        (col("user_id") + lit(r * docShift)).as("user_id"),
+        col("event_type"), col("value"), col("props"))
+    }.reduce(_ unionByName _)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/events.parquet")
   }
 }
