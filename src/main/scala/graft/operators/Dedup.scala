@@ -1080,8 +1080,10 @@ object Dedup {
     * Tombstone-aware: a [[deleteFromCorpusIndex]]-ed id is invisible to
     * every probe. Both relations filter the tombstone ids read at load
     * ([[Tombstones]]) with a predicate over one broadcast variable — no
-    * join and no job per probe, and a filter keeps the bucketed scans'
-    * distribution, so the exchange-free probe plan survives. A handle
+    * join, and a filter keeps the bucketed scans' distribution, so the
+    * exchange-free probe plan survives. The predicate is deterministic,
+    * so a point probe's key reads evaluate it on the driver too
+    * ([[PointRead]]): the tombstones add no job to a probe. A handle
     * keeps the tombstones read when it was loaded. */
   def loadCorpusIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1182,10 +1184,14 @@ object Dedup {
     * [[PointProbeMaxKeys]] band keys skips the join: it reads only the
     * `_banded` rows under its own band hashes, then only the `_rel` rows
     * of the candidates, and verifies with the same Column expressions as
-    * the join ([[candidatePair]], [[jaccardVerified]]) — two small jobs
-    * (one when nothing shares a band), where the join runs six, scans
-    * every bucket and ships the whole `_rel` table to verify a handful
-    * of candidates. The result is a local DataFrame. The key bound keeps
+    * the join ([[candidatePair]], [[jaccardVerified]]), where the join
+    * runs six jobs, scans every bucket and ships the whole `_rel` table
+    * to verify a handful of candidates. Each key read is bucket-pruned;
+    * when its pruned files fit [[PointRead]]'s cap it is read on the
+    * driver with no Spark job, so a probe of a loaded index runs none;
+    * an in-memory index or a read past the cap is one small job per
+    * read (none for `_rel` when nothing shares a band). The result is a
+    * local DataFrame. The key bound keeps
     * the `bh IN (…)` literal small: past it a shard touches most buckets
     * anyway and the join is the better plan. Every other shard —
     * parquet-backed, streaming, persisted, or over the bound — takes the
@@ -1277,6 +1283,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     def local(rows: Seq[Row], schema: StructType): DataFrame =
       spark.createDataFrame(rows.asJava, schema)
+    def read(keyed: DataFrame): Array[Row] = PointRead.collect(keyed).getOrElse(keyed.collect())
     // 1. Band the shard with the join's banding formula. A projection of
     //    local rows folds into a local relation, so this runs no job.
     val rel = shingleRel(newDocs, id, text, index.n, index.k)
@@ -1288,8 +1295,8 @@ object Dedup {
     // 2. The index's band rows under the shard's keys (bucket-pruned).
     val hits =
       if (byKey.isEmpty) Array.empty[Row]
-      else index.banded.filter(col("bh").isin(byKey.keys.toSeq: _*))
-        .select("id", "n_sh", "bh").collect()
+      else read(index.banded.filter(col("bh").isin(byKey.keys.toSeq: _*))
+        .select("id", "n_sh", "bh"))
     val (hsType, nType) = (rel.schema("hs").dataType, rel.schema("n_sh").dataType)
     val pairSchema = StructType(Seq(
       StructField("new_id", LongType), StructField("n_a", nType),
@@ -1305,8 +1312,8 @@ object Dedup {
     // 3. The candidates' verification rows; no read without candidates.
     val corpusRel =
       if (cand.isEmpty) Map.empty[Long, Array[Row]]
-      else index.rel.filter(col("id").isin(cand.map(_._2).distinct.toSeq: _*))
-        .select("id", "hs", "n_sh").collect().groupBy(_.getLong(0))
+      else read(index.rel.filter(col("id").isin(cand.map(_._2).distinct.toSeq: _*))
+        .select("id", "hs", "n_sh")).groupBy(_.getLong(0))
     // 4. Verify over a local frame with the join's expressions.
     val newRel = shardRel.filter(!_.isNullAt(0)).groupBy(_.getLong(0))
     val verifySchema = StructType(Seq(

@@ -1472,17 +1472,21 @@ object Similarity {
     *
     * The query vector enters the plan as a literal (its norm folds to a
     * constant at optimization, through the same [[VectorFunctions.normSq]]
-    * arithmetic the batch form evaluates per row), so a probe of a loaded
-    * index is ONE job: the pruned list scan plus the top-k — no broadcast
-    * of a one-row query frame. */
+    * arithmetic the batch form evaluates per row), so the probe is the
+    * pruned list scan plus the top-k, with no broadcast of a one-row
+    * query frame. Over a loaded index whose files fit [[PointRead]]'s cap
+    * it runs no Spark job: the list files are read and scored on the
+    * driver, and the result is a local frame. An in-memory index or a
+    * read past the cap runs the same plan as one Spark job, at the
+    * action. */
   def ivfTopK(
       centroids: Array[Array[Float]], indexed: DataFrame,
       queryVec: Array[Float], k: Int, nProbe: Int): DataFrame = {
     val probe = probeLists(centroids, queryVec, nProbe)
     val qv = typedLit(queryVec.toSeq)
-    topKBySim(indexed.filter(col("list").isin(probe.toSeq: _*))
+    PointRead.local(topKBySim(indexed.filter(col("list").isin(probe.toSeq: _*))
       .withColumn("nrm", norm(col("v")))
-      .withColumn("sim", cosine4(qv = qv, qnrm = norm(qv))), k)
+      .withColumn("sim", cosine4(qv = qv, qnrm = norm(qv))), k))
   }
 
   /** The largest Hamming ball [[lshTopK]] enumerates into a pushed-down
@@ -1495,27 +1499,30 @@ object Similarity {
     * corpus is huge and queries are many. Output: (id, sim).
     *
     * The path is chosen from the parameters alone. When the Hamming
-    * ball holds at most 4096 buckets ([[hammingBallSize]] of `nBits`
-    * and `probeHamming`), the query's bucket is collected (one bounded
+    * ball is smaller than the bucket space (`probeHamming < nBits`) and
+    * holds at most 4096 buckets ([[hammingBallSize]] of `nBits` and
+    * `probeHamming`), the query's bucket is collected (one bounded
     * collect — the scalar-subquery class), the ball is enumerated on the
     * driver and applied as a static `bucket IN (…)` filter: over a
     * [[loadLshIndex]] scan — flat files sorted by bucket
     * ([[PathIndex]]'s writer) — it pushes down to the parquet row-group
-    * statistics, so only the ball's row groups are read. Past that size
-    * the probe is the scan alone, with no collect: at that radius most
-    * row groups are probed anyway. Both paths keep the
+    * statistics, so only the ball's row groups are read. A full ball
+    * (every bucket) or one past that size is the scan alone, with no
+    * collect: it prunes nothing, or at that radius most row groups are
+    * probed anyway. Both paths keep the
     * `bit_count(bucket ⊕ qbucket) ≤ h` filter, so they return the same
     * rows by construction (`bucket ∈ ball(qbucket, h)` ⇔
     * `hamming(bucket, qbucket) ≤ h`), for any number of query rows —
     * gated bit-equal against an inline filter on each side of the cap
-    * in `IndexLifecycleSpec`. */
+    * and for the full ball in `IndexLifecycleSpec`. */
   def lshTopK(
       bucketed: DataFrame, query: DataFrame, k: Int,
       nBits: Int, probeHamming: Int = 1): DataFrame = {
     val qb = query.withColumn("qbucket",
       VectorFunctions.hyperplaneBucket(col("qv"), nBits))
     val cands =
-      if (hammingBallSize(nBits, probeHamming, MaxBallBuckets) > MaxBallBuckets) bucketed
+      if (probeHamming >= nBits ||
+          hammingBallSize(nBits, probeHamming, MaxBallBuckets) > MaxBallBuckets) bucketed
       else bucketed.filter(col("bucket").isin(
         qb.select(col("qbucket")).where(col("qbucket").isNotNull).collect()
           .map(_.getLong(0)).distinct

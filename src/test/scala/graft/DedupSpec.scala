@@ -845,7 +845,7 @@ class DedupSpec extends SparkSpec {
     } finally index.unpersist()
   }
 
-  test("a one-document point probe of a loaded corpus index runs at most 2 jobs, tombstones included, and its result reads without a job") {
+  test("a one-document point probe of a loaded corpus index runs no job, tombstones included, and its result reads without a job") {
     val prefix = s"graft_dedup_pt_$runId"
     val all = graft.sources.Tables.documents(spark, sf)
     val built = Dedup.corpusIndex(all.filter(col("source") =!= "src0"), col("doc_id"), col("text"))
@@ -864,10 +864,11 @@ class DedupSpec extends SparkSpec {
     val idx = Dedup.loadCorpusIndex(spark.newSession(), prefix)
     probe(idx, hit).collect() // warm
     val (result, jobs) = JobCount(spark)(probe(idx, hit))
-    // Measured: 2 jobs — the bucket-pruned `_banded` read and the `_rel`
-    // read of the candidates; banding the local row runs none. (The join
+    // Measured: no job — the bucket-pruned `_banded` read and the `_rel`
+    // read of the candidates run on the driver (PointRead), and banding
+    // the local row runs none. (As Spark reads they were 2 jobs; the join
     // ran 6 jobs and 40 tasks on the corpus benchmark's index.)
-    assert(jobs <= 2, s"one-document point probe ran $jobs jobs")
+    assert(jobs === 0, s"one-document point probe ran $jobs jobs")
     val (rows, readJobs) = JobCount(spark)(result.collect())
     assert(readJobs === 0, "the point probe's result must be local")
     assert(!rows.exists(_.getLong(1) == victim), "the tombstoned near-duplicate must be gone")

